@@ -30,6 +30,7 @@ Everything is deterministic (seeded hash functions, no RNG at runtime).
 from __future__ import annotations
 
 import hashlib
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -45,18 +46,38 @@ def _tokens(text: Column) -> Column:
     return F.filter(F.split(F.lower(text), " "), lambda x: x != F.lit(""))
 
 
-def _shingles(text: Column, n: int) -> Column:
-    """Distinct n-gram token shingles as strings (JVM higher-order fns).
+def _with_tokens(text: Column, fn: Callable[[Column], Column]) -> Column:
+    """``fn(t)`` with ``t`` bound ONCE to ``_tokens(text)``. A lambda that
+    names ``_tokens(text)`` directly captures the whole split/filter
+    expression, and Spark re-evaluates it at every call — once per n-gram
+    position, O(tokens²) per document. A one-element outer ``transform``
+    evaluates it once and hands the array in as a lambda variable."""
+    return F.transform(F.array(_tokens(text)), fn)[0]
+
+
+def _grams_of(t: Column, n: int) -> Column:
+    """Positional ``n``-grams of the token array ``t``, space-joined.
     Guarded for short docs: Spark's sequence(1, 0) DESCENDS ([1, 0]), so an
-    unguarded index range would fabricate shingles for docs with < n tokens."""
-    toks = _tokens(text)
-    idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
+    unguarded index range would fabricate n-grams for docs with < n tokens;
+    NULL ``t`` (NULL text) takes the same empty-array branch."""
+    idx = F.sequence(F.lit(1), F.size(t) - (n - 1))
     return F.when(
-        F.size(toks) >= n,
-        F.array_distinct(
-            F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-        ),
+        F.size(t) >= n,
+        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(t, i, n))),
     ).otherwise(F.array().cast("array<string>"))
+
+
+def _ngrams(text: Column, n: int) -> Column:
+    """Positional token ``n``-grams WITH multiplicity, one per position;
+    the document is tokenized once per row (``_with_tokens``)."""
+    return _with_tokens(text, lambda t: _grams_of(t, n))
+
+
+def _shingles(text: Column, n: int) -> Column:
+    """Distinct n-gram token shingles as strings. The higher-order
+    functions are ``CodegenFallback`` expressions: they run interpreted
+    inside the generated stage, which is why the split must not repeat."""
+    return F.array_distinct(_ngrams(text, n))
 
 
 # ---------------------------------------------------------------------------
@@ -649,6 +670,21 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
+def _is_star_forest(e: DataFrame) -> bool:
+    """True iff the canonical edges (child ``u`` > parent ``v``) form a
+    forest of stars: every child has exactly one parent and no parent is
+    also a child. One groupBy over each node's roles, one action: with
+    ``c`` = edges the node is the child of and ``p`` = 1 if it is anyone's
+    parent, a node breaks the shape exactly when ``c + p > 1``."""
+    roles = (
+        e.select(F.col("u").alias("node"), F.lit(1).alias("child"), F.lit(0).alias("parent"))
+        .union(e.select(F.col("v").alias("node"), F.lit(0), F.lit(1)))
+        .groupBy("node")
+        .agg(F.sum("child").alias("c"), F.max("parent").alias("p"))
+    )
+    return roles.filter(F.col("c") + F.col("p") > 1).isEmpty()
+
+
 def connected_components_star(
     edges: DataFrame,
     a_col: str = "doc_a",
@@ -666,16 +702,23 @@ def connected_components_star(
     shuffles), while the star alternation contracts paths exponentially —
     O(log^2 n) rounds worst case, and in practice ~log(diameter)
     alternations. Each round is a groupBy + join on node ids only
-    (id-only shuffles, payloads never move), ``localCheckpoint`` truncates
-    the iterative lineage, and convergence is EXACT set equality of
-    consecutive rounds (count match + empty EXCEPT over the id pairs —
-    cheap, and unlike a checksum it cannot false-converge). At the
-    fixpoint the edge set is a forest of stars rooted at component
-    minima; a round budget overrun raises, never returns truncated labels
-    (same rule as ``connected_components``).
+    (id-only shuffles, payloads never move), and ``localCheckpoint``
+    truncates the iterative lineage.
+
+    Convergence is tested on the round's own output: the loop stops once
+    the canonical edges form a star forest (``_is_star_forest``: every
+    child has exactly one parent, and no parent is also a child). A
+    canonical star forest is a fixpoint of both the large-star and the
+    small-star step, so the test is exact, not a checksum, and no extra
+    round is spent confirming that the edge set stopped changing. Each
+    star's root is then its component's minimum (the steps preserve
+    connectivity and a root is smaller than its children), so the output
+    is read straight off the final edges: (child, root) for every edge
+    plus (root, root) for every root. A round budget overrun raises,
+    never returns truncated labels (same rule as ``connected_components``).
 
     Node ids keep their INPUT type: every primitive here (least/greatest,
-    min, >, set-equality) only needs an orderable type, so string doc ids
+    min, >, grouping by id) only needs an orderable type, so string doc ids
     work directly — component = lexicographic minimum for strings, numeric
     minimum for numbers. (Previously cast to long, which threw under ANSI
     for non-numeric ids — ADVICE r5.)"""
@@ -691,31 +734,18 @@ def connected_components_star(
         .distinct()
         .localCheckpoint()
     )
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    rounds = 0
-    converged = False
-    for _ in range(max_iter):
-        new_e = _small_star(_large_star(e)).localCheckpoint()
-        rounds += 1
-        if new_e.count() == e.count() and new_e.exceptAll(e).count() == 0:
-            e = new_e
-            converged = True
+    for rounds in range(1, max_iter + 1):
+        e = _small_star(_large_star(e)).localCheckpoint()
+        if _is_star_forest(e):
             break
-        e = new_e
-    if not converged:
+    else:
         raise RuntimeError(
             f"connected_components_star did not converge in "
             f"max_iter={max_iter} alternations — pathological for a "
             f"star-contraction algorithm; check the edge list"
         )
-    out = (
-        nodes.join(e, nodes["node"] == e["u"], "left")
-        .select("node", F.coalesce("v", "node").alias("component"))
+    out = e.select(F.col("u").alias("node"), F.col("v").alias("component")).union(
+        e.select(F.col("v").alias("node"), F.col("v").alias("component")).distinct()
     )
     return (out, rounds) if return_rounds else out
 
@@ -728,12 +758,7 @@ def _pos_spans(text: Column, n: int) -> Column:
     """Positional token n-grams WITH multiplicity (unlike ``_shingles``,
     which distincts): one span per position, so per-doc counts measure how
     much of the document is covered by duplicated material."""
-    toks = _tokens(text)
-    idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n))),
-    ).otherwise(F.array().cast("array<string>"))
+    return _ngrams(text, n)
 
 
 def _span_key(span: Column, digest: bool) -> Column:

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from logpipe_spark.operators.dedup import _tokens
+from logpipe_spark.operators.dedup import _grams_of, _ngrams, _tokens, _with_tokens
 from logpipe_spark.operators.parse import n_fields_col
 
 # tiny per-language marker sets for the n-gram/stopword heuristic
@@ -159,19 +159,17 @@ def repetition_stats(
     shuffle — and it doesn't. The mode count comes from a run-length fold
     over the SORTED n-gram array (``array_sort`` + ``aggregate`` with a
     (prev, run, best) struct accumulator), all JVM higher-order
-    expressions inside whole-stage codegen: zero exchanges, zero Python,
-    embarrassingly parallel at any corpus size. (Contrast top_terms, a
-    corpus-level explode+agg: same n-grams, different altitude.)
+    expressions: zero exchanges, zero Python, embarrassingly parallel at
+    any corpus size. The higher-order functions are ``CodegenFallback``,
+    so they run interpreted inside the generated stage; the n-grams come
+    from ``_ngrams``, which binds each document's tokens once, not once
+    per n-gram position. (Contrast top_terms, a corpus-level
+    explode+agg: same n-grams, different altitude.)
 
     Integer outputs only (value-hash safe); callers derive the Gopher
     fractions as ``1 - n_distinct/n_grams`` and ``top_count/n_grams``.
     Docs with fewer than ``n`` tokens report zeros."""
-    toks = F.filter(F.split(F.lower(F.col(text_col)), " "), lambda x: x != F.lit(""))
-    idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n))),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = _ngrams(F.col(text_col), n)
     top = F.aggregate(
         F.array_sort(grams),
         F.struct(
@@ -432,15 +430,7 @@ def dsir_scores(
         )
 
     def grams(text: Column) -> Column:
-        toks = _tokens(text)
-        bi = F.when(
-            F.size(toks) >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - 1),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, 2)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        return F.concat(toks, bi)
+        return _with_tokens(text, lambda t: F.concat(t, _grams_of(t, 2)))
 
     bucket = lambda g: base_hash60(F.concat(F.lit(salt + ":"), g)) % buckets
 

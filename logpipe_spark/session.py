@@ -12,6 +12,12 @@ Config choices are scale-minded:
   pandas UDF; row-at-a-time Python UDFs are banned (north rule).
 - ``spark.sql.session.timeZone=UTC`` — deterministic timestamps and parity
   with the DuckDB correctness oracle.
+- ``spark.sql.codegen.cache.maxEntries=1000`` — compile each generated
+  class once per JVM. The cache is keyed by generated source, and Spark
+  keeps 100 classes; one ``run_corpus_funnel`` call needs 255 distinct
+  classes, so with LRU eviction every warm call re-compiled all 255 in
+  Janino (28% of the JVM's CPU samples). 1000 holds the funnel's working
+  set with room for the transcript pipeline's classes beside it.
 - shuffle partitions default to the core count in local mode; on a real
   cluster this would be set to ~2-3× total cores (or left to AQE coalesce).
 """
@@ -73,6 +79,7 @@ def get_spark(
             else {}
         ),
         "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
+        "spark.sql.codegen.cache.maxEntries": "1000",
     }
     if extra_conf:
         conf.update(extra_conf)

@@ -189,6 +189,34 @@ def test_connected_components_star_non_contiguous_ids_and_isolated_pairs(spark):
     assert {got[v] for v in cyc_a} == {900}
 
 
+def test_connected_components_star_stars_and_triangles_one_round(spark):
+    """Disjoint one-hop stars (centred on the minimum or not) and triangles
+    are a star forest after a single alternation; the star-forest test
+    stops there without a confirming round."""
+    from logpipe_spark.operators.dedup import connected_components_star
+    edges = spark.createDataFrame(
+        pd.DataFrame({
+            # star on 1; star on 15 whose leaves are all smaller; triangle
+            "doc_a": [1, 1, 1, 15, 15, 15, 30, 31, 32],
+            "doc_b": [2, 3, 4, 11, 12, 13, 31, 32, 30],
+        })
+    )
+    out, rounds = connected_components_star(edges, return_rounds=True)
+    got = {r["node"]: r["component"] for r in out.collect()}
+    assert rounds == 1
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 11: 11, 12: 11, 13: 11, 15: 11,
+                   30: 30, 31: 30, 32: 30}
+    assert out.count() == len(got)
+
+
+def test_connected_components_star_empty_edges(spark):
+    from logpipe_spark.operators.dedup import connected_components_star
+    edges = spark.createDataFrame([], "doc_a long, doc_b long")
+    out = connected_components_star(edges)
+    assert out.columns == ["node", "component"]
+    assert out.collect() == []
+
+
 def test_quota_sample_deterministic_and_both_branches(spark, docs):
     """Selection is a function of key sets only: invariant under
     repartitioning; groups under quota pass through whole, groups over it

@@ -577,3 +577,51 @@ def test_digest_lines_mode_identical_output(spark):
     out = dict((r[0], r[1]) for r in raw)
     assert "BANNER" not in out[0] and "END" not in out[0]
     assert "\n\n" in out[0] or out[0].startswith("\n")
+
+
+def _py_ngrams(text, n):
+    """Python reference for _pos_spans: lowercase, split on single spaces,
+    drop empty tokens, then every run of n consecutive tokens."""
+    if text is None:
+        return []
+    toks = [t for t in text.lower().split(" ") if t]
+    return [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+
+
+NGRAM_TEXTS = [
+    "a b c a b c d",          # more than n, repeated shingles
+    "  Lead  and   trail  ",  # runs of spaces, leading and trailing
+    "x y",                    # fewer than n
+    "one two three",          # exactly n
+    "A a A a",                # case folds to repeats
+    "",
+    "   ",
+    None,
+]
+
+
+@pytest.mark.parametrize("n", [1, 3])
+def test_shingles_and_pos_spans_match_python_reference(spark, n):
+    from logpipe_spark.operators.dedup import _pos_spans, _shingles
+
+    df = spark.createDataFrame(
+        pd.DataFrame({"i": range(len(NGRAM_TEXTS)), "text": NGRAM_TEXTS})
+    )
+    got = df.select(
+        "i",
+        _pos_spans(F.col("text"), n).alias("spans"),
+        _shingles(F.col("text"), n).alias("shingles"),
+    ).collect()
+    for r in got:
+        want = _py_ngrams(NGRAM_TEXTS[r["i"]], n)
+        assert r["spans"] == want, NGRAM_TEXTS[r["i"]]
+        assert r["shingles"] == list(dict.fromkeys(want)), NGRAM_TEXTS[r["i"]]
+
+
+def test_ngram_expression_splits_each_document_once():
+    """The token array is bound once per row; a lambda that re-named the
+    split expression would print it once per use."""
+    from logpipe_spark.operators.dedup import _pos_spans, _shingles
+
+    for build in (_pos_spans, _shingles):
+        assert str(build(F.col("text"), 3)).count("split(") == 1
