@@ -308,7 +308,7 @@ def main() -> None:
     # Write: the flagship warmups never touch WriteFiles/observe/commit
     # codegen, and without this the metric is ~half cold-JIT bill (r3's
     # 34 s artifact was the first-ever parquet write in the JVM plus a
-    # cold WindowExec — see BENCH.md r4). Steady-state per-snapshot cost
+    # cold WindowExec — see BENCH.md r4). Steady-state per-run cost
     # is the quantity that projects to a real cluster; the warmup source
     # is 1/64 the size.
     run_flagship(spark, src_path)
@@ -329,9 +329,10 @@ def main() -> None:
     # noisy-neighbor outlier; the spread — (max−min)/median — is printed
     # so a round-over-round move can be judged against the measured noise
     # floor of THAT run).
-    # note: pipeline_fanout_write is dominated by per-snapshot fixed cost
-    # in local mode (one observe()-instrumented write action + (sink,salt)
-    # shuffle + local-FS file commits), not by row throughput
+    # note: run_pipeline writes all 4 snapshots in one observe()-instrumented
+    # action, so pipeline_fanout_write is per-run fixed cost (schema merge,
+    # dim broadcast, (sink,salt) shuffle, local-FS file commits) plus the
+    # rows, not a per-snapshot multiple of it
     parse_samples: list[float] = []
     write_samples: list[float] = []
     for _ in range(3):

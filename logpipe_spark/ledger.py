@@ -12,9 +12,10 @@ The Spark-native upgrade is snapshot-granular exactly-once:
   with a real Iceberg catalog these are `start-snapshot-id` incremental
   scans — no code change above this module).
 - the LEDGER is a JSON manifest of committed snapshot ids per sink root,
-  written atomically (tmp + rename). A killed run leaves at most one
-  uncommitted snapshot's output behind; re-running overwrites exactly that
-  snapshot's output directory (idempotent) and commits it once.
+  written atomically (tmp + rename). A killed run leaves only uncommitted
+  snapshots' output behind; re-running clears exactly those snapshots'
+  output directories, rewrites them (idempotent) and commits each once.
+  Each commit records the snapshot's lineage counters in ``metrics``.
 
 Tests kill a run between write and commit and assert no duplicated routed
 rows after resume (SURVEY.md §5 invariant 3).

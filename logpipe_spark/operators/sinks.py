@@ -13,15 +13,17 @@ Reference semantics being re-expressed:
 - HDFS day-dir naming (`logpipe-output-hdfs.c:195-213`) → partition columns;
   date partitioning is a one-liner for callers that want it.
 - offset/line bookkeeping (`logpipe-input-file.c:1901-1925`) → the lineage
-  table (LINEAGE_DDL): whole-snapshot conservation counters collected by an
-  observe() listener ON the write action itself (see pipeline.run_pipeline)
-  — zero extra passes, partition_id = -1 sentinel.
+  table (LINEAGE_DDL): per-snapshot conservation counters collected by one
+  observe() listener ON the batch's write action (see
+  pipeline.run_pipeline) — zero extra passes, partition_id = -1 sentinel.
 
 Scale notes: ``fan_out_write`` is ONE job: scan → (optional salted
-repartition) → dynamic-partitioned write. At 10^12 rows the thing to avoid
-is K separate filtered writes (K scans) or an unsalted shuffle where one
-conversation holds 20% of rows. AQE skew handling is on as backup, but the
-salt bounds the worst task deterministically.
+repartition) → dynamic-partitioned write, and ``run_pipeline`` calls it once
+per run for all pending snapshots (partitioned by snapshot, then sink), not
+once per snapshot. At 10^12 rows the thing to avoid is K separate filtered
+writes (K scans) or an unsalted shuffle where one conversation holds 20% of
+rows. AQE skew handling is on as backup, but the salt bounds the worst task
+deterministically.
 """
 
 from __future__ import annotations
@@ -81,9 +83,15 @@ def fan_out_write(
     ``out_dir/sink=<name>/``. Dropped (NULL-sink) rows are filtered here —
     after lineage counted them.
 
+    ``extra_partition_cols`` go BEFORE the sink: ``["snapshot"]`` gives
+    ``out_dir/snapshot=<k>/sink=<name>/``, which is how ``run_pipeline``
+    writes a whole batch of snapshots in one pass (``mode="append"``, after
+    clearing the batch's own directories, so committed snapshots stay put).
+
     ``shuffle_partitions``: pre-write shuffle keyed by **(sink, salt)**.
     The shuffle has only sinks × salt_buckets distinct keys, so the file
-    count is bounded by ~sinks × salt_buckets regardless of task count
+    count is bounded by ~sinks × salt_buckets per value of the extra
+    partition columns, regardless of task count
     (hash collisions can merge two key-groups into one task, which the
     writer re-splits per sink — the bound still holds), instead of
     tasks × sinks when the shuffle is keyed by a high-cardinality column.
@@ -101,7 +109,7 @@ def fan_out_write(
     small/large-file control; the read-time half is
     ``operators/compact.py`` for files that came out too SMALL. Set it
     from target_bytes / avg_row_bytes; 0/None = no cap."""
-    parts = [sink_col] + (extra_partition_cols or [])
+    parts = (extra_partition_cols or []) + [sink_col]
     df = routed_df.filter(F.col(sink_col).isNotNull())
     if shuffle_partitions:
         if salt_on is None and "turn_idx" in df.columns:

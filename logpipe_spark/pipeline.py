@@ -3,19 +3,23 @@
 This is the Spark-native replacement for the reference's single dataflow
 operator `WriteAllOutputPlugins` (`src/output.c:103-355`): where logpipe
 drives Read → K×Process → M×Write per 100 KB block under epoll, here the
-whole flow is ONE declarative DataFrame chain per snapshot — Catalyst fuses
+whole flow is ONE declarative DataFrame chain per run — Catalyst fuses
 parse+route into the scan projection, the enrich join is broadcast (no fact
-shuffle), and the fan-out write is a single dynamic-partitioned pass.
+shuffle), and the fan-out write is a single dynamic-partitioned pass over
+every pending snapshot at once, the way the reference reads each block once
+and hands it to every output.
 
 Crash/restart semantics (`src/monitor.c:89-181` + offset commit
-`logpipe-input-file.c:1901-1925`) become: process pending snapshots in
-order; per snapshot overwrite-then-commit via ``SnapshotLedger`` —
-exactly-once instead of the reference's at-least-once.
+`logpipe-input-file.c:1901-1925`) become: read, route and write all pending
+snapshots as one batch (clearing their uncommitted output first), write
+each snapshot's lineage, then commit the snapshots in order via
+``SnapshotLedger`` — exactly-once instead of the reference's at-least-once.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -49,6 +53,45 @@ def build_stage_chain(
     return route(enriched, rules)
 
 
+_COUNTERS = ("rows_in", "parsed", "routed", "dropped")
+
+
+def _snapshot_files(
+    snap_dir: str,
+    include_files: list[str] | None,
+    exclude_files: list[str] | None,
+) -> list[str]:
+    """The data files of one snapshot, listed driver-side. The same list
+    feeds the scan and the input-edge lineage, so the two cannot disagree."""
+    from logpipe_spark.sources.readers import select_input_files
+
+    if include_files or exclude_files:
+        return select_input_files(snap_dir, include_files, exclude_files)
+    # mirror Spark's data-file rule: every non-hidden FILE at any depth
+    # counts (a parquet part without the .parquet suffix is still data, and
+    # a partitioned subdirectory's parts are too, so both must appear in the
+    # input-edge lineage or conservation breaks); directories themselves are
+    # walked, never handed to the footer reader — a flat listing here once
+    # fed a subdirectory to pq.ParquetFile, crashing after the data write
+    # and poisoning every resume
+    paths = []
+    for dirpath, dirnames, filenames in os.walk(snap_dir):
+        dirnames[:] = sorted(d for d in dirnames if not d.startswith((".", "_")))
+        paths += [
+            os.path.join(dirpath, n)
+            for n in sorted(filenames)
+            if not n.startswith((".", "_"))
+        ]
+    if not paths:
+        # same contract as select_input_files: an empty return means "all
+        # files filtered out by the globs", never "nothing arrived yet"
+        raise FileNotFoundError(
+            f"run_pipeline: no data files under {snap_dir} — an empty "
+            "snapshot directory is a source bug, not a zero-row snapshot"
+        )
+    return paths
+
+
 def run_pipeline(
     spark: SparkSession,
     src_dir: str,
@@ -67,12 +110,18 @@ def run_pipeline(
 ) -> dict:
     """Process every pending snapshot under ``src_dir`` exactly once.
 
-    ``min_input_partitions``: under-split sources (a snapshot that is one
-    parquet file with one row group is ONE scan task — the whole
-    parse→route stage runs single-threaded no matter how many cores) are
-    repartitioned up to this many partitions before parsing. Default 0 →
-    the session's default parallelism. Pass None to disable. Well-split
-    sources are never touched, so at scale this is a free plan check.
+    All pending snapshots form ONE batch: one scan over every snapshot's
+    files, one stage chain, one write partitioned by (snapshot, sink). The
+    Spark job and exchange counts are therefore fixed per run, not per
+    snapshot. Lineage is then written per snapshot, and the ledger commits
+    the snapshots in order.
+
+    ``min_input_partitions``: an under-split batch (few parquet files with
+    one row group each are few scan tasks — the whole parse→route stage
+    would run on that many cores) is repartitioned up to this many
+    partitions before parsing. Default 0 → the session's default
+    parallelism. Pass None to disable. A well-split batch is never
+    touched, so at scale this is a free plan check.
 
     ``include_files`` / ``exclude_files``: source-level basename glob
     filters (the reference's files../exclude_files.. walk) — pruned from
@@ -80,8 +129,9 @@ def run_pipeline(
     snapshot whose files are all filtered out commits with zero-row
     lineage (the reference likewise commits nothing and moves on).
 
-    ``fail_after_write_snapshot``: test hook — raise after writing (before
-    committing) that snapshot, simulating a worker crash at the worst moment.
+    ``fail_after_write_snapshot``: test hook — raise after the batch's data
+    and lineage writes, with the snapshots before it committed and it not,
+    simulating a worker crash at the worst moment.
 
     ``per_file_lineage``: include the per-OUTPUT-file rows (read from the
     written parquet footers). Snapshot totals and per-INPUT-file rows are
@@ -95,35 +145,39 @@ def run_pipeline(
     share that contract; the distributed ``operators.sinks.file_lineage``
     exists for layouts where it doesn't hold.
 
-    Returns {run_id, processed: [snapshot ids], lineage_rows: int}.
+    Returns {run_id, processed: [snapshot ids]}.
     """
-    from logpipe_spark.sources.readers import select_input_files
-
     run_id = run_id or uuid.uuid4().hex[:12]
     ledger = SnapshotLedger(out_dir)
     data_root = os.path.join(out_dir, "data")
     lineage_root = os.path.join(out_dir, "lineage")
-    processed = []
+    batch = ledger.pending(src_dir)
+    src_paths = {
+        snap: _snapshot_files(
+            os.path.join(src_dir, f"snapshot={snap}"), include_files, exclude_files
+        )
+        for snap in batch
+    }
+    files = [f for snap in batch for f in src_paths[snap]]
+    counters = {snap: dict.fromkeys(_COUNTERS, 0) for snap in batch}
+    # a batch snapshot is uncommitted, so no reader sees its data dir:
+    # whatever a crashed run left there goes, and the append below never
+    # touches a committed snapshot's files
+    for snap in batch:
+        shutil.rmtree(os.path.join(data_root, f"snapshot={snap}"), ignore_errors=True)
 
-    for snap in ledger.pending(src_dir):
-        snap_dir = os.path.join(src_dir, f"snapshot={snap}")
-        src_paths = None
-        if include_files or exclude_files:
-            src_paths = paths = select_input_files(
-                snap_dir, include_files, exclude_files
-            )
-            if not paths:
-                write_lineage_parquet(
-                    [(run_id, int(snap), -1, 0, 0, 0, 0, None, None)],
-                    LINEAGE_DDL,
-                    os.path.join(lineage_root, f"snapshot={snap}"),
-                )
-                ledger.commit(snap, run_id)
-                processed.append(snap)
-                continue
-            df = spark.read.parquet(*paths)
-        else:
-            df = spark.read.parquet(snap_dir)
+    if files:
+        # mergeSchema: a column added in a later snapshot is NULL in the
+        # earlier ones, and a type conflict between snapshots fails here,
+        # before anything is written
+        df = spark.read.option("mergeSchema", "true").parquet(*files)
+        # the snapshot id is the last snapshot=<k> directory of the file
+        df = df.withColumn(
+            "snapshot",
+            F.regexp_extract(
+                F.col("_metadata.file_path"), r".*/snapshot=(\d+)/", 1
+            ).cast("long"),
+        )
         if min_input_partitions is not None:
             target = min_input_partitions or spark.sparkContext.defaultParallelism
             # getNumPartitions reads the plan, not the data — no job runs
@@ -131,32 +185,41 @@ def run_pipeline(
                 df = df.repartition(target)
         routed = build_stage_chain(df, dim, rules, parser=parser, dim_keys=dim_keys)
 
-        # ONE action per snapshot: conservation counters ride the write via
-        # observe() (collected by a listener, zero extra reads) instead of a
-        # separate aggregation action over a persisted copy — the
-        # single-read/multi-write invariant of the reference's
-        # output.c:256-277, now including the bookkeeping. The observe node
-        # sits above the route stage and below fan_out_write's NULL-sink
-        # filter, so dropped rows are counted, then discarded.
-        obs = Observation(f"lineage_{run_id}_s{snap}")
-        routed = routed.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows_in"),
-            F.count("n_fields").alias("parsed"),
-            F.count("sink").alias("routed"),
-            F.coalesce(
-                F.sum(F.col("sink").isNull().cast("long")), F.lit(0)
-            ).alias("dropped"),
-        )
-        # the write-side shuffle keys by (sink, salt) — one sink per task,
-        # hot sinks spread over salt_buckets tasks, ~salt_partitions output
-        # files instead of tasks×sinks (repartition_salted by conv_id
-        # remains the right key when a downstream consumer, not the file
-        # layout, needs co-located conversations)
-        snap_data = os.path.join(data_root, f"snapshot={snap}")
-        fan_out_write(routed, snap_data, shuffle_partitions=salt_partitions)
+        # ONE action per batch: each snapshot's conservation counters ride
+        # the write via observe() as conditional counts (collected by a
+        # listener, zero extra reads) — the single-read/multi-write
+        # invariant of the reference's output.c:256-277, now including the
+        # bookkeeping. The observe node sits above the route stage and
+        # below fan_out_write's NULL-sink filter, so dropped rows are
+        # counted, then discarded.
+        obs = Observation(f"lineage_{run_id}")
+        snap_col, sink = F.col("snapshot"), F.col("sink")
+        aggs = []
+        for snap in batch:
+            in_snap = snap_col == snap
+            aggs += [
+                F.count(F.when(in_snap, 1)).alias(f"rows_in_{snap}"),
+                F.count(F.when(in_snap, F.col("n_fields"))).alias(f"parsed_{snap}"),
+                F.count(F.when(in_snap, sink)).alias(f"routed_{snap}"),
+                F.count(F.when(in_snap & sink.isNull(), 1)).alias(f"dropped_{snap}"),
+            ]
+        routed = routed.observe(obs, *aggs)
 
+        # the write-side shuffle keys by (sink, salt) — one sink per task,
+        # hot sinks spread over salt_buckets tasks, ~snapshots×sinks×salt
+        # output files instead of tasks×snapshots×sinks (repartition_salted
+        # by conv_id remains the right key when a downstream consumer, not
+        # the file layout, needs co-located conversations)
+        fan_out_write(
+            routed, data_root, mode="append",
+            extra_partition_cols=["snapshot"], shuffle_partitions=salt_partitions,
+        )
         m = obs.get
+        counters = {snap: {c: m[f"{c}_{snap}"] for c in _COUNTERS} for snap in batch}
+
+    for snap in batch:
+        snap_data = os.path.join(data_root, f"snapshot={snap}")
+        c = counters[snap]
         # Three granularities in one tiny table, all collected WITHOUT a
         # second pass over the data:
         #   partition_id=-1, sink+file NULL  → whole-snapshot observe()
@@ -166,57 +229,33 @@ def run_pipeline(
         #   partition_id>=0, sink NULL       → one row per INPUT file
         #                                      (rows_in from its footer).
         # Footers are read driver-side with pyarrow: fan_out_write's keyed
-        # shuffle bounds output files at ~sinks×salt_buckets, so this is a
-        # handful of KB-sized reads — the previous Spark-job variant
-        # (file_lineage + Window) cost ~13 s of cold-JVM codegen per bench
-        # run for the same rows (BENCH.md r4 A/B).
+        # shuffle bounds output files at ~sinks×salt_buckets per snapshot,
+        # so this is a handful of KB-sized reads — the previous Spark-job
+        # variant (file_lineage + Window) cost ~13 s of cold-JVM codegen
+        # per bench run for the same rows (BENCH.md r4 A/B).
         lineage_rows = [
-            (
-                run_id, int(snap), -1,
-                m["rows_in"], m["parsed"], m["routed"], m["dropped"],
-                None, None,
-            )
+            (run_id, snap, -1, *(c[k] for k in _COUNTERS), None, None)
         ]
-        if m["routed"] and per_file_lineage:
-            for pid, sink, f, n_routed in file_lineage_rows(snap_data):
+        if c["routed"] and per_file_lineage:
+            for pid, sink_name, f, n_routed in file_lineage_rows(snap_data):
                 lineage_rows.append(
-                    (run_id, int(snap), pid, None, None, n_routed, None, sink, f)
+                    (run_id, snap, pid, None, None, n_routed, None, sink_name, f)
                 )
-        if src_paths is None:
-            # mirror Spark's data-file rule: every non-hidden FILE at any
-            # depth counts (a parquet part without the .parquet suffix is
-            # still read by the scan, and a partitioned subdirectory's
-            # parts are too, so both must appear in the input-edge lineage
-            # or conservation breaks); directories themselves are walked,
-            # never handed to the footer reader — a flat listing here once
-            # fed a subdirectory to pq.ParquetFile, crashing after the
-            # data write and poisoning every resume
-            src_paths = []
-            for dirpath, dirnames, filenames in os.walk(snap_dir):
-                dirnames[:] = sorted(
-                    d for d in dirnames if not d.startswith((".", "_"))
-                )
-                src_paths += [
-                    os.path.join(dirpath, n)
-                    for n in filenames
-                    if not n.startswith((".", "_"))
-                ]
-        for pid, f, rows_in in source_file_rows(src_paths):
+        for pid, f, rows_in in source_file_rows(src_paths[snap]):
             lineage_rows.append(
-                (run_id, int(snap), pid, rows_in, None, None, None, None, f)
+                (run_id, snap, pid, rows_in, None, None, None, None, f)
             )
         write_lineage_parquet(
             lineage_rows, LINEAGE_DDL,
             os.path.join(lineage_root, f"snapshot={snap}"),
         )
 
+    for snap in batch:
         if fail_after_write_snapshot == snap:
             raise RuntimeError(f"injected crash after write of snapshot {snap}")
+        ledger.commit(snap, run_id, metrics={**counters[snap], "batch": batch})
 
-        ledger.commit(snap, run_id)
-        processed.append(snap)
-
-    return {"run_id": run_id, "processed": processed}
+    return {"run_id": run_id, "processed": batch}
 
 
 def read_sinks(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -236,3 +236,165 @@ def test_fan_out_write_max_records_per_file(spark, tmp_path):
     uncapped = str(tmp_path / "uncapped")
     fan_out_write(df, uncapped, shuffle_partitions=2, salt_buckets=1)
     assert len(glob.glob(f"{uncapped}/sink=sink_a/*.parquet")) < 10
+
+
+def test_ledger_metrics_match_lineage_totals(spark, pipe_out):
+    """Each commit carries its snapshot's observe() counters — the same
+    numbers as its partition_id = -1 lineage row — plus the batch it
+    shared one read and one write with."""
+    import json
+
+    with open(os.path.join(pipe_out, "_ledger.json")) as f:
+        commits = {c["snapshot_id"]: c for c in json.load(f)["commits"]}
+    totals = read_lineage(spark, pipe_out).filter(F.col("partition_id") == -1).collect()
+    assert sorted(commits) == sorted(r["snapshot_id"] for r in totals) == [0, 1, 2, 3]
+    for r in totals:
+        m = commits[r["snapshot_id"]]["metrics"]
+        assert m["batch"] == [0, 1, 2, 3]
+        assert {k: m[k] for k in ("rows_in", "parsed", "routed", "dropped")} == {
+            k: r[k] for k in ("rows_in", "parsed", "routed", "dropped")
+        }
+        assert m["rows_in"] == m["routed"] + m["dropped"] > 0
+
+
+def _assert_matches_oracle(spark, out, golden):
+    got = (
+        read_sinks(spark, out)
+        .select("sink", "conv_id", "turn_idx", "text")
+        .toPandas()
+        .sort_values(["sink", "conv_id", "turn_idx"])
+        .reset_index(drop=True)
+    )
+    exp = golden["routed"][["sink", "conv_id", "turn_idx", "text"]].reset_index(drop=True)
+    assert len(got) == len(exp)
+    for col in ("sink", "conv_id", "turn_idx", "text"):
+        assert got[col].tolist() == exp[col].tolist()
+
+
+def test_schema_drift_added_column(spark, transcripts_pdf, dim_df, rules, golden, tmp_path):
+    """A column that first appears in snapshot 2 reaches snapshot 2's
+    routed rows and reads as NULL in snapshots 0-1 (the batch scan merges
+    the snapshots' schemas)."""
+    import pandas as pd
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    write_snapshots(transcripts_pdf, src, n_snapshots=3)
+    part = os.path.join(src, "snapshot=2", "part-0.parquet")
+    pdf = pd.read_parquet(part)
+    pdf["region"] = "eu-" + pdf["conv_id"].str[-1]
+    pdf.to_parquet(part, index=False)
+
+    run_pipeline(spark, src, out, dim_df, rules, salt_partitions=4)
+    got = read_sinks(spark, out)
+    per_snap = {
+        r["snapshot"]: (r["n"], r["with_region"])
+        for r in got.groupBy("snapshot")
+        .agg(F.count(F.lit(1)).alias("n"), F.count("region").alias("with_region"))
+        .collect()
+    }
+    assert per_snap[2][0] > 0 and per_snap[2][1] == per_snap[2][0]
+    assert per_snap[0][1] == per_snap[1][1] == 0
+    assert sum(n for n, _ in per_snap.values()) == sum(golden["sink_counts"].values())
+
+
+def test_schema_type_conflict_raises_before_any_write(
+    spark, transcripts_pdf, dim_df, rules, tmp_path
+):
+    """Snapshots whose column types disagree cannot be merged: the run
+    fails at the scan, before any data or lineage is written, and nothing
+    is committed."""
+    import pandas as pd
+    from py4j.protocol import Py4JJavaError
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    write_snapshots(transcripts_pdf, src, n_snapshots=2)
+    part = os.path.join(src, "snapshot=1", "part-0.parquet")
+    pdf = pd.read_parquet(part)
+    pdf["turn_idx"] = pdf["turn_idx"].astype(str)
+    pdf.to_parquet(part, index=False)
+
+    with pytest.raises(Py4JJavaError, match="CANNOT_MERGE_SCHEMAS"):
+        run_pipeline(spark, src, out, dim_df, rules)
+    assert SnapshotLedger(out).committed() == set()
+    assert not os.path.exists(os.path.join(out, "data"))
+    assert not os.path.exists(os.path.join(out, "lineage"))
+
+
+def test_stale_uncommitted_output_is_removed(
+    spark, transcripts_pdf, dim_df, rules, golden, tmp_path
+):
+    """Output a crashed run left under an uncommitted snapshot — here a
+    whole sink directory the route rules never produce, holding real
+    rows — is cleared before the batch write, so readers see exactly the
+    oracle's rows."""
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    write_snapshots(transcripts_pdf, src, n_snapshots=4)
+    ghost = os.path.join(out, "data", "snapshot=1", "sink=ghost")
+    os.makedirs(ghost)
+    transcripts_pdf.head(10).to_parquet(os.path.join(ghost, "x.parquet"), index=False)
+
+    res = run_pipeline(spark, src, out, dim_df, rules, salt_partitions=4)
+    assert res["processed"] == [0, 1, 2, 3]
+    assert not os.path.exists(ghost)
+    _assert_matches_oracle(spark, out, golden)
+
+
+def test_resume_after_crash_on_last_snapshot(
+    spark, transcripts_pdf, dim_df, rules, golden, tmp_path
+):
+    """The crash hook on the batch's last snapshot: every data and lineage
+    write happened, 0-2 are committed, and the resume redoes only 3."""
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    write_snapshots(transcripts_pdf, src, n_snapshots=4)
+
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_pipeline(spark, src, out, dim_df, rules, fail_after_write_snapshot=3)
+    assert SnapshotLedger(out).committed() == {0, 1, 2}
+    assert os.path.isdir(os.path.join(out, "lineage", "snapshot=3"))
+
+    res = run_pipeline(spark, src, out, dim_df, rules)
+    assert res["processed"] == [3]
+    _assert_matches_oracle(spark, out, golden)
+
+
+def test_job_count_does_not_grow_with_snapshots(
+    spark, transcripts_pdf, dim_df, rules, tmp_path
+):
+    """All pending snapshots share one read, one stage chain and one write,
+    so 8 snapshots launch exactly as many Spark jobs as 4: the schema
+    merge, the dim broadcast, the (sink, salt) shuffle and the write.
+    ``min_input_partitions=None`` keeps the file-count-dependent
+    round-robin out of the comparison (4 one-file snapshots are under-split
+    at local[8], 8 are not)."""
+    sc = spark.sparkContext
+    jobs = {}
+    for n in (4, 8):
+        src, out = str(tmp_path / f"src{n}"), str(tmp_path / f"out{n}")
+        write_snapshots(transcripts_pdf, src, n_snapshots=n)
+        group = f"job_count_{n}"
+        sc.setJobGroup(group, group)
+        try:
+            run_pipeline(
+                spark, src, out, dim_df, rules, salt_partitions=8,
+                min_input_partitions=None,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[4] == jobs[8] <= 4, jobs
+
+
+def test_empty_pending_snapshot_raises_before_any_write(
+    spark, transcripts_pdf, dim_df, rules, tmp_path
+):
+    """A pending snapshot directory with no data files yet is a source
+    fault, not a zero-row snapshot: the run names it and commits nothing,
+    so the files that arrive later are still processed."""
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    write_snapshots(transcripts_pdf, src, n_snapshots=2)
+    os.makedirs(os.path.join(src, "snapshot=2"))
+
+    with pytest.raises(FileNotFoundError, match="snapshot=2"):
+        run_pipeline(spark, src, out, dim_df, rules)
+    assert SnapshotLedger(out).committed() == set()
+    assert not os.path.exists(os.path.join(out, "data"))
