@@ -15,7 +15,10 @@ Reference semantics being re-expressed:
 - offset/line bookkeeping (`logpipe-input-file.c:1901-1925`) → the lineage
   table (LINEAGE_DDL): per-snapshot conservation counters collected by one
   observe() listener ON the batch's write action (see
-  pipeline.run_pipeline) — zero extra passes, partition_id = -1 sentinel.
+  pipeline.run_pipeline) — zero extra passes, partition_id = -1 sentinel —
+  plus per-file rows read driver-side from parquet footers
+  (``file_lineage_rows``, ``source_file_rows``). Stream mode
+  (streaming.stream) uses the same write and the same footer lineage.
 
 Scale notes: ``fan_out_write`` is ONE job: scan → (optional salted
 repartition) → dynamic-partitioned write, and ``run_pipeline`` calls it once
@@ -41,9 +44,9 @@ from pyspark.sql import functions as F
 #                        extra passes over the source);
 #   partition_id >= 0  → one row per written file (sink + file + routed
 #                        count, derived from the output parquet footers —
-#                        see file_lineage). rows_in/parsed/dropped are NULL
-#                        at this granularity; per-file routed sums equal the
-#                        sentinel row's routed.
+#                        see file_lineage_rows). rows_in/parsed/dropped are
+#                        NULL at this granularity; per-file routed sums
+#                        equal the sentinel row's routed.
 LINEAGE_DDL = (
     "run_id string, snapshot_id long, partition_id int, "
     "rows_in long, parsed long, routed long, dropped long, "
@@ -133,16 +136,16 @@ def file_lineage_rows(data_dir: str, sink_col: str = "sink") -> list[tuple]:
     ``fan_out_write``'s (sink, salt)-keyed shuffle bounds the file count at
     ~sinks × salt_buckets regardless of data size, so after the write the
     per-file lineage is a handful of footer reads (~KBs each) — launching a
-    Spark job for it costs more than the answer (measured: the distributed
-    variant added ~13 s of cold-JVM WindowExec/metadata-scan codegen to the
-    benched pipeline; this list comprehension adds milliseconds). For a
-    layout whose file count is NOT bounded (no keyed shuffle, object store
-    with thousands of files), use the distributed ``file_lineage`` below.
+    Spark job for it costs more than the answer (measured: a metadata-scan
+    + Window job added ~13 s of cold-JVM codegen to the benched pipeline;
+    this list comprehension adds milliseconds). Batch and stream mode both
+    take their per-file lineage from here, so both share
+    ``run_pipeline``'s POSIX path contract.
 
     Returns [(partition_id, sink, file, routed)] with partition_id a dense
-    0-based index over files ordered by path (same contract as
-    ``file_lineage``). The routed count per file is the footer's num_rows:
-    every row in a ``sink=<name>/`` directory was routed to that sink.
+    0-based index over files ordered by path. The routed count per file is
+    the footer's num_rows: every row in a ``sink=<name>/`` directory was
+    routed to that sink.
     """
     import pyarrow.parquet as pq
 
@@ -160,18 +163,20 @@ def file_lineage_rows(data_dir: str, sink_col: str = "sink") -> list[tuple]:
     return rows
 
 
-def local_path(path: str) -> str | None:
-    """The POSIX path behind ``path``, or None when it names a non-local
-    filesystem. Driver-side footer/lineage shortcuts only apply to paths
-    the driver can os.open: plain paths and ``file:`` URIs qualify;
-    ``hdfs://``/``s3a://``/... do not (callers fall back to the
-    distributed variants)."""
+def local_path(path: str) -> str:
+    """The POSIX path behind ``path``: a plain path as is, a ``file:`` URI
+    as its path. Any other scheme (``hdfs://``, ``s3a://``, ...) raises
+    ValueError — the footer lineage and the driver-side lineage write need
+    a path the driver can os.open."""
     if path.startswith("file://"):
         return path[len("file://"):] or "/"
     if path.startswith("file:"):
         return path[len("file:"):]
     if "://" in path:
-        return None
+        raise ValueError(
+            f"{path!r} is not a local path: lineage is read from parquet "
+            "footers and written driver-side, so out_dir must be POSIX-visible"
+        )
     return path
 
 
@@ -241,46 +246,6 @@ def source_file_rows(paths: list[str]) -> list[tuple]:
             ) from exc
         rows.append((i, p, n))
     return rows
-
-
-def file_lineage(spark, data_dir: str, sink_col: str = "sink") -> DataFrame:
-    """Distributed variant of ``file_lineage_rows`` — per-file routed-row
-    counts as a DataFrame, for layouts whose file count is unbounded
-    (object-store listings where a driver-side footer loop would
-    serialize on the driver instead of fanning out).
-
-    Cost model: the grouping keys are ``_metadata.file_path`` (file-level
-    constant) and the ``sink`` directory-partition column, so the scan's
-    ReadSchema is EMPTY — Spark's vectorized parquet reader answers the
-    count from row-group metadata without decoding a single data column.
-    A footer-only pass: ~KBs per file, distributed, regardless of data size.
-
-    Returns (partition_id, sink, file, routed) with partition_id a dense
-    0-based index over files (deterministic: ordered by path). The window
-    runs over a file-count-sized table (~sinks × salt_buckets rows after
-    fan_out_write's keyed shuffle), not the data.
-    """
-    from pyspark.sql.window import Window
-
-    df = spark.read.option("basePath", data_dir).parquet(data_dir)
-    # canonical file form: plain POSIX path for local files (matching the
-    # driver-side file_lineage_rows/source_file_rows emissions), scheme'd
-    # URI for genuinely remote files — _metadata.file_path is always a
-    # file: URI locally, which would otherwise leak a second representation
-    # into consumers joining lineage across modes/rounds
-    per_file = df.groupBy(
-        F.regexp_replace(
-            F.col("_metadata.file_path"), r"^file:(//)?", ""
-        ).alias("file"),
-        F.col(sink_col).alias("sink"),
-    ).agg(F.count(F.lit(1)).alias("routed"))
-    w = Window.orderBy("file")
-    return per_file.select(
-        (F.row_number().over(w) - 1).cast("int").alias("partition_id"),
-        "sink",
-        "file",
-        "routed",
-    )
 
 
 def sink_counts(routed_df: DataFrame, sink_col: str = "sink") -> DataFrame:

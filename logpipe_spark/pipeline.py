@@ -22,12 +22,12 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from logpipe_spark.ledger import SnapshotLedger
 from logpipe_spark.operators.enrich import enrich
-from logpipe_spark.operators.parse import extract_builtin, extract_pandas
+from logpipe_spark.operators.parse import extract_builtin
 from logpipe_spark.operators.route import route
 from logpipe_spark.operators.sinks import (
     LINEAGE_DDL,
@@ -42,18 +42,34 @@ def build_stage_chain(
     df: DataFrame,
     dim: DataFrame,
     rules: list[dict],
-    parser: str = "builtin",
     dim_keys: list[str] | None = None,
 ) -> DataFrame:
     """parse → enrich → route on an already-loaded transcript DataFrame.
     Returns the routed DataFrame (sink column nullable; NULL = dropped)."""
-    parse = extract_pandas if parser == "pandas" else extract_builtin
-    parsed = parse(df)
+    parsed = extract_builtin(df)
     enriched = enrich(parsed, dim, keys=dim_keys or ["tool", "role"], how="left")
     return route(enriched, rules)
 
 
 _COUNTERS = ("rows_in", "parsed", "routed", "dropped")
+
+
+def counter_aggs(where: Column | None = None, suffix: str = "") -> list[Column]:
+    """The conservation counters of a routed frame as aggregates, aliased
+    ``<counter><suffix>``: rows_in, parsed (n_fields set), routed (sink
+    set), dropped (sink NULL). ``where`` restricts every counter to the
+    rows it holds for. Batch and stream mode both observe exactly these."""
+    sink = F.col("sink")
+    if where is None:
+        values = [F.lit(1), F.col("n_fields"), sink, F.when(sink.isNull(), 1)]
+    else:
+        values = [
+            F.when(where, 1),
+            F.when(where, F.col("n_fields")),
+            F.when(where, sink),
+            F.when(where & sink.isNull(), 1),
+        ]
+    return [F.count(v).alias(c + suffix) for c, v in zip(_COUNTERS, values)]
 
 
 def _snapshot_files(
@@ -99,14 +115,12 @@ def run_pipeline(
     dim: DataFrame,
     rules: list[dict],
     run_id: str | None = None,
-    parser: str = "builtin",
     salt_partitions: int | None = None,
     fail_after_write_snapshot: int | None = None,
     dim_keys: list[str] | None = None,
     include_files: list[str] | None = None,
     exclude_files: list[str] | None = None,
     min_input_partitions: int | None = 0,
-    per_file_lineage: bool = True,
 ) -> dict:
     """Process every pending snapshot under ``src_dir`` exactly once.
 
@@ -133,17 +147,12 @@ def run_pipeline(
     and lineage writes, with the snapshots before it committed and it not,
     simulating a worker crash at the worst moment.
 
-    ``per_file_lineage``: include the per-OUTPUT-file rows (read from the
-    written parquet footers). Snapshot totals and per-INPUT-file rows are
-    always written. Explicit kwarg, not ambient env, so a bench A/B can't
-    leak into production behavior.
-
     Path contract: ``src_dir``/``out_dir`` must be POSIX-visible — the
     snapshot ledger itself is os-level (see ledger.py; the documented
     object-store swap is an Iceberg catalog, which replaces the ledger AND
-    the footer reads wholesale). The driver-side pyarrow footer reads
-    share that contract; the distributed ``operators.sinks.file_lineage``
-    exists for layouts where it doesn't hold.
+    the footer reads wholesale). The driver-side pyarrow footer reads and
+    lineage write share that contract, and ``streaming.stream.run_stream``
+    holds its out_dir to the same one.
 
     Returns {run_id, processed: [snapshot ids]}.
     """
@@ -183,7 +192,7 @@ def run_pipeline(
             # getNumPartitions reads the plan, not the data — no job runs
             if df.rdd.getNumPartitions() < target:
                 df = df.repartition(target)
-        routed = build_stage_chain(df, dim, rules, parser=parser, dim_keys=dim_keys)
+        routed = build_stage_chain(df, dim, rules, dim_keys=dim_keys)
 
         # ONE action per batch: each snapshot's conservation counters ride
         # the write via observe() as conditional counts (collected by a
@@ -193,16 +202,10 @@ def run_pipeline(
         # below fan_out_write's NULL-sink filter, so dropped rows are
         # counted, then discarded.
         obs = Observation(f"lineage_{run_id}")
-        snap_col, sink = F.col("snapshot"), F.col("sink")
-        aggs = []
-        for snap in batch:
-            in_snap = snap_col == snap
-            aggs += [
-                F.count(F.when(in_snap, 1)).alias(f"rows_in_{snap}"),
-                F.count(F.when(in_snap, F.col("n_fields"))).alias(f"parsed_{snap}"),
-                F.count(F.when(in_snap, sink)).alias(f"routed_{snap}"),
-                F.count(F.when(in_snap & sink.isNull(), 1)).alias(f"dropped_{snap}"),
-            ]
+        aggs = [
+            a for snap in batch
+            for a in counter_aggs(F.col("snapshot") == snap, f"_{snap}")
+        ]
         routed = routed.observe(obs, *aggs)
 
         # the write-side shuffle keys by (sink, salt) — one sink per task,
@@ -230,13 +233,13 @@ def run_pipeline(
         #                                      (rows_in from its footer).
         # Footers are read driver-side with pyarrow: fan_out_write's keyed
         # shuffle bounds output files at ~sinks×salt_buckets per snapshot,
-        # so this is a handful of KB-sized reads — the previous Spark-job
-        # variant (file_lineage + Window) cost ~13 s of cold-JVM codegen
-        # per bench run for the same rows (BENCH.md r4 A/B).
+        # so this is a handful of KB-sized reads — a Spark-job variant
+        # (metadata scan + Window) cost ~13 s of cold-JVM codegen per
+        # bench run for the same rows (BENCH.md r4 A/B).
         lineage_rows = [
             (run_id, snap, -1, *(c[k] for k in _COUNTERS), None, None)
         ]
-        if c["routed"] and per_file_lineage:
+        if c["routed"]:
             for pid, sink_name, f, n_routed in file_lineage_rows(snap_data):
                 lineage_rows.append(
                     (run_id, snap, pid, None, None, n_routed, None, sink_name, f)

@@ -4,7 +4,7 @@ description compiled to DataFrame transforms.
 
 logpipe config:                       here:
   { "inputs":  [ {plugin, opts} ],      { "source":  {path | snapshots},
-    "filters": [ {plugin, opts} ],        "parse":   {"parser": builtin|pandas},
+    "filters": [ {plugin, opts} ],        "parse":   builtin JSON extract,
     "outputs": [ {plugin, opts} ] }       "enrich":  {dim keys, how},
                                           "route":   [rule, ...],
                                           "sinks":   {out_dir, salt} }
@@ -34,7 +34,6 @@ class PipelineSpec:
     rules: list[dict]
     dim_rows: list[dict] = field(default_factory=list)
     dim_keys: list[str] = field(default_factory=lambda: ["tool", "role"])
-    parser: str = "builtin"
     salt_partitions: int | None = None
     run_id: str | None = None
     # source-level basename glob filters (logpipe-input-file.c:593-739):
@@ -64,7 +63,6 @@ class PipelineSpec:
             rules=cfg["rules"],
             dim_rows=cfg.get("dim", []),
             dim_keys=cfg.get("dim_keys", ["tool", "role"]),
-            parser=cfg.get("parser", "builtin"),
             salt_partitions=cfg.get("salt_partitions"),
             run_id=cfg.get("run_id"),
             files=cfg.get("files", []),
@@ -105,7 +103,6 @@ class PipelineSpec:
                 dim,
                 self.rules,
                 run_id=self.run_id,
-                parser=self.parser,
                 salt_partitions=self.salt_partitions,
                 dim_keys=self.dim_keys,
                 include_files=self.files or None,

@@ -14,19 +14,20 @@ Reference mapping:
 - monitor restart loop (`src/monitor.c:89-181`) → just restart the query
   with the same checkpointLocation.
 
-The per-batch body reuses the exact batch stage chain (parse → enrich →
-route) — one code path for both execution modes.
+The per-batch body reuses the batch pipeline layer by layer: the stage
+chain (parse → enrich → route), the observe() counters, the fan-out write
+and the footer lineage — one code path for both execution modes.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import types as T
 
-from logpipe_spark.pipeline import build_stage_chain
+from logpipe_spark.operators.sinks import fan_out_write, local_path
+from logpipe_spark.pipeline import _COUNTERS, build_stage_chain, counter_aggs
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -37,6 +38,15 @@ TRANSCRIPT_SCHEMA = T.StructType(
         T.StructField("tool", T.StringType()),
         T.StructField("ts", T.TimestampType()),
     ]
+)
+
+
+# stream lineage rows: the batch LINEAGE_DDL keyed by micro-batch id
+# instead of (run_id, snapshot_id); partition_id = -1 is the whole-batch
+# counters row, partition_id >= 0 one row per written file
+STREAM_LINEAGE_DDL = (
+    "batch_id long, partition_id int, rows_in long, parsed long, "
+    "routed long, dropped long, sink string, file string"
 )
 
 
@@ -53,6 +63,11 @@ def run_stream(
     """Micro-batch the source dir through the pipeline into partitioned
     sinks + per-batch lineage, exactly once per batch id.
 
+    ``out_dir`` follows ``pipeline.run_pipeline``'s path contract: it must
+    be POSIX-visible, because the per-file lineage is read from the written
+    footers and written driver-side. A ``file:`` URI is taken as its plain
+    path; any other scheme raises ValueError before the query starts.
+
     ``trigger_interval_us``: continuous-tail poll period (the reference's
     min/max_usleep backoff, `logpipe-input-file.c` config via
     usleep_atou64) — used when ``available_now`` is False; parse config
@@ -60,6 +75,7 @@ def run_stream(
 
     Returns {"batches": n} after the query drains (available_now) or
     times out."""
+    out_dir = local_path(out_dir)
     checkpoint = os.path.join(out_dir, "_checkpoint")
     data_root = os.path.join(out_dir, "data")
     lineage_root = os.path.join(out_dir, "lineage")
@@ -72,86 +88,38 @@ def run_stream(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Observation
+        # looked up at call time, so a wrapper installed on the sinks
+        # module (the benchmark's tracer) sees the stream's calls too
+        from logpipe_spark.operators.sinks import (
+            file_lineage_rows,
+            write_lineage_parquet,
+        )
 
         # same single-action shape as batch mode: conservation counters
         # ride the sink write via observe() — no persist, no second pass
         routed = build_stage_chain(batch_df, dim, rules)
         obs = Observation(f"stream_lineage_b{batch_id}")
-        routed = routed.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows_in"),
-            F.count("n_fields").alias("parsed"),
-            F.count("sink").alias("routed"),
-            F.coalesce(
-                F.sum(F.col("sink").isNull().cast("long")), F.lit(0)
-            ).alias("dropped"),
-        )
-        (
-            routed.filter(F.col("sink").isNotNull())
-            .write.mode("overwrite")  # overwrite per batch dir = idempotent replay
-            .partitionBy("sink")
-            .parquet(os.path.join(data_root, f"batch={batch_id}"))
-        )
-        m = obs.get
-        ddl = (
-            "batch_id long, partition_id int, rows_in long, parsed long, "
-            "routed long, dropped long, sink string, file string"
-        )
-        lineage_rows = [
-            (
-                int(batch_id), -1,  # -1 = whole-batch counters
-                m["rows_in"], m["parsed"], m["routed"], m["dropped"],
-                None, None,
-            )
-        ]
+        routed = routed.observe(obs, *counter_aggs())
         batch_data = os.path.join(data_root, f"batch={batch_id}")
-        batch_lineage = os.path.join(lineage_root, f"batch={batch_id}")
-        # unlike the batch pipeline (whose ledger pins out_dir to a POSIX
-        # path), streaming writes through Hadoop FS — driver-side pyarrow
-        # only applies to paths the driver can os.open (plain or file:
-        # URIs, normalized); any other scheme keeps the distributed
-        # metadata-only pass
-        from logpipe_spark.operators.sinks import local_path
-
-        local_data = local_path(batch_data)
-        local_lineage = local_path(batch_lineage)
-        if m["routed"] and local_data is not None:
+        # overwrite per batch dir = idempotent replay
+        fan_out_write(routed, batch_data)
+        m = obs.get
+        lineage_rows = [
+            (int(batch_id), -1, *(m[c] for c in _COUNTERS), None, None)
+        ]
+        if m["routed"]:
             # per-file granularity from the just-written parquet footers,
-            # read driver-side with pyarrow (sinks.file_lineage_rows) —
-            # the file count is bounded by sinks × upstream partitions per
-            # micro-batch, so a Spark job per batch would cost more than
-            # the answer (same A/B as the batch pipeline, BENCH.md r4)
-            from logpipe_spark.operators.sinks import file_lineage_rows
-
+            # as in batch mode: the file count is bounded by sinks ×
+            # upstream partitions per micro-batch, so a Spark job per batch
+            # would cost more than the answer (BENCH.md r4)
             lineage_rows += [
-                (int(batch_id), pid, None, None, routed, None, sink, f)
-                for pid, sink, f, routed in file_lineage_rows(local_data)
+                (int(batch_id), pid, None, None, n_routed, None, sink, f)
+                for pid, sink, f, n_routed in file_lineage_rows(batch_data)
             ]
-        if local_lineage is not None:
-            # driver-side pyarrow write: a per-batch Spark job for ~10
-            # rows of metadata would dominate micro-batch latency
-            from logpipe_spark.operators.sinks import write_lineage_parquet
-
-            write_lineage_parquet(lineage_rows, ddl, local_lineage)
-        else:
-            from logpipe_spark.operators.sinks import file_lineage
-
-            spark = batch_df.sparkSession
-            lineage = spark.createDataFrame(lineage_rows, ddl)
-            if m["routed"]:
-                per_file = file_lineage(spark, batch_data).select(
-                    F.lit(int(batch_id)).alias("batch_id"),
-                    "partition_id",
-                    F.lit(None).cast("long").alias("rows_in"),
-                    F.lit(None).cast("long").alias("parsed"),
-                    F.col("routed").cast("long").alias("routed"),
-                    F.lit(None).cast("long").alias("dropped"),
-                    "sink",
-                    "file",
-                )
-                lineage = lineage.unionByName(per_file)
-            lineage.write.mode("overwrite").parquet(batch_lineage)
+        write_lineage_parquet(
+            lineage_rows, STREAM_LINEAGE_DDL,
+            os.path.join(lineage_root, f"batch={batch_id}"),
+        )
         seen["batches"] += 1
 
     writer = (

@@ -91,6 +91,64 @@ def test_stream_lineage_conservation(spark, stream_env, golden, transcripts_pdf)
     assert per_batch == tot_batch
 
 
+STREAM_LINEAGE_COLS = [
+    "batch_id", "partition_id", "rows_in", "parsed", "routed", "dropped",
+    "sink", "file",
+]
+
+
+def test_stream_file_uri_out_dir_writes_file_lineage(
+    spark, transcripts_pdf, dim_df, rules, tmp_path
+):
+    """A file: URI out_dir is the same local directory: the stream drains
+    into it and its per-file lineage names plain POSIX paths that exist,
+    summing per batch to the batch's routed counter."""
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "src")
+    out = tmp_path / "out"
+    write_snapshots(transcripts_pdf.head(2000), src, n_snapshots=2)
+    res = run_stream(spark, src, f"file:{out}", dim_df, rules)
+    assert res["batches"] >= 1
+
+    lin = pq.read_table(str(out / "lineage")).to_pandas()
+    per_file = lin[lin["partition_id"] >= 0]
+    assert len(per_file) > 0
+    for f in per_file["file"]:
+        assert not f.startswith("file:") and os.path.isabs(f), f
+        assert os.path.isfile(f), f
+    totals = lin[lin["partition_id"] == -1].set_index("batch_id")["routed"]
+    sums = per_file.groupby("batch_id")["routed"].sum()
+    assert sums.to_dict() == totals[totals > 0].to_dict()
+    assert totals.sum() + lin[lin["partition_id"] == -1]["dropped"].sum() == 2000
+
+
+def test_stream_rejects_non_local_out_dir(spark, transcripts_pdf, dim_df, rules, tmp_path):
+    """A non-local out_dir fails before the query starts: the footer
+    lineage needs a path the driver can open, so nothing is written, not
+    even a checkpoint."""
+    src = str(tmp_path / "src")
+    write_snapshots(transcripts_pdf.head(100), src, n_snapshots=1)
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="not a local path"):
+        run_stream(spark, src, "hdfs://namenode:8020/logpipe/out", dim_df, rules)
+    assert len(spark.streams.active) == active
+    assert not [d for d, _, _ in os.walk(tmp_path) if "_checkpoint" in d]
+
+
+def test_stream_lineage_columns(stream_env):
+    """The stream lineage table keeps its 8 columns, keyed by batch_id."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    _, out = stream_env
+    files = glob.glob(os.path.join(out, "lineage", "batch=*", "*.parquet"))
+    assert files
+    for f in files:
+        assert pq.read_schema(f).names == STREAM_LINEAGE_COLS
+
+
 def test_windowed_watermark_stream(spark, transcripts_pdf, tmp_path):
     """Watermarked tumbling-window aggregation in append mode: every
     emitted (finalized) window row equals the batch-mode result for that
