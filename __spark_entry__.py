@@ -602,10 +602,10 @@ def q_dedup_components(spark, sf_dir):
     """Connected components over the near-dup graph — the ITERATIVE
     algorithm row: Jaccard-0.8 pairs unioned with planted chain edges
     (doc_id ↔ doc_id+1 when doc_id % 10 < 3, PLUS a single deep chain over
-    doc_id < 120 whose diameter 119 exceeds min-label propagation's default
-    30-round budget — so this row exercises the production deep-graph
-    path). Spark side: large-star/small-star alternation (Kiveris et al.,
-    SoCC'14; operators/dedup.py:connected_components_star) — O(log^2 n)
+    doc_id < 120 whose diameter 119 would cost min-label propagation 119
+    rounds — so this row exercises the deep-graph case). Spark side:
+    large-star/small-star alternation (Kiveris et al., SoCC'14;
+    operators/dedup.py:connected_components_star) — O(log^2 n)
     alternations, id-only shuffles; oracle: recursive-CTE reachability
     computing the same min-reachable-id."""
     from logpipe_spark.operators.dedup import connected_components_star

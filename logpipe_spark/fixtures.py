@@ -174,14 +174,6 @@ def default_route_rules() -> list[dict]:
     ]
 
 
-def write_transcripts_parquet(path: str, n_turns: int, seed: int = SEED) -> str:
-    """Materialize a transcript fixture as a single parquet file."""
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    df = gen_transcripts(n_turns, seed=seed)
-    df.to_parquet(path, index=False)
-    return path
-
-
 def write_transcripts_dir(
     path: str, n_turns: int, n_files: int = 32, seed: int = SEED
 ) -> str:

@@ -24,8 +24,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-META_KEYS = ("system", "server", "filename", "offset", "line")
-
 
 def pack_metadata(
     system: Column, server: Column, filename: Column, offset: Column, line: Column

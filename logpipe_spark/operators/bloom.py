@@ -74,38 +74,6 @@ def build_bloom(
     )
 
 
-def bloom_might_contain(
-    words: list[int], col: Column, m_bits: int, k: int
-) -> Column:
-    """Membership predicate against a DENSE word list (index = word id,
-    built by :func:`bloom_words`). Pure map-side JVM expressions — the
-    filter rides into every task as one array literal."""
-    arr = F.lit(words)
-    # 32-entry mask lookup instead of shiftleft-by-column (pyspark's
-    # shiftleft insists on a Python-int shift; a literal array is just as
-    # codegen-friendly)
-    masks = F.lit([1 << b for b in range(32)])
-    cond = None
-    for p in _positions(col, m_bits, k):
-        word = F.element_at(arr, (p / 32).cast("int") + 1)
-        mask = F.element_at(masks, (p % 32).cast("int") + 1)
-        hit = word.bitwiseAND(mask) != 0
-        cond = hit if cond is None else (cond & hit)
-    return cond
-
-
-def bloom_words(bloom: DataFrame, m_bits: int) -> list[int]:
-    """Densify a (word, bits) filter table into a word-indexed list.
-    The ONE driver collect in this module, bounded by construction to
-    m_bits/32 longs (MAX_BLOOM_BITS caps it at 16M words) — the same
-    bounded-metadata exception as mix_sample's per-group counts."""
-    n_words = m_bits // 32
-    dense = [0] * n_words
-    for row in bloom.collect():
-        dense[row["word"]] = row["bits"]
-    return dense
-
-
 #: byte-map probe blobs above this bit count would exceed ~1 MB
 MAX_BYTEMAP_BITS = 1 << 23
 
@@ -117,8 +85,8 @@ def bloom_bytemap(bloom: DataFrame, m_bits: int) -> bytes:
     how Spark evaluates per-row lookups against driver-held constants —
     measured on 150k probe rows, 4096-word filter:
 
-    - ``F.lit(list)`` + ``element_at``: the CreateArray child is
-      re-materialised per probe per row → 7-8 s.
+    - ``F.lit(list)`` + ``element_at`` over a dense word list: the
+      CreateArray child is re-materialised per probe per row → 7-8 s.
     - hex STRING literal + ``substr``: UTF8String counts characters, so
       every substr is O(len) → 13 s for ONE probe of a 32 KB string.
     - BINARY literal + ``substr``: byte slicing is offset math → the
@@ -127,8 +95,8 @@ def bloom_bytemap(bloom: DataFrame, m_bits: int) -> bytes:
       no arrays, no per-row allocation.
 
     The 8× expansion (1 MB at 2^23 bits, the ``MAX_BYTEMAP_BITS`` cap)
-    buys O(1) probes; filters bigger than the cap should ship as a
-    table join, not a literal."""
+    buys O(1) probes; ``bloom_semi_join`` probes filters bigger than the
+    cap with :func:`bloom_bitpack` instead of a literal."""
     if m_bits > MAX_BYTEMAP_BITS:
         raise ValueError(
             f"byte-map probe blob capped at {MAX_BYTEMAP_BITS} bits; "

@@ -565,79 +565,6 @@ def simhash_neardup_pairs(
 # connected components (iterative) — dedup cluster closure
 # ---------------------------------------------------------------------------
 
-def connected_components(
-    edges: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Connected components over an undirected near-dup edge list — the
-    transitive closure the keep-first star rule (``dedup_keep_list``)
-    deliberately skips. Returns (node, component) with component = the
-    minimum doc id reachable from the node.
-
-    Algorithm: min-label propagation to fixpoint — each round every node
-    takes min(own label, neighbors' labels); converges in ≤ graph-diameter
-    rounds. Each round is one join + one groupBy (both on the node id);
-    ``localCheckpoint`` truncates the growing plan lineage each round
-    (iterative DataFrame algorithms otherwise re-derive every prior round
-    at each action). Convergence is detected from sum(label): labels only
-    ever decrease, so an unchanged sum ⇒ fixpoint — one tiny aggregate
-    action per round instead of a change-count join.
-
-    Scale: rounds = component diameter (near-dup clusters are shallow —
-    a handful of rounds); per-round cost is an id-only shuffle. For
-    adversarially deep graphs the production upgrade is the large-star/
-    small-star alternation (Kiveris et al., "Connected Components in
-    MapReduce"), which contracts paths exponentially; the fixture graphs
-    here are shallow and the simple propagation is the clearer reference
-    implementation."""
-    sym = edges.select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-    ).union(edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-    labels = (
-        sym.select(F.col("src").alias("node")).distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-    prev_sum = labels.agg(F.sum("label")).first()[0]
-    converged = False
-    # max_iter bounds the CHANGING rounds (≤ graph diameter); the +1 is the
-    # confirming round that observes no change — so max_iter == diameter is
-    # sufficient, matching the docstring (a fixpoint reached on exactly the
-    # max_iter-th round must not raise)
-    for _ in range(max_iter + 1):
-        nbr_min = (
-            sym.join(labels, sym["dst"] == labels["node"])
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.min("label").alias("nbr"))
-        )
-        labels = (
-            labels.join(nbr_min, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce("nbr", "label")).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        cur_sum = labels.agg(F.sum("label")).first()[0]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        # truncated labels are WRONG (nodes > max_iter hops from their
-        # component's minimum still carry a stale label) — never return
-        # them silently (ADVICE r3); raise so the caller re-runs with a
-        # higher budget or switches to large-star/small-star
-        raise RuntimeError(
-            f"connected_components did not converge in max_iter={max_iter} "
-            f"rounds (graph diameter exceeds the budget); raise max_iter or "
-            f"use connected_components_star for deep graphs"
-        )
-    return labels.select("node", F.col("label").alias("component"))
-
-
 def _large_star(e: DataFrame) -> DataFrame:
     """One large-star round (Kiveris et al., "Connected Components in
     MapReduce and Beyond", SoCC'14, Alg. 1): every node connects its
@@ -692,12 +619,13 @@ def connected_components_star(
     max_iter: int = 40,
     return_rounds: bool = False,
 ):
-    """Connected components by large-star/small-star alternation (Kiveris
-    et al., SoCC'14) — the deep-graph production path. Same contract as
-    ``connected_components``: returns (node, component) with component =
-    the minimum id in the node's component.
+    """Connected components over an undirected near-dup edge list — the
+    transitive closure the keep-first star rule (``dedup_keep_list``)
+    deliberately skips — by large-star/small-star alternation (Kiveris
+    et al., SoCC'14). Returns (node, component) with component = the
+    minimum id in the node's component.
 
-    Why this exists next to min-label propagation: propagation needs
+    Why star contraction and not min-label propagation: propagation needs
     diameter rounds (an adversarial 10^6-link near-dup chain = 10^6
     shuffles), while the star alternation contracts paths exponentially —
     O(log^2 n) rounds worst case, and in practice ~log(diameter)
@@ -714,8 +642,9 @@ def connected_components_star(
     star's root is then its component's minimum (the steps preserve
     connectivity and a root is smaller than its children), so the output
     is read straight off the final edges: (child, root) for every edge
-    plus (root, root) for every root. A round budget overrun raises,
-    never returns truncated labels (same rule as ``connected_components``).
+    plus (root, root) for every root. A round budget overrun raises:
+    truncated labels are wrong labels, so they are never returned
+    (ADVICE r3).
 
     Node ids keep their INPUT type: every primitive here (least/greatest,
     min, >, grouping by id) only needs an orderable type, so string doc ids

@@ -207,16 +207,12 @@ def doc_quality(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id"
         rolling_fingerprint(t).alias("fingerprint"),
     )
 
-#: up to here the (token, ln_p) vocab ships as a literal create_map —
-#: one codegen'd expression, zero joins. Above it the literal expression
-#: tree is the bottleneck (compilation time + task-binary size grow with
-#: the map), so the vocab rides as a broadcast-joined DataFrame instead.
-MAX_LITERAL_VOCAB = 8192
-#: hard cap for the broadcast-join path: the vocab must stay a
-#: parameter-bounded broadcast (same rule as MAX_DSIR_BUCKETS). A vocab
-#: beyond this is no longer "unigram LM as a quality score" — use a real
-#: tokenizer + distributed join and give up the ordered-fold exactness.
-MAX_UNIGRAM_VOCAB = 1 << 20
+#: unigram_logprob ships the (token, ln_p) vocab as a literal create_map;
+#: above this many entries the literal expression tree is the bottleneck
+#: (compilation time + task-binary size grow with the map). Same rule as
+#: MAX_DSIR_BUCKETS: a vocab beyond this is no longer "unigram LM as a
+#: quality score" — use a real tokenizer + distributed join.
+MAX_UNIGRAM_VOCAB = 8192
 
 
 def unigram_logprob(
@@ -249,21 +245,11 @@ def unigram_logprob(
     100 TB shape: pass 1 is one map-combinable shuffle keyed by token
     (partial counts collapse map-side) plus a top-``vocab_size`` collect —
     the vocab is a PARAMETER-bounded broadcast, not data-sized. Pass 2
-    depends on the vocab size (same bit decisions either way):
-
-    - ``vocab_size ≤ MAX_LITERAL_VOCAB``: the (token, ln_p) pairs embed
-      as ONE literal ``create_map`` expression — map-only, zero
-      Exchange, whole-stage codegen.
-    - larger (up to ``MAX_UNIGRAM_VOCAB``): the vocab becomes a
-      ``broadcast()``-joined DataFrame — tokens posexplode, broadcast
-      hash join against the vocab (no shuffle of the corpus side), then
-      one hash re-aggregation per doc whose sum is an ordered fold over
-      the position-sorted (pos, lnp) structs, so addition order — and
-      therefore the bit pattern — is identical to the literal path's
-      array fold.
-
-    The driver collect is ``vocab_size`` rows either way, same
-    bounded-collect rule as ``mix_sample``'s group counts."""
+    embeds the (token, ln_p) pairs as ONE literal ``create_map``
+    expression — map-only, zero Exchange, whole-stage codegen — so
+    ``vocab_size`` is capped at ``MAX_UNIGRAM_VOCAB``. The driver collect
+    is ``vocab_size`` rows, the same bounded-collect rule as
+    ``mix_sample``'s group counts."""
     import math
 
     if vocab_size > MAX_UNIGRAM_VOCAB:
@@ -288,95 +274,33 @@ def unigram_logprob(
     )
     log_n = math.log(total)
     oov_lnp = 0.0 - log_n
-    if vocab_size <= MAX_LITERAL_VOCAB:
-        lnp_map = F.create_map(
-            *[
-                x
-                for r in top
-                for x in (F.lit(r["tok"]), F.lit(math.log(r["c"]) - log_n))
-            ]
-        )
-        lnp = lambda x: F.coalesce(F.try_element_at(lnp_map, x), F.lit(oov_lnp))
-        arr = F.col("_toks")
-        n_tok = F.size(arr)
-        return (
-            docs.select(F.col(key_col).alias("doc_id"), toks.alias("_toks"))
-            .select(
-                "doc_id",
-                n_tok.cast("long").alias("n_tokens"),
-                F.size(
-                    F.filter(
-                        arr, lambda x: F.try_element_at(lnp_map, x).isNull()
-                    )
-                )
-                .cast("long")
-                .alias("n_oov"),
-                F.when(
-                    n_tok > 0,
-                    F.round(
-                        F.aggregate(
-                            arr, F.lit(0.0), lambda acc, x: acc + lnp(x)
-                        )
-                        / n_tok,
-                        4,
-                    ),
-                ).alias("avg_logprob"),
-            )
-        )
-    # broadcast-join path: ln values still computed ONCE in the driver
-    # (libm), shipped as a vocab DataFrame, joined broadcast-hash so the
-    # corpus side never shuffles for the lookup
-    spark = docs.sparkSession
-    vocab = spark.createDataFrame(
-        [(r["tok"], math.log(r["c"]) - log_n) for r in top],
-        "tok string, lnp double",
+    lnp_map = F.create_map(
+        *[
+            x
+            for r in top
+            for x in (F.lit(r["tok"]), F.lit(math.log(r["c"]) - log_n))
+        ]
     )
-    exploded = docs.select(
-        F.col(key_col).alias("doc_id"), F.posexplode(toks).alias("pos", "tok")
-    )
-    scored = exploded.join(F.broadcast(vocab), "tok", "left")
-    per_doc = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.sum(F.when(F.col("lnp").isNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_oov"),
-        # position-sorted structs, then the same left fold as the
-        # literal path — addition order preserved bit for bit
-        F.round(
-            F.aggregate(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("pos").alias("pos"),
-                            F.coalesce(F.col("lnp"), F.lit(oov_lnp)).alias(
-                                "lnp"
-                            ),
-                        )
-                    )
+    lnp = lambda x: F.coalesce(F.try_element_at(lnp_map, x), F.lit(oov_lnp))
+    arr = F.col("_toks")
+    n_tok = F.size(arr)
+    return (
+        docs.select(F.col(key_col).alias("doc_id"), toks.alias("_toks"))
+        .select(
+            "doc_id",
+            n_tok.cast("long").alias("n_tokens"),
+            F.size(F.filter(arr, lambda x: F.try_element_at(lnp_map, x).isNull()))
+            .cast("long")
+            .alias("n_oov"),
+            F.when(
+                n_tok > 0,
+                F.round(
+                    F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + lnp(x)) / n_tok,
+                    4,
                 ),
-                F.lit(0.0),
-                lambda acc, x: acc + x["lnp"],
-            )
-            / F.count(F.lit(1)),
-            4,
-        ).alias("avg_logprob"),
+            ).alias("avg_logprob"),
+        )
     )
-    # docs with zero tokens never posexplode a row — restore them with
-    # the literal path's (0, 0, NULL) contract via a MAP-ONLY filter +
-    # union (a docs⋈per_doc restore join would shuffle the whole corpus
-    # a second time for what a size()==0 predicate already knows)
-    empties = docs.filter(F.size(toks) == 0).select(
-        F.col(key_col).alias("doc_id"),
-        F.lit(0).cast("long").alias("n_tokens"),
-        F.lit(0).cast("long").alias("n_oov"),
-        F.lit(None).cast("double").alias("avg_logprob"),
-    )
-    return per_doc.select(
-        "doc_id",
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        "n_oov",
-        "avg_logprob",
-    ).unionByName(empties)
 
 
 #: dsir_scores ships the per-bucket log-ratios as a literal map; above

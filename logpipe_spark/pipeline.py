@@ -33,6 +33,7 @@ from logpipe_spark.operators.sinks import (
     LINEAGE_DDL,
     fan_out_write,
     file_lineage_rows,
+    local_path,
     source_file_rows,
     write_lineage_parquet,
 )
@@ -152,10 +153,13 @@ def run_pipeline(
     object-store swap is an Iceberg catalog, which replaces the ledger AND
     the footer reads wholesale). The driver-side pyarrow footer reads and
     lineage write share that contract, and ``streaming.stream.run_stream``
-    holds its out_dir to the same one.
+    holds its out_dir to the same one: a ``file:`` URI is taken as its
+    path, and any other scheme raises ValueError before anything is
+    written.
 
     Returns {run_id, processed: [snapshot ids]}.
     """
+    src_dir, out_dir = local_path(src_dir), local_path(out_dir)
     run_id = run_id or uuid.uuid4().hex[:12]
     ledger = SnapshotLedger(out_dir)
     data_root = os.path.join(out_dir, "data")
@@ -266,6 +270,7 @@ def read_sinks(spark: SparkSession, out_dir: str) -> DataFrame:
 
     Only committed snapshots are visible — an uncommitted (crashed) write is
     invisible to readers, mirroring Iceberg snapshot isolation."""
+    out_dir = local_path(out_dir)
     ledger = SnapshotLedger(out_dir)
     committed = sorted(ledger.committed())
     if not committed:
@@ -286,19 +291,16 @@ def read_sinks(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
+    out_dir = local_path(out_dir)
     ledger = SnapshotLedger(out_dir)
     committed = sorted(ledger.committed())
     if not committed:
         raise ValueError(f"no committed snapshots under {out_dir}")
     paths = [os.path.join(out_dir, "lineage", f"snapshot={s}") for s in committed]
-    # mergeSchema: the lineage DDL widened from 8 to 10 columns (sink, file)
+    # mergeSchema: the lineage DDL widened from 7 to 9 columns (sink, file)
     # in round 3 — an out_dir resumed across that change mixes schemas, and
     # without merging, the read's schema would depend on which file is
     # sampled first (ADVICE r3). The table is tiny; merging is free.
     return spark.read.option("mergeSchema", "true").option(
         "basePath", os.path.join(out_dir, "lineage")
     ).parquet(*paths)
-
-
-def sink_table(spark: SparkSession, out_dir: str, sink: str) -> DataFrame:
-    return read_sinks(spark, out_dir).filter(F.col("sink") == sink)

@@ -11,15 +11,15 @@ logpipe config:                       here:
 
 Where the reference dlopens plugin .so files (`src/config.c:63-119`), this
 compiles to the same five-stage chain `pipeline.run_pipeline` executes —
-the "plugin ABI" is the DataFrame, and a custom stage is just a callable
-registered in STAGE_REGISTRY.
+the "plugin ABI" is the DataFrame: `pipeline.build_stage_chain` maps a
+loaded DataFrame to a routed one, so a custom stage composes with it as an
+ordinary DataFrame -> DataFrame function.
 """
 
 from __future__ import annotations
 
 import json
 from dataclasses import dataclass, field
-from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -133,16 +133,3 @@ class PipelineSpec:
             timeout_sec=timeout_sec,
             trigger_interval_us=self.poll_interval_us,
         )
-
-
-# custom-stage registry: name → Callable[[DataFrame], DataFrame]
-# (the dlopen analogue for user-defined filter stages)
-STAGE_REGISTRY: dict[str, Callable[[DataFrame], DataFrame]] = {}
-
-
-def register_stage(name: str):
-    def deco(fn: Callable[[DataFrame], DataFrame]):
-        STAGE_REGISTRY[name] = fn
-        return fn
-
-    return deco

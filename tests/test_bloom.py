@@ -1,13 +1,17 @@
 """Bloom filter + Bloom-pruned semi-join (operators/bloom.py).
 
 Value parity vs the exact semi-join is covered by the `bloom_semi_join`
-contract oracle; these pin the FILTER's own guarantees — zero false
-negatives, a bounded false-positive rate at the spec'd (m, k), OR-merge
-equivalence, and that the prefilter actually discards non-members
-before the join's exchange.
+contract oracle; these pin the FILTER's own guarantees on the probe
+``bloom_semi_join`` ships — zero false negatives, a bounded
+false-positive rate at the spec'd (m, k) with exactly the admissions a
+pure-Python reference of the bit positions makes, OR-merge equivalence,
+and that the prefilter actually discards non-members before the join's
+exchange.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 import pytest
 from pyspark.sql import Row
@@ -15,14 +19,32 @@ from pyspark.sql import functions as F
 
 from logpipe_spark.operators.bloom import (
     MAX_BLOOM_BITS,
-    bloom_might_contain,
     bloom_semi_join,
-    bloom_words,
     build_bloom,
 )
 
 M_BITS = 1 << 13
 K = 5
+
+
+def _ref_positions(key: str, m_bits: int, k: int) -> list[int]:
+    """hashlib mirror of ``bloom._positions``: one md5 under salt ``bf:``,
+    hex chars 1-15 and 16-30 as the two Kirsch-Mitzenmacher halves."""
+    hx = hashlib.md5(f"bf:{key}".encode()).hexdigest()
+    h1 = int(hx[0:15], 16) % m_bits
+    h2 = (int(hx[15:30], 16) * 2 + 1) % m_bits
+    return [(h1 + i * h2) % m_bits for i in range(k)]
+
+
+def _ref_might_contain(words: dict, key: str, m_bits: int, k: int) -> bool:
+    return all(
+        (words.get(p // 32, 0) >> (p % 32)) & 1
+        for p in _ref_positions(key, m_bits, k)
+    )
+
+
+def _collect_words(bloom) -> dict:
+    return {r["word"]: r["bits"] for r in bloom.collect()}
 
 
 @pytest.fixture(scope="module")
@@ -34,22 +56,29 @@ def member_df(spark):
 
 @pytest.fixture(scope="module")
 def words(member_df):
-    return bloom_words(build_bloom(member_df, "key", M_BITS, K), M_BITS)
+    return _collect_words(build_bloom(member_df, "key", M_BITS, K))
 
 
-def test_no_false_negatives(spark, member_df, words):
-    misses = member_df.where(
-        ~bloom_might_contain(words, F.col("key"), M_BITS, K)
-    ).count()
-    assert misses == 0
+def test_no_false_negatives(spark, member_df):
+    kept = bloom_semi_join(
+        member_df, member_df, "key", "key", M_BITS, K, exact=False
+    )
+    assert {r["key"] for r in kept.collect()} == {f"member-{i}" for i in range(500)}
 
 
-def test_false_positive_rate_bounded(spark, words):
+def test_false_positive_rate_bounded(spark, member_df, words):
     # 500 keys in 8192 bits with k=5 → theoretical FP ≈ (1-e^{-kn/m})^k
     # ≈ 0.15%. Allow a generous 2% ceiling over 5000 non-members.
-    non = spark.createDataFrame([Row(key=f"other-{i}") for i in range(5000)])
-    fp = non.where(bloom_might_contain(words, F.col("key"), M_BITS, K)).count()
-    assert fp / 5000 < 0.02, fp
+    keys = [f"other-{i}" for i in range(5000)]
+    non = spark.createDataFrame([Row(key=x) for x in keys])
+    fp = {
+        r["key"]
+        for r in bloom_semi_join(
+            non, member_df, "key", "key", M_BITS, K, exact=False
+        ).collect()
+    }
+    assert fp == {x for x in keys if _ref_might_contain(words, x, M_BITS, K)}
+    assert len(fp) / 5000 < 0.02, len(fp)
 
 
 def test_or_merge_equals_union_build(spark):
@@ -62,7 +91,7 @@ def test_or_merge_equals_union_build(spark):
         .agg(F.expr("bit_or(bits)").alias("bits"))
     )
     direct = build_bloom(a.unionByName(b), "key", M_BITS, K)
-    assert bloom_words(merged, M_BITS) == bloom_words(direct, M_BITS)
+    assert _collect_words(merged) == _collect_words(direct)
 
 
 def test_word_table_shape(member_df):
@@ -100,17 +129,13 @@ def test_spec_validation(member_df):
 
 def test_bytemap_probe_matches_array_probe(spark):
     """The fast binary-blob probe path (what bloom_semi_join ships to
-    executors) admits exactly the same keys as the portable dense-word
-    probe — same filter, same k strides, element-for-element."""
-    from pyspark.sql import functions as F
-
+    executors) admits exactly the same keys as the Python word-array
+    reference over the collected (word, bits) rows — same filter, same
+    k strides, element-for-element."""
     from logpipe_spark.operators.bloom import (
         MAX_BYTEMAP_BITS,
         bloom_bytemap,
-        bloom_might_contain,
         bloom_might_contain_bytes,
-        bloom_words,
-        build_bloom,
     )
 
     m, k = 1 << 12, 5
@@ -118,7 +143,8 @@ def test_bytemap_probe_matches_array_probe(spark):
         F.col("id").cast("string").alias("key")
     )
     bl = build_bloom(members, "key", m, k)
-    words = bloom_words(bl, m)
+    collected = _collect_words(bl)
+    words = [collected.get(w, 0) for w in range(m // 32)]
     blob = bloom_bytemap(bl, m)
     # blob bit b set  <=>  words bit b set
     assert all(
@@ -138,17 +164,12 @@ def test_bytemap_probe_matches_array_probe(spark):
         ).collect()
     }
     via_words = {
-        r["key"]
-        for r in probe.where(
-            bloom_might_contain(words, F.col("key"), m, k)
-        ).collect()
+        str(i) for i in range(2000) if _ref_might_contain(collected, str(i), m, k)
     }
     assert via_bytes == via_words
     assert {str(i) for i in range(300)} <= via_bytes  # no false negatives
 
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="capped"):
+    with pytest.raises(ValueError, match="capped"):
         bloom_bytemap(bl, MAX_BYTEMAP_BITS * 2)
 
 

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from logpipe_spark.operators.corpus import corpus_filter, hash_split, sequence_pack
-from logpipe_spark.operators.dedup import connected_components
+from logpipe_spark.operators.dedup import connected_components_star
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -98,54 +98,35 @@ def test_sequence_pack_invariants(spark, docs):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
-def test_connected_components_hand_graph(spark):
-    edges = spark.createDataFrame(
-        pd.DataFrame({
-            # chain 1-2-3-4, triangle 10-11-12, pair 20-21, bridge 4-10
-            "doc_a": [1, 2, 3, 10, 11, 10, 20, 4],
-            "doc_b": [2, 3, 4, 11, 12, 12, 21, 10],
-        })
-    )
-    got = {r["node"]: r["component"] for r in connected_components(edges).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 1, 11: 1, 12: 1, 20: 20, 21: 20}
+def _union_find_min_labels(pairs):
+    """Reference labeling: union-find over the edge list, each node mapped
+    to the minimum id of its component."""
+    parent = {}
 
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
 
-def test_connected_components_converges_on_long_chain(spark):
-    n = 17  # diameter 16 — more rounds than any fixture graph needs
-    edges = spark.createDataFrame(
-        pd.DataFrame({"doc_a": range(n - 1), "doc_b": range(1, n)})
-    )
-    got = {r["node"]: r["component"] for r in connected_components(edges, max_iter=30).collect()}
-    assert set(got.values()) == {0}
-
-
-def test_connected_components_raises_when_budget_too_small(spark):
-    """Truncated labels are wrong labels — a diameter beyond max_iter must
-    raise, never silently return an unconverged labeling (ADVICE r3).
-    max_iter bounds the CHANGING rounds, so max_iter == diameter succeeds
-    (the confirming no-change round is free)."""
-    n = 9  # diameter 8
-    edges = spark.createDataFrame(
-        pd.DataFrame({"doc_a": range(n - 1), "doc_b": range(1, n)})
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=2)
-    got = {r["node"]: r["component"]
-           for r in connected_components(edges, max_iter=8).collect()}
-    assert set(got.values()) == {0}
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
 
 
 def test_connected_components_star_matches_min_label(spark):
     """large-star/small-star (Kiveris et al., SoCC'14) must produce the
-    exact labeling min-label propagation does on a shallow graph."""
-    from logpipe_spark.operators.dedup import connected_components_star
-    edges = spark.createDataFrame(
-        pd.DataFrame({
-            "doc_a": [1, 2, 3, 10, 11, 10, 20, 4],
-            "doc_b": [2, 3, 4, 11, 12, 12, 21, 10],
-        })
-    )
-    want = {r["node"]: r["component"] for r in connected_components(edges).collect()}
+    exact min-label labeling a union-find computes on a hand graph."""
+    pdf = pd.DataFrame({
+        # chain 1-2-3-4, triangle 10-11-12, pair 20-21, bridge 4-10
+        "doc_a": [1, 2, 3, 10, 11, 10, 20, 4],
+        "doc_b": [2, 3, 4, 11, 12, 12, 21, 10],
+    })
+    edges = spark.createDataFrame(pdf)
+    want = _union_find_min_labels(zip(pdf["doc_a"].tolist(), pdf["doc_b"].tolist()))
     got = {r["node"]: r["component"]
            for r in connected_components_star(edges).collect()}
     assert got == want == {
@@ -158,7 +139,6 @@ def test_connected_components_star_deep_chain_bounded_rounds(spark):
     O(log^2 n) alternations — assert a hard bound of 12 (log2(2000)≈11),
     and that labels are exact. This is the scale argument: rounds (and so
     shuffles) grow with log(diameter), not diameter."""
-    from logpipe_spark.operators.dedup import connected_components_star
     n = 2000
     edges = spark.createDataFrame(
         pd.DataFrame({"doc_a": range(n - 1), "doc_b": range(1, n)})
@@ -169,10 +149,21 @@ def test_connected_components_star_deep_chain_bounded_rounds(spark):
     assert len(got) == n and set(got.values()) == {0}
 
 
+def test_connected_components_star_raises_when_budget_too_small(spark):
+    """Truncated labels are wrong labels: a 2000-link chain cannot become
+    a star forest in one alternation, so max_iter=1 must raise, never
+    return an unconverged labeling (ADVICE r3)."""
+    n = 2000
+    edges = spark.createDataFrame(
+        pd.DataFrame({"doc_a": range(n - 1), "doc_b": range(1, n)})
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components_star(edges, max_iter=1)
+
+
 def test_connected_components_star_non_contiguous_ids_and_isolated_pairs(spark):
     """Component minima are ids, not ranks: sparse 64-bit-ish ids and many
     small components must label correctly in few rounds."""
-    from logpipe_spark.operators.dedup import connected_components_star
     # 50 disjoint pairs with scattered ids, plus one 5-cycle
     a = [i * 1_000_003 + 7 for i in range(50)]
     b = [x + 13 for x in a]
@@ -193,7 +184,6 @@ def test_connected_components_star_stars_and_triangles_one_round(spark):
     """Disjoint one-hop stars (centred on the minimum or not) and triangles
     are a star forest after a single alternation; the star-forest test
     stops there without a confirming round."""
-    from logpipe_spark.operators.dedup import connected_components_star
     edges = spark.createDataFrame(
         pd.DataFrame({
             # star on 1; star on 15 whose leaves are all smaller; triangle
@@ -210,7 +200,6 @@ def test_connected_components_star_stars_and_triangles_one_round(spark):
 
 
 def test_connected_components_star_empty_edges(spark):
-    from logpipe_spark.operators.dedup import connected_components_star
     edges = spark.createDataFrame([], "doc_a long, doc_b long")
     out = connected_components_star(edges)
     assert out.columns == ["node", "component"]

@@ -398,3 +398,62 @@ def test_empty_pending_snapshot_raises_before_any_write(
         run_pipeline(spark, src, out, dim_df, rules)
     assert SnapshotLedger(out).committed() == set()
     assert not os.path.exists(os.path.join(out, "data"))
+
+
+def _lineage_shape(spark, out_dir, src_root):
+    """Per-file lineage reduced to what does not depend on the run's
+    paths: output files as (snapshot, sink, routed), input files as
+    (snapshot, partition_id, rows_in, path under the source root)."""
+    lin = read_lineage(spark, out_dir).filter(F.col("partition_id") >= 0).collect()
+    for r in lin:
+        assert not r["file"].startswith("file:") and os.path.isfile(r["file"]), r
+    outputs = sorted(
+        (r["snapshot_id"], r["sink"], r["routed"]) for r in lin if r["sink"]
+    )
+    inputs = sorted(
+        (r["snapshot_id"], r["partition_id"], r["rows_in"],
+         os.path.relpath(r["file"], src_root))
+        for r in lin if r["sink"] is None
+    )
+    return outputs, inputs
+
+
+def test_file_uri_paths_match_plain_paths(
+    spark, pipe_out, transcripts_pdf, dim_df, rules, tmp_path, monkeypatch
+):
+    """``file:`` URIs name the same local directories as plain paths: the
+    run gives the same sink counts and per-file lineage as ``pipe_out``,
+    and no relative ``file:`` tree appears under the working directory."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    src, out = tmp_path / "src", tmp_path / "out"
+    write_snapshots(transcripts_pdf, str(src), n_snapshots=4)
+    res = run_pipeline(
+        spark, f"file:{src}", f"file://{out}", dim_df, rules, salt_partitions=8
+    )
+    assert res["processed"] == [0, 1, 2, 3]
+    assert SnapshotLedger(str(out)).committed() == {0, 1, 2, 3}
+
+    def sink_counts(out_dir):
+        return dict(read_sinks(spark, out_dir).groupBy("sink").count().collect())
+
+    assert sink_counts(f"file:{out}") == sink_counts(pipe_out)
+    plain_src = os.path.join(os.path.dirname(pipe_out), "src")
+    assert _lineage_shape(spark, f"file:{out}", str(src)) == _lineage_shape(
+        spark, pipe_out, plain_src
+    )
+    assert os.listdir(cwd) == []
+
+
+def test_non_local_out_dir_raises_before_any_write(
+    spark, transcripts_pdf, dim_df, rules, tmp_path, monkeypatch
+):
+    """An out_dir the driver cannot open raises ValueError before the
+    ledger, data or lineage directories are created anywhere."""
+    monkeypatch.chdir(tmp_path)
+    src = str(tmp_path / "src")
+    write_snapshots(transcripts_pdf.head(100), src, n_snapshots=1)
+    with pytest.raises(ValueError, match="not a local path"):
+        run_pipeline(spark, src, "hdfs://namenode:8020/logpipe/out", dim_df, rules)
+    assert os.listdir(tmp_path) == ["src"]

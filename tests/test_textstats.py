@@ -163,40 +163,6 @@ def test_unigram_logprob_is_scale_free_annotation(spark):
     assert joined.filter(F.col("n_oov") > 0).count() > 0
 
 
-def test_unigram_logprob_join_path_bit_identical(spark, monkeypatch):
-    """The large-vocab broadcast-join path must agree with the literal
-    create_map path BIT FOR BIT at the same vocab (the join path's
-    per-doc sum is a position-ordered fold, so addition order matches),
-    and its plan must be a BroadcastHashJoin — never a shuffle of the
-    corpus side for a parameter-bounded vocab."""
-    import logpipe_spark.operators.textstats as ts
-
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", "text")
-        .unionByName(  # zero-token docs exercise the map-only restore
-            spark.createDataFrame(
-                [(90001, ""), (90002, "   ")], "doc_id long, text string"
-            )
-        )
-    )
-    lit = {
-        r["doc_id"]: (r["n_tokens"], r["n_oov"], r["avg_logprob"])
-        for r in ts.unigram_logprob(docs, vocab_size=512).collect()
-    }
-    assert lit[90001] == (0, 0, None)
-    monkeypatch.setattr(ts, "MAX_LITERAL_VOCAB", 64)  # force the join path
-    jdf = ts.unigram_logprob(docs, vocab_size=512)
-    plan = jdf._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan.split("BroadcastHashJoin")[0]
-    got = {
-        r["doc_id"]: (r["n_tokens"], r["n_oov"], r["avg_logprob"])
-        for r in jdf.collect()
-    }
-    assert got == lit  # exact equality, floats included
-
-
 def test_unigram_logprob_vocab_cap(spark):
     import pytest
 
