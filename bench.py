@@ -320,7 +320,7 @@ def main() -> None:
         )
     shutil.rmtree(os.path.join(CACHE, "write_warm_out"), ignore_errors=True)
     run_pipeline(spark, wwarm_src, os.path.join(CACHE, "write_warm_out"),
-                 dim, default_route_rules(), salt_partitions=CPUS)
+                 dim, default_route_rules())
 
     # headline metrics: MEDIAN of 3 INTERLEAVED runs (r5 verdict: single
     # shots moved ±15% on unchanged code — host variance, ~±10%, is the
@@ -330,17 +330,16 @@ def main() -> None:
     # so a round-over-round move can be judged against the measured noise
     # floor of THAT run).
     # note: run_pipeline writes all 4 snapshots in one observe()-instrumented
-    # action, so pipeline_fanout_write is per-run fixed cost (schema merge,
-    # dim broadcast, (sink,salt) shuffle, local-FS file commits) plus the
-    # rows, not a per-snapshot multiple of it
+    # action with no pre-write shuffle, so pipeline_fanout_write is per-run
+    # fixed cost (schema merge, dim broadcast, local-FS file commits) plus
+    # the rows, not a per-snapshot multiple of it
     parse_samples: list[float] = []
     write_samples: list[float] = []
     for _ in range(3):
         parse_samples.append(run_flagship(spark, src_path))
         shutil.rmtree(wout, ignore_errors=True)
         t0 = time.perf_counter()
-        run_pipeline(spark, wsrc, wout, dim, default_route_rules(),
-                     salt_partitions=CPUS)
+        run_pipeline(spark, wsrc, wout, dim, default_route_rules())
         write_samples.append(time.perf_counter() - t0)
 
     def _spread(xs: list[float]) -> float:

@@ -20,13 +20,15 @@ Reference semantics being re-expressed:
   (``file_lineage_rows``, ``source_file_rows``). Stream mode
   (streaming.stream) uses the same write and the same footer lineage.
 
-Scale notes: ``fan_out_write`` is ONE job: scan → (optional salted
-repartition) → dynamic-partitioned write, and ``run_pipeline`` calls it once
-per run for all pending snapshots (partitioned by snapshot, then sink), not
-once per snapshot. At 10^12 rows the thing to avoid is K separate filtered
-writes (K scans) or an unsalted shuffle where one conversation holds 20% of
-rows. AQE skew handling is on as backup, but the salt bounds the worst task
-deterministically.
+Scale notes: ``fan_out_write`` is ONE job: scan → dynamic-partitioned
+write. ``run_pipeline`` and the stream call it once per run (or
+micro-batch) for all pending snapshots (partitioned by snapshot, then
+sink), not once per snapshot, and with no pre-write shuffle: each scan
+task writes the rows it parsed, so no row crosses the network between
+parse and write, and output files are at most scan splits × sinks (one
+per sink for a one-file snapshot; a snapshot Spark splits S ways gets up
+to S files per sink, each a thin slice of a rare sink). At 10^12 rows the
+thing to avoid is K separate filtered writes (K scans).
 """
 
 from __future__ import annotations
@@ -133,14 +135,14 @@ def file_lineage_rows(data_dir: str, sink_col: str = "sink") -> list[tuple]:
     """Per-file routed-row counts from parquet FOOTERS, read driver-side
     with pyarrow — zero Spark jobs.
 
-    ``fan_out_write``'s (sink, salt)-keyed shuffle bounds the file count at
-    ~sinks × salt_buckets regardless of data size, so after the write the
-    per-file lineage is a handful of footer reads (~KBs each) — launching a
-    Spark job for it costs more than the answer (measured: a metadata-scan
-    + Window job added ~13 s of cold-JVM codegen to the benched pipeline;
-    this list comprehension adds milliseconds). Batch and stream mode both
-    take their per-file lineage from here, so both share
-    ``run_pipeline``'s POSIX path contract.
+    ``run_pipeline``'s shuffle-free write leaves one file per (scan task,
+    sink) that held a snapshot's rows — sinks × the snapshot's scan
+    splits — so the per-file lineage is a handful of footer reads (~KBs
+    each). A Spark job for it costs more than the answer (measured: a
+    metadata-scan + Window job added ~13 s of cold-JVM codegen to the
+    benched pipeline; this list comprehension adds milliseconds). Batch
+    and stream mode both take their per-file lineage from here, so both
+    share ``run_pipeline``'s POSIX path contract.
 
     Returns [(partition_id, sink, file, routed)] with partition_id a dense
     0-based index over files ordered by path. The routed count per file is
@@ -165,13 +167,22 @@ def file_lineage_rows(data_dir: str, sink_col: str = "sink") -> list[tuple]:
 
 def local_path(path: str) -> str:
     """The POSIX path behind ``path``: a plain path as is, a ``file:`` URI
-    as its path. Any other scheme (``hdfs://``, ``s3a://``, ...) raises
-    ValueError — the footer lineage and the driver-side lineage write need
-    a path the driver can os.open."""
-    if path.startswith("file://"):
-        return path[len("file://"):] or "/"
+    as its path. The URI's authority must be empty or ``localhost``
+    (``file:/x``, ``file:///x``, ``file://localhost/x`` all give ``/x``);
+    any other host, like any other scheme (``hdfs://``, ``s3a://``, ...),
+    raises ValueError — the footer lineage and the driver-side lineage
+    write need a path the driver can os.open."""
     if path.startswith("file:"):
-        return path[len("file:"):]
+        rest = path[len("file:"):]
+        if rest.startswith("//"):
+            host, sep, tail = rest[2:].partition("/")
+            if host.lower() not in ("", "localhost"):
+                raise ValueError(
+                    f"{path!r} names host {host!r}: a file: URI must name "
+                    "this machine (no host, or localhost)"
+                )
+            return sep + tail or "/"
+        return rest
     if "://" in path:
         raise ValueError(
             f"{path!r} is not a local path: lineage is read from parquet "

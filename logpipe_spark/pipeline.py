@@ -127,16 +127,22 @@ def run_pipeline(
 
     All pending snapshots form ONE batch: one scan over every snapshot's
     files, one stage chain, one write partitioned by (snapshot, sink). The
-    Spark job and exchange counts are therefore fixed per run, not per
-    snapshot. Lineage is then written per snapshot, and the ledger commits
-    the snapshots in order.
+    write has no shuffle in front of it: each task writes the rows it
+    parsed, the way the reference hands each block straight to every
+    output. Output files are at most scan splits × sinks, and the splits
+    follow data volume: Spark never splits a small file, so a one-file
+    snapshot is written by one task and gets one file per sink. The Spark
+    job and exchange counts are fixed per run, not per snapshot. Lineage
+    is then written per snapshot, and the ledger commits the snapshots in
+    order.
 
-    ``min_input_partitions``: an under-split batch (few parquet files with
-    one row group each are few scan tasks — the whole parse→route stage
-    would run on that many cores) is repartitioned up to this many
-    partitions before parsing. Default 0 → the session's default
-    parallelism. Pass None to disable. A well-split batch is never
-    touched, so at scale this is a free plan check.
+    ``salt_partitions`` and ``min_input_partitions`` are accepted for
+    existing callers and no longer change the plan: no exchange runs
+    between the scan and the write, so an under-split batch (fewer scan
+    tasks than cores) parses on as many tasks as it has splits. At local[8]
+    with 4 one-file snapshots, the largest parse task holds a whole
+    snapshot either way, and a snapshot-keyed spread only added a shuffle
+    (BENCH.md).
 
     ``include_files`` / ``exclude_files``: source-level basename glob
     filters (the reference's files../exclude_files.. walk) — pruned from
@@ -153,9 +159,9 @@ def run_pipeline(
     object-store swap is an Iceberg catalog, which replaces the ledger AND
     the footer reads wholesale). The driver-side pyarrow footer reads and
     lineage write share that contract, and ``streaming.stream.run_stream``
-    holds its out_dir to the same one: a ``file:`` URI is taken as its
-    path, and any other scheme raises ValueError before anything is
-    written.
+    holds its out_dir to the same one: a ``file:`` URI with no host or
+    ``localhost`` is taken as its path, and any other host or scheme
+    raises ValueError before anything is written.
 
     Returns {run_id, processed: [snapshot ids]}.
     """
@@ -191,11 +197,6 @@ def run_pipeline(
                 F.col("_metadata.file_path"), r".*/snapshot=(\d+)/", 1
             ).cast("long"),
         )
-        if min_input_partitions is not None:
-            target = min_input_partitions or spark.sparkContext.defaultParallelism
-            # getNumPartitions reads the plan, not the data — no job runs
-            if df.rdd.getNumPartitions() < target:
-                df = df.repartition(target)
         routed = build_stage_chain(df, dim, rules, dim_keys=dim_keys)
 
         # ONE action per batch: each snapshot's conservation counters ride
@@ -212,14 +213,13 @@ def run_pipeline(
         ]
         routed = routed.observe(obs, *aggs)
 
-        # the write-side shuffle keys by (sink, salt) — one sink per task,
-        # hot sinks spread over salt_buckets tasks, ~snapshots×sinks×salt
-        # output files instead of tasks×snapshots×sinks (repartition_salted
-        # by conv_id remains the right key when a downstream consumer, not
-        # the file layout, needs co-located conversations)
+        # no shuffle before the write: each scan task writes its own rows
+        # into snapshot=<k>/sink=<s>/ — one file per sink for a one-file
+        # snapshot (repartition_salted by conv_id remains the right key
+        # when a downstream consumer, not the file layout, needs
+        # co-located conversations)
         fan_out_write(
-            routed, data_root, mode="append",
-            extra_partition_cols=["snapshot"], shuffle_partitions=salt_partitions,
+            routed, data_root, mode="append", extra_partition_cols=["snapshot"]
         )
         m = obs.get
         counters = {snap: {c: m[f"{c}_{snap}"] for c in _COUNTERS} for snap in batch}
@@ -235,9 +235,9 @@ def run_pipeline(
         #                                      (routed from its footer);
         #   partition_id>=0, sink NULL       → one row per INPUT file
         #                                      (rows_in from its footer).
-        # Footers are read driver-side with pyarrow: fan_out_write's keyed
-        # shuffle bounds output files at ~sinks×salt_buckets per snapshot,
-        # so this is a handful of KB-sized reads — a Spark-job variant
+        # Footers are read driver-side with pyarrow: the write leaves one
+        # file per (task, sink) that held the snapshot's rows, so this is
+        # a handful of KB-sized reads; a Spark-job variant
         # (metadata scan + Window) cost ~13 s of cold-JVM codegen per
         # bench run for the same rows (BENCH.md r4 A/B).
         lineage_rows = [

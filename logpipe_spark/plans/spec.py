@@ -34,7 +34,6 @@ class PipelineSpec:
     rules: list[dict]
     dim_rows: list[dict] = field(default_factory=list)
     dim_keys: list[str] = field(default_factory=lambda: ["tool", "role"])
-    salt_partitions: int | None = None
     run_id: str | None = None
     # source-level basename glob filters (logpipe-input-file.c:593-739):
     # keep iff ALL include globs match and NO exclude glob matches
@@ -63,7 +62,6 @@ class PipelineSpec:
             rules=cfg["rules"],
             dim_rows=cfg.get("dim", []),
             dim_keys=cfg.get("dim_keys", ["tool", "role"]),
-            salt_partitions=cfg.get("salt_partitions"),
             run_id=cfg.get("run_id"),
             files=cfg.get("files", []),
             exclude_files=cfg.get("exclude_files", []),
@@ -103,7 +101,6 @@ class PipelineSpec:
                 dim,
                 self.rules,
                 run_id=self.run_id,
-                salt_partitions=self.salt_partitions,
                 dim_keys=self.dim_keys,
                 include_files=self.files or None,
                 exclude_files=self.exclude_files or None,

@@ -65,8 +65,9 @@ def run_stream(
 
     ``out_dir`` follows ``pipeline.run_pipeline``'s path contract: it must
     be POSIX-visible, because the per-file lineage is read from the written
-    footers and written driver-side. A ``file:`` URI is taken as its plain
-    path; any other scheme raises ValueError before the query starts.
+    footers and written driver-side. A ``file:`` URI with no host or
+    ``localhost`` is taken as its plain path; any other host or scheme
+    raises ValueError before the query starts.
 
     ``trigger_interval_us``: continuous-tail poll period (the reference's
     min/max_usleep backoff, `logpipe-input-file.c` config via

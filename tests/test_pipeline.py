@@ -362,10 +362,10 @@ def test_job_count_does_not_grow_with_snapshots(
 ):
     """All pending snapshots share one read, one stage chain and one write,
     so 8 snapshots launch exactly as many Spark jobs as 4: the schema
-    merge, the dim broadcast, the (sink, salt) shuffle and the write.
-    ``min_input_partitions=None`` keeps the file-count-dependent
-    round-robin out of the comparison (4 one-file snapshots are under-split
-    at local[8], 8 are not)."""
+    merge, the dim broadcast and the write (no shuffle precedes it).
+    ``min_input_partitions=None`` is accepted and changes nothing: no
+    repartition runs whether the batch is under-split (4 one-file
+    snapshots at local[8]) or not (8)."""
     sc = spark.sparkContext
     jobs = {}
     for n in (4, 8):
@@ -457,3 +457,148 @@ def test_non_local_out_dir_raises_before_any_write(
     with pytest.raises(ValueError, match="not a local path"):
         run_pipeline(spark, src, "hdfs://namenode:8020/logpipe/out", dim_df, rules)
     assert os.listdir(tmp_path) == ["src"]
+
+
+def test_file_localhost_uri_matches_plain_paths(
+    spark, pipe_out, transcripts_pdf, dim_df, rules, tmp_path, monkeypatch
+):
+    """``file://localhost/<path>`` names the same local directory as
+    ``<path>``: the run gives the same sink counts and per-file lineage as
+    ``pipe_out``, and no relative ``localhost`` tree appears under the
+    working directory."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    src, out = tmp_path / "src", tmp_path / "out"
+    write_snapshots(transcripts_pdf, str(src), n_snapshots=4)
+    res = run_pipeline(
+        spark, f"file://localhost{src}", f"file://localhost{out}", dim_df, rules
+    )
+    assert res["processed"] == [0, 1, 2, 3]
+    assert SnapshotLedger(str(out)).committed() == {0, 1, 2, 3}
+
+    def sink_counts(out_dir):
+        return dict(read_sinks(spark, out_dir).groupBy("sink").count().collect())
+
+    assert sink_counts(f"file://localhost{out}") == sink_counts(pipe_out)
+    plain_src = os.path.join(os.path.dirname(pipe_out), "src")
+    assert _lineage_shape(spark, f"file://localhost{out}", str(src)) == _lineage_shape(
+        spark, pipe_out, plain_src
+    )
+    assert os.listdir(cwd) == []
+
+
+def test_file_uri_other_host_raises_before_any_write(
+    spark, transcripts_pdf, dim_df, rules, tmp_path, monkeypatch
+):
+    """A ``file:`` URI naming another host is not a path on this driver:
+    the run raises ValueError before the ledger, data or lineage
+    directories are created anywhere."""
+    monkeypatch.chdir(tmp_path)
+    src = str(tmp_path / "src")
+    write_snapshots(transcripts_pdf.head(100), src, n_snapshots=1)
+    with pytest.raises(ValueError, match="otherhost"):
+        run_pipeline(spark, src, "file://otherhost/x", dim_df, rules)
+    with pytest.raises(ValueError, match="otherhost"):
+        run_pipeline(spark, f"file://otherhost{src}", str(tmp_path / "out"), dim_df, rules)
+    assert os.listdir(tmp_path) == ["src"]
+
+
+def _data_files(out_dir):
+    import glob
+
+    return glob.glob(os.path.join(out_dir, "data", "**", "*.parquet"), recursive=True)
+
+
+def _new_write_plans(spark, run):
+    """The physical plan text of every parquet write ``run()`` executes,
+    read from the SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        ex = store.executionsList()
+        return [ex.apply(i) for i in range(ex.size())]
+
+    last = max((e.executionId() for e in executions()), default=-1)
+    run()
+    return [
+        d for e in executions()
+        if e.executionId() > last
+        and "InsertIntoHadoopFsRelationCommand" in (d := e.physicalPlanDescription())
+    ]
+
+
+@pytest.fixture(scope="module")
+def well_split(spark, transcripts_pdf, dim_df, rules, tmp_path_factory):
+    """16 one-file snapshots: 16 scan tasks at the session's local[8], so
+    the batch is not spread and every scan task writes its own rows."""
+    root = tmp_path_factory.mktemp("well_split")
+    src, out = str(root / "src"), str(root / "out")
+    write_snapshots(transcripts_pdf, src, n_snapshots=16)
+    plans = _new_write_plans(
+        spark,
+        lambda: run_pipeline(spark, src, out, dim_df, rules),
+    )
+    return out, plans
+
+
+def test_one_file_snapshots_write_one_file_per_sink(spark, well_split, golden):
+    out, _ = well_split
+    n_sinks = len(golden["sink_counts"])
+    assert SnapshotLedger(out).committed() == set(range(16))
+    assert 0 < len(_data_files(out)) <= 16 * n_sinks
+    _assert_matches_oracle(spark, out, golden)
+
+
+def test_well_split_write_has_no_sink_keyed_shuffle(well_split):
+    """The write's executed plan repartitions nothing by sink: the rows go
+    from the scan task that parsed them straight to their files."""
+    _, plans = well_split
+    assert len(plans) == 1, len(plans)
+    assert "hashpartitioning(sink" not in plans[0]
+    shuffles = [
+        line for line in plans[0].splitlines()
+        if "Exchange" in line and "BroadcastExchange" not in line
+    ]
+    assert shuffles == [], shuffles
+
+
+def test_under_split_batch_writes_from_scan_tasks(pipe_out, golden):
+    """4 one-file snapshots are 4 scan tasks at local[8], fewer than the
+    cores: nothing repartitions them, so each snapshot is written by its
+    one scan task, one file per sink."""
+    n_sinks = len(golden["sink_counts"])
+    assert 0 < len(_data_files(pipe_out)) <= 4 * n_sinks
+
+
+def test_snapshot_with_every_row_dropped_commits(
+    spark, transcripts_pdf, golden, dim_df, rules, tmp_path
+):
+    """A snapshot holding only rows the route rules drop commits with a
+    sentinel lineage row of rows_in == dropped, routed == 0 and no
+    output-file rows, beside two snapshots that hold every routed row."""
+    key = ["conv_id", "turn_idx"]
+    routed_keys = golden["routed"][key].drop_duplicates()
+    marked = transcripts_pdf.merge(routed_keys, on=key, how="left", indicator=True)
+    is_routed = (marked["_merge"] == "both").to_numpy()
+    kept, dropped = transcripts_pdf[is_routed], transcripts_pdf[~is_routed]
+    assert len(dropped) == golden["dropped"] > 0
+    half = len(kept) // 2
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    for k, part in enumerate((kept.iloc[:half], dropped, kept.iloc[half:])):
+        d = os.path.join(src, f"snapshot={k}")
+        os.makedirs(d)
+        part.to_parquet(os.path.join(d, "part-0.parquet"), index=False)
+
+    res = run_pipeline(spark, src, out, dim_df, rules)
+    assert res["processed"] == [0, 1, 2]
+    assert SnapshotLedger(out).committed() == {0, 1, 2}
+
+    lin = read_lineage(spark, out).filter(F.col("snapshot_id") == 1).collect()
+    sentinel = [r for r in lin if r["partition_id"] == -1]
+    assert len(sentinel) == 1
+    s = sentinel[0]
+    assert s["rows_in"] == s["dropped"] == len(dropped)
+    assert s["routed"] == 0
+    assert [r for r in lin if r["partition_id"] >= 0 and r["sink"] is not None] == []
+    _assert_matches_oracle(spark, out, golden)
