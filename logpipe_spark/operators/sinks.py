@@ -13,22 +13,21 @@ Reference semantics being re-expressed:
 - HDFS day-dir naming (`logpipe-output-hdfs.c:195-213`) → partition columns;
   date partitioning is a one-liner for callers that want it.
 - offset/line bookkeeping (`logpipe-input-file.c:1901-1925`) → the lineage
-  table (LINEAGE_DDL): per-snapshot conservation counters collected by one
-  observe() listener ON the batch's write action (see
-  pipeline.run_pipeline) — zero extra passes, partition_id = -1 sentinel —
-  plus per-file rows read driver-side from parquet footers
-  (``file_lineage_rows``, ``source_file_rows``). Stream mode
-  (streaming.stream) uses the same write and the same footer lineage.
+  table (LINEAGE_DDL, STREAM_LINEAGE_DDL): per-key conservation counters
+  collected by one observe() listener ON the batch's write action — zero
+  extra passes, partition_id = -1 sentinel — plus per-file rows read
+  driver-side from parquet footers (``file_lineage_rows``,
+  ``source_file_rows``). ``pipeline.write_batch`` composes the write and
+  the lineage for both batch and stream mode.
 
 Scale notes: ``fan_out_write`` is ONE job: scan → dynamic-partitioned
-write. ``run_pipeline`` and the stream call it once per run (or
-micro-batch) for all pending snapshots (partitioned by snapshot, then
-sink), not once per snapshot, and with no pre-write shuffle: each scan
-task writes the rows it parsed, so no row crosses the network between
-parse and write, and output files are at most scan splits × sinks (one
-per sink for a one-file snapshot; a snapshot Spark splits S ways gets up
-to S files per sink, each a thin slice of a rare sink). At 10^12 rows the
-thing to avoid is K separate filtered writes (K scans).
+write. It runs once per batch (a run's pending snapshots, or one
+micro-batch), not once per snapshot, and with no pre-write shuffle: each
+scan task writes the rows it parsed, so no row crosses the network
+between parse and write, and output files are at most scan splits × sinks
+(one per sink for a one-file snapshot; a snapshot Spark splits S ways
+gets up to S files per sink, each a thin slice of a rare sink). At 10^12
+rows the thing to avoid is K separate filtered writes (K scans).
 """
 
 from __future__ import annotations
@@ -40,20 +39,24 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# batch pipeline lineage rows. Two granularities in one table:
-#   partition_id = -1  → whole-snapshot conservation counters, collected by
-#                        an observe() listener ON the write action (zero
-#                        extra passes over the source);
+# lineage rows (pipeline.write_batch). Three granularities in one table:
+#   partition_id = -1  → whole-key conservation counters, collected by an
+#                        observe() listener ON the write action (zero extra
+#                        passes over the source);
 #   partition_id >= 0  → one row per written file (sink + file + routed
-#                        count, derived from the output parquet footers —
-#                        see file_lineage_rows). rows_in/parsed/dropped are
-#                        NULL at this granularity; per-file routed sums
-#                        equal the sentinel row's routed.
-LINEAGE_DDL = (
-    "run_id string, snapshot_id long, partition_id int, "
-    "rows_in long, parsed long, routed long, dropped long, "
+#                        count, from the output parquet footers — see
+#                        file_lineage_rows; per-file routed sums equal the
+#                        sentinel row's routed), or, with sink NULL, one row
+#                        per input file (rows_in from its footer — see
+#                        source_file_rows).
+# Batch mode heads each row with (run_id, snapshot_id); the stream, whose
+# checkpoint names the run, with batch_id alone.
+_LINEAGE_COLS = (
+    "partition_id int, rows_in long, parsed long, routed long, dropped long, "
     "sink string, file string"
 )
+LINEAGE_DDL = "run_id string, snapshot_id long, " + _LINEAGE_COLS
+STREAM_LINEAGE_DDL = "batch_id long, " + _LINEAGE_COLS
 
 
 def repartition_salted(
@@ -73,76 +76,30 @@ def repartition_salted(
     return df.repartition(num_partitions, F.col(key), salt)
 
 
-def fan_out_write(
-    routed_df: DataFrame,
-    out_dir: str,
-    sink_col: str = "sink",
-    mode: str = "overwrite",
-    extra_partition_cols: list[str] | None = None,
-    shuffle_partitions: int | None = None,
-    salt_on: str | None = None,
-    salt_buckets: int = 8,
-    max_records_per_file: int | None = None,
-) -> None:
-    """Single-pass dynamic-partitioned fan-out: every routed row lands in
-    ``out_dir/sink=<name>/``. Dropped (NULL-sink) rows are filtered here —
-    after lineage counted them.
-
-    ``extra_partition_cols`` go BEFORE the sink: ``["snapshot"]`` gives
-    ``out_dir/snapshot=<k>/sink=<name>/``, which is how ``run_pipeline``
-    writes a whole batch of snapshots in one pass (``mode="append"``, after
-    clearing the batch's own directories, so committed snapshots stay put).
-
-    ``shuffle_partitions``: pre-write shuffle keyed by **(sink, salt)**.
-    The shuffle has only sinks × salt_buckets distinct keys, so the file
-    count is bounded by ~sinks × salt_buckets per value of the extra
-    partition columns, regardless of task count
-    (hash collisions can merge two key-groups into one task, which the
-    writer re-splits per sink — the bound still holds), instead of
-    tasks × sinks when the shuffle is keyed by a high-cardinality column.
-    The salt spreads a hot sink over ``salt_buckets`` tasks instead of one
-    straggler. Without it the write inherits upstream partitioning (fine
-    when the input is already well-split and sinks are few).
-
-    ``salt_on``: column to derive the salt from. Default None auto-picks:
-    ``turn_idx`` when present (the transcript schema's cheap high-card
-    column), else a hash over all columns — so the helper works on any
-    DataFrame, not just transcripts (ADVICE r2).
-
-    ``max_records_per_file``: upper-bound rows per output file (Spark's
-    per-write knob, not a shuffle) — the write-time half of the
-    small/large-file control; the read-time half is
-    ``operators/compact.py`` for files that came out too SMALL. Set it
-    from target_bytes / avg_row_bytes; 0/None = no cap."""
-    parts = (extra_partition_cols or []) + [sink_col]
-    df = routed_df.filter(F.col(sink_col).isNotNull())
-    if shuffle_partitions:
-        if salt_on is None and "turn_idx" in df.columns:
-            salt_on = "turn_idx"
-        salt_src = (
-            F.hash(F.col(salt_on)) if salt_on is not None
-            else F.xxhash64(*[F.col(c) for c in df.columns])
-        )
-        salt = F.pmod(salt_src, F.lit(salt_buckets))
-        df = df.repartition(shuffle_partitions, F.col(sink_col), salt)
-    writer = df.write.mode(mode)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.partitionBy(*parts).parquet(out_dir)
+def fan_out_write(routed_df: DataFrame, out_dir: str, partition_cols: list[str]) -> None:
+    """Single-pass dynamic-partitioned fan-out, appended under ``out_dir``:
+    every routed row lands in ``out_dir/<partition_cols>/sink=<name>/``
+    (``["snapshot"]`` gives ``snapshot=<k>/sink=<name>/``). Dropped
+    (NULL-sink) rows are filtered here — after lineage counted them. No
+    shuffle precedes the write, so each task writes the rows it holds.
+    The caller clears the directories it rewrites
+    (``pipeline.write_batch``), so appending never touches other keys."""
+    df = routed_df.filter(F.col("sink").isNotNull())
+    df.write.mode("append").partitionBy(*partition_cols, "sink").parquet(out_dir)
 
 
-def file_lineage_rows(data_dir: str, sink_col: str = "sink") -> list[tuple]:
+def file_lineage_rows(data_dir: str) -> list[tuple]:
     """Per-file routed-row counts from parquet FOOTERS, read driver-side
     with pyarrow — zero Spark jobs.
 
-    ``run_pipeline``'s shuffle-free write leaves one file per (scan task,
-    sink) that held a snapshot's rows — sinks × the snapshot's scan
-    splits — so the per-file lineage is a handful of footer reads (~KBs
-    each). A Spark job for it costs more than the answer (measured: a
-    metadata-scan + Window job added ~13 s of cold-JVM codegen to the
-    benched pipeline; this list comprehension adds milliseconds). Batch
-    and stream mode both take their per-file lineage from here, so both
-    share ``run_pipeline``'s POSIX path contract.
+    The shuffle-free write leaves one file per (scan task, sink) that held
+    a key's rows — sinks × the key's scan splits — so the per-file lineage
+    is a handful of footer reads (~KBs each). A Spark job for it costs more
+    than the answer (measured: a metadata-scan + Window job added ~13 s of
+    cold-JVM codegen to the benched pipeline; this list comprehension adds
+    milliseconds). Batch and stream mode both take their per-file lineage
+    from here (``pipeline.write_batch``), so both share ``run_pipeline``'s
+    POSIX path contract.
 
     Returns [(partition_id, sink, file, routed)] with partition_id a dense
     0-based index over files ordered by path. The routed count per file is
@@ -158,7 +115,7 @@ def file_lineage_rows(data_dir: str, sink_col: str = "sink") -> list[tuple]:
     for i, f in enumerate(files):
         sink = None
         for part in os.path.relpath(f, data_dir).split(os.sep):
-            if part.startswith(sink_col + "="):
+            if part.startswith("sink="):
                 # Spark %-escapes special chars in partition dir names
                 sink = unquote(part.split("=", 1)[1])
         rows.append((i, sink, f, pq.ParquetFile(f).metadata.num_rows))
@@ -257,17 +214,3 @@ def source_file_rows(paths: list[str]) -> list[tuple]:
             ) from exc
         rows.append((i, p, n))
     return rows
-
-
-def sink_counts(routed_df: DataFrame, sink_col: str = "sink") -> DataFrame:
-    """Per-sink aggregate counts (partial+final hash agg — Catalyst default),
-    the §2.5 aggregate requirement: count + distinct convs + total text bytes."""
-    return (
-        routed_df.filter(F.col(sink_col).isNotNull())
-        .groupBy(sink_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct("conv_id").alias("n_convs"),
-            F.sum(F.length("text")).alias("text_chars"),
-        )
-    )

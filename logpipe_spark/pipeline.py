@@ -9,11 +9,14 @@ shuffle), and the fan-out write is a single dynamic-partitioned pass over
 every pending snapshot at once, the way the reference reads each block once
 and hands it to every output.
 
-Crash/restart semantics (`src/monitor.c:89-181` + offset commit
-`logpipe-input-file.c:1901-1925`) become: read, route and write all pending
-snapshots as one batch (clearing their uncommitted output first), write
-each snapshot's lineage, then commit the snapshots in order via
-``SnapshotLedger`` — exactly-once instead of the reference's at-least-once.
+``write_batch`` is the one output path: ``run_pipeline`` hands it a batch
+of snapshots, ``streaming.stream.run_stream`` each micro-batch. It clears
+the keys' uncommitted output, writes the data with the observe() counters
+riding along, then each key's lineage. Crash/restart semantics
+(`src/monitor.c:89-181` + offset commit `logpipe-input-file.c:1901-1925`)
+become: read and route all pending snapshots as one batch, write it, then
+commit the snapshots in order via ``SnapshotLedger`` — exactly-once instead
+of the reference's at-least-once.
 """
 
 from __future__ import annotations
@@ -31,6 +34,7 @@ from logpipe_spark.operators.parse import extract_builtin
 from logpipe_spark.operators.route import route
 from logpipe_spark.operators.sinks import (
     LINEAGE_DDL,
+    STREAM_LINEAGE_DDL,
     fan_out_write,
     file_lineage_rows,
     local_path,
@@ -55,22 +59,85 @@ def build_stage_chain(
 _COUNTERS = ("rows_in", "parsed", "routed", "dropped")
 
 
-def counter_aggs(where: Column | None = None, suffix: str = "") -> list[Column]:
-    """The conservation counters of a routed frame as aggregates, aliased
-    ``<counter><suffix>``: rows_in, parsed (n_fields set), routed (sink
-    set), dropped (sink NULL). ``where`` restricts every counter to the
-    rows it holds for. Batch and stream mode both observe exactly these."""
+def counter_aggs(where: Column, suffix: str) -> list[Column]:
+    """The conservation counters of the rows ``where`` holds for, as
+    aggregates aliased ``<counter><suffix>``: rows_in, parsed (n_fields
+    set), routed (sink set), dropped (sink NULL)."""
     sink = F.col("sink")
-    if where is None:
-        values = [F.lit(1), F.col("n_fields"), sink, F.when(sink.isNull(), 1)]
-    else:
-        values = [
-            F.when(where, 1),
-            F.when(where, F.col("n_fields")),
-            F.when(where, sink),
-            F.when(where & sink.isNull(), 1),
-        ]
+    values = [
+        F.when(where, 1),
+        F.when(where, F.col("n_fields")),
+        F.when(where, sink),
+        F.when(where & sink.isNull(), 1),
+    ]
     return [F.count(v).alias(c + suffix) for c, v in zip(_COUNTERS, values)]
+
+
+def write_batch(
+    routed: DataFrame | None,
+    key_col: str,
+    keys: list[int],
+    out_dir: str,
+    src_paths: dict[int, list[str]],
+    run_id: str | None,
+) -> dict[int, dict]:
+    """Write one routed batch and its lineage under ``out_dir``, keyed by
+    ``key_col`` (``snapshot`` in batch mode, ``batch`` in the stream):
+    both modes commit through here, as every input of the reference hands
+    its blocks to the one ``WriteAllOutputPlugins``.
+
+    Each key's ``data/<key_col>=<k>`` is removed, then the batch is
+    appended in ONE write partitioned by (key_col, sink), so writing the
+    same keys again (a stream replay, a batch resume) leaves one copy of
+    their rows. Each key's counters ride that write via observe() as
+    conditional counts, ahead of ``fan_out_write``'s NULL-sink filter, so
+    dropped rows are counted, then discarded. ``routed`` None is a batch
+    with no input rows: nothing is written and every counter is 0.
+
+    ``lineage/<key_col>=<k>`` is then replaced, with no second pass over
+    the data: the key's counters (partition_id -1), one row per output
+    file (routed, from its footer) and one per input file in
+    ``src_paths[k]`` (rows_in, from its footer). Rows are headed
+    (run_id, k) in ``LINEAGE_DDL`` when ``run_id`` is given, else (k,) in
+    ``STREAM_LINEAGE_DDL``.
+
+    Returns {k: {rows_in, parsed, routed, dropped}}."""
+    data_root = os.path.join(out_dir, "data")
+    lineage_root = os.path.join(out_dir, "lineage")
+    # an uncommitted key's data dir has no reader: whatever a crashed run
+    # left there goes, and the append below never touches another key.
+    # So does a killed write's _temporary: the next append's job commit
+    # would otherwise merge its committed task dirs into the data.
+    for d in ["_temporary", *(f"{key_col}={k}" for k in keys)]:
+        shutil.rmtree(os.path.join(data_root, d), ignore_errors=True)
+    counters = {k: dict.fromkeys(_COUNTERS, 0) for k in keys}
+    if routed is not None:
+        obs = Observation()
+        routed = routed.observe(
+            obs, *(a for k in keys for a in counter_aggs(F.col(key_col) == k, f"_{k}"))
+        )
+        fan_out_write(routed, data_root, [key_col])
+        m = obs.get
+        counters = {k: {c: m[f"{c}_{k}"] for c in _COUNTERS} for k in keys}
+
+    ddl = STREAM_LINEAGE_DDL if run_id is None else LINEAGE_DDL
+    for k in keys:
+        head = (k,) if run_id is None else (run_id, k)
+        c = counters[k]
+        rows = [(*head, -1, *(c[n] for n in _COUNTERS), None, None)]
+        if c["routed"]:
+            rows += [
+                (*head, pid, None, None, n, None, sink, f)
+                for pid, sink, f, n in file_lineage_rows(
+                    os.path.join(data_root, f"{key_col}={k}")
+                )
+            ]
+        rows += [
+            (*head, pid, n, None, None, None, None, f)
+            for pid, f, n in source_file_rows(src_paths.get(k, []))
+        ]
+        write_lineage_parquet(rows, ddl, os.path.join(lineage_root, f"{key_col}={k}"))
+    return counters
 
 
 def _snapshot_files(
@@ -121,28 +188,23 @@ def run_pipeline(
     dim_keys: list[str] | None = None,
     include_files: list[str] | None = None,
     exclude_files: list[str] | None = None,
-    min_input_partitions: int | None = 0,
 ) -> dict:
     """Process every pending snapshot under ``src_dir`` exactly once.
 
     All pending snapshots form ONE batch: one scan over every snapshot's
-    files, one stage chain, one write partitioned by (snapshot, sink). The
-    write has no shuffle in front of it: each task writes the rows it
-    parsed, the way the reference hands each block straight to every
-    output. Output files are at most scan splits × sinks, and the splits
-    follow data volume: Spark never splits a small file, so a one-file
-    snapshot is written by one task and gets one file per sink. The Spark
-    job and exchange counts are fixed per run, not per snapshot. Lineage
-    is then written per snapshot, and the ledger commits the snapshots in
-    order.
+    files, one stage chain, and one ``write_batch`` partitioned by
+    (snapshot, sink). Output files are at most scan splits × sinks, and the
+    splits follow data volume: Spark never splits a small file, so a
+    one-file snapshot is written by one task and gets one file per sink.
+    The Spark job and exchange counts are fixed per run, not per snapshot.
+    The ledger then commits the snapshots in order.
 
-    ``salt_partitions`` and ``min_input_partitions`` are accepted for
-    existing callers and no longer change the plan: no exchange runs
-    between the scan and the write, so an under-split batch (fewer scan
-    tasks than cores) parses on as many tasks as it has splits. At local[8]
-    with 4 one-file snapshots, the largest parse task holds a whole
-    snapshot either way, and a snapshot-keyed spread only added a shuffle
-    (BENCH.md).
+    ``salt_partitions`` is accepted for existing callers and does not
+    change the plan: no exchange runs between the scan and the write, so
+    an under-split batch (fewer scan tasks than cores) parses on as many
+    tasks as it has splits. At local[8] with 4 one-file snapshots, the
+    largest parse task holds a whole snapshot either way, and a
+    snapshot-keyed spread only added a shuffle (BENCH.md).
 
     ``include_files`` / ``exclude_files``: source-level basename glob
     filters (the reference's files../exclude_files.. walk) — pruned from
@@ -168,8 +230,6 @@ def run_pipeline(
     src_dir, out_dir = local_path(src_dir), local_path(out_dir)
     run_id = run_id or uuid.uuid4().hex[:12]
     ledger = SnapshotLedger(out_dir)
-    data_root = os.path.join(out_dir, "data")
-    lineage_root = os.path.join(out_dir, "lineage")
     batch = ledger.pending(src_dir)
     src_paths = {
         snap: _snapshot_files(
@@ -178,13 +238,7 @@ def run_pipeline(
         for snap in batch
     }
     files = [f for snap in batch for f in src_paths[snap]]
-    counters = {snap: dict.fromkeys(_COUNTERS, 0) for snap in batch}
-    # a batch snapshot is uncommitted, so no reader sees its data dir:
-    # whatever a crashed run left there goes, and the append below never
-    # touches a committed snapshot's files
-    for snap in batch:
-        shutil.rmtree(os.path.join(data_root, f"snapshot={snap}"), ignore_errors=True)
-
+    routed = None
     if files:
         # mergeSchema: a column added in a later snapshot is NULL in the
         # earlier ones, and a type conflict between snapshots fails here,
@@ -198,64 +252,7 @@ def run_pipeline(
             ).cast("long"),
         )
         routed = build_stage_chain(df, dim, rules, dim_keys=dim_keys)
-
-        # ONE action per batch: each snapshot's conservation counters ride
-        # the write via observe() as conditional counts (collected by a
-        # listener, zero extra reads) — the single-read/multi-write
-        # invariant of the reference's output.c:256-277, now including the
-        # bookkeeping. The observe node sits above the route stage and
-        # below fan_out_write's NULL-sink filter, so dropped rows are
-        # counted, then discarded.
-        obs = Observation(f"lineage_{run_id}")
-        aggs = [
-            a for snap in batch
-            for a in counter_aggs(F.col("snapshot") == snap, f"_{snap}")
-        ]
-        routed = routed.observe(obs, *aggs)
-
-        # no shuffle before the write: each scan task writes its own rows
-        # into snapshot=<k>/sink=<s>/ — one file per sink for a one-file
-        # snapshot (repartition_salted by conv_id remains the right key
-        # when a downstream consumer, not the file layout, needs
-        # co-located conversations)
-        fan_out_write(
-            routed, data_root, mode="append", extra_partition_cols=["snapshot"]
-        )
-        m = obs.get
-        counters = {snap: {c: m[f"{c}_{snap}"] for c in _COUNTERS} for snap in batch}
-
-    for snap in batch:
-        snap_data = os.path.join(data_root, f"snapshot={snap}")
-        c = counters[snap]
-        # Three granularities in one tiny table, all collected WITHOUT a
-        # second pass over the data:
-        #   partition_id=-1, sink+file NULL  → whole-snapshot observe()
-        #                                      counters (ride the write);
-        #   partition_id>=0, sink NOT NULL   → one row per OUTPUT file
-        #                                      (routed from its footer);
-        #   partition_id>=0, sink NULL       → one row per INPUT file
-        #                                      (rows_in from its footer).
-        # Footers are read driver-side with pyarrow: the write leaves one
-        # file per (task, sink) that held the snapshot's rows, so this is
-        # a handful of KB-sized reads; a Spark-job variant
-        # (metadata scan + Window) cost ~13 s of cold-JVM codegen per
-        # bench run for the same rows (BENCH.md r4 A/B).
-        lineage_rows = [
-            (run_id, snap, -1, *(c[k] for k in _COUNTERS), None, None)
-        ]
-        if c["routed"]:
-            for pid, sink_name, f, n_routed in file_lineage_rows(snap_data):
-                lineage_rows.append(
-                    (run_id, snap, pid, None, None, n_routed, None, sink_name, f)
-                )
-        for pid, f, rows_in in source_file_rows(src_paths[snap]):
-            lineage_rows.append(
-                (run_id, snap, pid, rows_in, None, None, None, None, f)
-            )
-        write_lineage_parquet(
-            lineage_rows, LINEAGE_DDL,
-            os.path.join(lineage_root, f"snapshot={snap}"),
-        )
+    counters = write_batch(routed, "snapshot", batch, out_dir, src_paths, run_id)
 
     for snap in batch:
         if fail_after_write_snapshot == snap:

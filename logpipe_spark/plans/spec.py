@@ -19,7 +19,7 @@ ordinary DataFrame -> DataFrame function.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -117,9 +117,20 @@ class PipelineSpec:
     ) -> dict:
         """Streaming flavor of the same spec — this is what consumes
         ``poll_interval`` (the reference's usleep tail-poll period): with
-        ``available_now=False`` the query triggers every poll interval."""
+        ``available_now=False`` the query triggers every poll interval.
+
+        The stream enriches on (tool, role) and reads every file, so a spec
+        that sets ``dim_keys``, ``files`` or ``exclude_files`` otherwise
+        raises ValueError rather than run differently than ``run``."""
         from logpipe_spark.streaming.stream import run_stream
 
+        for f in fields(self):
+            value = getattr(self, f.name)
+            if f.name in ("dim_keys", "files", "exclude_files") and value != f.default_factory():
+                raise ValueError(
+                    f"run_streaming does not apply the spec's {f.name!r} "
+                    f"({value!r}); only run() does"
+                )
         return run_stream(
             spark,
             self.source_dir,

@@ -14,20 +14,24 @@ Reference mapping:
 - monitor restart loop (`src/monitor.c:89-181`) → just restart the query
   with the same checkpointLocation.
 
-The per-batch body reuses the batch pipeline layer by layer: the stage
-chain (parse → enrich → route), the observe() counters, the fan-out write
-and the footer lineage — one code path for both execution modes.
+Each micro-batch runs the batch pipeline's stage chain (parse → enrich →
+route) and commits through its ``write_batch``, keyed by batch id instead
+of snapshot: ``data/batch=<id>/sink=<s>/`` and ``lineage/batch=<id>/`` —
+one write-and-lineage path for both execution modes. A replayed batch id
+clears its directory and writes it again, so the replay is idempotent.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from logpipe_spark.operators.sinks import fan_out_write, local_path
-from logpipe_spark.pipeline import _COUNTERS, build_stage_chain, counter_aggs
+from logpipe_spark.operators.sinks import local_path
+from logpipe_spark.pipeline import build_stage_chain, write_batch
+from logpipe_spark.sources.readers import snapshot_stream
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -38,15 +42,6 @@ TRANSCRIPT_SCHEMA = T.StructType(
         T.StructField("tool", T.StringType()),
         T.StructField("ts", T.TimestampType()),
     ]
-)
-
-
-# stream lineage rows: the batch LINEAGE_DDL keyed by micro-batch id
-# instead of (run_id, snapshot_id); partition_id = -1 is the whole-batch
-# counters row, partition_id >= 0 one row per written file
-STREAM_LINEAGE_DDL = (
-    "batch_id long, partition_id int, rows_in long, parsed long, "
-    "routed long, dropped long, sink string, file string"
 )
 
 
@@ -77,55 +72,20 @@ def run_stream(
     Returns {"batches": n} after the query drains (available_now) or
     times out."""
     out_dir = local_path(out_dir)
-    checkpoint = os.path.join(out_dir, "_checkpoint")
-    data_root = os.path.join(out_dir, "data")
-    lineage_root = os.path.join(out_dir, "lineage")
     seen = {"batches": 0}
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(src_dir)
-    )
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # looked up at call time, so a wrapper installed on the sinks
-        # module (the benchmark's tracer) sees the stream's calls too
-        from logpipe_spark.operators.sinks import (
-            file_lineage_rows,
-            write_lineage_parquet,
-        )
-
-        # same single-action shape as batch mode: conservation counters
-        # ride the sink write via observe() — no persist, no second pass
         routed = build_stage_chain(batch_df, dim, rules)
-        obs = Observation(f"stream_lineage_b{batch_id}")
-        routed = routed.observe(obs, *counter_aggs())
-        batch_data = os.path.join(data_root, f"batch={batch_id}")
-        # overwrite per batch dir = idempotent replay
-        fan_out_write(routed, batch_data)
-        m = obs.get
-        lineage_rows = [
-            (int(batch_id), -1, *(m[c] for c in _COUNTERS), None, None)
-        ]
-        if m["routed"]:
-            # per-file granularity from the just-written parquet footers,
-            # as in batch mode: the file count is bounded by sinks ×
-            # upstream partitions per micro-batch, so a Spark job per batch
-            # would cost more than the answer (BENCH.md r4)
-            lineage_rows += [
-                (int(batch_id), pid, None, None, n_routed, None, sink, f)
-                for pid, sink, f, n_routed in file_lineage_rows(batch_data)
-            ]
-        write_lineage_parquet(
-            lineage_rows, STREAM_LINEAGE_DDL,
-            os.path.join(lineage_root, f"batch={batch_id}"),
+        write_batch(
+            routed.withColumn("batch", F.lit(batch_id)), "batch", [batch_id],
+            out_dir, src_paths={}, run_id=None,
         )
         seen["batches"] += 1
 
     writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint)
+        snapshot_stream(spark, src_dir, TRANSCRIPT_SCHEMA)
+        .writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
@@ -140,5 +100,7 @@ def run_stream(
 
 
 def read_stream_sinks(spark: SparkSession, out_dir: str) -> DataFrame:
-    data_root = os.path.join(out_dir, "data")
+    """Every row the stream routed, with its sink and batch columns. Holds
+    ``out_dir`` to ``run_stream``'s path contract."""
+    data_root = os.path.join(local_path(out_dir), "data")
     return spark.read.option("basePath", data_root).parquet(data_root)

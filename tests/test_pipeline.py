@@ -210,34 +210,6 @@ def test_source_file_rows_names_unreadable_path():
         source_file_rows([bad])
 
 
-def test_fan_out_write_max_records_per_file(spark, tmp_path):
-    """maxRecordsPerFile bounds rows per output file at write time (the
-    write-time half of file-size control; compact.py is the read-time
-    half for files that came out too small)."""
-    import glob
-
-    from logpipe_spark.operators.sinks import fan_out_write
-
-    df = spark.range(0, 1000).select(
-        F.lit("sink_a").alias("sink"),
-        F.col("id").alias("turn_idx"),
-        F.md5(F.col("id").cast("string")).alias("text"),
-    )
-    capped = str(tmp_path / "capped")
-    fan_out_write(df, capped, shuffle_partitions=2, salt_buckets=1,
-                  max_records_per_file=100)
-    files = glob.glob(f"{capped}/sink=sink_a/*.parquet")
-    assert len(files) >= 10  # 1000 rows / 100-row cap
-    got = spark.read.parquet(capped)
-    assert got.count() == 1000
-    import pyarrow.parquet as pq
-    assert max(pq.ParquetFile(f).metadata.num_rows for f in files) <= 100
-
-    uncapped = str(tmp_path / "uncapped")
-    fan_out_write(df, uncapped, shuffle_partitions=2, salt_buckets=1)
-    assert len(glob.glob(f"{uncapped}/sink=sink_a/*.parquet")) < 10
-
-
 def test_ledger_metrics_match_lineage_totals(spark, pipe_out):
     """Each commit carries its snapshot's observe() counters — the same
     numbers as its partition_id = -1 lineage row — plus the batch it
@@ -362,10 +334,7 @@ def test_job_count_does_not_grow_with_snapshots(
 ):
     """All pending snapshots share one read, one stage chain and one write,
     so 8 snapshots launch exactly as many Spark jobs as 4: the schema
-    merge, the dim broadcast and the write (no shuffle precedes it).
-    ``min_input_partitions=None`` is accepted and changes nothing: no
-    repartition runs whether the batch is under-split (4 one-file
-    snapshots at local[8]) or not (8)."""
+    merge, the dim broadcast and the write (no shuffle precedes it)."""
     sc = spark.sparkContext
     jobs = {}
     for n in (4, 8):
@@ -376,7 +345,6 @@ def test_job_count_does_not_grow_with_snapshots(
         try:
             run_pipeline(
                 spark, src, out, dim_df, rules, salt_partitions=8,
-                min_input_partitions=None,
             )
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)

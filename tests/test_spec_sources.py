@@ -291,3 +291,23 @@ def test_text_lines_roundtrip_byte_faithful(spark, transcripts_pdf, golden, tmp_
     assert n_all == n_inc > 0
     with pytest.raises(ValueError, match="filtered out"):
         text_lines_source(spark, d, include=["zzz-*"])
+
+
+@pytest.mark.parametrize(
+    "field, value",
+    [("dim_keys", ["tool"]), ("files", ["part-*.parquet"]), ("exclude_files", ["*.tmp"])],
+)
+def test_spec_run_streaming_rejects_batch_only_fields(spark, rules, tmp_path, field, value):
+    """The stream enriches on (tool, role) and reads every file: a spec
+    that sets dim_keys, files or exclude_files fails by name before any
+    query starts, instead of enriching and filtering differently than
+    run() does."""
+    spec = PipelineSpec.from_json(json.dumps({
+        "source_dir": str(tmp_path / "src"), "out_dir": str(tmp_path / "out"),
+        "rules": rules, field: value,
+    }))
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match=field):
+        spec.run_streaming(spark)
+    assert len(spark.streams.active) == active
+    assert not os.path.exists(tmp_path / "out")

@@ -599,3 +599,51 @@ def test_stream_stream_left_outer_flushes_on_watermark(spark, tmp_path):
     )
     assert ("a", 1, 11) in got
     assert ("b", 2, None) in got
+
+
+def test_read_stream_sinks_holds_the_path_contract(
+    spark, transcripts_pdf, dim_df, rules, golden, tmp_path
+):
+    """``read_stream_sinks`` takes the same out_dir ``run_stream`` took: a
+    ``file://localhost`` URI reads back every routed row, and a non-local
+    URI raises ValueError instead of reaching Hadoop."""
+    src = str(tmp_path / "src")
+    out = tmp_path / "out"
+    write_snapshots(transcripts_pdf, src, n_snapshots=2)
+    uri = f"file://localhost{out}"
+    assert run_stream(spark, src, uri, dim_df, rules)["batches"] >= 1
+    got = {
+        r["sink"]: r["n"]
+        for r in read_stream_sinks(spark, uri)
+        .groupBy("sink")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    assert got == dict(golden["sink_counts"])
+    with pytest.raises(ValueError, match="not a local path"):
+        read_stream_sinks(spark, "hdfs://namenode:8020/logpipe/out")
+
+
+def test_stream_commits_through_the_pipeline_bindings(
+    spark, transcripts_pdf, dim_df, rules, monkeypatch, tmp_path
+):
+    """Each micro-batch writes and reads footer lineage through the
+    ``pipeline`` module's bindings, the same ones batch mode calls, so a
+    wrapper installed there (the benchmark's tracer) sees the stream too."""
+    import logpipe_spark.pipeline as pipeline
+
+    calls = {"fan_out_write": 0, "file_lineage_rows": 0}
+    for name in calls:
+        original = getattr(pipeline, name)
+
+        def counted(*args, _name=name, _original=original, **kwargs):
+            calls[_name] += 1
+            return _original(*args, **kwargs)
+
+        monkeypatch.setattr(pipeline, name, counted)
+
+    src = str(tmp_path / "src")
+    write_snapshots(transcripts_pdf, src, n_snapshots=2)
+    res = run_stream(spark, src, str(tmp_path / "out"), dim_df, rules)
+    assert res["batches"] >= 1
+    assert calls == {"fan_out_write": res["batches"], "file_lineage_rows": res["batches"]}

@@ -109,6 +109,9 @@ def test_write_rotation_max_records(spark, transcripts_df, tmp_path):
     pdir = os.path.join(out, "conv_id=conv00000000")
     files = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
     assert len(files) >= n // 5  # rolled into multiple files
+    import pyarrow.parquet as pq
+
+    assert max(pq.ParquetFile(os.path.join(pdir, f)).metadata.num_rows for f in files) <= 5
     assert spark.read.parquet(out).count() == n
 
 
