@@ -20,6 +20,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from logpipe_spark.operators.dedup import (
+    _drop_covered,
+    _eval_shingles,
     _shingles,
     _tokens,
     base_hash60,
@@ -202,19 +204,17 @@ def decontaminate(
     (distinct shingles shared with the eval set), and ``contaminated``.
     Docs also present in ``eval_docs`` (matched by ``key_col``) are excluded
     from the output — they are the benchmark, not candidates."""
-    sh = F.explode_outer(_shingles(F.col(text_col), n)).alias("g")
-    corpus = docs.select(F.col(key_col).alias("doc_id"), sh)
-    ev = (
-        eval_docs.select(F.explode(_shingles(F.col(text_col), n)).alias("g"))
-        .distinct()
-        .withColumn("_hit", F.lit(1))
+    corpus = docs.select(
+        F.col(key_col).alias("doc_id"),
+        F.explode_outer(_shingles(F.col(text_col), n)).alias("span"),
     )
+    ev = _eval_shingles(eval_docs, n, text_col).withColumn("_hit", F.lit(1))
     ev_keys = eval_docs.select(F.col(key_col).alias("doc_id"))
     return (
-        corpus.join(F.broadcast(ev), "g", "left")
+        corpus.join(F.broadcast(ev), "span", "left")
         .groupBy("doc_id")
         .agg(
-            F.count("g").alias("n_shingles"),
+            F.count("span").alias("n_shingles"),
             F.count("_hit").alias("n_overlap"),
         )
         .join(F.broadcast(ev_keys), "doc_id", "left_anti")
@@ -252,59 +252,15 @@ def remove_eval_spans(
     ``remove_dup_spans``.
 
     Scale design — strictly CHEAPER than remove_dup_spans: the span
-    source is the tiny eval side, so its distinct shingles BROADCAST and
-    the corpus-sized span table never shuffles by span at all. The only
+    source is the tiny eval side, so its distinct shingles
+    (``dedup._eval_shingles``, shared with :func:`decontaminate`)
+    BROADCAST into the ``dedup._drop_covered`` surgery and the
+    corpus-sized span table never shuffles by span at all. The only
     corpus shuffles are (doc, position) distinct-dedup of covered
     positions and the id-keyed reassembly groupBy — both O(token
     positions of CONTAMINATED docs), not of the corpus."""
-    ev = F.broadcast(
-        eval_docs.select(
-            F.explode(_shingles(F.col(text_col), n)).alias("span")
-        ).distinct()
-    )
-    from logpipe_spark.operators.dedup import _pos_spans
-
-    spans = docs.select(
-        F.col(key_col).alias("doc"),
-        F.posexplode(_pos_spans(F.col(text_col), n)).alias("pos0", "span"),
-    ).select("doc", (F.col("pos0") + 1).alias("pos"), "span")
-    covered = (
-        spans.join(ev, "span")
-        .select(
-            "doc",
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + F.lit(n - 1))
-            ).alias("tpos"),
-        )
-        .distinct()
-    )
-    toks = docs.select(
-        F.col(key_col).alias("doc"),
-        F.posexplode(_tokens(F.col(text_col))).alias("tpos0", "tok"),
-    ).select("doc", (F.col("tpos0") + 1).alias("tpos"), "tok")
-    rebuilt = (
-        toks.join(covered, ["doc", "tpos"], "left_anti")
-        .groupBy("doc")
-        .agg(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("tpos", "tok"))),
-                    lambda s: s["tok"],
-                ),
-            ).alias("clean_text"),
-            F.count(F.lit(1)).alias("n_kept"),
-        )
-    )
-    return (
-        docs.select(F.col(key_col).alias("doc_id"))
-        .join(rebuilt.withColumnRenamed("doc", "doc_id"), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-            F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
-        )
-    )
+    ev = F.broadcast(_eval_shingles(eval_docs, n, text_col))
+    return _drop_covered(docs, n, text_col, key_col, lambda _spans: ev)
 
 
 def _prefilter_margin(keep_n: int) -> float:
@@ -320,21 +276,6 @@ def _prefilter_margin(keep_n: int) -> float:
     import math
 
     return 1.0 + max(0.1, 16.0 / math.sqrt(max(keep_n, 1)))
-
-
-def _skew_prefilter(
-    docs: DataFrame,
-    group_col: str,
-    h: Column,
-    cutoff: Column,
-) -> DataFrame:
-    """Keep only rows whose 60-bit hash is at or below the per-group
-    ``cutoff`` — the sliver that can possibly rank inside the group's
-    keep-count. This is what makes hash-order sampling survive a dominant
-    group at 100 TB: the exact ``row_number`` window downstream sorts
-    ~keep_n*margin rows per group instead of n_g (a 30-40% single-domain
-    corpus would otherwise sort through ONE task)."""
-    return docs.filter(h <= cutoff)
 
 
 def _guarded_rank_filter(
@@ -391,7 +332,7 @@ def mix_sample(
     Plan: one tiny per-group count aggregate collected to the driver
     (domains are few — dozens, not millions), then a per-group
     hash-threshold prefilter (groups larger than ``window_cap`` keep only
-    hashes below ~keep_g/n_g of the hash space — see ``_skew_prefilter``)
+    hashes below ~keep_g/n_g of the hash space — see ``_mix_core``)
     feeding a hash-partitioned window rank against broadcast keep maps.
     Only the ~keep_g-row sliver of a dominant group is ever sorted; a lazy
     guard raises on the (cryptographically unlikely) prefilter shortfall
@@ -495,8 +436,12 @@ def _mix_core(
         g: min((counts[j] * parts[g]) // parts[j] for j in parts)
         for g in parts
     }
-    # cutoff floored at the group's min hash so the shortfall guard always
-    # sees >= 1 row per group (same airtightness argument as quota_sample)
+    # per-group hash cutoff: only rows at or below it can rank inside the
+    # group's keep-count, so the exact row_number window sorts
+    # ~keep_g*margin rows per group instead of n_g (a 30-40% single-domain
+    # corpus would otherwise sort through ONE task) — quota_sample's
+    # prefilter rests on the same bound. Floored at the group's min hash so
+    # the shortfall guard always sees >= 1 row per group.
     cutoff = {
         g: (
             HASH_SPACE
@@ -526,7 +471,7 @@ def _mix_core(
     w = Window.partitionBy(group_col).orderBy(h.asc(), F.col(key_col).asc())
     wg = Window.partitionBy(group_col)
     ranked = (
-        _skew_prefilter(docs.filter(member), group_col, h, _bmap(cutoff))
+        docs.filter(member & (h <= _bmap(cutoff)))
         .withColumn("_mrank", F.row_number().over(w))
         .withColumn("_msurv", F.count(F.lit(1)).over(wg))
     )
@@ -722,7 +667,7 @@ def _quota_prefiltered(
         F.broadcast(counts.withColumn("_cutoff", cutoff)),
         F.col(group_col).eqNullSafe(F.col("_g")),
     ).drop("_g")
-    return _skew_prefilter(joined, group_col, h, F.col("_cutoff")), h
+    return joined.filter(h <= F.col("_cutoff")), h
 
 
 def quota_sample(

@@ -131,22 +131,21 @@ def fingerprint_dedup(docs: DataFrame, text_col: str = "text", key_col: str = "d
 
 
 # ---------------------------------------------------------------------------
-# n-gram Jaccard via shingle inverted index
+# n-gram Jaccard / containment via one shingle inverted index
 # ---------------------------------------------------------------------------
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.8,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    max_shingle_freq: int = 1000,
+def _pair_overlaps(
+    docs: DataFrame, n: int, text_col: str, key_col: str, max_shingle_freq: int
 ) -> DataFrame:
-    """All pairs with token-n-gram Jaccard ≥ threshold.
+    """(doc_a, doc_b, n_common, sz_a, sz_b) for every doc pair (doc_a <
+    doc_b) sharing a distinct ``n``-gram shingle: the capped inverted-index
+    self-join that ``ngram_jaccard_pairs`` and ``containment_pairs`` score.
 
-    Plan shape: explode → (optional hot-shingle cap) → self-join on shingle
-    → count pairwise intersections → join per-doc sizes → filter. The only
-    quadratic term is per-shingle, bounded by ``max_shingle_freq``."""
+    Plan shape: explode → broadcast anti-join of the hot shingles
+    (document frequency > ``max_shingle_freq``) → self-join on shingle →
+    count pairwise intersections → join per-doc sizes. The only quadratic
+    term is per-shingle, bounded by the cap; at 100 TB the index never
+    materializes all-pairs."""
     sh = docs.select(
         F.col(key_col).alias("doc"),
         F.explode(_shingles(F.col(text_col), n)).alias("shingle"),
@@ -157,30 +156,37 @@ def ngram_jaccard_pairs(
         "shingle",
         "left_anti",
     )
-    # sizes AFTER the cap: Jaccard over the same universe intersections are
+    # sizes AFTER the cap: scores over the same universe intersections are
     # counted in (sizes-before-cap would bias similarity downward whenever
     # a stop-shingle is dropped)
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-
-    a = sh.alias("a")
-    b = sh.alias("b")
     inter = (
-        a.join(b, "shingle")
+        sh.alias("a").join(sh.alias("b"), "shingle")
         .filter(F.col("a.doc") < F.col("b.doc"))
         .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    out = (
-        inter.join(sizes.withColumnRenamed("doc", "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc", "doc_b").withColumnRenamed("sz", "sz_b"), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("sz_a") + F.col("sz_b") - F.col("n_common")),
-        )
+    return inter.join(
+        sizes.select(F.col("doc").alias("doc_a"), F.col("sz").alias("sz_a")), "doc_a"
+    ).join(sizes.select(F.col("doc").alias("doc_b"), F.col("sz").alias("sz_b")), "doc_b")
+
+
+def ngram_jaccard_pairs(
+    docs: DataFrame,
+    n: int = 3,
+    threshold: float = 0.8,
+    text_col: str = "text",
+    key_col: str = "doc_id",
+    max_shingle_freq: int = 1000,
+) -> DataFrame:
+    """All pairs with token-n-gram Jaccard ≥ threshold, scored from
+    ``_pair_overlaps``: |A∩B| / (|A| + |B| - |A∩B|)."""
+    jaccard = F.col("n_common") / (F.col("sz_a") + F.col("sz_b") - F.col("n_common"))
+    return (
+        _pair_overlaps(docs, n, text_col, key_col, max_shingle_freq)
+        .select("doc_a", "doc_b", "n_common", jaccard.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "n_common", "jaccard")
     )
-    return out
 
 
 def dedup_keep_list(
@@ -228,44 +234,16 @@ def containment_pairs(
     smaller key), so each emitted row reads "doc_a is (nearly) inside
     doc_b"; containment is computed against the smaller set.
 
-    Plan shape — identical cost envelope to ``ngram_jaccard_pairs``: one
-    explode, one broadcast hot-shingle anti-join, one per-shingle
-    self-join with the quadratic term bounded by ``max_shingle_freq``,
-    one groupBy per candidate pair. No new shuffle shapes; at 100 TB the
-    inverted index never materializes all-pairs."""
-    sh = docs.select(
-        F.col(key_col).alias("doc"),
-        F.explode(_shingles(F.col(text_col), n)).alias("shingle"),
-    )
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    sh = sh.join(
-        F.broadcast(freq.filter(F.col("df") > max_shingle_freq)),
-        "shingle",
-        "left_anti",
-    )
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("a.doc") < F.col("b.doc"))
-        .groupBy(F.col("a.doc").alias("da"), F.col("b.doc").alias("db"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sized = (
-        inter.join(
-            sizes.select(F.col("doc").alias("da"), F.col("sz").alias("sz_a")), "da"
-        )
-        .join(sizes.select(F.col("doc").alias("db"), F.col("sz").alias("sz_b")), "db")
-    )
-    # orient: container = larger shingle set (ties: smaller key — da < db
-    # always here, so the tie rule keeps da as container)
-    small_is_a = (F.col("sz_a") < F.col("sz_b"))
-    out = (
-        sized.select(
-            F.when(small_is_a, F.col("da")).otherwise(F.col("db")).alias("doc_a"),
-            F.when(small_is_a, F.col("db")).otherwise(F.col("da")).alias("doc_b"),
+    Same plan as ``ngram_jaccard_pairs`` (both score ``_pair_overlaps``),
+    so the same cost envelope: no new shuffle shapes."""
+    # orient: container = larger shingle set (ties: smaller key — doc_a <
+    # doc_b always here, so the tie rule keeps doc_a as container)
+    small_is_a = F.col("sz_a") < F.col("sz_b")
+    return (
+        _pair_overlaps(docs, n, text_col, key_col, max_shingle_freq)
+        .select(
+            F.when(small_is_a, F.col("doc_a")).otherwise(F.col("doc_b")).alias("doc_a"),
+            F.when(small_is_a, F.col("doc_b")).otherwise(F.col("doc_a")).alias("doc_b"),
             F.col("n_common"),
             (
                 F.col("n_common")
@@ -274,7 +252,6 @@ def containment_pairs(
         )
         .filter(F.col("containment") >= threshold)
     )
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -680,7 +657,8 @@ def connected_components_star(
 
 
 # ---------------------------------------------------------------------------
-# span-level duplication stats (FineWeb/RefinedWeb-style exact span dedup)
+# span/line dedup and span surgery (FineWeb/RefinedWeb/C4-style), on one
+# private core: _frequent, _eval_shingles, _rejoin, _drop_covered
 # ---------------------------------------------------------------------------
 
 def _pos_spans(text: Column, n: int) -> Column:
@@ -688,6 +666,101 @@ def _pos_spans(text: Column, n: int) -> Column:
     which distincts): one span per position, so per-doc counts measure how
     much of the document is covered by duplicated material."""
     return _ngrams(text, n)
+
+
+def _frequent(rows: DataFrame, value_col: str, min_docs: int) -> DataFrame:
+    """The ``value_col`` values of ``(doc, value_col)`` rows that occur in
+    ≥ ``min_docs`` DISTINCT docs, one column. distinct(doc, value) then
+    groupBy(value): one shuffle keyed by the raw value, partial agg
+    collapsing within-doc repeats map-side. Keying by the raw string (no
+    digest) keeps the DuckDB oracles byte-identical with no collision
+    caveat."""
+    return (
+        rows.select("doc", value_col)
+        .distinct()
+        .groupBy(value_col)
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") >= min_docs)
+        .select(value_col)
+    )
+
+
+def _eval_shingles(eval_docs: DataFrame, n: int, text_col: str) -> DataFrame:
+    """Distinct ``n``-gram shingles of an evaluation set as one ``span``
+    column — the small, broadcast side of ``corpus.decontaminate`` and
+    ``corpus.remove_eval_spans``."""
+    return eval_docs.select(
+        F.explode(_shingles(F.col(text_col), n)).alias("span")
+    ).distinct()
+
+
+def _rejoin(
+    base: DataFrame, kept: DataFrame, pos: str, piece: str, sep: str, *extra: Column
+) -> DataFrame:
+    """Ordered reassembly of the surviving ``(doc, pos, piece)`` rows:
+    groupBy(doc) (id-keyed) sorts each doc's pieces by position and joins
+    them with ``sep``. One row per ``base`` row, keyed by its ``doc_id``:
+    (doc_id, clean_text, *extra, n_kept) — a doc with nothing left keeps
+    its row with ``''`` and 0."""
+    rebuilt = kept.groupBy(F.col("doc").alias("doc_id")).agg(
+        F.concat_ws(
+            sep,
+            F.transform(
+                F.array_sort(F.collect_list(F.struct(pos, piece))),
+                lambda s: s[piece],
+            ),
+        ).alias("clean_text"),
+        F.count(F.lit(1)).alias("n_kept"),
+    )
+    return base.join(rebuilt, "doc_id", "left").select(
+        "doc_id",
+        F.coalesce("clean_text", F.lit("")).alias("clean_text"),
+        *extra,
+        F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
+    )
+
+
+def _drop_covered(
+    docs: DataFrame,
+    n: int,
+    text_col: str,
+    key_col: str,
+    drop_set: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Span surgery: drop every token position covered by an ``n``-gram
+    in the one-column ``span`` table ``drop_set(spans)`` — which may be
+    derived from the docs' own positional ``(doc, pos, span)`` rows or
+    ignore them — and rejoin survivors in order. Returns (doc_id,
+    clean_text, n_kept), one row per input doc; ``clean_text`` is the
+    tokenizer-normalized reconstruction (lowercased, separator runs
+    collapsed), NOT a substring of the raw text.
+
+    Linear in token positions: matched spans explode to their ≤ n covered
+    positions and distinct on (doc, position), the token positions
+    left-anti join against them (keyed by (doc, pos)), then ``_rejoin``."""
+    spans = docs.select(
+        F.col(key_col).alias("doc"),
+        F.posexplode(_pos_spans(F.col(text_col), n)).alias("pos0", "span"),
+    ).select("doc", (F.col("pos0") + 1).alias("pos"), "span")
+    covered = (
+        spans.join(drop_set(spans), "span")
+        .select(
+            "doc",
+            F.explode(
+                F.sequence(F.col("pos"), F.col("pos") + F.lit(n - 1))
+            ).alias("tpos"),
+        )
+        .distinct()
+    )
+    toks = docs.select(
+        F.col(key_col).alias("doc"),
+        F.posexplode(_tokens(F.col(text_col))).alias("tpos0", "tok"),
+    ).select("doc", (F.col("tpos0") + 1).alias("tpos"), "tok")
+    return _rejoin(
+        docs.select(F.col(key_col).alias("doc_id")),
+        toks.join(covered, ["doc", "tpos"], "left_anti"),
+        "tpos", "tok", " ",
+    )
 
 
 def dup_span_stats(
@@ -708,27 +781,17 @@ def dup_span_stats(
     SQL-mirrorable; zero rows are kept via the final left join (a short doc
     has no spans but is still a corpus row).
 
-    100 TB shape: explode → distinct(doc, span) → groupBy(span) document
-    frequency (one shuffle keyed by span; partial agg collapses repeats
-    map-side) → semi-shaped left join of the positional spans against the
-    duplicated-span set on the span key → groupBy(doc) counts (id-keyed).
-    No pairwise term at all — unlike ngram_jaccard_pairs there is no
-    per-shingle quadratic, so no hot-shingle cap is needed; the widest
-    shuffle is O(total token positions). The shuffles key by the raw span
-    string, so the DuckDB oracle is byte-identical with no collision
-    caveat."""
+    100 TB shape: explode → ``_frequent`` span set (one shuffle keyed by
+    span) → left join of the positional spans against it on the span key
+    → groupBy(doc) counts (id-keyed). No pairwise term at all — unlike
+    ngram_jaccard_pairs there is no per-shingle quadratic, so no
+    hot-shingle cap is needed; the widest shuffle is O(total token
+    positions)."""
     spans = docs.select(
         F.col(key_col).alias("doc"),
         F.explode(_pos_spans(F.col(text_col), n)).alias("span"),
     )
-    dup = (
-        spans.select("doc", "span")
-        .distinct()
-        .groupBy("span")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") >= min_docs)
-        .select("span", F.lit(1).alias("is_dup"))
-    )
+    dup = _frequent(spans, "span", min_docs).withColumn("is_dup", F.lit(1))
     per = (
         spans.join(dup, "span", "left")
         .groupBy("doc")
@@ -761,70 +824,17 @@ def remove_dup_spans(
     when ANY token n-gram covering it also occurs in ≥ ``min_docs`` distinct
     documents; surviving tokens are rejoined in original order.
 
-    Returns (doc_id, clean_text, n_kept). ``clean_text`` is the
-    tokenizer-normalized reconstruction (lowercased, separator runs
-    collapsed — the same normalization every dedup operator here applies),
-    NOT a substring of the raw text; callers wanting raw-text surgery should
-    map kept positions back themselves.
+    Returns (doc_id, clean_text, n_kept), the ``_drop_covered`` surgery
+    with the ``_frequent`` span set as its drop set; callers wanting
+    raw-text surgery should map kept positions back themselves.
 
-    100 TB shape: strictly linear in token positions, no pairwise term —
-    (1) positional spans explode, (2) document frequency per span (shuffle
-    keyed by span), (3) duplicated occurrences explode to their ≤ n covered
-    positions and distinct on (doc, position), (4) left-anti join of the
-    token positions against the covered set (shuffle keyed by (doc, pos)),
-    (5) groupBy(doc) ordered reassembly. The widest shuffle is O(total
-    token positions) keyed by span — same bound as dup_span_stats. Steps
-    2-4 key by the raw span string, so the DuckDB oracle is
-    byte-identical."""
-    spans = docs.select(
-        F.col(key_col).alias("doc"),
-        F.posexplode(_pos_spans(F.col(text_col), n)).alias("pos0", "span"),
-    ).select("doc", (F.col("pos0") + 1).alias("pos"), "span")
-    dup = (
-        spans.select("doc", "span")
-        .distinct()
-        .groupBy("span")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") >= min_docs)
-        .select("span")
+    100 TB shape: strictly linear in token positions, no pairwise term.
+    The widest shuffle is the span-keyed document frequency, O(total
+    token positions) — same bound as dup_span_stats."""
+    return _drop_covered(
+        docs, n, text_col, key_col, lambda spans: _frequent(spans, "span", min_docs)
     )
-    covered = (
-        spans.join(dup, "span")
-        .select(
-            "doc",
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + F.lit(n - 1))
-            ).alias("tpos"),
-        )
-        .distinct()
-    )
-    toks = docs.select(
-        F.col(key_col).alias("doc"),
-        F.posexplode(_tokens(F.col(text_col))).alias("tpos0", "tok"),
-    ).select("doc", (F.col("tpos0") + 1).alias("tpos"), "tok")
-    rebuilt = (
-        toks.join(covered, ["doc", "tpos"], "left_anti")
-        .groupBy("doc")
-        .agg(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("tpos", "tok"))),
-                    lambda s: s["tok"],
-                ),
-            ).alias("clean_text"),
-            F.count(F.lit(1)).alias("n_kept"),
-        )
-    )
-    return (
-        docs.select(F.col(key_col).alias("doc_id"))
-        .join(rebuilt.withColumnRenamed("doc", "doc_id"), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-            F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
-        )
-    )
+
 
 def dedup_lines(
     docs: DataFrame,
@@ -844,66 +854,39 @@ def dedup_lines(
     Returns (doc_id, clean_text, n_lines, n_kept) — every input doc keeps
     a row; a fully-boilerplate doc comes back with ``clean_text = ''``
     so the caller decides whether to drop it (C4 drops; we don't decide
-    here because the row also carries the evidence).
+    here because the row also carries the evidence). NULL text is a doc
+    with no lines: ``n_lines`` 0, ``clean_text`` ``''``.
 
     100 TB shape: strictly linear, no pairwise term. (1) split + posexplode
     to (doc, pos, line); blank lines are kept in the doc but never counted
-    or removed. (2) distinct(doc, line) → groupBy(line) document frequency
-    — ONE shuffle keyed by line, partial agg collapses within-doc repeats
-    map-side. (3) left join positions against the ≥min_docs line set (same
-    line-keyed shuffle), (4) groupBy(doc) ordered reassembly (id-keyed).
-    Steps 2-3 key by the raw trimmed line, so the DuckDB oracle is
-    byte-identical with no collision caveat. Skew note: a universal
-    boilerplate line ("END" in a billion docs) is a maximally hot key in
-    step 3's join — broadcast the dup set when it fits (it usually does:
-    duplicated lines ≪ all lines), else AQE skew-join splits the probe
-    side (on by default in this session, engagement tested in
+    or removed. (2) ``_frequent`` line set — ONE shuffle keyed by the raw
+    trimmed line. (3) left join positions against it (same line-keyed
+    shuffle), (4) ``_rejoin`` ordered reassembly (id-keyed). Skew note: a
+    universal boilerplate line ("END" in a billion docs) is a maximally
+    hot key in step 3's join — broadcast the dup set when it fits (it
+    usually does: duplicated lines ≪ all lines), else AQE skew-join splits
+    the probe side (on by default in this session, engagement tested in
     test_plan_quality)."""
+    text = F.col(text_col)
     lines = docs.select(
         F.col(key_col).alias("doc"),
-        F.posexplode(F.split(F.col(text_col), delim)).alias("pos0", "raw"),
+        F.posexplode(F.split(text, delim)).alias("pos0", "raw"),
     ).select(
         "doc",
         (F.col("pos0") + 1).alias("pos"),
         "raw",
         F.trim(F.col("raw")).alias("line"),
     )
-    dup = (
-        lines.filter(F.col("line") != F.lit(""))
-        .select("doc", "line")
-        .distinct()
-        .groupBy("line")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") >= min_docs)
-        .select("line", F.lit(1).alias("_dup"))
-    )
-    rebuilt = (
-        lines.join(dup, "line", "left")
-        .filter(F.col("_dup").isNull())
-        .groupBy("doc")
-        .agg(
-            F.concat_ws(
-                delim,
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "raw"))),
-                    lambda s: s["raw"],
-                ),
-            ).alias("clean_text"),
-            F.count(F.lit(1)).alias("n_kept"),
-        )
-    )
-    n_lines = docs.select(
-        F.col(key_col).alias("doc"),
-        F.size(F.split(F.col(text_col), delim)).alias("n_lines"),
-    )
-    return (
-        n_lines.join(rebuilt, "doc", "left")
-        .select(
-            F.col("doc").alias("doc_id"),
-            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-            F.col("n_lines").cast("long").alias("n_lines"),
-            F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
-        )
+    dup = _frequent(
+        lines.filter(F.col("line") != F.lit("")), "line", min_docs
+    ).withColumn("_dup", F.lit(1))
+    # size(NULL) is NULL under ANSI and -1 without it; NULL text has no lines
+    n_lines = F.when(text.isNull(), F.lit(0)).otherwise(F.size(F.split(text, delim)))
+    return _rejoin(
+        docs.select(F.col(key_col).alias("doc_id"), n_lines.alias("n_lines")),
+        lines.join(dup, "line", "left").filter(F.col("_dup").isNull()),
+        "pos", "raw", delim,
+        F.col("n_lines").cast("long").alias("n_lines"),
     )
 
 
@@ -919,7 +902,8 @@ def neardup_keep_best(
     dedup recipe (Lee et al. "Deduplicating Training Data", FineWeb,
     Dolma) runs AFTER candidate pairs are found: cluster the pair graph
     with connected components, then keep exactly ONE document per
-    cluster — the best by ``(quality_col DESC, key_col ASC)`` — instead
+    cluster — the best by ``(quality_col DESC NULLS LAST, key_col ASC)``
+    — instead
     of ``dedup_keep_list``'s keep-lowest-id rule, which can throw away a
     long original in favor of a truncated copy.
 
@@ -960,8 +944,16 @@ def neardup_keep_best(
         base.join(comp, base["_id"] == comp["node"], "left")
         .select("_id", "_q", F.coalesce("component", "_id").alias("component"))
     )
+    # MIN over (quality is NULL, -quality, id): a NULL quality ranks after
+    # every non-NULL one, as ORDER BY q DESC puts NULLs last
     winners = labeled.groupBy("component").agg(
-        F.min(F.struct((-F.col("_q")).alias("nq"), F.col("_id").alias("k"))).alias("w")
+        F.min(
+            F.struct(
+                F.col("_q").isNull().alias("nul"),
+                (-F.col("_q")).alias("nq"),
+                F.col("_id").alias("k"),
+            )
+        ).alias("w")
     ).select("component", F.col("w.k").alias("_keep_id"))
     return (
         labeled.join(winners, "component")

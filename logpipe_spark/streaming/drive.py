@@ -73,13 +73,11 @@ def stage_stream_source(
 def run_available_now(
     result_stream: DataFrame,
     output_mode: str = "append",
-    max_files_per_trigger: "int | None" = None,
     timeout_s: int = 600,
 ) -> str:
     """Run ``result_stream`` to a parquet sink with AvailableNow and
-    return the sink path. ``max_files_per_trigger`` must be threaded at
-    READ time (it is a source option) — this parameter only documents
-    the expectation; see :func:`read_stream_table`."""
+    return the sink path. A files-per-trigger cadence is a source option,
+    set at read time (:func:`read_stream_table`)."""
     out = tempfile.mkdtemp(prefix="lps_stream_out_") + "/sink"
     ckpt = tempfile.mkdtemp(prefix="lps_stream_ckpt_") + "/" + uuid.uuid4().hex
     q = (

@@ -608,3 +608,68 @@ def test_ngram_expression_splits_each_document_once():
 
     for build in (_pos_spans, _shingles):
         assert str(build(F.col("text"), 3)).count("split(") == 1
+
+
+@pytest.fixture(params=["true", "false"], ids=["ansi_on", "ansi_off"])
+def ansi(spark, request):
+    """Run the test under both ``spark.sql.ansi.enabled`` values and put
+    the session's own value back afterwards."""
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", request.param)
+    yield request.param
+    spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def test_neardup_keep_best_null_quality_ranks_last(spark, ansi):
+    """The winner is (quality DESC, id ASC) with NULL quality last, as the
+    oracle's ORDER BY q DESC: doc 2 (NULL) must lose to doc 1 (100) even
+    though it links the cluster {1, 2, 3}."""
+    from logpipe_spark.operators.dedup import neardup_keep_best
+
+    docs = spark.createDataFrame(
+        [(1, 100), (2, None), (3, 50)], "doc_id long, n_chars long"
+    )
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], ["doc_a", "doc_b"])
+    got = {r["doc_id"]: r for r in neardup_keep_best(docs, pairs).collect()}
+    assert {d for d, r in got.items() if r["keep"]} == {1}
+    assert {r["component"] for r in got.values()} == {1}
+
+    # an all-NULL cluster still keeps exactly one doc: the lowest id
+    nulls = spark.createDataFrame(
+        [(4, None), (5, None)], "doc_id long, n_chars long"
+    )
+    edge = spark.createDataFrame([(5, 4)], ["doc_a", "doc_b"])
+    kept = [r["doc_id"] for r in neardup_keep_best(nulls, edge).collect() if r["keep"]]
+    assert kept == [4]
+
+
+def test_dedup_lines_null_text_has_zero_lines(spark, ansi):
+    """NULL text is a doc with no lines in both ANSI modes (size(NULL) is
+    NULL with ANSI on and -1 with it off)."""
+    from logpipe_spark.operators.dedup import dedup_lines
+
+    docs = spark.createDataFrame(
+        [(0, "END\nbody zero"), (1, "END\nbody one"), (2, None)],
+        "doc_id long, text string",
+    )
+    got = {r["doc_id"]: r for r in dedup_lines(docs, min_docs=2).collect()}
+    assert (got[2]["clean_text"], got[2]["n_lines"], got[2]["n_kept"]) == ("", 0, 0)
+    assert (got[0]["clean_text"], got[0]["n_lines"], got[0]["n_kept"]) == (
+        "body zero", 2, 1,
+    )
+
+
+def test_jaccard_and_containment_score_the_same_overlaps(docs):
+    """Both pair operators score one shingle index: at threshold 0 they
+    return the same unordered pairs with the same intersection sizes."""
+    from logpipe_spark.operators.dedup import containment_pairs
+
+    jac = {
+        (r["doc_a"], r["doc_b"]): r["n_common"]
+        for r in ngram_jaccard_pairs(docs, n=3, threshold=0.0).collect()
+    }
+    con = {
+        tuple(sorted((r["doc_a"], r["doc_b"]))): r["n_common"]
+        for r in containment_pairs(docs, n=3, threshold=0.0).collect()
+    }
+    assert jac and jac == con

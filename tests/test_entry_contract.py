@@ -105,3 +105,24 @@ def test_every_query_has_oracle_or_documented_gap():
     assert qs - oracles == set(), (
         f"queries without a DuckDB oracle: {sorted(qs - oracles)}"
     )
+
+
+#: The dedup family's contract queries; they share one private core in
+#: operators/dedup.py, whose expressions must also hold with ANSI off.
+ANSI_OFF_QUERIES = [
+    "dedup_ngram_jaccard", "dedup_keep_list", "containment_dedup",
+    "dup_spans", "remove_dup_spans", "remove_eval_spans", "decontaminate",
+    "dedup_lines", "neardup_keep_best",
+]
+
+
+@pytest.mark.parametrize("name", ANSI_OFF_QUERIES)
+def test_dedup_family_vs_oracle_ansi_off(spark, duck, name):
+    """The same oracle comparison as ``test_query_vs_oracle``, run with
+    ``spark.sql.ansi.enabled=false``; the session's value is restored."""
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        test_query_vs_oracle(spark, duck, name)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
