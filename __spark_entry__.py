@@ -604,10 +604,13 @@ def q_dedup_components(spark, sf_dir):
     (doc_id ↔ doc_id+1 when doc_id % 10 < 3, PLUS a single deep chain over
     doc_id < 120 whose diameter 119 would cost min-label propagation 119
     rounds — so this row exercises the deep-graph case). Spark side:
-    large-star/small-star alternation (Kiveris et al., SoCC'14;
-    operators/dedup.py:connected_components_star) — O(log^2 n)
-    alternations, id-only shuffles; oracle: recursive-CTE reachability
-    computing the same min-reachable-id."""
+    operators/dedup.py:connected_components_star. Every sf fixture's
+    graph is under its driver threshold, so a driver union-find labels
+    it; larger graphs take the large-star/small-star alternation
+    (Kiveris et al., SoCC'14; O(log^2 n) alternations, id-only
+    shuffles), which tests/test_corpus.py runs by setting the threshold
+    to 0. Oracle: recursive-CTE reachability computing the same
+    min-reachable-id."""
     from logpipe_spark.operators.dedup import connected_components_star
 
     docs = _t(spark, sf_dir, "documents")
@@ -961,10 +964,11 @@ def q_seq_ngrams(spark, sf_dir):
 
 def q_cluster_split(spark, sf_dir):
     """Leakage-safe corpus split (operators/corpus.py:cluster_split):
-    near-dup components (star CC over Jaccard-0.8 pairs — same pair rule
-    as neardup_keep_best) become the split unit, so near-duplicate
-    content can never straddle train/val/test; singletons hash on their
-    own id. Oracle: recursive-CTE components + the md5 bucket CASE."""
+    near-dup components (connected_components_star over Jaccard-0.8
+    pairs — same pair rule as neardup_keep_best) become the split unit,
+    so near-duplicate content can never straddle train/val/test;
+    singletons hash on their own id. Oracle: recursive-CTE components +
+    the md5 bucket CASE."""
     from logpipe_spark.operators.corpus import cluster_split
 
     docs = _t(spark, sf_dir, "documents")
@@ -2449,12 +2453,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
       template_project, template_missing_fields, orderby_limit, key_cut,
       translate_charset).
     - positions 23-27: the five r5-green queries whose IMPLEMENTATION
-      changed this round and therefore must re-verify: fuzzy_join
-      (best_match tiebreak rewritten negation-free), cluster_split
-      (string split_group + type-preserving components), bloom_semi_join
-      (large-filter broadcast-bitarray fallback), dedup_components
-      (connected_components_star now type-preserving),
-      neardup_keep_best (edges cast at the call site).
+      changed and therefore must re-verify: fuzzy_join (best_match
+      tiebreak rewritten negation-free), bloom_semi_join (large-filter
+      broadcast-bitarray fallback), and the three callers of
+      connected_components_star — cluster_split, dedup_components and
+      neardup_keep_best — whose plans changed again: a pair graph of at
+      most dedup._DRIVER_CC_EDGES edges (every sf fixture's) is now
+      labeled by a driver union-find and returned as an Arrow-built local
+      relation instead of running the star rounds.
     - positions 28-30: the three NEW streaming-mode queries the r5
       verdict asked for (streaming_assemble, streaming_dedup,
       streaming_interval_join) — each drives the real Structured

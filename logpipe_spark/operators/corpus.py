@@ -930,8 +930,10 @@ def cluster_split(
 
     Returns docs + (split_group, split). 100 TB shape: the component
     labels come from the large-star/small-star alternation (id-only
-    shuffles, O(log^2 n) rounds), the docs⋈labels join is keyed on the
-    doc id, and the split itself is a map-side md5 expression — no new
+    shuffles, O(log^2 n) rounds), or from the driver's union-find when
+    the pair graph has at most ``dedup._DRIVER_CC_EDGES`` edges (a local
+    relation, broadcast into the join); the docs⋈labels join is keyed on
+    the doc id, and the split itself is a map-side md5 expression — no new
     shuffle class beyond what dedup already pays."""
     from logpipe_spark.operators.dedup import connected_components_star
 

@@ -542,6 +542,41 @@ def simhash_neardup_pairs(
 # connected components (iterative) — dedup cluster closure
 # ---------------------------------------------------------------------------
 
+# Edge lists up to this size are labeled on the driver. 10^5 collected
+# edges are 10^5 Python Rows plus a union-find dict of at most 2·10^5
+# ids: about 40 MB of Python heap for long ids, and a few MB of
+# result rows on the JVM side of the collect. The label frame's Arrow
+# batches stay far under Spark's 48 MB local-relation threshold
+# (spark.sql.execution.arrow.localRelationThreshold), so it stays a local
+# relation. Above it the star rounds keep the work on the executors,
+# where memory scales with the cluster.
+_DRIVER_CC_EDGES = 100_000
+
+
+def _min_labels(pairs) -> tuple[list, list]:
+    """Union-find over ``(u, v)`` pairs, each root kept at its set's
+    minimum (the larger root is linked under the smaller). Returns
+    ``(nodes, components)`` as two parallel lists."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in pairs:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    nodes = list(parent)
+    return nodes, [find(x) for x in nodes]
+
+
 def _large_star(e: DataFrame) -> DataFrame:
     """One large-star round (Kiveris et al., "Connected Components in
     MapReduce and Beyond", SoCC'14, Alg. 1): every node connects its
@@ -598,9 +633,23 @@ def connected_components_star(
 ):
     """Connected components over an undirected near-dup edge list — the
     transitive closure the keep-first star rule (``dedup_keep_list``)
-    deliberately skips — by large-star/small-star alternation (Kiveris
-    et al., SoCC'14). Returns (node, component) with component = the
+    deliberately skips. Returns (node, component) with component = the
     minimum id in the node's component.
+
+    Two paths, chosen from the size of the canonical (deduplicated,
+    self-loop-free) edge list, which one ``limit(T + 1).collect()`` both
+    measures and fetches (T = ``_DRIVER_CC_EDGES``):
+
+    - At most T edges: a union-find on the driver labels them (0 rounds).
+      The labels go back into the JVM as a pandas frame, so Arrow
+      carries them (``spark.sql.execution.arrow.pyspark.enabled``, which
+      ``get_spark`` sets) and the result is a local relation: no Python
+      worker runs when it is scanned, however often a caller joins it.
+      A frame built from a Python list would scan through a
+      ``PythonRDD`` instead, and every scan would start Python-worker
+      tasks.
+    - More than T edges: large-star/small-star alternation (Kiveris
+      et al., SoCC'14) on the executors, below.
 
     Why star contraction and not min-label propagation: propagation needs
     diameter rounds (an adversarial 10^6-link near-dup chain = 10^6
@@ -627,7 +676,10 @@ def connected_components_star(
     min, >, grouping by id) only needs an orderable type, so string doc ids
     work directly — component = lexicographic minimum for strings, numeric
     minimum for numbers. (Previously cast to long, which threw under ANSI
-    for non-numeric ids — ADVICE r5.)"""
+    for non-numeric ids — ADVICE r5.) The driver path keeps the same rule:
+    the label frame's schema is the input id type, and Python's ``<`` on
+    the collected ids orders integers, decimals, dates and strings as
+    Spark does (UTF-8 byte order is code-point order)."""
     e = (
         edges.select(
             F.col(a_col).alias("u"),
@@ -640,6 +692,17 @@ def connected_components_star(
         .distinct()
         .localCheckpoint()
     )
+    small = e.limit(_DRIVER_CC_EDGES + 1).collect()
+    if len(small) <= _DRIVER_CC_EDGES:
+        nodes, comps = _min_labels(small)
+        dt = e.schema["u"].dataType
+        out = edges.sparkSession.createDataFrame(
+            pd.DataFrame({"node": nodes, "component": comps}),
+            T.StructType(
+                [T.StructField("node", dt), T.StructField("component", dt)]
+            ),
+        )
+        return (out, 0) if return_rounds else out
     for rounds in range(1, max_iter + 1):
         e = _small_star(_large_star(e)).localCheckpoint()
         if _is_star_forest(e):
@@ -919,7 +982,10 @@ def neardup_keep_best(
 
     100 TB shape: components via large-star/small-star (id-only
     shuffles, O(log^2 n) alternations — ``connected_components_star``);
-    the winner election is ONE map-combinable groupBy(component) of
+    a pair graph of at most ``_DRIVER_CC_EDGES`` edges is instead labeled
+    on the driver and comes back as an Arrow-built local relation, so the
+    two joins below scan it without a job or a Python worker; the winner
+    election is ONE map-combinable groupBy(component) of
     (component, quality, id) triples — no window, no per-cluster task
     skew (the agg is a MIN, partial-aggregated map-side even if one
     cluster holds millions of docs); final annotate is a component-keyed

@@ -7,7 +7,10 @@ times it as one block (the composition is what a user actually runs —
 stage costs hide fusion wins and barrier losses that per-operator
 numbers can't show). Every stage keeps the scale posture documented on
 its operator: hash groupBys, broadcast eval sets, id-only candidate
-shuffles; nothing collects a corpus-sized result to the driver.
+shuffles; nothing collects a corpus-sized result to the driver. The one
+collect is the near-dup stage's pair graph, and only up to
+``dedup._DRIVER_CC_EDGES`` edges: a graph that small is labeled there
+(``connected_components_star``), a larger one by the star rounds.
 
 Stage boundaries are ``localCheckpoint``-materialized: the funnel
 forces a count per stage, and without materialization stage k would

@@ -4,7 +4,9 @@ sequence packing, connected components."""
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from logpipe_spark.operators import dedup
 from logpipe_spark.operators.corpus import corpus_filter, hash_split, sequence_pack
 from logpipe_spark.operators.dedup import connected_components_star
 
@@ -117,51 +119,84 @@ def _union_find_min_labels(pairs):
     return {x: find(x) for x in parent}
 
 
-def test_connected_components_star_matches_min_label(spark):
-    """large-star/small-star (Kiveris et al., SoCC'14) must produce the
-    exact min-label labeling a union-find computes on a hand graph."""
-    pdf = pd.DataFrame({
-        # chain 1-2-3-4, triangle 10-11-12, pair 20-21, bridge 4-10
-        "doc_a": [1, 2, 3, 10, 11, 10, 20, 4],
-        "doc_b": [2, 3, 4, 11, 12, 12, 21, 10],
-    })
+_DEFAULT_DRIVER_CC_EDGES = dedup._DRIVER_CC_EDGES
+
+
+def _on_each_cc_path(monkeypatch):
+    """Run the loop body once per connected-components path: ``star``
+    sets the driver threshold to 0, so every non-empty edge list goes
+    through the star rounds; ``driver`` keeps the default, under which
+    every graph in these tests is labeled by the driver's union-find."""
+    for path, limit in (("star", 0), ("driver", _DEFAULT_DRIVER_CC_EDGES)):
+        monkeypatch.setattr(dedup, "_DRIVER_CC_EDGES", limit)
+        yield path
+
+
+_HAND_GRAPH = pd.DataFrame({
+    # chain 1-2-3-4, triangle 10-11-12, pair 20-21, bridge 4-10
+    "doc_a": [1, 2, 3, 10, 11, 10, 20, 4],
+    "doc_b": [2, 3, 4, 11, 12, 12, 21, 10],
+})
+
+
+def test_connected_components_star_matches_min_label(spark, monkeypatch):
+    """Both paths — large-star/small-star (Kiveris et al., SoCC'14) and
+    the driver's union-find — must produce the exact min-label labeling
+    the reference union-find computes on a hand graph."""
+    pdf = _HAND_GRAPH
     edges = spark.createDataFrame(pdf)
     want = _union_find_min_labels(zip(pdf["doc_a"].tolist(), pdf["doc_b"].tolist()))
-    got = {r["node"]: r["component"]
-           for r in connected_components_star(edges).collect()}
-    assert got == want == {
-        1: 1, 2: 1, 3: 1, 4: 1, 10: 1, 11: 1, 12: 1, 20: 20, 21: 20}
+    for path in _on_each_cc_path(monkeypatch):
+        out, rounds = connected_components_star(edges, return_rounds=True)
+        got = {r["node"]: r["component"] for r in out.collect()}
+        assert got == want == {
+            1: 1, 2: 1, 3: 1, 4: 1, 10: 1, 11: 1, 12: 1, 20: 20, 21: 20}, path
+        assert (rounds == 0) == (path == "driver"), (path, rounds)
 
 
-def test_connected_components_star_deep_chain_bounded_rounds(spark):
+def test_connected_components_star_deep_chain_bounded_rounds(spark, monkeypatch):
     """The deep-graph contract: a 2000-link chain (diameter 1999) is far
     beyond any sane min-label budget, yet star contraction must finish in
     O(log^2 n) alternations — assert a hard bound of 12 (log2(2000)≈11),
     and that labels are exact. This is the scale argument: rounds (and so
-    shuffles) grow with log(diameter), not diameter."""
+    shuffles) grow with log(diameter), not diameter. The driver path
+    labels the same chain with no rounds at all."""
     n = 2000
     edges = spark.createDataFrame(
         pd.DataFrame({"doc_a": range(n - 1), "doc_b": range(1, n)})
     )
-    out, rounds = connected_components_star(edges, return_rounds=True)
-    got = {r["node"]: r["component"] for r in out.collect()}
-    assert rounds <= 12, f"star contraction took {rounds} alternations"
-    assert len(got) == n and set(got.values()) == {0}
+    for path in _on_each_cc_path(monkeypatch):
+        out, rounds = connected_components_star(edges, return_rounds=True)
+        got = {r["node"]: r["component"] for r in out.collect()}
+        if path == "star":
+            assert 1 <= rounds <= 12, f"star contraction took {rounds} alternations"
+        else:
+            assert rounds == 0
+        assert len(got) == n and set(got.values()) == {0}, path
 
 
-def test_connected_components_star_raises_when_budget_too_small(spark):
+def test_connected_components_star_raises_when_budget_too_small(spark, monkeypatch):
     """Truncated labels are wrong labels: a 2000-link chain cannot become
-    a star forest in one alternation, so max_iter=1 must raise, never
-    return an unconverged labeling (ADVICE r3)."""
+    a star forest in one alternation, so on the star path max_iter=1 must
+    raise, never return an unconverged labeling (ADVICE r3). The driver
+    path runs no alternations, so the budget does not bind there."""
     n = 2000
     edges = spark.createDataFrame(
         pd.DataFrame({"doc_a": range(n - 1), "doc_b": range(1, n)})
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components_star(edges, max_iter=1)
+    for path in _on_each_cc_path(monkeypatch):
+        if path == "star":
+            with pytest.raises(RuntimeError, match="did not converge"):
+                connected_components_star(edges, max_iter=1)
+        else:
+            out = connected_components_star(edges, max_iter=1)
+            assert {r["component"] for r in out.collect()} == {0}
+            assert out.count() == n
 
 
-def test_connected_components_star_non_contiguous_ids_and_isolated_pairs(spark):
+def test_connected_components_star_non_contiguous_ids_and_isolated_pairs(
+    spark, monkeypatch
+):
     """Component minima are ids, not ranks: sparse 64-bit-ish ids and many
     small components must label correctly in few rounds."""
     # 50 disjoint pairs with scattered ids, plus one 5-cycle
@@ -172,15 +207,18 @@ def test_connected_components_star_non_contiguous_ids_and_isolated_pairs(spark):
     edges = spark.createDataFrame(
         pd.DataFrame({"doc_a": a + cyc_a, "doc_b": b + cyc_b})
     )
-    out, rounds = connected_components_star(edges, return_rounds=True)
-    got = {r["node"]: r["component"] for r in out.collect()}
-    assert rounds <= 6
-    for x, y in zip(a, b):
-        assert got[x] == got[y] == x
-    assert {got[v] for v in cyc_a} == {900}
+    for path in _on_each_cc_path(monkeypatch):
+        out, rounds = connected_components_star(edges, return_rounds=True)
+        got = {r["node"]: r["component"] for r in out.collect()}
+        assert rounds <= 6 if path == "star" else rounds == 0
+        for x, y in zip(a, b):
+            assert got[x] == got[y] == x, path
+        assert {got[v] for v in cyc_a} == {900}, path
 
 
-def test_connected_components_star_stars_and_triangles_one_round(spark):
+def test_connected_components_star_stars_and_triangles_one_round(
+    spark, monkeypatch
+):
     """Disjoint one-hop stars (centred on the minimum or not) and triangles
     are a star forest after a single alternation; the star-forest test
     stops there without a confirming round."""
@@ -191,19 +229,86 @@ def test_connected_components_star_stars_and_triangles_one_round(spark):
             "doc_b": [2, 3, 4, 11, 12, 13, 31, 32, 30],
         })
     )
-    out, rounds = connected_components_star(edges, return_rounds=True)
-    got = {r["node"]: r["component"] for r in out.collect()}
-    assert rounds == 1
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 11: 11, 12: 11, 13: 11, 15: 11,
-                   30: 30, 31: 30, 32: 30}
-    assert out.count() == len(got)
+    for path in _on_each_cc_path(monkeypatch):
+        out, rounds = connected_components_star(edges, return_rounds=True)
+        got = {r["node"]: r["component"] for r in out.collect()}
+        assert rounds == (1 if path == "star" else 0)
+        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 11: 11, 12: 11, 13: 11, 15: 11,
+                       30: 30, 31: 30, 32: 30}, path
+        assert out.count() == len(got), path
 
 
-def test_connected_components_star_empty_edges(spark):
+def test_connected_components_star_empty_edges(spark, monkeypatch):
+    """No edges, no labels, same two columns. (An empty list is within
+    every threshold, so both settings label it on the driver.)"""
     edges = spark.createDataFrame([], "doc_a long, doc_b long")
-    out = connected_components_star(edges)
-    assert out.columns == ["node", "component"]
-    assert out.collect() == []
+    for path in _on_each_cc_path(monkeypatch):
+        out = connected_components_star(edges)
+        assert out.columns == ["node", "component"], path
+        assert out.collect() == [], path
+
+
+def test_connected_components_string_ids_on_both_paths(spark, monkeypatch):
+    """String ids keep their type on both paths and component = the
+    lexicographic minimum (by code point, which is UTF-8 byte order)."""
+    pairs = [("b", "c"), ("c", "a"), ("é", "Z"), ("z", "é"), ("m", "m"),
+             ("q", "p"), ("p", "q")]
+    edges = spark.createDataFrame(pairs, "doc_a string, doc_b string")
+    want = _union_find_min_labels(
+        (a, b) for a, b in pairs if a != b
+    )
+    assert want["z"] == "Z" and want["b"] == "a"
+    for path in _on_each_cc_path(monkeypatch):
+        out = connected_components_star(edges)
+        assert out.schema["node"].dataType == T.StringType(), path
+        assert out.schema["component"].dataType == T.StringType(), path
+        got = {r["node"]: r["component"] for r in out.collect()}
+        assert got == want, path
+
+
+def test_connected_components_driver_threshold_boundary(spark, monkeypatch):
+    """The threshold counts canonical edges (self-loops dropped, each
+    undirected edge once): exactly ``_DRIVER_CC_EDGES`` of them are
+    labeled on the driver in 0 rounds, one more goes to the star rounds."""
+    monkeypatch.setattr(dedup, "_DRIVER_CC_EDGES", 4)
+    # chain 1-2-3-4-5 is 4 canonical edges; the reversed copy and the
+    # self-loop add none
+    at = spark.createDataFrame(
+        pd.DataFrame({"doc_a": [1, 2, 3, 4, 2, 5], "doc_b": [2, 3, 4, 5, 1, 5]})
+    )
+    over = spark.createDataFrame(
+        pd.DataFrame({"doc_a": [1, 2, 3, 4, 5], "doc_b": [2, 3, 4, 5, 6]})
+    )
+    out, rounds = connected_components_star(at, return_rounds=True)
+    assert rounds == 0
+    assert {r["node"]: r["component"] for r in out.collect()} == {
+        v: 1 for v in range(1, 6)}
+    out, rounds = connected_components_star(over, return_rounds=True)
+    assert rounds >= 1
+    assert {r["node"]: r["component"] for r in out.collect()} == {
+        v: 1 for v in range(1, 7)}
+
+
+def test_connected_components_driver_labels_skip_python_workers(spark):
+    """The driver path hands its labels to the JVM through Arrow, so the
+    label frame is a local relation: scanning it runs no Python worker
+    (no ``PythonRDD`` in its RDD lineage, as a frame built from a Python
+    list would have) and launches no job. The whole labeling of the hand
+    graph takes a few jobs; the star rounds take dozens."""
+    edges = spark.createDataFrame(_HAND_GRAPH)
+    sc = spark.sparkContext
+    group = "cc_driver_path_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        out = connected_components_star(edges)
+        got = {r["node"]: r["component"] for r in out.collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert got == _union_find_min_labels(
+        zip(_HAND_GRAPH["doc_a"].tolist(), _HAND_GRAPH["doc_b"].tolist()))
+    assert "PythonRDD" not in out._jdf.queryExecution().toRdd().toDebugString()
+    assert n_jobs <= 3, n_jobs
 
 
 def test_quota_sample_deterministic_and_both_branches(spark, docs):

@@ -109,10 +109,12 @@ def test_every_query_has_oracle_or_documented_gap():
 
 #: The dedup family's contract queries; they share one private core in
 #: operators/dedup.py, whose expressions must also hold with ANSI off.
+#: dedup_components and cluster_split are the other two callers of
+#: connected_components_star, whose small graphs are labeled on the driver.
 ANSI_OFF_QUERIES = [
     "dedup_ngram_jaccard", "dedup_keep_list", "containment_dedup",
     "dup_spans", "remove_dup_spans", "remove_eval_spans", "decontaminate",
-    "dedup_lines", "neardup_keep_best",
+    "dedup_lines", "neardup_keep_best", "dedup_components", "cluster_split",
 ]
 
 
