@@ -796,9 +796,8 @@ def q_hll_distinct(spark, sf_dir):
     or one division — value-hash-identical to the DuckDB mirror.
     All three sketches come from ONE corpus pass (hll_distinct_multi:
     per-row explode to (col, register, rank) — at 100 TB that is one
-    scan, not one per profiled column); register derivation is
-    expression-identical to the single-column operator, bit-equal by
-    test."""
+    scan, not one per profiled column); a column's registers do not
+    depend on which other columns share the scan (test-asserted)."""
     from logpipe_spark.operators.sketch import hll_distinct_multi
 
     # single-file sf input → spread before the per-row md5 register
@@ -2104,7 +2103,9 @@ def q_windowed_agg(spark, sf_dir):
 
 
 def q_ann_cosine_topk(spark, sf_dir):
-    return cosine_topk(_t(spark, sf_dir, "embeddings"), query_vec_id=0, k=10)
+    return cosine_topk(
+        _t(spark, sf_dir, "embeddings"), query_vec_id=0, k=10
+    ).select("vec_id")
 
 
 def q_ann_lsh_topk(spark, sf_dir):

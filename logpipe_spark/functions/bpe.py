@@ -129,27 +129,6 @@ def bpe_token_count(text: Column, merges: list[tuple[str, str]]) -> Column:
     return (F.length(enc) - F.length(F.replace(enc, F.lit(SYM)))).cast("long")
 
 
-def encode_bpe_py(text: str, merges: list[tuple[str, str]]) -> list[str]:
-    """Reference greedy BPE encoder (plain Python, left-to-right per merge
-    in rank order) — the independent implementation the replace-chain is
-    tested against; also usable for tiny driver-side needs."""
-    out_tokens: list[str] = []
-    for w in text.split():
-        syms = list(w)
-        for x, y in merges:
-            merged, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == x and syms[i + 1] == y:
-                    merged.append(x + y)
-                    i += 2
-                else:
-                    merged.append(syms[i])
-                    i += 1
-            syms = merged
-        out_tokens.extend(syms)
-    return out_tokens
-
-
 def _sql_quote(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
 

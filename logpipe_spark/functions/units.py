@@ -67,6 +67,3 @@ def parse_duration_us(value) -> int:
     """``"100ms"`` → 100000; bare numbers are µs (util.c:548-568)."""
     return _parse(value, _DURATION_FACTORS_US, "duration")
 
-
-def parse_duration_ms(value) -> int:
-    return parse_duration_us(value) // 1_000

@@ -32,20 +32,27 @@ from pyspark.sql import functions as F
 MAX_BLOOM_BITS = 1 << 29
 
 
-def _positions(col: Column, m_bits: int, k: int) -> list[Column]:
-    """Kirsch–Mitzenmacher double hashing: ONE md5 yields two independent
-    60-bit halves (hex chars 1-15 and 16-30), and position i is
-    (h1 + i·h2') mod m with h2' = (2·h2 + 1) mod m — the odd stride keeps
-    the probe sequence non-degenerate on power-of-two m. Same FP behavior
-    as k independent hashes (Kirsch & Mitzenmacher, ESA'06) at 1/k the
-    hash cost; overflow-safe because both operands are reduced mod
-    m ≤ 2^29 before the multiply. Engine-portable: any SQL engine
-    reproduces it from md5/substr/CAST."""
+def _base_hashes(col: Column, m_bits: int) -> tuple[Column, Column]:
+    """(h1, h2') of a key: ONE md5 under salt ``bf:`` yields two
+    independent 60-bit halves (hex chars 1-15 and 16-30); h1 is the first
+    mod m and h2' = (2·h2 + 1) mod m — the odd stride keeps the probe
+    sequence non-degenerate on power-of-two m."""
     hx = F.md5(F.concat(F.lit("bf:"), col.cast("string")))
     h1 = F.conv(F.substring(hx, 1, 15), 16, 10).cast("long") % m_bits
     h2 = (
         F.conv(F.substring(hx, 16, 15), 16, 10).cast("long") * 2 + 1
     ) % m_bits
+    return h1, h2
+
+
+def _positions(col: Column, m_bits: int, k: int) -> list[Column]:
+    """Kirsch–Mitzenmacher double hashing: position i is
+    (h1 + i·h2') mod m over :func:`_base_hashes`. Same FP behavior as k
+    independent hashes (Kirsch & Mitzenmacher, ESA'06) at 1/k the hash
+    cost; overflow-safe because both operands are reduced mod m ≤ 2^29
+    before the multiply. Engine-portable: any SQL engine reproduces it
+    from md5/substr/CAST."""
+    h1, h2 = _base_hashes(col, m_bits)
     return [(h1 + i * h2) % m_bits for i in range(k)]
 
 
@@ -78,6 +85,16 @@ def build_bloom(
 MAX_BYTEMAP_BITS = 1 << 23
 
 
+def _set_bits(bloom: DataFrame):
+    """Every set bit position of a (word, bits) filter, from one collect."""
+    for row in bloom.collect():
+        base, bits = row["word"] * 32, row["bits"]
+        while bits:
+            b = bits & -bits
+            yield base + b.bit_length() - 1
+            bits ^= b
+
+
 def bloom_bytemap(bloom: DataFrame, m_bits: int) -> bytes:
     """Densify a (word, bits) filter into a PROBE BLOB: one byte per
     BIT (0x00 / 0x01, m_bits bytes). The storage/merge format stays the
@@ -103,12 +120,8 @@ def bloom_bytemap(bloom: DataFrame, m_bits: int) -> bytes:
             f"got {m_bits} — join against the (word, bits) table instead"
         )
     blob = bytearray(m_bits)
-    for row in bloom.collect():
-        base, bits = row["word"] * 32, row["bits"]
-        while bits:
-            b = bits & -bits
-            blob[base + b.bit_length() - 1] = 1
-            bits ^= b
+    for p in _set_bits(bloom):
+        blob[p] = 1
     return bytes(blob)
 
 
@@ -145,13 +158,8 @@ def bloom_bitpack(bloom: DataFrame, m_bits: int):
     if m_bits % 32 != 0 or not 32 <= m_bits <= MAX_BLOOM_BITS:
         raise ValueError(f"m_bits must be a multiple of 32 in [32, 2^29]: {m_bits}")
     packed = np.zeros(m_bits // 8, dtype=np.uint8)
-    for row in bloom.collect():
-        base, bits = row["word"] * 32, row["bits"]
-        while bits:
-            b = bits & -bits
-            p = base + b.bit_length() - 1
-            packed[p >> 3] |= 1 << (p & 7)
-            bits ^= b
+    for p in _set_bits(bloom):
+        packed[p >> 3] |= 1 << (p & 7)
     return packed
 
 
@@ -228,17 +236,11 @@ def bloom_semi_join(
     bloom = build_bloom(small, small_key, m_bits, k)
     if m_bits <= MAX_BYTEMAP_BITS:
         blob = bloom_bytemap(bloom, m_bits)
-        hx = F.md5(F.concat(F.lit("bf:"), F.col(big_key).cast("string")))
+        h1, h2 = _base_hashes(F.col(big_key), m_bits)
         h1c, h2c = "_bf_h1", "_bf_h2"
         pruned = (
-            big.withColumn(
-                h1c, F.conv(F.substring(hx, 1, 15), 16, 10).cast("long") % m_bits
-            )
-            .withColumn(
-                h2c,
-                (F.conv(F.substring(hx, 16, 15), 16, 10).cast("long") * 2 + 1)
-                % m_bits,
-            )
+            big.withColumn(h1c, h1)
+            .withColumn(h2c, h2)
             .where(
                 bloom_might_contain_bytes(
                     blob, F.col(h1c), F.col(h2c), m_bits, k

@@ -77,21 +77,6 @@ def pseudo_weight_expr(bucket: Column) -> Column:
     return ((h % _W_MOD) - F.lit(_W_HALF)).cast("double") / _W_HALF
 
 
-def pseudo_weights_array(buckets: int = DEFAULT_BUCKETS):
-    """numpy mirror of ``pseudo_weight_expr`` for every bucket — fill a
-    'trained' weight vector that makes the UDF path reproduce the JVM
-    path exactly."""
-    import hashlib
-
-    import numpy as np
-
-    w = np.empty(buckets, dtype=np.float64)
-    for b in range(buckets):
-        h = int(hashlib.md5(f"w:{b}".encode()).hexdigest()[:15], 16)
-        w[b] = float((h % _W_MOD) - _W_HALF) / _W_HALF
-    return w
-
-
 def classifier_score(
     df: DataFrame,
     weights=None,

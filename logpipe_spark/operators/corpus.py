@@ -229,7 +229,8 @@ HASH_SPACE = 1 << 60
 
 #: Groups at most this large skip the prefilter and go straight through the
 #: exact per-group window — the sort of a sub-64Ki group is cheap, and the
-#: extra filter would only add plan noise at fixture scale.
+#: extra filter would only add plan noise at fixture scale. The samplers
+#: read it (and ``_prefilter_margin``) at call time.
 DEFAULT_WINDOW_CAP = 1 << 16
 
 
@@ -308,7 +309,6 @@ def mix_sample(
     group_col: str = "source",
     key_col: str = "doc_id",
     salt: str = "mix",
-    window_cap: int = DEFAULT_WINDOW_CAP,
 ) -> DataFrame:
     """Mixture sampling: subsample the listed groups (domains / sources /
     languages) so their relative sizes match ``targets`` — the
@@ -331,9 +331,10 @@ def mix_sample(
 
     Plan: one tiny per-group count aggregate collected to the driver
     (domains are few — dozens, not millions), then a per-group
-    hash-threshold prefilter (groups larger than ``window_cap`` keep only
-    hashes below ~keep_g/n_g of the hash space — see ``_mix_core``)
-    feeding a hash-partitioned window rank against broadcast keep maps.
+    hash-threshold prefilter (groups larger than ``DEFAULT_WINDOW_CAP``
+    keep only hashes below ~keep_g/n_g of the hash space — see
+    ``_mix_core``) feeding a hash-partitioned window rank against
+    broadcast keep maps.
     Only the ~keep_g-row sliver of a dominant group is ever sorted; a lazy
     guard raises on the (cryptographically unlikely) prefilter shortfall
     instead of under-sampling."""
@@ -350,7 +351,7 @@ def mix_sample(
     parts = {g: int(fr * denom) for g, fr in fracs.items()}
     return _mix_core(
         docs, list(targets), lambda counts: parts, group_col, key_col,
-        salt, window_cap, "mix_sample",
+        salt, "mix_sample",
     )
 
 
@@ -361,7 +362,6 @@ def temperature_mix(
     group_col: str = "lang",
     key_col: str = "doc_id",
     salt: str = "tmix",
-    window_cap: int = DEFAULT_WINDOW_CAP,
 ) -> DataFrame:
     """Temperature (α) sampling: flatten a skewed group distribution so
     group g's share is ∝ n_g^α — the multilingual rebalancing rule from
@@ -391,8 +391,7 @@ def temperature_mix(
         return {g: max(1, floor(n**alpha * 1e6 + 0.5)) for g, n in counts.items()}
 
     return _mix_core(
-        docs, groups, parts_fn, group_col, key_col, salt, window_cap,
-        "temperature_mix",
+        docs, groups, parts_fn, group_col, key_col, salt, "temperature_mix"
     )
 
 
@@ -403,7 +402,6 @@ def _mix_core(
     group_col: str,
     key_col: str,
     salt: str,
-    window_cap: int,
     op_name: str,
 ) -> DataFrame:
     """Shared engine for mixture-shaping samplers (`mix_sample`,
@@ -445,7 +443,7 @@ def _mix_core(
     cutoff = {
         g: (
             HASH_SPACE
-            if counts[g] <= max(window_cap, keep[g])
+            if counts[g] <= max(DEFAULT_WINDOW_CAP, keep[g])
             else max(
                 min(
                     HASH_SPACE,
@@ -629,8 +627,6 @@ def _quota_prefiltered(
     quota: int,
     key_col: str,
     salt: str,
-    window_cap: int,
-    margin: float | None = None,
 ) -> tuple[DataFrame, Column]:
     """The pre-window half of ``quota_sample``, factored out so tests can
     measure the sliver directly. Returns (prefiltered df carrying
@@ -644,12 +640,12 @@ def _quota_prefiltered(
         .groupBy("_g")
         .agg(F.count(F.lit(1)).alias("_n_g"), F.min("_h").alias("_hmin"))
     )
-    m = _prefilter_margin(quota) if margin is None else margin
+    m = _prefilter_margin(quota)
     # floor the cutoff at the group's min hash: every group keeps >= 1 row,
     # so the shortfall guard downstream always has a row to evaluate on —
     # a fully starved group would otherwise vanish silently, guard unseen
     cutoff = F.when(
-        F.col("_n_g") <= F.greatest(F.lit(window_cap), F.lit(quota)),
+        F.col("_n_g") <= F.greatest(F.lit(DEFAULT_WINDOW_CAP), F.lit(quota)),
         F.lit(HASH_SPACE),
     ).otherwise(
         F.greatest(
@@ -676,8 +672,6 @@ def quota_sample(
     quota: int = 100,
     key_col: str = "doc_id",
     salt: str = "quota",
-    window_cap: int = DEFAULT_WINDOW_CAP,
-    _margin: float | None = None,
 ) -> DataFrame:
     """Cap every group at ``quota`` docs — the over-representation fix
     (per-language / per-domain / per-source caps) a corpus runs after
@@ -693,22 +687,19 @@ def quota_sample(
 
     Plan: per-group hash-threshold prefilter, then one hash-partitioned
     window per group (no global exchange, no SinglePartition —
-    auto-screened by test_plan_quality). Groups up to ``window_cap`` rows
-    sort whole inside their window task; a larger (skewed) group is first
-    cut to the ~quota*margin rows whose hash falls below
-    ``quota/n_g * 2^60 * margin`` — the only rows that can possibly rank
-    inside the quota — so a domain holding 30-40% of a 100 TB corpus sorts
+    auto-screened by test_plan_quality). Groups up to
+    ``DEFAULT_WINDOW_CAP`` rows sort whole inside their window task; a
+    larger (skewed) group is first cut to the ~quota*margin rows whose
+    hash falls below ``quota/n_g * 2^60 * margin`` — the only rows that
+    can possibly rank inside the quota — so a domain holding 30-40% of a 100 TB corpus sorts
     ~quota rows in its window task, not n_g. The prefilter changes NOTHING
     about which rows are selected (same hash, same order, and a lazy
     ``assert_true`` guard raises on the astronomically-unlikely shortfall
     instead of under-sampling), so results are bit-identical to the plain
-    window. ``_margin`` exists for tests to force that guard to fire.
-    """
+    window."""
     from pyspark.sql import Window
 
-    pre, h = _quota_prefiltered(
-        docs, group_col, quota, key_col, salt, window_cap, _margin
-    )
+    pre, h = _quota_prefiltered(docs, group_col, quota, key_col, salt)
     w = Window.partitionBy(group_col).orderBy(h.asc(), F.col(key_col).asc())
     wg = Window.partitionBy(group_col)
     ranked = (

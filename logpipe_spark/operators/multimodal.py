@@ -114,17 +114,6 @@ def parse_image_header(b: bytes) -> tuple[str | None, int | None, int | None]:
     return (None, None, None)
 
 
-def png_header_bytes(width: int, height: int) -> bytes:
-    """A minimal syntactically-valid PNG prefix (signature + IHDR) for
-    fixtures — parse_image_header reads exactly these fields. CRC is a
-    fixed placeholder: header parsers (ours included, like `file`/ImageMagick
-    ping paths) do not verify chunk CRCs."""
-    ihdr = width.to_bytes(4, "big") + height.to_bytes(4, "big") + bytes(
-        [8, 2, 0, 0, 0]  # bit depth 8, truecolor, deflate, none, none
-    )
-    return PNG_SIG + (13).to_bytes(4, "big") + b"IHDR" + ihdr + bytes(4)
-
-
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}  # color type → samples/px
 
 
@@ -362,34 +351,3 @@ def media_repartition(media: DataFrame, target_mb: int = 64) -> DataFrame:
     total = (row["b"] if row else None) or 0
     n = max(int(total / (target_mb * 1024 * 1024)), 1)
     return media.repartition(n)
-
-
-def gen_fake_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
-    """Deterministic synthetic media table for tests (payload = seeded bytes)."""
-    rng = np.random.default_rng(seed)
-    kinds = ["image", "audio", "video"]
-    rows = []
-    for i in range(n):
-        kind = kinds[i % 3]
-        payload = rng.integers(0, 256, size=int(rng.integers(256, 4096)), dtype=np.uint8).tobytes()
-        if kind == "image":
-            # a COMPLETE valid PNG (real IDAT + CRCs): the feature pass
-            # decodes these pixels for real via decode_png
-            payload = encode_png(
-                rng.integers(0, 256, size=(24, 32, 3), dtype=np.uint8)
-            )
-        rows.append(
-            (
-                i,
-                kind,
-                bytearray(payload),
-                (
-                    32 if kind == "image" else None,
-                    24 if kind == "image" else None,
-                    16000 if kind == "audio" else None,
-                    100 if kind == "video" else None,
-                    {"image": "png", "audio": "wav", "video": "h264"}[kind],
-                ),
-            )
-        )
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)

@@ -2,9 +2,11 @@
 
 Baseline: brute-force cosine top-k — a single scan with the dot product
 expressed in JVM higher-order functions (`zip_with` + `aggregate`), no
-Python in the loop. At 100 TB the scale path is LSH bucketing (random
-hyperplane signs) so each query touches ~1/2^bits of the corpus; both share
-the same scoring expression.
+Python in the loop. At 100 TB the scale paths are LSH bucketing (random
+hyperplane signs) so each query touches ~1/2^bits of the corpus, and IVF
+k-means cells scanned nprobe at a time. Every top-k query ends the same
+way (``_topk``): score (id, cosine) and keep the k best, ties broken by
+id, returning ``(id, sim)``.
 
 Everything is deterministic: hyperplanes are seeded numpy, embedded as
 literal arrays (broadcast once, tiny).
@@ -34,6 +36,16 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _topk(cand: DataFrame, id_col: str, sim: Column, k: int) -> DataFrame:
+    """(id, sim) for the ``k`` candidates with the highest ``sim``, ties
+    broken by id for determinism."""
+    return (
+        cand.select(id_col, sim.alias("sim"))
+        .orderBy(F.col("sim").desc(), F.col(id_col).asc())
+        .limit(k)
+    )
+
+
 def cosine_topk(
     emb: DataFrame,
     query_vec_id: int,
@@ -44,39 +56,13 @@ def cosine_topk(
     """Brute-force cosine top-k against the embedding of ``query_vec_id``.
 
     The query row is broadcast-cross-joined (1 row → zero shuffle of the
-    corpus side); ordering ties broken by id for determinism. Returns the
-    id set only (float similarity is engine-specific in the last ulp)."""
+    corpus side). Returns (id, sim); the contract query keeps the id set
+    only (float similarity is engine-specific in the last ulp)."""
     q = emb.filter(F.col(id_col) == query_vec_id).select(
         F.col(vec_col).alias("_qv")
     )
-    scored = (
-        emb.filter(F.col(id_col) != query_vec_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            id_col,
-            cosine(F.col(vec_col), F.col("_qv")).alias("sim"),
-        )
-    )
-    return (
-        scored.orderBy(F.col("sim").desc(), F.col(id_col).asc())
-        .limit(k)
-        .select(id_col)
-    )
-
-
-def cosine_topk_scored(
-    emb: DataFrame, query_vec_id: int, k: int = 10,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """Same as cosine_topk but keeps the similarity column (for tests)."""
-    q = emb.filter(F.col(id_col) == query_vec_id).select(F.col(vec_col).alias("_qv"))
-    return (
-        emb.filter(F.col(id_col) != query_vec_id)
-        .crossJoin(F.broadcast(q))
-        .select(id_col, cosine(F.col(vec_col), F.col("_qv")).alias("sim"))
-        .orderBy(F.col("sim").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    cand = emb.filter(F.col(id_col) != query_vec_id).crossJoin(F.broadcast(q))
+    return _topk(cand, id_col, cosine(F.col(vec_col), F.col("_qv")), k)
 
 
 def _hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
@@ -142,12 +128,8 @@ def ivf_topk(
 
     probe = sorted(range(len(centers)), key=lambda c: dist(centers[c], query_vec))[:nprobe]
     qcol = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        assigned.filter(F.col("cell").isin(probe))
-        .select(id_col, cosine(F.col(vec_col), qcol).alias("sim"))
-        .orderBy(F.col("sim").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    cand = assigned.filter(F.col("cell").isin(probe))
+    return _topk(cand, id_col, cosine(F.col(vec_col), qcol), k)
 
 
 def write_ivf_index(
@@ -188,30 +170,18 @@ def topk_from_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """ANN top-k against a ``write_ivf_index`` table: rank cells by
-    centroid distance driver-side (|centers| is tiny), scan ONLY the
-    nprobe nearest cell directories (``cell IN (...)`` is a
-    partition-column predicate → file-list pruning, asserted via the
-    scan's numFiles metric in tests), brute-force cosine within them."""
+    """ANN top-k against a ``write_ivf_index`` table: :func:`ivf_topk`
+    over the written cells with the centers from the JSON sidecar. On the
+    written table ``cell IN (...)`` is a partition-column predicate, so
+    the scan reads ONLY the nprobe nearest cell directories (file-list
+    pruning, asserted via the scan's numFiles metric in tests)."""
     import json
-    import math
     import os
 
     with open(os.path.join(path, "_ivf_centers.json")) as f:
         centers = json.load(f)
-
-    def dist(a, b):
-        return math.sqrt(sum((x - y) ** 2 for x, y in zip(a, b)))
-
-    probe = sorted(range(len(centers)), key=lambda c: dist(centers[c], query_vec))[
-        :nprobe
-    ]
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
-    idx = spark.read.parquet(path).filter(F.col("cell").isin(probe))
-    return (
-        idx.select(id_col, cosine(F.col(vec_col), qcol).alias("sim"))
-        .orderBy(F.col("sim").desc(), F.col(id_col).asc())
-        .limit(k)
+    return ivf_topk(
+        spark.read.parquet(path), centers, query_vec, k, nprobe, id_col, vec_col
     )
 
 
@@ -453,11 +423,7 @@ def topk_from_lsh_index(
         F.bit_count(F.col("_sig").bitwiseXOR(F.lit(qsig).cast("long")))
         <= probe_hamming
     )
-    return (
-        cand.select(id_col, cosine(F.col(vec_col), qcol).alias("sim"))
-        .orderBy(F.col("sim").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return _topk(cand, id_col, cosine(F.col(vec_col), qcol), k)
 
 
 def cosine_topk_lsh(
@@ -487,9 +453,4 @@ def cosine_topk_lsh(
             <= probe_hamming
         )
     )
-    return (
-        cand.select(id_col, cosine(F.col(vec_col), F.col("_qv")).alias("sim"))
-        .orderBy(F.col("sim").desc(), F.col(id_col).asc())
-        .limit(k)
-        .select(id_col, "sim")
-    )
+    return _topk(cand, id_col, cosine(F.col(vec_col), F.col("_qv")), k)

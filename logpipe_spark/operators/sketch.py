@@ -22,11 +22,15 @@ raw estimate α_m·m²/Σ2^{-M_j} is then ONE double division — no float
 accumulation anywhere, so the DuckDB oracle matches bit for bit.
 
 100 TB shape: map-side partial aggregation collapses every partition to
-≤ m rows before the shuffle (a groupBy on j with MAX — the textbook
-mergeable sketch), so the exchange carries m rows per partition no matter
-the corpus size; ``hll_estimate`` then reduces m rows to one. Sketches
-merge across datasets by per-register MAX, which is what makes them
-ledger-persistable (union two register tables, re-aggregate).
+≤ m rows per column before the shuffle (a groupBy on (col_name, j) with
+MAX — the textbook mergeable sketch), so the exchange carries m rows per
+column and partition no matter the corpus size; ``hll_estimate_by`` then
+reduces each column's m rows to one. Sketches merge across datasets by per-register MAX, which is what
+makes them ledger-persistable (union two register tables, re-aggregate).
+
+Several columns share ONE scan (``hll_distinct_multi``): each row explodes
+to one (col_name, j, rank) entry per column, so a one-column sketch is the
+same call with a one-element column list.
 """
 
 from __future__ import annotations
@@ -61,25 +65,6 @@ def _bit_length(v: Column, max_bits: int) -> Column:
     return out
 
 
-def hll_registers(
-    df: DataFrame, col: str, p: int = 8
-) -> DataFrame:
-    """The mergeable sketch: (j, m_j) register table, ≤ 2^p rows."""
-    if not 4 <= p <= 14:
-        raise ValueError(f"p out of range: {p}")
-    m = 1 << p
-    h = base_hash60(F.col(col).cast("string"))
-    j = (h % m).cast("int")
-    v = F.floor(h / m).cast("long")  # top 60-p bits
-    rank_bits = 60 - p
-    rank = (F.lit(rank_bits + 1) - _bit_length(v, rank_bits)).cast("int")
-    return (
-        df.select(j.alias("j"), rank.alias("rank"))
-        .groupBy("j")
-        .agg(F.max("rank").alias("m_j"))
-    )
-
-
 def _lc_table(m: int) -> list[float]:
     """Linear-counting literals ln(m / z) for z = 1..m-1 EMPTY registers
     (E* = m·ln(m/Z), Z the zero-register count), computed ONCE
@@ -92,55 +77,12 @@ def _lc_table(m: int) -> list[float]:
     return [math.log(m / v) for v in range(1, m)]
 
 
-def hll_estimate(registers: DataFrame, p: int = 8) -> DataFrame:
-    """Fold a register table into one row: (m, v_used, denom_scaled,
-    estimate). ``denom_scaled`` = Σ 2^{B-M_j} over all m registers
-    (empty ⇒ M_j = 0 ⇒ 2^B), B = 61 - p; exact BIGINT. ``estimate`` is
-    the HLL estimator α_m·m²·2^B / denom_scaled (one IEEE division),
-    with the standard small-range linear-counting correction
-    m·ln(m/V) when raw ≤ 2.5m and empty registers remain (the ln comes
-    from :func:`_lc_table` literals, not runtime libm). No large-range
-    correction: 52-bit ranks don't saturate at realistic cardinalities."""
-    m = 1 << p
-    b = _RANK_BITS + 1  # with p=8: 53
-    # pyspark's F.shiftleft only takes a Python-int shift; the SQL form
-    # accepts a column shift (same JVM ShiftLeft expression)
-    scaled = F.expr(f"shiftleft(CAST(1 AS BIGINT), {b} - m_j)")
-    agg = registers.agg(
-        F.count(F.lit(1)).cast("long").alias("v_used"),
-        F.sum(scaled).alias("_used_sum"),
-    )
-    denom = (
-        F.col("_used_sum")
-        + (F.lit(m) - F.col("v_used")) * F.lit(1 << b).cast("long")
-    )
-    est_num = _alpha(m) * (m * m)
-    raw = F.lit(est_num * float(1 << b)) / denom.cast("double")
-    lc = F.lit(float(m)) * F.element_at(
-        F.lit(_lc_table(m)), (F.lit(m) - F.col("v_used")).cast("int")
-    )
-    est = F.when(
-        (raw <= F.lit(2.5 * m)) & (F.col("v_used") < m), lc
-    ).otherwise(raw)
-    return agg.select(
-        F.lit(m).cast("long").alias("m"),
-        F.col("v_used"),
-        denom.cast("long").alias("denom_scaled"),
-        est.alias("estimate"),
-    )
-
-
-def hll_distinct(df: DataFrame, col: str, p: int = 8) -> DataFrame:
-    """End-to-end: sketch + fold. One m-row-per-partition exchange."""
-    return hll_estimate(hll_registers(df, col, p), p)
-
-
 def cm_sketch(
     df: DataFrame, col: str, depth: int = 4, width: int = 1024
 ) -> DataFrame:
     """Count-Min sketch of a column: (i, pos, c) counter table, ≤ d·w
     rows. Row i's hash is the shared md5 base hash under salt ``cm{i}:``
-    — the same engine-portable spec rule as the HLL above, so any engine
+    — the same engine-portable spec rule as the HLL, so any engine
     rebuilds identical counters. Mergeable by SUM on (i, pos).
 
     100 TB shape: the d-way explode is map-side and the partial hash
@@ -245,7 +187,8 @@ GROUP BY value
 def hll_oracle_sql(
     table: str, col: str, p: int = 8
 ) -> str:
-    """DuckDB mirror of :func:`hll_distinct`, same spec constants."""
+    """DuckDB mirror of ``col``'s row of :func:`hll_distinct_multi`
+    (without the ``col_name`` column), same spec constants."""
     m = 1 << p
     rank_bits = 60 - p
     b = _RANK_BITS + 1
@@ -295,12 +238,12 @@ FROM folded
 def hll_registers_multi(
     df: DataFrame, cols: list[str], p: int = 8
 ) -> DataFrame:
-    """Register tables for SEVERAL columns from ONE scan: each row
-    explodes to (col_name, j, rank) — map-side, so at 100 TB this is
-    the difference between one pass over the corpus and one pass PER
-    profiled column. Register derivation is expression-identical to
-    :func:`hll_registers`, so per-column results are bit-equal to the
-    single-column operator (test-asserted)."""
+    """The mergeable sketch: (col_name, j, m_j) register rows, ≤ 2^p per
+    column, for SEVERAL columns from ONE scan. Each row explodes to
+    (col_name, j, rank) — map-side, so at 100 TB this is the difference
+    between one pass over the corpus and one pass PER profiled column.
+    A column's registers do not depend on which other columns share the
+    scan (test-asserted)."""
     if not cols:
         raise ValueError("cols must be non-empty")
     if not 4 <= p <= 14:
@@ -328,16 +271,21 @@ def hll_registers_multi(
     )
 
 
-def hll_estimate_by(
-    registers: DataFrame, p: int = 8, group_col: str = "col_name"
-) -> DataFrame:
-    """:func:`hll_estimate`, per group — the same exact-BIGINT denom and
-    literal-table linear counting, folded by ``group_col`` instead of
-    globally."""
+def hll_estimate_by(registers: DataFrame, p: int = 8) -> DataFrame:
+    """Fold each column's registers into one row: (col_name, m, v_used,
+    denom_scaled, estimate). ``denom_scaled`` = Σ 2^{B-M_j} over all m
+    registers (empty ⇒ M_j = 0 ⇒ 2^B), B = 61 - p; exact BIGINT.
+    ``estimate`` is the HLL estimator α_m·m²·2^B / denom_scaled (one IEEE
+    division), with the standard small-range linear-counting correction
+    m·ln(m/V) when raw ≤ 2.5m and empty registers remain (the ln comes
+    from :func:`_lc_table` literals, not runtime libm). No large-range
+    correction: 52-bit ranks don't saturate at realistic cardinalities."""
     m = 1 << p
-    b = _RANK_BITS + 1
+    b = _RANK_BITS + 1  # with p=8: 53
+    # pyspark's F.shiftleft only takes a Python-int shift; the SQL form
+    # accepts a column shift (same JVM ShiftLeft expression)
     scaled = F.expr(f"shiftleft(CAST(1 AS BIGINT), {b} - m_j)")
-    agg = registers.groupBy(group_col).agg(
+    agg = registers.groupBy("col_name").agg(
         F.count(F.lit(1)).cast("long").alias("v_used"),
         F.sum(scaled).alias("_used_sum"),
     )
@@ -354,7 +302,7 @@ def hll_estimate_by(
         (raw <= F.lit(2.5 * m)) & (F.col("v_used") < m), lc
     ).otherwise(raw)
     return agg.select(
-        group_col,
+        "col_name",
         F.lit(m).cast("long").alias("m"),
         F.col("v_used"),
         denom.cast("long").alias("denom_scaled"),

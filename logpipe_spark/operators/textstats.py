@@ -195,18 +195,6 @@ def repetition_stats(
     )
 
 
-def doc_quality(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
-    """Per-doc quality + heuristic lang + fingerprint — the full
-    training-data annotation pass, one scan, zero Python."""
-    t = F.col(text_col)
-    return docs.select(
-        F.col(key_col),
-        quality_score(t).alias("quality"),
-        lang_id(t).alias("lang_guess"),
-        bpe_ish_token_count(t).alias("bpe_tokens"),
-        rolling_fingerprint(t).alias("fingerprint"),
-    )
-
 #: unigram_logprob ships the (token, ln_p) vocab as a literal create_map;
 #: above this many entries the literal expression tree is the bottleneck
 #: (compilation time + task-binary size grow with the map). Same rule as

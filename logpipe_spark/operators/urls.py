@@ -17,10 +17,11 @@ Design for 100 TB:
 - Blocklist matching must honour SUFFIX semantics (blocking
   ``tracker.net`` blocks ``ads.tracker.net``). The naive plan — a LIKE
   chain or a theta-join on ``endswith`` — is O(corpus × blocklist).
-  Instead each host explodes into its ≤ ``max_labels`` parent-domain
-  suffixes and anti-joins the blocklist on EQUALITY: real blocklists
-  (10⁵–10⁶ domains) broadcast, so the corpus is never shuffled and the
-  match is a hash probe per suffix, not a scan of the list.
+  Instead each of the host's ≤ ``max_labels`` trailing-label suffixes
+  anti-joins the blocklist on EQUALITY, one join per suffix depth: real
+  blocklists (10⁵–10⁶ domains) broadcast, so the corpus is never shuffled
+  or exploded and the match is a hash probe per suffix, not a scan of the
+  list.
 """
 
 from __future__ import annotations
@@ -93,26 +94,6 @@ def url_features(
         .otherwise(F.size(F.split(query, "&")))
         .alias("n_params"),
         F.lower(url).startswith("https://").alias("is_https"),
-    )
-
-
-def host_suffixes(host: Column, max_labels: int = 5) -> Column:
-    """All parent-domain suffixes of a host with ≥ 2 labels, deepest
-    first, capped at the last ``max_labels`` labels:
-    ``a.b.example.com`` → [a.b.example.com, b.example.com, example.com].
-    The cap bounds the explode factor (real hosts rarely exceed 5
-    meaningful labels; a blocklist entry deeper than that is matched by
-    its own full-host suffix anyway)."""
-    parts = F.split(host, r"\.")
-    n = F.size(parts)
-    lo = F.greatest(F.lit(1), n - max_labels + 1)
-    # F.sequence(1, 0) DESCENDS ([1, 0]) rather than yielding [] — a
-    # bare-label host must be guarded to an empty suffix list explicitly
-    return F.when(n < 2, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(lo, n - 1),
-            lambda i: F.concat_ws(".", F.slice(parts, i, n - i + 1)),
-        )
     )
 
 

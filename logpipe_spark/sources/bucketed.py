@@ -75,13 +75,3 @@ def colocated_join(
     matching bucket specs this plans as a bucket-local SortMergeJoin —
     assert_no_exchange() in tests proves the zero-shuffle claim."""
     return spark.table(left_name).join(spark.table(right_name), on, how)
-
-
-def assert_no_exchange(df: DataFrame) -> str:
-    """Raise if the physical plan contains a shuffle (Exchange). Returns
-    the plan string for further assertions. BroadcastExchange is also
-    rejected — the point of bucketing is joining two LARGE sides."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    if "Exchange" in plan:
-        raise AssertionError(f"plan contains a shuffle:\n{plan}")
-    return plan

@@ -213,18 +213,19 @@ def exec_source(
             chunks.append(chunk)
             got += len(chunk)
     finally:
-        watchdog.cancel()
         # truncated-by-cap is detected by the loop condition, not poll()
-        # (a cleanly-finished child can race poll() between stdout EOF and
-        # exit — that must still have its returncode checked)
         killed_for_cap = got > max_bytes and not timed_out.is_set()
-        if proc.poll() is None:
+        if killed_for_cap:
             proc.kill()
+        # a child at stdout EOF may not have exited yet: wait for its exit
+        # status instead of killing it, with the watchdog still bounding
+        # the wait
         try:
-            proc.wait(timeout=30)
+            proc.wait(timeout=timeout_sec + 30)
         except subprocess.TimeoutExpired:  # kill delivered but not reaped yet
             proc.kill()
             proc.wait(timeout=5)
+        watchdog.cancel()
     if strict:
         if timed_out.is_set():
             raise RuntimeError(

@@ -73,11 +73,15 @@ def stage_stream_source(
 def run_available_now(
     result_stream: DataFrame,
     output_mode: str = "append",
-    timeout_s: int = 600,
+    timeout_s: float = 600,
 ) -> str:
     """Run ``result_stream`` to a parquet sink with AvailableNow and
     return the sink path. A files-per-trigger cadence is a source option,
-    set at read time (:func:`read_stream_table`)."""
+    set at read time (:func:`read_stream_table`).
+
+    A query still running after ``timeout_s`` is stopped and
+    ``TimeoutError`` raised: its sink holds only part of the input, and
+    a returned path would let a caller read it while the stream writes."""
     out = tempfile.mkdtemp(prefix="lps_stream_out_") + "/sink"
     ckpt = tempfile.mkdtemp(prefix="lps_stream_ckpt_") + "/" + uuid.uuid4().hex
     q = (
@@ -88,7 +92,9 @@ def run_available_now(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(f"stream did not drain within {timeout_s} s")
     return out
 
 

@@ -16,10 +16,10 @@ from logpipe_spark.functions.bpe import (
     bpe_token_count_sql,
     corpus_word_counts,
     encode_bpe_col,
-    encode_bpe_py,
     train_bpe_merges,
 )
 from logpipe_spark.functions.bpe_merges import DEFAULT_MERGES
+from testkit import encode_bpe_py
 
 
 def test_train_hand_corpus_classic_example():

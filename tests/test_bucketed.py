@@ -5,11 +5,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from logpipe_spark.fixtures import gen_transcripts
-from logpipe_spark.sources.bucketed import (
-    assert_no_exchange,
-    colocated_join,
-    write_bucketed,
-)
+from logpipe_spark.sources.bucketed import colocated_join, write_bucketed
+from testkit import assert_no_exchange
 
 
 @pytest.fixture(scope="module")

@@ -8,10 +8,8 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from logpipe_spark.operators.classify import (
-    classifier_score,
-    pseudo_weights_array,
-)
+from logpipe_spark.operators.classify import classifier_score
+from testkit import pseudo_weights_array
 
 BUCKETS = 256  # small enough to fill the numpy mirror quickly
 

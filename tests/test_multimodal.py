@@ -5,11 +5,8 @@ batching, and partition-sizing contracts are what's under test)."""
 import pytest
 from pyspark.sql import functions as F
 
-from logpipe_spark.operators.multimodal import (
-    extract_features,
-    gen_fake_media,
-    media_repartition,
-)
+from logpipe_spark.operators.multimodal import extract_features, media_repartition
+from testkit import gen_fake_media, png_header_bytes
 
 
 @pytest.fixture(scope="module")
@@ -47,10 +44,7 @@ def test_media_repartition_by_bytes(media):
 
 
 def test_parse_image_header_png_jpeg_gif():
-    from logpipe_spark.operators.multimodal import (
-        parse_image_header,
-        png_header_bytes,
-    )
+    from logpipe_spark.operators.multimodal import parse_image_header
 
     assert parse_image_header(png_header_bytes(640, 480)) == ("png", 640, 480)
     # minimal JPEG: SOI, APP0 shell, SOF0 with dims 123x45, then junk
@@ -101,11 +95,7 @@ def test_png_roundtrip_all_filters_and_color_types():
 def test_decode_png_rejects_unsupported():
     import numpy as np
 
-    from logpipe_spark.operators.multimodal import (
-        decode_png,
-        encode_png,
-        png_header_bytes,
-    )
+    from logpipe_spark.operators.multimodal import decode_png, encode_png
 
     assert decode_png(b"not a png") is None
     # header-only prefix (no IDAT) — the old fixture shape

@@ -2,11 +2,14 @@
 mix_sample must (a) change nothing about which rows are selected, (b) cap
 the rows entering the per-group window to ~keep_n instead of n_g for a
 dominant group, and (c) raise — never silently under-sample — if the
-cutoff ever falls short (forced here via the private margin override)."""
+cutoff ever falls short (forced here by patching the margin). The window
+cap and the margin are module constants read at call time, so each test
+patches them with ``monkeypatch``."""
 
 import pytest
 from pyspark.sql import functions as F
 
+from logpipe_spark.operators import corpus
 from logpipe_spark.operators.corpus import (
     _quota_prefiltered,
     mix_sample,
@@ -28,9 +31,11 @@ def _ids(df):
     return sorted(r["doc_id"] for r in df.select("doc_id").collect())
 
 
-def test_quota_prefilter_is_bit_identical_to_plain_window(skewed):
-    plain = quota_sample(skewed, quota=50, window_cap=10**9)  # never prefilters
-    pre = quota_sample(skewed, quota=50, window_cap=256)  # big group prefiltered
+def test_quota_prefilter_is_bit_identical_to_plain_window(skewed, monkeypatch):
+    monkeypatch.setattr(corpus, "DEFAULT_WINDOW_CAP", 10**9)
+    plain = quota_sample(skewed, quota=50)  # never prefilters
+    monkeypatch.setattr(corpus, "DEFAULT_WINDOW_CAP", 256)
+    pre = quota_sample(skewed, quota=50)  # big group prefiltered
     assert _ids(plain) == _ids(pre)
     per_group = {
         r["lang"]: r["n"]
@@ -39,10 +44,10 @@ def test_quota_prefilter_is_bit_identical_to_plain_window(skewed):
     assert per_group == {g: 50 for g in ("big", "a", "b", "c", "d", "e")}
 
 
-def test_quota_prefilter_caps_window_input_on_dominant_group(skewed):
+def test_quota_prefilter_caps_window_input_on_dominant_group(skewed, monkeypatch):
+    monkeypatch.setattr(corpus, "DEFAULT_WINDOW_CAP", 256)
     sliver, _ = _quota_prefiltered(
-        skewed, "lang", quota=50, key_col="doc_id", salt="quota",
-        window_cap=256,
+        skewed, "lang", quota=50, key_col="doc_id", salt="quota"
     )
     by_group = {
         r["lang"]: r["n"]
@@ -56,20 +61,22 @@ def test_quota_prefilter_caps_window_input_on_dominant_group(skewed):
         assert by_group[g] == SMALL
 
 
-def test_quota_prefilter_shortfall_raises_not_undersamples(skewed):
+def test_quota_prefilter_shortfall_raises_not_undersamples(skewed, monkeypatch):
     # a margin far below 1 makes the cutoff exclude most of the quota's
     # rows; the lazy assert_true guard must surface that loudly
-    starved = quota_sample(
-        skewed, quota=50, window_cap=256, _margin=0.01
-    )
+    monkeypatch.setattr(corpus, "DEFAULT_WINDOW_CAP", 256)
+    monkeypatch.setattr(corpus, "_prefilter_margin", lambda keep_n: 0.01)
+    starved = quota_sample(skewed, quota=50)
     with pytest.raises(Exception, match="shortfall"):
         starved.collect()
 
 
-def test_mix_sample_prefilter_is_bit_identical(skewed):
+def test_mix_sample_prefilter_is_bit_identical(skewed, monkeypatch):
     targets = {"big": 0.6, "a": 0.2, "b": 0.2}
-    plain = mix_sample(skewed, targets, group_col="lang", window_cap=10**9)
-    pre = mix_sample(skewed, targets, group_col="lang", window_cap=128)
+    monkeypatch.setattr(corpus, "DEFAULT_WINDOW_CAP", 10**9)
+    plain = mix_sample(skewed, targets, group_col="lang")
+    monkeypatch.setattr(corpus, "DEFAULT_WINDOW_CAP", 128)
+    pre = mix_sample(skewed, targets, group_col="lang")
     assert _ids(plain) == _ids(pre)
     # binding group is a (n=200, part 2/10): T = 200/0.2 = 1000 ->
     # keep big=600, a=200, b=200; exact integer math must land these dead on

@@ -16,11 +16,7 @@ from pyspark.sql import functions as F
 from logpipe_spark.operators.asof import rate_anomaly
 from logpipe_spark.operators.cdc import merge_changes
 from logpipe_spark.operators.search import bm25_topk
-from logpipe_spark.operators.sketch import (
-    hll_distinct,
-    hll_estimate,
-    hll_registers,
-)
+from logpipe_spark.operators.sketch import hll_distinct_multi, hll_registers_multi
 
 
 # ---------------------------------------------------------------- BM25
@@ -172,12 +168,14 @@ def test_merge_changes_requires_payload_columns(spark, cdc_base):
 def test_hll_registers_mergeable_by_max(spark):
     a = spark.range(0, 5000).select(F.col("id").cast("string").alias("s"))
     b = spark.range(2500, 7500).select(F.col("id").cast("string").alias("s"))
-    ra, rb = hll_registers(a, "s"), hll_registers(b, "s")
+    ra, rb = hll_registers_multi(a, ["s"]), hll_registers_multi(b, ["s"])
     merged = (
-        ra.unionByName(rb).groupBy("j").agg(F.max("m_j").alias("m_j"))
+        ra.unionByName(rb)
+        .groupBy("col_name", "j")
+        .agg(F.max("m_j").alias("m_j"))
     )
-    whole = hll_registers(
-        spark.range(0, 7500).select(F.col("id").cast("string").alias("s")), "s"
+    whole = hll_registers_multi(
+        spark.range(0, 7500).select(F.col("id").cast("string").alias("s")), ["s"]
     )
     assert sorted(map(tuple, merged.collect())) == sorted(
         map(tuple, whole.collect())
@@ -186,13 +184,13 @@ def test_hll_registers_mergeable_by_max(spark):
 
 def test_hll_estimate_within_5pct_at_10k(spark):
     df = spark.range(0, 10000).select(F.col("id").cast("string").alias("s"))
-    est = hll_distinct(df, "s").collect()[0]["estimate"]
+    est = hll_distinct_multi(df, ["s"]).collect()[0]["estimate"]
     assert abs(est - 10000) / 10000 < 0.05
 
 
 def test_hll_small_range_uses_linear_counting(spark):
     df = spark.range(0, 50).select(F.col("id").cast("string").alias("s"))
-    row = hll_distinct(df, "s").collect()[0]
+    row = hll_distinct_multi(df, ["s"]).collect()[0]
     # LC formula: m * ln(m / empty)
     expected = 256.0 * math.log(256.0 / (256 - row["v_used"]))
     assert row["estimate"] == pytest.approx(expected, abs=1e-12)
@@ -282,7 +280,7 @@ def test_hll_register_values_match_pure_python(spark):
 
     vals = [f"v{i}" for i in range(300)]
     df = spark.createDataFrame([Row(s=v) for v in vals])
-    got = {r["j"]: r["m_j"] for r in hll_registers(df, "s").collect()}
+    got = {r["j"]: r["m_j"] for r in hll_registers_multi(df, ["s"]).collect()}
     regs: dict[int, int] = {}
     for v in vals:
         h = int(hashlib.md5(v.encode()).hexdigest()[:15], 16)
@@ -292,14 +290,10 @@ def test_hll_register_values_match_pure_python(spark):
     assert got == regs
 
 def test_hll_multi_matches_single_column_ops(spark):
-    """hll_distinct_multi from ONE scan is bit-equal, per column, to
-    the single-column operator chain — same registers, same fold."""
+    """hll_distinct_multi from ONE three-column scan is bit-equal, per
+    column, to a one-column scan — a column's registers and fold do not
+    depend on which other columns share the pass."""
     from pyspark.sql import functions as F
-
-    from logpipe_spark.operators.sketch import (
-        hll_distinct,
-        hll_distinct_multi,
-    )
 
     df = spark.range(0, 5000).select(
         (F.col("id") % 37).cast("string").alias("a"),
@@ -312,7 +306,7 @@ def test_hll_multi_matches_single_column_ops(spark):
         for r in hll_distinct_multi(df, ["a", "b", "c"]).collect()
     }
     for c in ("a", "b", "c"):
-        single = hll_distinct(df.select(c), c).collect()[0]
+        single = hll_distinct_multi(df.select(c), [c]).collect()[0]
         assert multi[c] == (
             single["m"], single["v_used"], single["denom_scaled"],
             single["estimate"],

@@ -9,7 +9,6 @@ from logpipe_spark.operators.similarity import (
     cosine,
     cosine_topk,
     cosine_topk_lsh,
-    cosine_topk_scored,
 )
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -43,7 +42,7 @@ def test_bruteforce_matches_numpy(emb, emb_np):
 
 
 def test_scored_sims_close_to_numpy(emb, emb_np):
-    rows = cosine_topk_scored(emb, query_vec_id=3, k=5).collect()
+    rows = cosine_topk(emb, query_vec_id=3, k=5).collect()
     q = emb_np[3]
     for r in rows:
         v = emb_np[int(r["vec_id"])]

@@ -60,11 +60,7 @@ def test_exec_source(spark):
 def test_unit_parsing():
     """util.c:525-568 semantics: float prefix, case-insensitive suffix,
     1024-based sizes, bare = base unit; unknown suffix is an error."""
-    from logpipe_spark.functions.units import (
-        parse_duration_ms,
-        parse_duration_us,
-        parse_size_bytes,
-    )
+    from logpipe_spark.functions.units import parse_duration_us, parse_size_bytes
 
     assert parse_size_bytes("10MB") == 10 * 1024 * 1024
     assert parse_size_bytes("1.5kb") == 1536
@@ -77,7 +73,6 @@ def test_unit_parsing():
     assert parse_duration_us("2s") == 2_000_000
     assert parse_duration_us("50us") == 50
     assert parse_duration_us("750") == 750
-    assert parse_duration_ms("1.5s") == 1500
     for bad in ("10XB", "ms100", "", "10 MB ish", None):
         with pytest.raises((ValueError, TypeError)):
             parse_size_bytes(bad)
@@ -222,6 +217,14 @@ def test_exec_source_timeout_kill_raises(spark):
     with pytest.raises(RuntimeError, match="timeout"):
         exec_source(spark, argv, timeout_sec=1.0)
     rows = exec_source(spark, argv, timeout_sec=1.0, strict=False).collect()
+    assert [r["text"] for r in rows] == ["line1"]
+
+
+def test_exec_source_waits_for_exit_after_stdout_eof(spark):
+    """A child that closes stdout before it exits finished cleanly: its
+    exit status is read, not replaced by a kill."""
+    argv = ["sh", "-c", "echo line1; exec >&-; sleep 0.5"]
+    rows = exec_source(spark, argv, timeout_sec=10.0).collect()
     assert [r["text"] for r in rows] == ["line1"]
 
 

@@ -647,3 +647,25 @@ def test_stream_commits_through_the_pipeline_bindings(
     res = run_stream(spark, src, str(tmp_path / "out"), dim_df, rules)
     assert res["batches"] >= 1
     assert calls == {"fan_out_write": res["batches"], "file_lineage_rows": res["batches"]}
+
+
+def test_run_available_now_timeout_stops_query_and_raises(spark, tmp_path):
+    """A drain that outlives its timeout stops its query and raises,
+    instead of returning a sink path the stream is still writing."""
+    import pandas as pd
+
+    from logpipe_spark.streaming.drive import (
+        read_stream_table,
+        run_available_now,
+        stage_stream_source,
+    )
+
+    data = str(tmp_path / "events.parquet")
+    pd.DataFrame({"k": range(100)}).to_parquet(data, index=False)
+    src_dir = tmp_path / "src"
+    src_dir.mkdir()
+    src = stage_stream_source(data, workdir=str(src_dir))
+    stream = read_stream_table(spark, src, "k long")
+    with pytest.raises(TimeoutError):
+        run_available_now(stream, timeout_s=0.001)
+    assert spark.streams.active == []

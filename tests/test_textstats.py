@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 
 from logpipe_spark.operators.textstats import (
     bpe_ish_token_count,
-    doc_quality,
     lang_id,
     quality_score,
     token_count,
@@ -67,16 +66,6 @@ def test_bpe_ish_counts_exceed_words(samples):
     ).collect()
     for r in rows:
         assert r["b"] >= r["w"]
-
-
-def test_doc_quality_shape(samples):
-    df = doc_quality(samples)
-    assert set(df.columns) == {"doc_id", "quality", "lang_guess", "bpe_tokens", "fingerprint"}
-    assert df.count() == 8
-    # fingerprint deterministic
-    a = sorted(r["fingerprint"] for r in df.collect())
-    b = sorted(r["fingerprint"] for r in doc_quality(samples).collect())
-    assert a == b
 
 
 def test_repetition_stats_hand_values(spark):

@@ -5,11 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from logpipe_spark.operators.urls import (
-    host_suffixes,
-    url_blocklist_filter,
-    url_features,
-)
+from logpipe_spark.operators.urls import url_blocklist_filter, url_features
 
 
 def _urls(spark, urls):
@@ -40,15 +36,6 @@ class TestUrlFeatures:
         # port stripped from host; fragment excluded from query
         assert (r3["host"], r3["domain"]) == ("ads.tracker.net", "tracker.net")
         assert (r3["path_depth"], r3["n_params"]) == (1, 1)
-
-    def test_host_suffixes(self, spark):
-        df = spark.range(1).select(
-            host_suffixes(F.lit("a.b.example.com")).alias("s"),
-            host_suffixes(F.lit("x")).alias("one"),
-        )
-        r = df.collect()[0]
-        assert r["s"] == ["a.b.example.com", "b.example.com", "example.com"]
-        assert r["one"] == []  # no ≥2-label parent of a bare label
 
 
 class TestBlocklistFilter:
