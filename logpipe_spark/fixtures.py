@@ -49,15 +49,15 @@ TOOL_FAMILY = {
 }
 
 
-def gen_transcripts(n_turns: int, seed: int = SEED, hot_share: float = 0.15) -> pd.DataFrame:
+def gen_transcripts(n_turns: int, seed: int = SEED) -> pd.DataFrame:
     """Transcript table per BASELINE.json input_hint:
     (conv_id, turn_idx, role, text, tool, ts).
 
     Zipf-skewed conversation lengths; conv00000000 is forced hot
-    (~``hot_share`` of all turns) to exercise skew salting (FIXTURES.md §6).
+    (~15% of all turns) to exercise skew salting (FIXTURES.md §6).
     """
     rng = np.random.default_rng(seed)
-    hot = max(1, int(n_turns * hot_share))
+    hot = max(1, int(n_turns * 0.15))
     rest = n_turns - hot
     sizes = [hot]
     while rest > 0:
@@ -174,9 +174,7 @@ def default_route_rules() -> list[dict]:
     ]
 
 
-def write_transcripts_dir(
-    path: str, n_turns: int, n_files: int = 32, seed: int = SEED
-) -> str:
+def write_transcripts_dir(path: str, n_turns: int, n_files: int = 32) -> str:
     """Materialize a transcript fixture as a directory of ``n_files``
     parquet parts — a realistic splittable table layout (a single
     pandas-written file is one row group = one Spark input split, which
@@ -184,7 +182,7 @@ def write_transcripts_dir(
     import numpy as np
 
     os.makedirs(path, exist_ok=True)
-    df = gen_transcripts(n_turns, seed=seed)
+    df = gen_transcripts(n_turns)
     for i, chunk in enumerate(np.array_split(df.index, n_files)):
         df.loc[chunk].to_parquet(
             os.path.join(path, f"part-{i:05d}.parquet"), index=False

@@ -84,17 +84,17 @@ def train_bpe_merges(
     return merges
 
 
-def corpus_word_counts(
-    docs: DataFrame, text_col: str = "text", top_k: int = 10_000
-) -> dict[str, int]:
+def corpus_word_counts(docs: DataFrame, top_k: int = 10_000) -> dict[str, int]:
     """Distributed word-frequency count, top_k collected to the driver for
     training (partial+final hash agg then TopK — the only full-corpus pass
     training needs). Ties broken by word so the training corpus is stable
-    under repartitioning."""
+    under repartitioning.
+
+    ``docs``: (``text``)."""
     toks = docs.select(
         F.explode(
             F.filter(
-                F.split(F.col(text_col), r"\s+"), lambda x: x != F.lit("")
+                F.split(F.col("text"), r"\s+"), lambda x: x != F.lit("")
             )
         ).alias("w")
     )

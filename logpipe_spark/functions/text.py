@@ -62,15 +62,15 @@ def unpack_metadata(packed: Column) -> Column:
     )
 
 
-def grep_contains(df: DataFrame, needle: str, col: str = "text") -> DataFrame:
-    """Keep rows whose text contains the substring (plain contains — a
+def grep_contains(df: DataFrame, needle: str) -> DataFrame:
+    """Keep rows whose ``text`` contains the substring (plain contains — a
     pushdown-friendly predicate, kept ahead of any regex)."""
-    return df.filter(F.col(col).contains(needle))
+    return df.filter(F.col("text").contains(needle))
 
 
-def translate_charset(text: Column, charset: str, separator: str = " ") -> Column:
-    """Replace every char in `charset` with `separator`."""
-    return F.translate(text, charset, separator * len(charset))
+def translate_charset(text: Column, charset: str) -> Column:
+    """Replace every char in `charset` with a space."""
+    return F.translate(text, charset, " " * len(charset))
 
 
 def tokenize(text: Column, separator_charset: str = " ") -> Column:
@@ -80,10 +80,10 @@ def tokenize(text: Column, separator_charset: str = " ") -> Column:
     return F.filter(F.split(text, pat), lambda x: x != F.lit(""))
 
 
-def fields_strictly(df: DataFrame, min_fields: int, col: str = "text",
-                    separator_charset: str = " ") -> DataFrame:
-    """Drop rows with fewer fields than the template demands."""
-    return df.filter(F.size(tokenize(F.col(col), separator_charset)) >= min_fields)
+def fields_strictly(df: DataFrame, min_fields: int) -> DataFrame:
+    """Drop rows whose ``text`` has fewer space-separated fields than the
+    template demands."""
+    return df.filter(F.size(tokenize(F.col("text"), " ")) >= min_fields)
 
 
 def template_nsub(template: str, key: Column, fields: Column) -> Column:
@@ -105,16 +105,16 @@ def template_nsub(template: str, key: Column, fields: Column) -> Column:
     return F.concat(*parts) if parts else F.lit("")
 
 
-def date_path(ts: Column, fmt: str = "yyyyMMdd") -> Column:
-    """Date-templated partition value (HDFS day-dir analogue)."""
-    return F.date_format(ts, fmt)
+def date_path(ts: Column) -> Column:
+    """``yyyyMMdd`` partition value (HDFS day-dir analogue)."""
+    return F.date_format(ts, "yyyyMMdd")
 
 
-def filename_key_cut(name: Column, n_words: int = 2, sep: str = "_") -> Column:
-    """Strip extension, keep the first `n_words` sep-separated words."""
+def filename_key_cut(name: Column, n_words: int = 2) -> Column:
+    """Strip extension, keep the first `n_words` `_`-separated words."""
     stem = F.regexp_replace(name, r"\.[^.]*$", "")
-    words = F.split(stem, re.escape(sep))
-    return F.array_join(F.slice(words, 1, n_words), sep)
+    words = F.split(stem, "_")
+    return F.array_join(F.slice(words, 1, n_words), "_")
 
 
 _SPARK_CHARSETS = {

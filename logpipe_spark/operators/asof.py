@@ -85,23 +85,17 @@ def range_join(
     facts: DataFrame,
     bands: DataFrame,
     value_col: str,
-    lo_col: str = "lo",
-    hi_col: str = "hi",
     how: str = "inner",
 ) -> DataFrame:
     """Join each fact row to the band where lo ≤ value < hi. Bands are
-    broadcast (tiny by construction)."""
-    cond = (F.col(value_col) >= F.col(lo_col)) & (F.col(value_col) < F.col(hi_col))
+    broadcast (tiny by construction).
+
+    ``bands``: (``lo``, ``hi``, ...)."""
+    cond = (F.col(value_col) >= F.col("lo")) & (F.col(value_col) < F.col("hi"))
     return facts.join(F.broadcast(bands), on=cond, how=how)
 
 
-def gapfill_interpolate(
-    events: DataFrame,
-    interval_s: int = 900,
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def gapfill_interpolate(events: DataFrame, interval_s: int = 900) -> DataFrame:
     """Time-bucket gap-filling with linear interpolation — the
     hypertable/metrics staple (`time_bucket_gapfill` + `interpolate`):
     aggregate a measure into fixed time buckets per group, then fill
@@ -126,16 +120,18 @@ def gapfill_interpolate(
     count is bounded by (time span / interval) per group — a property of
     the calendar, not the data. The per-group ordered windows scan that
     bounded series, so a trillion-event group costs the same as a
-    thousand-event one past the first aggregation."""
+    thousand-event one past the first aggregation.
+
+    ``events``: (``event_type``, ``ts``, ``value``)."""
     from pyspark.sql import Window
 
     b = F.floor(
-        F.unix_timestamp(F.col(ts_col).cast("timestamp")) / interval_s
+        F.unix_timestamp(F.col("ts").cast("timestamp")) / interval_s
     ).cast("long")
     got = (
-        events.groupBy(F.col(group_col).alias("g"), b.alias("b"))
+        events.groupBy(F.col("event_type").alias("g"), b.alias("b"))
         .agg(
-            F.sum(F.floor(F.col(value_col) * 100).cast("long")).alias("c")
+            F.sum(F.floor(F.col("value") * 100).cast("long")).alias("c")
         )
     )
     rng = got.groupBy("g").agg(F.min("b").alias("lo"), F.max("b").alias("hi"))
@@ -156,7 +152,7 @@ def gapfill_interpolate(
     bn = F.first(present_b, ignorenulls=True).over(fwd)
     interp = vp + (vn - vp) * (F.col("b") - bp) / (bn - bp)
     return j.select(
-        F.col("g").alias(group_col),
+        F.col("g").alias("event_type"),
         (F.col("b") * interval_s).cast("long").alias("bucket_start"),
         F.round(
             F.when(F.col("c").isNotNull(), F.col("c").cast("double")).otherwise(
@@ -172,9 +168,6 @@ def funnel_steps(
     events: DataFrame,
     steps: list[str],
     window_s: int = 86400,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Ordered funnel conversion — the product-analytics staple (view →
     click → purchase): for every key, how far through the ordered step
@@ -193,14 +186,16 @@ def funnel_steps(
     each joining against a step table that only SHRINKS (conversion
     funnels monotonically narrow, so later joins are broadcast-sized in
     practice); k is the funnel length, a constant. This beats the
-    collect-per-user fold whenever one user can hold millions of events."""
+    collect-per-user fold whenever one user can hold millions of events.
+
+    ``events``: (``user_id``, ``event_type``, ``ts``)."""
     if not steps:
         raise ValueError("funnel_steps: steps must be non-empty")
     prev = None
     step_ts = []
     for i, st in enumerate(steps):
-        f = events.filter(F.col(type_col) == st).select(
-            F.col(key_col).alias("_k"), F.col(ts_col).alias("_t")
+        f = events.filter(F.col("event_type") == st).select(
+            F.col("user_id").alias("_k"), F.col("ts").alias("_t")
         )
         if i == 0:
             s = f.groupBy("_k").agg(F.min("_t").alias("_t0"))
@@ -220,7 +215,7 @@ def funnel_steps(
             )
         prev = s
         step_ts.append(s)
-    out = events.select(F.col(key_col).alias("_k")).distinct()
+    out = events.select(F.col("user_id").alias("_k")).distinct()
     for s in step_ts:
         out = out.join(s, "_k", "left")
     reached = sum(
@@ -231,23 +226,18 @@ def funnel_steps(
         *[F.col(f"_t{i}") for i in reversed(range(len(steps)))]
     )
     return out.select(
-        F.col("_k").alias(key_col),
+        F.col("_k").alias("user_id"),
         reached.alias("steps_reached"),
         F.col("_t0").alias("first_step_ts"),
         last_ts.alias("last_reached_ts"),
     )
 
 
-def cohort_retention(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    bucket_days: int = 7,
-) -> DataFrame:
+def cohort_retention(events: DataFrame) -> DataFrame:
     """Cohort retention — funnel analysis's sibling and the other
     product-analytics staple: group keys by their first-activity bucket
     (the cohort), then count how many of each cohort are still active
-    0, 1, 2, … buckets later. Buckets are epoch-day // ``bucket_days``
+    0, 1, 2, … buckets later. Buckets are epoch-day // 7
     (pure integer arithmetic — engine-exact, no ISO-week calendar
     ambiguity).
 
@@ -260,19 +250,21 @@ def cohort_retention(
     are a key-keyed MIN agg; the retention matrix is one
     groupBy(cohort, offset) COUNT DISTINCT over the already-collapsed
     activity rows. Output is |cohorts| × |offsets| — calendar-bounded,
-    tiny."""
+    tiny.
+
+    ``events``: (``user_id``, ``ts``)."""
     day = F.floor(
-        F.unix_timestamp(F.col(ts_col).cast("timestamp")) / 86400
+        F.unix_timestamp(F.col("ts").cast("timestamp")) / 86400
     ).cast("long")
-    wk = F.floor(day / bucket_days).cast("long")
+    wk = F.floor(day / 7).cast("long")
     acts = (
-        events.select(F.col(key_col).alias("_k"), wk.alias("_w")).distinct()
+        events.select(F.col("user_id").alias("_k"), wk.alias("_w")).distinct()
     )
     cohorts = acts.groupBy("_k").agg(F.min("_w").alias("_cw"))
     return (
         acts.join(cohorts, "_k")
         .groupBy(
-            (F.col("_cw") * bucket_days).alias("cohort_start_day"),
+            (F.col("_cw") * 7).alias("cohort_start_day"),
             (F.col("_w") - F.col("_cw")).alias("bucket_offset"),
         )
         .agg(F.countDistinct("_k").alias("n_users"))
@@ -285,8 +277,6 @@ def rate_anomaly(
     trailing: int = 24,
     min_points: int = 8,
     threshold: float = 3.0,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Event-rate anomaly detection: z-score of each time bucket's count
     against the TRAILING ``trailing`` observed buckets of the same key
@@ -313,12 +303,14 @@ def rate_anomaly(
     BUCKETED series — one row per interval per key, calendar-bounded
     (8 760 rows/key/year at hourly grain) no matter how many trillions
     of raw events fed it. Key cardinality, not corpus size, sets the
-    window parallelism."""
+    window parallelism.
+
+    ``events``: (``event_type``, ``ts``)."""
     bucket = F.floor(
-        F.unix_timestamp(F.col(ts_col).cast("timestamp")) / interval_s
+        F.unix_timestamp(F.col("ts").cast("timestamp")) / interval_s
     ).cast("long")
     counts = (
-        events.groupBy(F.col(key_col).alias("key"), bucket.alias("bucket"))
+        events.groupBy(F.col("event_type").alias("key"), bucket.alias("bucket"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
     frame = (
@@ -355,13 +347,7 @@ def rate_anomaly(
     )
 
 
-def transition_matrix(
-    events: DataFrame,
-    key_col: str = "user_id",
-    state_col: str = "event_type",
-    ts_col: str = "ts",
-    order_col: str = "event_id",
-) -> DataFrame:
+def transition_matrix(events: DataFrame) -> DataFrame:
     """First-order Markov transition counts over per-key event sequences:
     (src, dst, n, ppm) where ppm is the integer parts-per-million share
     of transitions leaving ``src`` (integer division — float-free, so
@@ -373,14 +359,16 @@ def transition_matrix(
     pairing (same price as sessionize/scd2), then a partial+final hash
     aggregate on (src, dst) — output is |states|², tiny. The per-src
     totals re-aggregate from the already-collapsed (src, dst) counts,
-    never from raw events."""
-    w = Window.partitionBy(key_col).orderBy(ts_col, order_col)
+    never from raw events.
+
+    ``events``: (``user_id``, ``event_type``, ``ts``, ``event_id``)."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         events.select(
-            F.col(key_col),
-            F.col(state_col).alias("src"),
-            F.col(ts_col),
-            F.col(order_col),
+            F.col("user_id"),
+            F.col("event_type").alias("src"),
+            F.col("ts"),
+            F.col("event_id"),
         )
         .withColumn("dst", F.lead("src").over(w))
         .where(F.col("dst").isNotNull())
@@ -398,13 +386,7 @@ def transition_matrix(
     )
 
 
-def scd2_intervals(
-    events: DataFrame,
-    key_col: str = "user_id",
-    attr_col: str = "event_type",
-    ts_col: str = "ts",
-    order_col: str = "event_id",
-) -> DataFrame:
+def scd2_intervals(events: DataFrame) -> DataFrame:
     """Build a slowly-changing-dimension (SCD type 2) history from an
     event stream: per key, collapse consecutive events with the SAME
     attribute value into one validity interval, opening a new interval
@@ -415,45 +397,39 @@ def scd2_intervals(
     Returns (key, attr, valid_from, valid_to, is_current): valid_from
     the first event ts carrying the value, valid_to the next change's
     ts (exclusive, NULL while current). Ordering ties on ``ts`` break
-    by ``order_col`` so the history is deterministic.
+    by ``event_id`` so the history is deterministic.
 
     100 TB shape: ONE shuffle by key + per-key sort (the same price as
     the as-of join itself); change detection and interval close are
     lag/lead over that sort — no self-join, no state. Per-key row
     counts are bounded by key activity, with the pipeline's standard
-    salting defense if a key is pathologically hot."""
+    salting defense if a key is pathologically hot.
+
+    ``events``: (``user_id``, ``event_type``, ``ts``, ``event_id``)."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(key_col).orderBy(ts_col, order_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     changed = (
-        events.select(key_col, attr_col, ts_col, order_col)
-        .withColumn("_prev", F.lag(attr_col).over(w))
+        events.select("user_id", "event_type", "ts", "event_id")
+        .withColumn("_prev", F.lag("event_type").over(w))
         .filter(
-            F.col("_prev").isNull() | (F.col(attr_col) != F.col("_prev"))
+            F.col("_prev").isNull() | (F.col("event_type") != F.col("_prev"))
         )
     )
-    w2 = Window.partitionBy(key_col).orderBy(ts_col, order_col)
+    w2 = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (
-        changed.withColumn("_to", F.lead(ts_col).over(w2))
+        changed.withColumn("_to", F.lead("ts").over(w2))
         .select(
-            F.col(key_col),
-            F.col(attr_col).alias("attr"),
-            F.col(ts_col).alias("valid_from"),
+            F.col("user_id"),
+            F.col("event_type").alias("attr"),
+            F.col("ts").alias("valid_from"),
             F.col("_to").alias("valid_to"),
             F.col("_to").isNull().alias("is_current"),
         )
     )
 
 
-def sequence_ngrams(
-    events: DataFrame,
-    n: int = 3,
-    top_k: int = 20,
-    key_col: str = "user_id",
-    state_col: str = "event_type",
-    ts_col: str = "ts",
-    order_col: str = "event_id",
-) -> DataFrame:
+def sequence_ngrams(events: DataFrame, n: int = 3, top_k: int = 20) -> DataFrame:
     """Top sequential n-gram patterns over per-key ordered event streams:
     the ``n``-step generalization of :func:`transition_matrix` (which is
     the n=2 row of this). Returns (g0..g{n-1}, cnt) for the ``top_k`` most
@@ -464,16 +440,18 @@ def sequence_ngrams(
     (the same exchange sessionize/scd2/transition_matrix already pay — in
     a real pipeline these share it), the gram counts collapse in a partial
     +final hash aggregate keyed on at most |states|^n values, and top_k is
-    TakeOrderedAndProject (per-partition heap, never a global sort)."""
+    TakeOrderedAndProject (per-partition heap, never a global sort).
+
+    ``events``: (``user_id``, ``event_type``, ``ts``, ``event_id``)."""
     if n < 2:
         raise ValueError(f"n must be >= 2: {n}")
     if top_k < 1:
         raise ValueError(f"top_k must be >= 1: {top_k}")
-    w = Window.partitionBy(key_col).orderBy(ts_col, order_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     grams = events.select(
-        F.col(state_col).alias("g0"),
+        F.col("event_type").alias("g0"),
         *[
-            F.lead(state_col, i).over(w).alias(f"g{i}")
+            F.lead("event_type", i).over(w).alias(f"g{i}")
             for i in range(1, n)
         ],
     ).where(F.col(f"g{n-1}").isNotNull())

@@ -26,11 +26,10 @@ def merge_changes(
     changes: DataFrame,
     key_col: str,
     order_cols: list[str],
-    op_col: str = "op",
 ) -> DataFrame:
     """Latest-wins merge of ``changes`` into ``base``.
 
-    ``changes`` carries ``key_col``, ``op_col`` ('U' upsert / 'D' delete),
+    ``changes`` carries ``key_col``, ``op`` ('U' upsert / 'D' delete),
     the ``order_cols`` sequence (ties must be broken by the caller's last
     order column — use a unique id), and the full payload schema of
     ``base``. Per key, only the LAST change by ``order_cols`` applies:
@@ -46,7 +45,7 @@ def merge_changes(
         *[F.col(c).desc() for c in order_cols]
     )
     latest = (
-        changes.select(key_col, op_col, *order_cols, *payload)
+        changes.select(key_col, "op", *order_cols, *payload)
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn", *order_cols)
@@ -55,12 +54,12 @@ def merge_changes(
     b = base.alias("b")
     c = latest.alias("c")
     joined = b.join(c, on=F.col(f"b.{key_col}") == F.col(f"c.{key_col}"), how="full_outer")
-    take_change = F.col(f"c.{op_col}").isNotNull()
+    take_change = F.col(f"c.op").isNotNull()
     return (
         joined
         # a latest 'D' deletes whether or not the key exists in base; a
         # latest 'U' upserts; no change -> base row survives untouched
-        .filter(~(take_change & (F.col(f"c.{op_col}") == "D")))
+        .filter(~(take_change & (F.col(f"c.op") == "D")))
         .select(
             F.coalesce(F.col(f"b.{key_col}"), F.col(f"c.{key_col}")).alias(key_col),
             *[

@@ -81,20 +81,20 @@ def classifier_score(
     df: DataFrame,
     weights=None,
     buckets: int = DEFAULT_BUCKETS,
-    text_col: str = "text",
-    key_col: str = "doc_id",
     threshold: float = 0.0,
 ) -> DataFrame:
     """Score every document with the hashed linear model and emit
     ``(key, n_grams, score, keep)`` where ``keep = score > threshold``.
     Map-only in both modes: the plan has no Exchange, no explode — one
     fused expression (JVM mode) or one Arrow-batched pandas UDF whose
-    closure broadcasts the weight vector (production mode)."""
+    closure broadcasts the weight vector (production mode).
+
+    ``df``: (``doc_id``, ``text``)."""
     if weights is None:
         # NULL text scores like an empty document (n_grams=0, score=0.0)
         # in BOTH paths — without the coalesce, ANSI size(NULL) would
         # leak a NULL n_grams the UDF path can't reproduce
-        toks = tokens_expr(F.coalesce(F.col(text_col), F.lit("")))
+        toks = tokens_expr(F.coalesce(F.col("text"), F.lit("")))
         grams = grams_expr(toks)
         n = F.size(grams)
         total = F.aggregate(
@@ -105,7 +105,7 @@ def classifier_score(
         )
         score = F.when(n > 0, total / n).otherwise(F.lit(0.0))
         scored = df.select(
-            F.col(key_col),
+            F.col("doc_id"),
             n.alias("n_grams"),
             score.alias("score"),
         )
@@ -151,8 +151,8 @@ def classifier_score(
             return pd.DataFrame({"n_grams": n_out, "score": s_out})
 
         scored = df.select(
-            F.col(key_col), _score(F.col(text_col)).alias("_s")
-        ).select(key_col, "_s.n_grams", "_s.score")
+            F.col("doc_id"), _score(F.col("text")).alias("_s")
+        ).select("doc_id", "_s.n_grams", "_s.score")
 
     return scored.select(
         "*", (F.col("score") > F.lit(threshold)).alias("keep")

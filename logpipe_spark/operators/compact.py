@@ -40,7 +40,6 @@ def compact_parquet_dir(
     spark: SparkSession,
     src_dir: str,
     target_bytes: int = 128 << 20,
-    min_files: int = 2,
 ) -> dict:
     """Rewrite a directory of small parquet files into
     ``ceil(total_bytes / target_bytes)`` files of ~``target_bytes`` each
@@ -50,7 +49,7 @@ def compact_parquet_dir(
     (files_before, files_after, bytes_before, bytes_after, rows).
 
     No-op (files_after == files_before) when the directory already has
-    fewer than ``min_files`` files or is already at/under one target
+    fewer than 2 files or is already at/under one target
     file per existing file. Scale note: the rewrite is one distributed
     read + repartition + write — the repartition is a full shuffle of
     the directory's data, which is the point (it is how rows move into
@@ -59,7 +58,7 @@ def compact_parquet_dir(
     how large the whole corpus is."""
     files = parquet_files(src_dir)
     bytes_before = sum(os.path.getsize(f) for f in files)
-    if len(files) < min_files:
+    if len(files) < 2:
         return {
             "files_before": len(files), "files_after": len(files),
             "bytes_before": bytes_before, "bytes_after": bytes_before,

@@ -29,11 +29,11 @@ from logpipe_spark.operators.dedup import (
 )
 
 
-def split_bucket(key: Column, salt: str = "split", buckets: int = 10000) -> Column:
-    """Deterministic per-key bucket in [0, buckets): md5-derived so any
+def split_bucket(key: Column, salt: str = "split") -> Column:
+    """Deterministic per-key bucket in [0, 10000): md5-derived so any
     engine reproduces it (never RAND() — resplits must be stable across
     runs, engines, and row order)."""
-    return base_hash60(F.concat(F.lit(salt + ":"), key.cast("string"))) % buckets
+    return base_hash60(F.concat(F.lit(salt + ":"), key.cast("string"))) % 10000
 
 
 def hash_split(
@@ -65,7 +65,6 @@ def hash_split(
 
 def corpus_filter(
     docs: DataFrame,
-    text_col: str = "text",
     min_chars: int = 100,
     max_chars: int = 1_000_000,
     min_tokens: int = 10,
@@ -80,8 +79,10 @@ def corpus_filter(
 
     All rules are single-pass JVM expressions over ``text``; the rule
     order is the documented evaluation order (cheap length checks before
-    the regex)."""
-    t = F.col(text_col)
+    the regex).
+
+    ``docs``: (``text``)."""
+    t = F.col("text")
     toks = _tokens(t)
     n_chars = F.length(t)
     n_tokens = F.size(toks)
@@ -116,8 +117,6 @@ def sequence_pack(
     docs: DataFrame,
     budget: int = 512,
     n_shards: int = 8,
-    text_col: str = "text",
-    key_col: str = "doc_id",
     token_count_col: Column | None = None,
 ) -> DataFrame:
     """Next-fit sequence packing: assign docs to ``pack_id`` bins so each
@@ -143,15 +142,17 @@ def sequence_pack(
     expression — e.g. ``bpe_token_count(F.col("text"), DEFAULT_MERGES)``
     from ``functions/bpe.py`` — and bins are filled in exact tokenizer
     tokens instead of whitespace words. The packing kernel is unchanged
-    (it only ever sees integer counts)."""
+    (it only ever sees integer counts).
+
+    ``docs``: (``doc_id``, ``text``)."""
     toks = (
         token_count_col.cast("int")
         if token_count_col is not None
-        else F.size(_tokens(F.col(text_col))).cast("int")
+        else F.size(_tokens(F.col("text"))).cast("int")
     )
     keyed = docs.select(
-        F.col(key_col).cast("long").alias("doc_id"),
-        (base_hash60(F.col(key_col).cast("string")) % n_shards)
+        F.col("doc_id").cast("long").alias("doc_id"),
+        (base_hash60(F.col("doc_id").cast("string")) % n_shards)
         .cast("int")
         .alias("shard"),
         toks.alias("n_tokens"),
@@ -181,8 +182,6 @@ def decontaminate(
     eval_docs: DataFrame,
     n: int = 8,
     min_overlap: int = 3,
-    text_col: str = "text",
-    key_col: str = "doc_id",
 ) -> DataFrame:
     """Benchmark decontamination: flag corpus docs whose text shares
     ``min_overlap``+ distinct ``n``-gram token shingles with ANY doc in the
@@ -202,14 +201,16 @@ def decontaminate(
 
     Returns one row per corpus doc: ``n_shingles`` (distinct), ``n_overlap``
     (distinct shingles shared with the eval set), and ``contaminated``.
-    Docs also present in ``eval_docs`` (matched by ``key_col``) are excluded
-    from the output — they are the benchmark, not candidates."""
+    Docs also present in ``eval_docs`` (matched by ``doc_id``) are excluded
+    from the output — they are the benchmark, not candidates.
+
+    ``docs`` and ``eval_docs``: (``doc_id``, ``text``)."""
     corpus = docs.select(
-        F.col(key_col).alias("doc_id"),
-        F.explode_outer(_shingles(F.col(text_col), n)).alias("span"),
+        F.col("doc_id"),
+        F.explode_outer(_shingles(F.col("text"), n)).alias("span"),
     )
-    ev = _eval_shingles(eval_docs, n, text_col).withColumn("_hit", F.lit(1))
-    ev_keys = eval_docs.select(F.col(key_col).alias("doc_id"))
+    ev = _eval_shingles(eval_docs, n).withColumn("_hit", F.lit(1))
+    ev_keys = eval_docs.select(F.col("doc_id"))
     return (
         corpus.join(F.broadcast(ev), "span", "left")
         .groupBy("doc_id")
@@ -234,13 +235,7 @@ HASH_SPACE = 1 << 60
 DEFAULT_WINDOW_CAP = 1 << 16
 
 
-def remove_eval_spans(
-    docs: DataFrame,
-    eval_docs: DataFrame,
-    n: int = 8,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-) -> DataFrame:
+def remove_eval_spans(docs: DataFrame, eval_docs: DataFrame, n: int = 8) -> DataFrame:
     """Span-level decontamination — the surgical half of the hygiene pass
     whose doc-level flag is :func:`decontaminate`: instead of dropping a
     lightly-contaminated document outright, REMOVE every token position
@@ -259,9 +254,11 @@ def remove_eval_spans(
     corpus-sized span table never shuffles by span at all. The only
     corpus shuffles are (doc, position) distinct-dedup of covered
     positions and the id-keyed reassembly groupBy — both O(token
-    positions of CONTAMINATED docs), not of the corpus."""
-    ev = F.broadcast(_eval_shingles(eval_docs, n, text_col))
-    return _drop_covered(docs, n, text_col, key_col, lambda _spans: ev)
+    positions of CONTAMINATED docs), not of the corpus.
+
+    ``docs``: (``doc_id``, ``text``); ``eval_docs``: (``text``)."""
+    ev = F.broadcast(_eval_shingles(eval_docs, n))
+    return _drop_covered(docs, n, lambda _spans: ev)
 
 
 def _prefilter_margin(keep_n: int) -> float:
@@ -307,8 +304,6 @@ def mix_sample(
     docs: DataFrame,
     targets: dict[str, float],
     group_col: str = "source",
-    key_col: str = "doc_id",
-    salt: str = "mix",
 ) -> DataFrame:
     """Mixture sampling: subsample the listed groups (domains / sources /
     languages) so their relative sizes match ``targets`` — the
@@ -337,7 +332,9 @@ def mix_sample(
     broadcast keep maps.
     Only the ~keep_g-row sliver of a dominant group is ever sorted; a lazy
     guard raises on the (cryptographically unlikely) prefilter shortfall
-    instead of under-sampling."""
+    instead of under-sampling.
+
+    ``docs``: (``doc_id``, ``group_col``); the hash salt is ``"mix"``."""
     from fractions import Fraction
     from math import lcm
 
@@ -350,8 +347,7 @@ def mix_sample(
     denom = lcm(*(fr.denominator for fr in fracs.values()))
     parts = {g: int(fr * denom) for g, fr in fracs.items()}
     return _mix_core(
-        docs, list(targets), lambda counts: parts, group_col, key_col,
-        salt, "mix_sample",
+        docs, list(targets), lambda counts: parts, group_col, "mix", "mix_sample",
     )
 
 
@@ -360,8 +356,6 @@ def temperature_mix(
     alpha: float = 0.3,
     groups: list[str] | None = None,
     group_col: str = "lang",
-    key_col: str = "doc_id",
-    salt: str = "tmix",
 ) -> DataFrame:
     """Temperature (α) sampling: flatten a skewed group distribution so
     group g's share is ∝ n_g^α — the multilingual rebalancing rule from
@@ -381,7 +375,9 @@ def temperature_mix(
 
     Same 100 TB plan as ``mix_sample``: tiny per-group count collect,
     hash-threshold skew prefilter, windowed rank over only the keep-sized
-    sliver of each group. ``groups=None`` rebalances every group present."""
+    sliver of each group. ``groups=None`` rebalances every group present.
+
+    ``docs``: (``doc_id``, ``group_col``); the hash salt is ``"tmix"``."""
     from math import floor
 
     if not (0.0 <= alpha <= 1.0):
@@ -391,7 +387,7 @@ def temperature_mix(
         return {g: max(1, floor(n**alpha * 1e6 + 0.5)) for g, n in counts.items()}
 
     return _mix_core(
-        docs, groups, parts_fn, group_col, key_col, salt, "temperature_mix"
+        docs, groups, parts_fn, group_col, "tmix", "temperature_mix"
     )
 
 
@@ -400,7 +396,6 @@ def _mix_core(
     groups: list[str] | None,
     parts_fn,
     group_col: str,
-    key_col: str,
     salt: str,
     op_name: str,
 ) -> DataFrame:
@@ -413,7 +408,7 @@ def _mix_core(
     member = (
         F.col(group_col).isin(groups) if groups is not None else F.lit(True)
     )
-    h = base_hash60(F.concat(F.lit(salt + ":"), F.col(key_col).cast("string")))
+    h = base_hash60(F.concat(F.lit(salt + ":"), F.col("doc_id").cast("string")))
     stats = {
         r["g"]: (r["n"], r["hmin"])
         for r in docs.filter(member)
@@ -466,7 +461,7 @@ def _mix_core(
             *[x for g, v in d.items() for x in (F.lit(g), F.lit(v))]
         )[F.col(group_col)]
 
-    w = Window.partitionBy(group_col).orderBy(h.asc(), F.col(key_col).asc())
+    w = Window.partitionBy(group_col).orderBy(h.asc(), F.col("doc_id").asc())
     wg = Window.partitionBy(group_col)
     ranked = (
         docs.filter(member & (h <= _bmap(cutoff)))
@@ -483,8 +478,6 @@ def chunk_documents(
     docs: DataFrame,
     chunk_size: int = 512,
     stride: int | None = None,
-    text_col: str = "text",
-    key_col: str = "doc_id",
 ) -> DataFrame:
     """Split every document into fixed-size token windows — the context-
     window prep step that complements ``sequence_pack`` (packing joins
@@ -496,12 +489,14 @@ def chunk_documents(
     Per-row generate-and-explode: window starts are a JVM ``sequence``,
     each chunk a ``slice`` + ``concat_ws`` — one generator, no shuffle,
     no Python; at 100 TB this is a map-only stage whose output feeds
-    straight into the (sharded) packer or the tokenizer."""
+    straight into the (sharded) packer or the tokenizer.
+
+    ``docs``: (``doc_id``, ``text``)."""
     if stride is None:
         stride = chunk_size
     if not (1 <= stride <= chunk_size):
         raise ValueError(f"need 1 <= stride <= chunk_size, got {stride}/{chunk_size}")
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(F.col("text"))
     starts = F.sequence(F.lit(1), F.greatest(F.size(toks), F.lit(1)), F.lit(stride))
     chunks = F.filter(
         F.transform(
@@ -514,7 +509,7 @@ def chunk_documents(
         lambda c: F.size(c["toks"]) > 0,
     )
     ex = docs.select(
-        F.col(key_col).alias("doc_id"), F.explode(chunks).alias("c")
+        F.col("doc_id"), F.explode(chunks).alias("c")
     )
     return ex.select(
         "doc_id",
@@ -535,7 +530,7 @@ PII_PATTERNS = {
 }
 
 
-def pii_redact(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_redact(docs: DataFrame) -> DataFrame:
     """PII scrubbing: replace emails, IPv4 addresses, and +-prefixed phone
     numbers with typed placeholders (``<EMAIL>``/``<IP>``/``<PHONE>``) and
     count each category — the pre-training hygiene pass every published
@@ -548,8 +543,10 @@ def pii_redact(docs: DataFrame, text_col: str = "text") -> DataFrame:
     itself is ordered email → ipv4 → phone, which is part of the
     documented contract (a phone match never sees an already-redacted
     email's digits). Patterns are deliberately RE2-safe so external
-    engines reproduce the result bit for bit."""
-    t = F.col(text_col)
+    engines reproduce the result bit for bit.
+
+    ``docs``: (``text``)."""
+    t = F.col("text")
     redacted = F.regexp_replace(
         F.regexp_replace(
             F.regexp_replace(t, PII_PATTERNS["email"], "<EMAIL>"),
@@ -578,9 +575,7 @@ _CTRL_RE = r"[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]"
 _HWS_RE = r"[ \t]+"
 
 
-def clean_text(
-    docs: DataFrame, text_col: str = "text", out_col: str = "text_clean"
-) -> DataFrame:
+def clean_text(docs: DataFrame) -> DataFrame:
     """Unicode + whitespace text normalization — the first transform of
     every published cleaning recipe (C4, CCNet, Dolma all NFC- or
     NFKC-normalize before tokenizing, else ``é`` composed and ``e``+U+0301
@@ -606,27 +601,27 @@ def clean_text(
     zero shuffles, embarrassingly parallel at 100 TB; the pandas batch
     is string-in/string-out with no state. The DuckDB oracle mirrors
     step 1 with ``nfc_normalize`` (utf8proc) — NFC is a Unicode-stable
-    algorithm, so the two implementations agree byte-for-byte."""
+    algorithm, so the two implementations agree byte-for-byte.
+
+    ``docs``: (``text``); adds ``text_clean``."""
     nfc = F.pandas_udf(
         lambda s: s.map(
             lambda t: None if t is None else unicodedata.normalize("NFC", t)
         ),
         T.StringType(),
     )
-    t = F.regexp_replace(nfc(F.col(text_col)), _CTRL_RE, "")
+    t = F.regexp_replace(nfc(F.col("text")), _CTRL_RE, "")
     t = F.regexp_replace(t, r"\r\n?", "\n")
     t = F.regexp_replace(t, _HWS_RE, " ")
     t = F.regexp_replace(t, r" ?\n ?", "\n")
     cleaned = F.regexp_replace(t, r"^[ \n]+|[ \n]+$", "")
-    return docs.withColumn(out_col, cleaned)
+    return docs.withColumn("text_clean", cleaned)
 
 
 def _quota_prefiltered(
     docs: DataFrame,
     group_col: str,
     quota: int,
-    key_col: str,
-    salt: str,
 ) -> tuple[DataFrame, Column]:
     """The pre-window half of ``quota_sample``, factored out so tests can
     measure the sliver directly. Returns (prefiltered df carrying
@@ -634,7 +629,7 @@ def _quota_prefiltered(
     a broadcast-joined count aggregate (map-side partials, group keys
     only), NOT a driver collect — per-domain grouping can mean millions of
     groups."""
-    h = base_hash60(F.concat(F.lit(salt + ":"), F.col(key_col).cast("string")))
+    h = base_hash60(F.concat(F.lit("quota:"), F.col("doc_id").cast("string")))
     counts = (
         docs.select(F.col(group_col).alias("_g"), h.alias("_h"))
         .groupBy("_g")
@@ -670,8 +665,6 @@ def quota_sample(
     docs: DataFrame,
     group_col: str = "lang",
     quota: int = 100,
-    key_col: str = "doc_id",
-    salt: str = "quota",
 ) -> DataFrame:
     """Cap every group at ``quota`` docs — the over-representation fix
     (per-language / per-domain / per-source caps) a corpus runs after
@@ -681,7 +674,7 @@ def quota_sample(
     first-seen order: the chosen subset is invariant under repartitioning,
     engine changes, and corpus growth outside the group (a doc only drops
     out when enough new docs hash BELOW it inside its own group — the same
-    stability rule as ``hash_split``; ``salt`` namespaces independent
+    stability rule as ``hash_split``; the fixed salt ``"quota"`` namespaces
     sampling passes). Ties on the hash break by key, so the result is a
     total function of the group's key set.
 
@@ -696,11 +689,13 @@ def quota_sample(
     about which rows are selected (same hash, same order, and a lazy
     ``assert_true`` guard raises on the astronomically-unlikely shortfall
     instead of under-sampling), so results are bit-identical to the plain
-    window."""
+    window.
+
+    ``docs``: (``doc_id``, ``group_col``)."""
     from pyspark.sql import Window
 
-    pre, h = _quota_prefiltered(docs, group_col, quota, key_col, salt)
-    w = Window.partitionBy(group_col).orderBy(h.asc(), F.col(key_col).asc())
+    pre, h = _quota_prefiltered(docs, group_col, quota)
+    w = Window.partitionBy(group_col).orderBy(h.asc(), F.col("doc_id").asc())
     wg = Window.partitionBy(group_col)
     ranked = (
         pre.withColumn("_qrank", F.row_number().over(w))
@@ -757,7 +752,6 @@ def quantile_buckets(
     docs: DataFrame,
     score_col: str = "n_chars",
     k: int = 10,
-    key_col: str = "doc_id",
 ) -> DataFrame:
     """Assign every document to one of ``k`` quality buckets by exact
     VALUE quantiles of an integer score — the CCNet/RedPajama recipe of
@@ -781,7 +775,9 @@ def quantile_buckets(
     doc lengths, not doc counts); assignment is a map-side CASE chain
     over k-1 literal boundaries. No global sort, no window, no rank —
     the exact-quantile cost is the histogram, which is what makes this
-    survive a corpus 1000× larger with the same score domain."""
+    survive a corpus 1000× larger with the same score domain.
+
+    ``docs``: (``doc_id``, ``score_col``)."""
     if k < 2:
         raise ValueError(f"quantile_buckets: k must be >= 2, got {k}")
     s = F.col(score_col).cast("long")
@@ -812,18 +808,13 @@ def quantile_buckets(
     for b in boundaries:
         bucket = bucket + (s > F.lit(b)).cast("int")
     return docs.select(
-        F.col(key_col),
+        F.col("doc_id"),
         s.alias("score"),
         F.when(s.isNotNull(), bucket).alias("bucket"),
     )
 
 
-def corpus_diff(
-    old: DataFrame,
-    new: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-) -> DataFrame:
+def corpus_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Snapshot diff between two corpus versions — the audit step of an
     iterating data pipeline ("what did this cleaning pass actually
     change?"): per document key, classify the transition as 'added'
@@ -839,18 +830,20 @@ def corpus_diff(
     100 TB shape: ONE key-shuffled full-outer join of two key+16-byte-
     fingerprint projections (text never crosses the wire after the
     map-side hash); status is a map-side CASE. Counts by status —
-    ``.groupBy("status").count()`` — are the cheap audit summary."""
+    ``.groupBy("status").count()`` — are the cheap audit summary.
+
+    ``old`` and ``new``: (``doc_id``, ``text``)."""
     of = old.select(
-        F.col(key_col).alias("_k"),
-        bow_fingerprint(F.col(text_col)).alias("old_fingerprint"),
+        F.col("doc_id").alias("_k"),
+        bow_fingerprint(F.col("text")).alias("old_fingerprint"),
     )
     nf = new.select(
-        F.col(key_col).alias("_k"),
-        bow_fingerprint(F.col(text_col)).alias("new_fingerprint"),
+        F.col("doc_id").alias("_k"),
+        bow_fingerprint(F.col("text")).alias("new_fingerprint"),
     )
     j = of.join(nf, "_k", "full_outer")
     return j.select(
-        F.col("_k").alias(key_col),
+        F.col("_k").alias("doc_id"),
         F.when(F.col("old_fingerprint").isNull(), F.lit("added"))
         .when(F.col("new_fingerprint").isNull(), F.lit("removed"))
         .when(
@@ -863,12 +856,7 @@ def corpus_diff(
     )
 
 
-def split_leak_check(
-    docs: DataFrame,
-    split_col: str = "split",
-    text_col: str = "text",
-    key_col: str = "doc_id",
-) -> DataFrame:
+def split_leak_check(docs: DataFrame) -> DataFrame:
     """Cross-split content-leakage audit — the check every train/val/test
     split needs and almost nobody runs: :func:`hash_split` assigns by
     KEY (correctly — stable under corpus edits), but duplicate CONTENT
@@ -883,10 +871,12 @@ def split_leak_check(
 
     100 TB shape: ONE map-combinable groupBy(fingerprint) over
     (fingerprint, split) — 16 + ~5 bytes per row on the wire; output is
-    leaking fingerprints only (≈ duplicate groups × leak rate, tiny)."""
+    leaking fingerprints only (≈ duplicate groups × leak rate, tiny).
+
+    ``docs``: (``split``, ``text``)."""
     base = docs.select(
-        bow_fingerprint(F.col(text_col)).alias("fingerprint"),
-        F.col(split_col).alias("_s"),
+        bow_fingerprint(F.col("text")).alias("fingerprint"),
+        F.col("split").alias("_s"),
     )
     return (
         base.groupBy("fingerprint")
@@ -903,10 +893,6 @@ def cluster_split(
     docs: DataFrame,
     pairs: DataFrame,
     fractions: dict[str, float] | None = None,
-    key_col: str = "doc_id",
-    salt: str = "split",
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
 ) -> DataFrame:
     """Leakage-safe train/val/test assignment: the split unit is the
     NEAR-DUP CLUSTER, not the document. ``hash_split`` alone guarantees a
@@ -925,10 +911,13 @@ def cluster_split(
     the pair graph has at most ``dedup._DRIVER_CC_EDGES`` edges (a local
     relation, broadcast into the join); the docs⋈labels join is keyed on
     the doc id, and the split itself is a map-side md5 expression — no new
-    shuffle class beyond what dedup already pays."""
+    shuffle class beyond what dedup already pays.
+
+    ``docs``: (``doc_id``, ...); ``pairs``: (``doc_a``, ``doc_b``); the
+    split hash salt is ``"split"``."""
     from logpipe_spark.operators.dedup import connected_components_star
 
-    comp = connected_components_star(pairs, a_col=a_col, b_col=b_col)
+    comp = connected_components_star(pairs, a_col="doc_a", b_col="doc_b")
     # split_group is a STRING: coalescing the component with the raw key
     # must work for any key type (string doc ids would fail a cast to
     # long under ANSI, or silently null it without), and the split hash
@@ -936,17 +925,17 @@ def cluster_split(
     # assignment is bit-identical to hashing the long form.
     labeled = (
         docs.alias("d")
-        .join(comp, F.col(f"d.{key_col}") == comp.node, "left")
+        .join(comp, F.col("d.doc_id") == comp.node, "left")
         .select(
             "d.*",
             F.coalesce(
                 F.col("component").cast("string"),
-                F.col(f"d.{key_col}").cast("string"),
+                F.col("d.doc_id").cast("string"),
             ).alias("split_group"),
         )
     )
     return hash_split(
-        labeled, fractions, key_col="split_group", salt=salt
+        labeled, fractions, key_col="split_group"
     )
 
 
@@ -954,7 +943,6 @@ def weighted_sample(
     docs: DataFrame,
     weight_col: str,
     k: int,
-    key_col: str = "doc_id",
     salt: str = "ws",
 ) -> DataFrame:
     """Weighted sampling WITHOUT replacement of ``k`` rows, inclusion
@@ -973,13 +961,15 @@ def weighted_sample(
     100 TB shape: orderBy(sample_key).limit(k) compiles to
     TakeOrderedAndProject — a bounded per-partition heap of k rows
     merged once, never a global sort, never a window. Non-positive or
-    NULL weights are excluded (P ∝ w requires w > 0)."""
+    NULL weights are excluded (P ∝ w requires w > 0).
+
+    ``docs``: (``doc_id``, ``weight_col``)."""
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
     from logpipe_spark.operators.dedup import base_hash60
 
     h = base_hash60(
-        F.concat(F.lit(salt + ":"), F.col(key_col).cast("string"))
+        F.concat(F.lit(salt + ":"), F.col("doc_id").cast("string"))
     )
     u = (h.cast("double") + 0.5) / float(1 << 60)
     key = -F.log(u) / F.col(weight_col).cast("double")

@@ -84,9 +84,11 @@ def _shingles(text: Column, n: int) -> Column:
 # exact + fingerprint
 # ---------------------------------------------------------------------------
 
-def exact_dedup_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Corpus-level exact-duplicate stats via md5 hash-groupBy."""
-    h = F.md5(F.col(text_col))
+def exact_dedup_stats(docs: DataFrame) -> DataFrame:
+    """Corpus-level exact-duplicate stats via md5 hash-groupBy.
+
+    ``docs``: (``text``)."""
+    h = F.md5(F.col("text"))
     return docs.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct(h).alias("n_unique"),
@@ -94,13 +96,15 @@ def exact_dedup_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
-    """Keep one row per exact text (lowest key wins — deterministic)."""
+def exact_dedup(docs: DataFrame) -> DataFrame:
+    """Keep one row per exact text (lowest key wins — deterministic).
+
+    ``docs``: (``doc_id``, ``text``)."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(F.md5(F.col(text_col)))
+    w = Window.partitionBy(F.md5(F.col("text")))
     return (
-        docs.withColumn("_keep", F.min(key_col).over(w) == F.col(key_col))
+        docs.withColumn("_keep", F.min("doc_id").over(w) == F.col("doc_id"))
         .filter(F.col("_keep"))
         .drop("_keep")
     )
@@ -114,17 +118,19 @@ def bow_fingerprint(text: Column) -> Column:
     return F.md5(F.array_join(F.array_sort(F.array_distinct(_tokens(text))), " "))
 
 
-def fingerprint_dedup(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
+def fingerprint_dedup(docs: DataFrame) -> DataFrame:
     """Near-dup groups under a bag-of-words fingerprint: md5 of the sorted
     distinct token set. Catches reorderings/duplicated-word edits that
-    exact dedup misses, still one hash-groupBy shuffle."""
-    fp = bow_fingerprint(F.col(text_col))
+    exact dedup misses, still one hash-groupBy shuffle.
+
+    ``docs``: (``doc_id``, ``text``)."""
+    fp = bow_fingerprint(F.col("text"))
     return (
-        docs.select(F.col(key_col), fp.alias("fingerprint"))
+        docs.select(F.col("doc_id"), fp.alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.min(key_col).alias("keeper_doc_id"),
+            F.min("doc_id").alias("keeper_doc_id"),
         )
         .filter(F.col("n_docs") > 1)
     )
@@ -189,14 +195,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def dedup_keep_list(
-    docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.8,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    max_shingle_freq: int = 1000,
-) -> DataFrame:
+def dedup_keep_list(docs: DataFrame, n: int = 3, threshold: float = 0.8) -> DataFrame:
     """End-to-end near-dup *decision* pass: (dup_doc, keeper) rows — every
     doc with a lower-keyed near-duplicate partner (token-n-gram Jaccard ≥
     threshold) is dropped in favor of its lowest-keyed partner.
@@ -205,24 +204,19 @@ def dedup_keep_list(
     candidate pair (not transitive closure — connected components would
     need an iterative join; for dedup the star rule over-keeps slightly,
     never over-drops). Plan: the inverted-index pair join of
-    ``ngram_jaccard_pairs`` + one groupBy — no new shuffle shapes."""
+    ``ngram_jaccard_pairs`` + one groupBy — no new shuffle shapes.
+
+    ``docs``: (``doc_id``, ``text``)."""
     pairs = ngram_jaccard_pairs(
-        docs, n=n, threshold=threshold, text_col=text_col, key_col=key_col,
-        max_shingle_freq=max_shingle_freq,
+        docs, n=n, threshold=threshold, text_col="text", key_col="doc_id",
+        max_shingle_freq=1000,
     )
     return pairs.groupBy(F.col("doc_b").alias("dup_doc")).agg(
         F.min("doc_a").alias("keeper")
     )
 
 
-def containment_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.9,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    max_shingle_freq: int = 1000,
-) -> DataFrame:
+def containment_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.9) -> DataFrame:
     """Asymmetric near-dup detection: (contained, container) pairs where
     the shingle-set containment C(A, B) = |A ∩ B| / |A| ≥ threshold.
 
@@ -235,12 +229,14 @@ def containment_pairs(
     doc_b"; containment is computed against the smaller set.
 
     Same plan as ``ngram_jaccard_pairs`` (both score ``_pair_overlaps``),
-    so the same cost envelope: no new shuffle shapes."""
+    so the same cost envelope: no new shuffle shapes.
+
+    ``docs``: (``doc_id``, ``text``)."""
     # orient: container = larger shingle set (ties: smaller key — doc_a <
     # doc_b always here, so the tie rule keeps doc_a as container)
     small_is_a = F.col("sz_a") < F.col("sz_b")
     return (
-        _pair_overlaps(docs, n, text_col, key_col, max_shingle_freq)
+        _pair_overlaps(docs, n, "text", "doc_id", 1000)
         .select(
             F.when(small_is_a, F.col("doc_a")).otherwise(F.col("doc_b")).alias("doc_a"),
             F.when(small_is_a, F.col("doc_b")).otherwise(F.col("doc_a")).alias("doc_b"),
@@ -364,9 +360,6 @@ def minhash_lsh_pairs(
     docs: DataFrame,
     num_hashes: int = 32,
     bands: int = 8,
-    n: int = 3,
-    text_col: str = "text",
-    key_col: str = "doc_id",
 ) -> DataFrame:
     """Candidate near-dup pairs via banded LSH over MinHash signatures.
 
@@ -376,9 +369,11 @@ def minhash_lsh_pairs(
     (≤ ~44 bytes; equality on it is *exactly* slice equality, so the SQL
     oracle reproduces the candidate set with zero collision risk — a
     64-bit rehash would only save a few shuffle bytes). Returns candidates
-    with the estimated Jaccard (matching signature fraction)."""
+    with the estimated Jaccard (matching signature fraction).
+
+    ``docs``: (``doc_id``, ``text``); signatures over 3-token shingles."""
     rows = num_hashes // bands
-    # docs with < n tokens would carry the identity signature [p, p, ...]:
+    # docs with < 3 tokens would carry the identity signature [p, p, ...]:
     # they have no shingles to be similar BY, yet every one of them would
     # collide with every other in EVERY band — k such docs fabricate
     # k(k-1)/2 est_jaccard=1.0 pairs for unrelated content AND pile onto
@@ -386,31 +381,31 @@ def minhash_lsh_pairs(
     # this path must not either. Filter on the cheap raw-text condition
     # BEFORE signature compute (an array-inequality filter on the
     # signature column costs a full re-evaluation of the hash fold).
-    docs = docs.filter(F.size(_tokens(F.col(text_col))) >= n)
-    sigs = minhash_signatures(docs, num_hashes, n, text_col, key_col)
+    docs = docs.filter(F.size(_tokens(F.col("text"))) >= 3)
+    sigs = minhash_signatures(docs, num_hashes, 3, "text", "doc_id")
     # candidate generation shuffles (band, bucket, id) rows only — carrying
     # the 32-long signature arrays through the join + distinct would move
     # every signature bands× through two exchanges; they re-attach below,
     # once per surviving distinct pair (same shape as
     # similarity.neardup_lsh_multiprobe)
-    banded = _band_rows(sigs, num_hashes, bands, key_col)
+    banded = _band_rows(sigs, num_hashes, bands, "doc_id")
 
     a = banded.alias("a")
     b_ = banded.alias("b")
     cand = (
         a.join(b_, ["band", "bucket"])
-        .filter(F.col(f"a.{key_col}") < F.col(f"b.{key_col}"))
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(
-            F.col(f"a.{key_col}").alias("doc_a"),
-            F.col(f"b.{key_col}").alias("doc_b"),
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
         )
         .distinct()
     )
     pairs = cand.join(
-        sigs.select(F.col(key_col).alias("doc_a"), F.col("signature").alias("sig_a")),
+        sigs.select(F.col("doc_id").alias("doc_a"), F.col("signature").alias("sig_a")),
         "doc_a",
     ).join(
-        sigs.select(F.col(key_col).alias("doc_b"), F.col("signature").alias("sig_b")),
+        sigs.select(F.col("doc_id").alias("doc_b"), F.col("signature").alias("sig_b")),
         "doc_b",
     )
     est = F.size(
@@ -507,31 +502,27 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def simhash_neardup_pairs(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    bucket_bits: int = 16,
-) -> DataFrame:
+def simhash_neardup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs via SimHash: candidates collide in the top-bits
     bucket (equi-join — the quadratic term is bounded per bucket), then
     verified with exact hamming distance ≤ ``max_hamming``.
 
     Shuffle key is the bucket (id + sketch are 16 bytes/row); like all the
     near-dup paths here, no cartesian anywhere. Note the recall contract:
-    a pair whose sketches differ inside the top ``bucket_bits`` lands in
-    different buckets and is missed — callers trade bucket_bits down (or
-    probe rotated sketches) for recall, exactly the MMDS trade."""
-    sk = simhash_buckets(docs, text_col, key_col, bucket_bits)
+    a pair whose sketches differ inside the top 16 bits lands in
+    different buckets and is missed — callers trade bucket bits down (or
+    probe rotated sketches) for recall, exactly the MMDS trade.
+
+    ``docs``: (``doc_id``, ``text``)."""
+    sk = simhash_buckets(docs, "text", "doc_id", 16)
     a = sk.alias("a")
     b = sk.alias("b")
     return (
         a.join(b, "bucket")
-        .filter(F.col(f"a.{key_col}") < F.col(f"b.{key_col}"))
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(
-            F.col(f"a.{key_col}").alias("doc_a"),
-            F.col(f"b.{key_col}").alias("doc_b"),
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
             hamming64(F.col("a.simhash"), F.col("b.simhash")).alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
@@ -724,13 +715,6 @@ def connected_components_star(
 # private core: _frequent, _eval_shingles, _rejoin, _drop_covered
 # ---------------------------------------------------------------------------
 
-def _pos_spans(text: Column, n: int) -> Column:
-    """Positional token n-grams WITH multiplicity (unlike ``_shingles``,
-    which distincts): one span per position, so per-doc counts measure how
-    much of the document is covered by duplicated material."""
-    return _ngrams(text, n)
-
-
 def _frequent(rows: DataFrame, value_col: str, min_docs: int) -> DataFrame:
     """The ``value_col`` values of ``(doc, value_col)`` rows that occur in
     ≥ ``min_docs`` DISTINCT docs, one column. distinct(doc, value) then
@@ -748,12 +732,12 @@ def _frequent(rows: DataFrame, value_col: str, min_docs: int) -> DataFrame:
     )
 
 
-def _eval_shingles(eval_docs: DataFrame, n: int, text_col: str) -> DataFrame:
+def _eval_shingles(eval_docs: DataFrame, n: int) -> DataFrame:
     """Distinct ``n``-gram shingles of an evaluation set as one ``span``
     column — the small, broadcast side of ``corpus.decontaminate`` and
     ``corpus.remove_eval_spans``."""
     return eval_docs.select(
-        F.explode(_shingles(F.col(text_col), n)).alias("span")
+        F.explode(_shingles(F.col("text"), n)).alias("span")
     ).distinct()
 
 
@@ -784,11 +768,7 @@ def _rejoin(
 
 
 def _drop_covered(
-    docs: DataFrame,
-    n: int,
-    text_col: str,
-    key_col: str,
-    drop_set: Callable[[DataFrame], DataFrame],
+    docs: DataFrame, n: int, drop_set: Callable[[DataFrame], DataFrame]
 ) -> DataFrame:
     """Span surgery: drop every token position covered by an ``n``-gram
     in the one-column ``span`` table ``drop_set(spans)`` — which may be
@@ -802,8 +782,8 @@ def _drop_covered(
     positions and distinct on (doc, position), the token positions
     left-anti join against them (keyed by (doc, pos)), then ``_rejoin``."""
     spans = docs.select(
-        F.col(key_col).alias("doc"),
-        F.posexplode(_pos_spans(F.col(text_col), n)).alias("pos0", "span"),
+        F.col("doc_id").alias("doc"),
+        F.posexplode(_ngrams(F.col("text"), n)).alias("pos0", "span"),
     ).select("doc", (F.col("pos0") + 1).alias("pos"), "span")
     covered = (
         spans.join(drop_set(spans), "span")
@@ -816,23 +796,17 @@ def _drop_covered(
         .distinct()
     )
     toks = docs.select(
-        F.col(key_col).alias("doc"),
-        F.posexplode(_tokens(F.col(text_col))).alias("tpos0", "tok"),
+        F.col("doc_id").alias("doc"),
+        F.posexplode(_tokens(F.col("text"))).alias("tpos0", "tok"),
     ).select("doc", (F.col("tpos0") + 1).alias("tpos"), "tok")
     return _rejoin(
-        docs.select(F.col(key_col).alias("doc_id")),
+        docs.select("doc_id"),
         toks.join(covered, ["doc", "tpos"], "left_anti"),
         "tpos", "tok", " ",
     )
 
 
-def dup_span_stats(
-    docs: DataFrame,
-    n: int = 8,
-    min_docs: int = 2,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-) -> DataFrame:
+def dup_span_stats(docs: DataFrame, n: int = 8, min_docs: int = 2) -> DataFrame:
     """Per-document duplicated-span statistics: how many of a doc's token
     n-gram positions carry a span that also appears in ≥ ``min_docs``
     DISTINCT documents. The span-level analogue of paragraph/line exact
@@ -849,10 +823,12 @@ def dup_span_stats(
     → groupBy(doc) counts (id-keyed). No pairwise term at all — unlike
     ngram_jaccard_pairs there is no per-shingle quadratic, so no
     hot-shingle cap is needed; the widest shuffle is O(total token
-    positions)."""
+    positions).
+
+    ``docs``: (``doc_id``, ``text``)."""
     spans = docs.select(
-        F.col(key_col).alias("doc"),
-        F.explode(_pos_spans(F.col(text_col), n)).alias("span"),
+        F.col("doc_id").alias("doc"),
+        F.explode(_ngrams(F.col("text"), n)).alias("span"),
     )
     dup = _frequent(spans, "span", min_docs).withColumn("is_dup", F.lit(1))
     per = (
@@ -864,7 +840,7 @@ def dup_span_stats(
         )
     )
     return (
-        docs.select(F.col(key_col).alias("doc_id"))
+        docs.select(F.col("doc_id"))
         .join(per.withColumnRenamed("doc", "doc_id"), "doc_id", "left")
         .select(
             "doc_id",
@@ -874,13 +850,7 @@ def dup_span_stats(
     )
 
 
-def remove_dup_spans(
-    docs: DataFrame,
-    n: int = 8,
-    min_docs: int = 2,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-) -> DataFrame:
+def remove_dup_spans(docs: DataFrame, n: int = 8, min_docs: int = 2) -> DataFrame:
     """Rewrite each document with cross-document duplicated spans REMOVED —
     the removal half of the FineWeb/RefinedWeb span-dedup recipe whose
     measurement half is :func:`dup_span_stats`. A token position is dropped
@@ -893,18 +863,18 @@ def remove_dup_spans(
 
     100 TB shape: strictly linear in token positions, no pairwise term.
     The widest shuffle is the span-keyed document frequency, O(total
-    token positions) — same bound as dup_span_stats."""
+    token positions) — same bound as dup_span_stats.
+
+    ``docs``: (``doc_id``, ``text``)."""
     return _drop_covered(
-        docs, n, text_col, key_col, lambda spans: _frequent(spans, "span", min_docs)
+        docs, n, lambda spans: _frequent(spans, "span", min_docs)
     )
 
 
 def dedup_lines(
     docs: DataFrame,
     min_docs: int = 2,
-    text_col: str = "text",
     key_col: str = "doc_id",
-    delim: str = "\n",
 ) -> DataFrame:
     """Line-level exact dedup — the C4 / RefinedWeb boilerplate recipe:
     any line (trimmed, case-preserved) that occurs in ≥ ``min_docs``
@@ -929,11 +899,13 @@ def dedup_lines(
     hot key in step 3's join — broadcast the dup set when it fits (it
     usually does: duplicated lines ≪ all lines), else AQE skew-join splits
     the probe side (on by default in this session, engagement tested in
-    test_plan_quality)."""
-    text = F.col(text_col)
+    test_plan_quality).
+
+    ``docs``: (``key_col``, ``text``); lines split on ``\\n``."""
+    text = F.col("text")
     lines = docs.select(
         F.col(key_col).alias("doc"),
-        F.posexplode(F.split(text, delim)).alias("pos0", "raw"),
+        F.posexplode(F.split(text, "\n")).alias("pos0", "raw"),
     ).select(
         "doc",
         (F.col("pos0") + 1).alias("pos"),
@@ -944,11 +916,11 @@ def dedup_lines(
         lines.filter(F.col("line") != F.lit("")), "line", min_docs
     ).withColumn("_dup", F.lit(1))
     # size(NULL) is NULL under ANSI and -1 without it; NULL text has no lines
-    n_lines = F.when(text.isNull(), F.lit(0)).otherwise(F.size(F.split(text, delim)))
+    n_lines = F.when(text.isNull(), F.lit(0)).otherwise(F.size(F.split(text, "\n")))
     return _rejoin(
         docs.select(F.col(key_col).alias("doc_id"), n_lines.alias("n_lines")),
         lines.join(dup, "line", "left").filter(F.col("_dup").isNull()),
-        "pos", "raw", delim,
+        "pos", "raw", "\n",
         F.col("n_lines").cast("long").alias("n_lines"),
     )
 
@@ -957,15 +929,12 @@ def neardup_keep_best(
     docs: DataFrame,
     pairs: DataFrame,
     quality_col: str = "n_chars",
-    key_col: str = "doc_id",
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
 ) -> DataFrame:
     """End-to-end near-dup canonicalization — the step every production
     dedup recipe (Lee et al. "Deduplicating Training Data", FineWeb,
     Dolma) runs AFTER candidate pairs are found: cluster the pair graph
     with connected components, then keep exactly ONE document per
-    cluster — the best by ``(quality_col DESC NULLS LAST, key_col ASC)``
+    cluster — the best by ``(quality_col DESC NULLS LAST, doc_id ASC)``
     — instead
     of ``dedup_keep_list``'s keep-lowest-id rule, which can throw away a
     long original in favor of a truncated copy.
@@ -990,20 +959,22 @@ def neardup_keep_best(
     skew (the agg is a MIN, partial-aggregated map-side even if one
     cluster holds millions of docs); final annotate is a component-keyed
     broadcast-or-shuffle join of winners (winner table has one row per
-    component, ≪ corpus)."""
+    component, ≪ corpus).
+
+    ``docs``: (``doc_id``, ``quality_col``); ``pairs``: (``doc_a``, ``doc_b``)."""
     # this operator's contract IS numeric (quality + keys cast to long),
     # so cast the edge endpoints too — connected_components_star itself
     # is type-preserving and would otherwise label string nodes
     comp = connected_components_star(
         pairs.select(
-            F.col(a_col).cast("long").alias(a_col),
-            F.col(b_col).cast("long").alias(b_col),
+            F.col("doc_a").cast("long").alias("doc_a"),
+            F.col("doc_b").cast("long").alias("doc_b"),
         ),
-        a_col=a_col,
-        b_col=b_col,
+        a_col="doc_a",
+        b_col="doc_b",
     )
     base = docs.select(
-        F.col(key_col).cast("long").alias("_id"),
+        F.col("doc_id").cast("long").alias("_id"),
         F.col(quality_col).cast("long").alias("_q"),
     )
     labeled = (
@@ -1024,35 +995,29 @@ def neardup_keep_best(
     return (
         labeled.join(winners, "component")
         .select(
-            F.col("_id").alias(key_col),
+            F.col("_id").alias("doc_id"),
             F.col("component").cast("long").alias("component"),
             (F.col("_id") == F.col("_keep_id")).alias("keep"),
         )
     )
 
 
-def fingerprint_index(
-    docs: DataFrame, text_col: str = "text", fp_col: str = "fingerprint"
-) -> DataFrame:
+def fingerprint_index(docs: DataFrame) -> DataFrame:
     """Distinct bag-of-words fingerprints of an accepted corpus — the
     bootstrap (and the persisted shape) of :func:`incremental_dedup`'s
-    index: one 32-char md5 string column, nothing else."""
-    fp = bow_fingerprint(F.col(text_col))
-    return docs.select(fp.alias(fp_col)).distinct()
+    index: one 32-char md5 string column, nothing else.
+
+    ``docs``: (``text``)."""
+    fp = bow_fingerprint(F.col("text"))
+    return docs.select(fp.alias("fingerprint")).distinct()
 
 
-def incremental_dedup(
-    new_docs: DataFrame,
-    index: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    fp_col: str = "fingerprint",
-) -> DataFrame:
+def incremental_dedup(new_docs: DataFrame, index: DataFrame) -> DataFrame:
     """Incremental (delta) dedup — the mode a 100 TB corpus actually
     runs in production: a new crawl batch arrives and must be deduped
     BOTH within itself AND against the already-accepted corpus, without
     re-reading that corpus's text. ``index`` is the persisted fingerprint
-    set of everything accepted so far (one ``fp_col`` string column —
+    set of everything accepted so far (one ``fingerprint`` string column —
     exactly what this function's keepers produce, so runs chain).
 
     The fingerprint is :func:`fingerprint_dedup`'s bag-of-words md5
@@ -1073,23 +1038,25 @@ def incremental_dedup(
     moving side is the (small) BATCH — the index side streams through
     the join without ever shuffling its text (it has none: 32-char
     fingerprints only). Priority rule matches a replay of the combined
-    corpus: an index hit outranks a batch winner."""
-    fp = bow_fingerprint(F.col(text_col))
-    base = new_docs.select(F.col(key_col), fp.alias("fingerprint"))
+    corpus: an index hit outranks a batch winner.
+
+    ``new_docs``: (``doc_id``, ``text``); ``index``: (``fingerprint``)."""
+    fp = bow_fingerprint(F.col("text"))
+    base = new_docs.select(F.col("doc_id"), fp.alias("fingerprint"))
     seen = (
-        index.select(F.col(fp_col).alias("fingerprint"))
+        index.select(F.col("fingerprint"))
         .distinct()
         .withColumn("_seen", F.lit(True))
     )
-    winners = base.groupBy("fingerprint").agg(F.min(key_col).alias("_win"))
+    winners = base.groupBy("fingerprint").agg(F.min("doc_id").alias("_win"))
     return (
         base.join(winners, "fingerprint")
         .join(seen, "fingerprint", "left")
         .select(
-            key_col,
+            "doc_id",
             "fingerprint",
             F.when(F.col("_seen"), F.lit("dup_in_index"))
-            .when(F.col(key_col) != F.col("_win"), F.lit("dup_in_batch"))
+            .when(F.col("doc_id") != F.col("_win"), F.lit("dup_in_batch"))
             .otherwise(F.lit("kept"))
             .alias("status"),
         )
@@ -1115,15 +1082,7 @@ def minhash_band_index(
     return _band_rows(sigs, num_hashes, bands, key_col)
 
 
-def incremental_neardup(
-    new_docs: DataFrame,
-    index: DataFrame,
-    num_hashes: int = 32,
-    bands: int = 8,
-    n: int = 3,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-) -> DataFrame:
+def incremental_neardup(new_docs: DataFrame, index: DataFrame) -> DataFrame:
     """Incremental NEAR-dup dedup — :func:`incremental_dedup`'s sibling
     for the fuzzy tier: classify every new-batch document against the
     persisted :func:`minhash_band_index` of the accepted corpus using
@@ -1136,7 +1095,7 @@ def incremental_neardup(
     distinct in n_index_partners), 'neardup_batch' (no index hit, but
     shares a bucket with a LOWER-keyed batch doc — the star keep-first
     rule, same over-keep/never-over-drop trade as
-    :func:`dedup_keep_list`), or 'kept'. Docs with < n tokens have no
+    :func:`dedup_keep_list`), or 'kept'. Docs with < 3 tokens have no
     shingles to be similar BY and are 'kept' with 0 partners (same
     short-doc guard as the pair path). Callers admit 'kept' docs and
     append ``minhash_band_index(kept)`` to the index — chaining batches
@@ -1145,32 +1104,36 @@ def incremental_neardup(
     100 TB shape: the batch's (band, bucket) rows join the index on a
     uniform-by-construction key (no skew); what shuffles is bands× the
     BATCH plus the index's ~44-byte rows — never any text; both
-    classifications are map-combinable groupBys of the batch."""
+    classifications are map-combinable groupBys of the batch.
+
+    ``new_docs``: (``doc_id``, ``text``); ``index``: (``doc_id``, ``band``,
+    ``bucket``), built with the defaults: 32 hashes in 8 bands over
+    3-token shingles."""
     batch = minhash_band_index(
-        new_docs, num_hashes, bands, n, text_col, key_col
+        new_docs, 32, 8, 3, "text", "doc_id"
     )
     idx = index.select(
-        F.col(key_col).alias("_old"), "band", "bucket"
+        F.col("doc_id").alias("_old"), "band", "bucket"
     ).distinct()
     hits = (
         batch.join(idx, ["band", "bucket"])
-        .groupBy(key_col)
+        .groupBy("doc_id")
         .agg(F.countDistinct("_old").alias("n_index_partners"))
     )
-    mins = batch.groupBy("band", "bucket").agg(F.min(key_col).alias("_min"))
+    mins = batch.groupBy("band", "bucket").agg(F.min("doc_id").alias("_min"))
     batch_dup = (
         batch.join(mins, ["band", "bucket"])
-        .filter(F.col(key_col) != F.col("_min"))
-        .select(key_col)
+        .filter(F.col("doc_id") != F.col("_min"))
+        .select("doc_id")
         .distinct()
         .withColumn("_bd", F.lit(True))
     )
     return (
-        new_docs.select(key_col)
-        .join(hits, key_col, "left")
-        .join(batch_dup, key_col, "left")
+        new_docs.select("doc_id")
+        .join(hits, "doc_id", "left")
+        .join(batch_dup, "doc_id", "left")
         .select(
-            key_col,
+            "doc_id",
             F.when(F.col("n_index_partners") > 0, F.lit("neardup_index"))
             .when(F.col("_bd"), F.lit("neardup_batch"))
             .otherwise(F.lit("kept"))

@@ -18,6 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: the dimension's join key, unless a caller of ``enrich`` names another
+DIM_KEYS = ["tool", "role"]
+
 
 def enrich(
     fact: DataFrame,
@@ -27,19 +30,16 @@ def enrich(
 ) -> DataFrame:
     """Broadcast-join `dim` onto `fact`; unmatched rows keep NULL enrich
     columns (accounted separately, not dropped)."""
-    keys = keys or ["tool", "role"]
-    return fact.join(F.broadcast(dim), on=keys, how=how)
+    return fact.join(F.broadcast(dim), on=keys or DIM_KEYS, how=how)
 
 
-def unmatched(fact: DataFrame, dim: DataFrame, keys: list[str] | None = None) -> DataFrame:
+def unmatched(fact: DataFrame, dim: DataFrame) -> DataFrame:
     """Rows whose key misses the dimension — broadcast left-anti join
     (the 'dropped' accounting analogue of exclude_files,
     `logpipe-input-file.c:593-739`)."""
-    keys = keys or ["tool", "role"]
-    return fact.join(F.broadcast(dim), on=keys, how="left_anti")
+    return fact.join(F.broadcast(dim), on=DIM_KEYS, how="left_anti")
 
 
-def matched(fact: DataFrame, dim: DataFrame, keys: list[str] | None = None) -> DataFrame:
+def matched(fact: DataFrame, dim: DataFrame) -> DataFrame:
     """Broadcast left-semi join — the allowlist filter (include-globs)."""
-    keys = keys or ["tool", "role"]
-    return fact.join(F.broadcast(dim), on=keys, how="left_semi")
+    return fact.join(F.broadcast(dim), on=DIM_KEYS, how="left_semi")

@@ -38,22 +38,24 @@ from pyspark.sql import functions as F
 
 PPM = 1_000_000
 PPB = 1_000_000_000
+#: the defaults of :func:`pagerank`, and the only values
+#: :func:`pagerank_oracle_sql` mirrors
+DAMPING_PPM = 850_000
+SCALE = 10_000_000_000
 
 
 def pagerank(
     edges: DataFrame,
     iterations: int = 5,
-    damping_ppm: int = 850_000,
-    scale: int = 10_000_000_000,
-    src_col: str = "src",
-    dst_col: str = "dst",
+    damping_ppm: int = DAMPING_PPM,
+    scale: int = SCALE,
     weight_col: str | None = None,
 ) -> DataFrame:
     """Fixed-point weighted PageRank. Returns (node, pr) with ``pr`` the
     BIGINT rank scaled by ``scale``; ``sum(pr) <= scale`` (floors and
     dangling nodes only drop mass).
 
-    ``edges`` is any (src, dst[, weight]) relation — duplicates are
+    ``edges`` is any (``src``, ``dst``[, weight]) relation — duplicates are
     collapsed by summing weights (or counting rows when ``weight_col`` is
     None), so a raw transition log works as-is. Self-loops are legal.
     The recurrence (mirrored token for token by :func:`pagerank_oracle_sql`):
@@ -78,8 +80,8 @@ def pagerank(
         else F.count(F.lit(1)).cast("long")
     )
     counts = edges.groupBy(
-        F.col(src_col).cast("string").alias("src"),
-        F.col(dst_col).cast("string").alias("dst"),
+        F.col("src").cast("string").alias("src"),
+        F.col("dst").cast("string").alias("dst"),
     ).agg(w_expr.alias("w"))
     # one-time prep, pinned so the iteration loop never re-derives it
     counts = counts.localCheckpoint(eager=True)
@@ -133,18 +135,13 @@ def pagerank(
     return ranks
 
 
-def pagerank_oracle_sql(
-    edges_cte: str,
-    iterations: int = 5,
-    damping_ppm: int = 850_000,
-    scale: int = 10_000_000_000,
-) -> str:
-    """DuckDB mirror of :func:`pagerank`, generated from the SAME
-    parameters with the iterations unrolled as chained CTEs (aggregates
+def pagerank_oracle_sql(edges_cte: str, iterations: int = 5) -> str:
+    """DuckDB mirror of :func:`pagerank` at its default damping and scale,
+    with the iterations unrolled as chained CTEs (aggregates
     are not legal in a recursive CTE's recursive term). ``edges_cte`` is
     a SQL relation producing (src, dst, w) — weights pre-collapsed or
     not, the first CTE re-collapses exactly like the operator."""
-    d, n_iter = int(damping_ppm), int(iterations)
+    d, scale, n_iter = DAMPING_PPM, SCALE, int(iterations)
     steps = []
     prev = "r0"
     for i in range(1, n_iter + 1):
@@ -186,9 +183,7 @@ SELECT node, pr FROM {prev}
 """
 
 
-def triangle_count(
-    edges: DataFrame, a_col: str = "src", b_col: str = "dst"
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Exact triangle count of the undirected graph described by an edge
     list (direction, duplicates, and self-loops are normalised away) —
     the density diagnostic for near-dup pair graphs (how clique-like are
@@ -205,8 +200,10 @@ def triangle_count(
     equi-join back against the oriented edges — every triangle matches
     exactly once, anchored at its lowest-ranked vertex. All shuffles
     move (id, id) pairs only; no window, no cartesian, no payload.
+
+    ``edges``: (``src``, ``dst``).
     """
-    a, b = F.col(a_col).cast("long"), F.col(b_col).cast("long")
+    a, b = F.col("src").cast("long"), F.col("dst").cast("long")
     und = (
         edges.select(
             F.least(a, b).alias("u"), F.greatest(a, b).alias("v")

@@ -66,12 +66,11 @@ def html_rules_sql(col_sql: str) -> str:
     return f"trim({out})"
 
 
-def extract_text(
-    df: DataFrame, html_col: str = "html", out_col: str = "text"
-) -> DataFrame:
-    """Column-level extraction over a corpus: adds ``out_col`` plus its
-    length (the first quality signal downstream filters key on)."""
+def extract_text(df: DataFrame, html_col: str = "html") -> DataFrame:
+    """Column-level extraction over a corpus: adds ``text`` plus its
+    length ``text_chars`` (the first quality signal downstream filters
+    key on)."""
     txt = strip_html(F.col(html_col))
     return df.select(
-        "*", txt.alias(out_col), F.length(txt).alias(out_col + "_chars")
+        "*", txt.alias("text"), F.length(txt).alias("text_chars")
     )

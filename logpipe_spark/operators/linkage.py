@@ -29,26 +29,25 @@ def fuzzy_join(
     right: DataFrame,
     n: int = 3,
     threshold: float = 0.8,
-    text_col: str = "text",
-    left_key: str = "doc_id",
-    right_key: str = "doc_id",
     max_shingle_freq: int = 1000,
 ) -> DataFrame:
     """All cross-table pairs with token-n-gram Jaccard ≥ ``threshold``:
-    returns (left_key, right_key, n_common, jaccard). Keys are
+    returns (doc_id_l, doc_id_r, n_common, jaccard). Keys are
     independent namespaces — a left row never pairs with another left
     row (unlike the self-join dedup operator).
 
     The hot-shingle document frequency is computed over the UNION of
     both sides: a shingle that is a stop-phrase in either corpus would
-    otherwise manufacture per-shingle quadratic work in the join."""
+    otherwise manufacture per-shingle quadratic work in the join.
+
+    ``left`` and ``right``: (``doc_id``, ``text``)."""
     lsh = left.select(
-        F.col(left_key).alias("lk"),
-        F.explode(_shingles(F.col(text_col), n)).alias("shingle"),
+        F.col("doc_id").alias("lk"),
+        F.explode(_shingles(F.col("text"), n)).alias("shingle"),
     )
     rsh = right.select(
-        F.col(right_key).alias("rk"),
-        F.explode(_shingles(F.col(text_col), n)).alias("shingle"),
+        F.col("doc_id").alias("rk"),
+        F.explode(_shingles(F.col("text"), n)).alias("shingle"),
     )
     freq = (
         lsh.select("shingle")
@@ -76,8 +75,8 @@ def fuzzy_join(
         )
         .filter(F.col("jaccard") >= threshold)
         .select(
-            F.col("lk").alias(left_key + "_l"),
-            F.col("rk").alias(right_key + "_r"),
+            F.col("lk").alias("doc_id_l"),
+            F.col("rk").alias("doc_id_r"),
             "n_common",
             "jaccard",
         )
@@ -87,11 +86,10 @@ def fuzzy_join(
 def best_match(
     pairs: DataFrame,
     left_col: str,
-    order_col: str = "jaccard",
     tiebreak_col: str | None = None,
 ) -> DataFrame:
     """One winner per left key from a fuzzy_join result: highest
-    ``order_col``, ties broken by the smallest ``tiebreak_col`` (the
+    ``jaccard``, ties broken by the smallest ``tiebreak_col`` (the
     right key by default) so the choice is total-ordered and
     deterministic. A map-combinable groupBy-MAX over a packed struct —
     no per-group window, so a left key with a million candidates costs
@@ -99,7 +97,7 @@ def best_match(
     neardup_keep_best).
 
     The packed struct is MIN(struct(-order, tiebreak)): negation lives on
-    ``order_col`` — numeric by contract (a similarity score) — never on
+    ``jaccard`` — numeric by contract (a similarity score) — never on
     the tiebreak column, which may be a string right-key (negating THAT
     threw under ANSI / inverted the smallest-tiebreak rule without —
     ADVICE r5). MIN of the struct = highest order, then smallest
@@ -110,14 +108,14 @@ def best_match(
     packed = pairs.groupBy(left_col).agg(
         F.min(
             F.struct(
-                (-F.col(order_col)).alias("neg_o"),
+                (-F.col("jaccard")).alias("neg_o"),
                 F.col(tb).alias("tb"),
-                F.col(order_col).alias("o"),
+                F.col("jaccard").alias("o"),
             )
         ).alias("w")
     )
     return packed.select(
         left_col,
         F.col("w.tb").alias(tb),
-        F.col("w.o").alias(order_col),
+        F.col("w.o").alias("jaccard"),
     )

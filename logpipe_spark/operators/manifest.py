@@ -35,11 +35,11 @@ from logpipe_spark.operators.dedup import base_hash60
 MANIFEST_NAME = "manifest.json"
 
 
-def _row_digest(key_col: str, text_col: str):
+def _row_digest():
     return base_hash60(
         F.concat(
-            F.col(key_col).cast("string"), F.lit("\x1f"),
-            F.coalesce(F.col(text_col), F.lit("\x00")),
+            F.col("doc_id").cast("string"), F.lit("\x1f"),
+            F.coalesce(F.col("text"), F.lit("\x00")),
         )
     )
 
@@ -50,8 +50,6 @@ def write_training_shards(
     out_dir: str,
     num_shards: int = 8,
     seed: str = "epoch0",
-    key_col: str = "doc_id",
-    text_col: str = "text",
 ) -> dict:
     """Publish ``docs`` as ``out_dir/shard=K/`` parquet in the
     deterministic shuffle order plus ``out_dir/manifest.json`` with
@@ -66,19 +64,21 @@ def write_training_shards(
     old corpus intact under ``out_dir + '.old-*'`` for manual recovery,
     never nothing (the manifest is written into the tmp tree LAST, so
     even a reader that races the rename can treat its presence as the
-    completeness marker)."""
+    completeness marker).
+
+    ``docs``: (``doc_id``, ``text``, ...)."""
     tmp = out_dir + ".tmp"
     if os.path.exists(tmp):
         import shutil
 
         shutil.rmtree(tmp)
 
-    ordered = shuffle_corpus(docs, num_shards, seed=seed, key_col=key_col)
+    ordered = shuffle_corpus(docs, num_shards, seed=seed, key_col="doc_id")
     data_dir = os.path.join(tmp, "data")
     (
         ordered.repartitionByRange(num_shards, "shard")
         .sortWithinPartitions("sort_key")
-        .withColumn("_digest", _row_digest(key_col, text_col))
+        .withColumn("_digest", _row_digest())
         .write.partitionBy("shard")
         .parquet(data_dir)
     )

@@ -11,16 +11,13 @@ Reimplements the intent of the reference's only row transforms:
   here by guarding each expensive regex with a cheap `startswith`/`contains`
   predicate, which Catalyst keeps ahead of the extraction expressions.
 
-Two equivalent implementations:
-
-- ``extract_builtin``  — pure `pyspark.sql.functions` (JVM, whole-stage
-  codegen; the default hot path).
-- ``extract_pandas``   — Arrow-batched pandas UDF returning a struct (the
-  extensible "grok plugin" path, analogous to the reference's dlopen filter
-  ABI `src/logpipe_api.h:130-158`). No per-row Python: batches only.
-
-Both add columns and NEVER rewrite ``text`` (the per-turn byte-equality
-invariant is passthrough — FIXTURES.md §1).
+``extract_builtin`` is pure `pyspark.sql.functions` (JVM, whole-stage
+codegen). It adds columns and NEVER rewrites ``text`` (the per-turn
+byte-equality invariant is passthrough — FIXTURES.md §1).
+``make_grok_udf`` builds the extensible "grok plugin" path, analogous to
+the reference's dlopen filter ABI (`src/logpipe_api.h:130-158`): an
+Arrow-batched pandas UDF for patterns outside the fixed set. No per-row
+Python: batches only.
 """
 
 from __future__ import annotations
@@ -37,22 +34,10 @@ CALL_PAT = r"^CALL (\w+)\(([^)]*)\) -> (\w+)"
 ERROR_PAT = r"^ERROR (\d{3}) (.*)$"
 META_PAT = r"^\[\[system=([^\]]*)\]\[server=([^\]]*)\]\[offset=(\d+)\]\[line=(\d+)\]\](.*)$"
 
-PARSE_SCHEMA = T.StructType(
-    [
-        T.StructField("tool_called", T.StringType()),
-        T.StructField("call_args", T.StringType()),
-        T.StructField("call_status", T.StringType()),
-        T.StructField("error_code", T.IntegerType()),
-        T.StructField("error_msg", T.StringType()),
-        T.StructField("meta_system", T.StringType()),
-        T.StructField("meta_server", T.StringType()),
-        T.StructField("meta_offset", T.LongType()),
-        T.StructField("meta_line", T.LongType()),
-        T.StructField("n_fields", T.IntegerType()),
-    ]
-)
-
-PARSE_COLS = [f.name for f in PARSE_SCHEMA.fields]
+PARSE_COLS = [
+    "tool_called", "call_args", "call_status", "error_code", "error_msg",
+    "meta_system", "meta_server", "meta_offset", "meta_line", "n_fields",
+]
 
 
 def _guarded(
@@ -95,9 +80,9 @@ def n_fields_col(text: Column) -> Column:
     return F.size(F.filter(F.split(text, " "), lambda x: x != F.lit(""))).cast("int")
 
 
-def extract_builtin(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """JVM-native extraction — the default hot path (whole-stage codegen)."""
-    t = F.col(text_col)
+def extract_builtin(df: DataFrame) -> DataFrame:
+    """JVM-native extraction from ``df.text`` (whole-stage codegen)."""
+    t = F.col("text")
     return df.withColumns(
         {
             # empty_capable flags follow the capture groups: (\w+)/(\d+)
@@ -115,42 +100,6 @@ def extract_builtin(df: DataFrame, text_col: str = "text") -> DataFrame:
             "n_fields": n_fields_col(t),
         }
     )
-
-
-@pandas_udf(PARSE_SCHEMA)
-def _parse_udf(text: pd.Series) -> pd.DataFrame:
-    """Arrow-batched grok extraction: one pandas `.str.extract` per pattern
-    per batch (vectorized over the batch; zero per-row Python calls from
-    Spark's side). NULL text → all-NULL output (parity with the builtin
-    path, where every guard predicate evaluates to NULL)."""
-    call = text.str.extract(CALL_PAT)
-    err = text.str.extract(ERROR_PAT)
-    meta = text.str.extract(META_PAT)
-    nf = text.map(
-        lambda t: None if t is None else sum(1 for x in t.split(" ") if x),
-        na_action="ignore",
-    )
-    return pd.DataFrame(
-        {
-            "tool_called": call[0],
-            "call_args": call[1],
-            "call_status": call[2],
-            "error_code": pd.to_numeric(err[0], errors="coerce").astype("Int32"),
-            "error_msg": err[1],
-            "meta_system": meta[0],
-            "meta_server": meta[1],
-            "meta_offset": pd.to_numeric(meta[2], errors="coerce").astype("Int64"),
-            "meta_line": pd.to_numeric(meta[3], errors="coerce").astype("Int64"),
-            "n_fields": pd.array(nf, dtype="Int32"),
-        }
-    )
-
-
-def extract_pandas(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Pandas-UDF extraction path — same output schema as ``extract_builtin``
-    (equality asserted in tests/test_parse.py)."""
-    parsed = _parse_udf(F.col(text_col)).alias("_p")
-    return df.withColumn("_p", parsed).select("*", "_p.*").drop("_p")
 
 
 def make_grok_udf(patterns: dict[str, str]):

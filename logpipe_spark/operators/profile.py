@@ -166,10 +166,9 @@ def mad_outliers(
     value_col: str,
     group_col: str,
     key_col: str,
-    z: float = 3.5,
 ) -> DataFrame:
     """Robust per-group outlier detection: the modified z-score
-    0.6745·|x − median| / MAD > z (Iglewicz & Hoaglin '93) — median/MAD
+    0.6745·|x − median| / MAD > 3.5 (Iglewicz & Hoaglin '93) — median/MAD
     instead of mean/stddev so the outliers being hunted cannot mask
     themselves by inflating the scale estimate. The data-quality
     pre-flight for numeric columns (latency spikes, corrupt values,
@@ -204,7 +203,7 @@ def mad_outliers(
         / F.col("_mad"),
     )
     return (
-        scored.where((F.col("_mad") > 0) & (F.col("_score") > z))
+        scored.where((F.col("_mad") > 0) & (F.col("_score") > 3.5))
         .select(
             key_col, group_col, value_col,
             F.round("_score", 6).alias("score"),

@@ -65,8 +65,8 @@ def compile_rules(rules: list[dict]) -> Column:
     return expr.otherwise(F.lit(None).cast("string"))
 
 
-def route(df: DataFrame, rules: list[dict], sink_col: str = "sink") -> DataFrame:
-    """Annotate every row with its routed sink (NULL = dropped). Dropped rows
+def route(df: DataFrame, rules: list[dict]) -> DataFrame:
+    """Annotate every row with its routed ``sink`` (NULL = dropped). Dropped rows
     are kept at this stage so lineage can count them; filter happens at the
     sink writer."""
-    return df.withColumn(sink_col, compile_rules(rules))
+    return df.withColumn("sink", compile_rules(rules))

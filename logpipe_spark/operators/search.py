@@ -35,6 +35,12 @@ from pyspark.sql import functions as F
 
 from logpipe_spark.operators.dedup import _tokens
 
+#: BM25 term-saturation and length-normalisation constants, shared as
+#: decimal literals with the SQL mirror so both engines parse the same
+#: double
+BM25_K1 = 1.2
+BM25_B = 0.75
+
 
 def _term_freq(toks, term: str):
     """Map-side term frequency. A helper function (not an inline loop
@@ -43,32 +49,23 @@ def _term_freq(toks, term: str):
     return F.size(F.filter(toks, lambda x: x == F.lit(term))).cast("long")
 
 
-def bm25_topk(
-    docs: DataFrame,
-    query_terms: list[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bm25_topk(docs: DataFrame, query_terms: list[str], k: int = 10) -> DataFrame:
     """Top-k documents by BM25 (rational-idf variant) for a bag of query
-    terms. Returns (id_col, dl, tf_<term>..., score) ordered by
+    terms. Returns (doc_id, dl, tf_<term>..., score) ordered by
     (score desc, id tiebreak), only docs matching ≥1 term.
 
     Two passes over the corpus (stats, then score) and zero corpus
-    shuffles; the stats row is broadcast. ``k1``/``b`` must be decimal
-    literals shared with any mirroring SQL so both engines parse the same
-    double.
+    shuffles; the stats row is broadcast. ``docs``: (``doc_id``,
+    ``text``); ``k1``/``b`` are :data:`BM25_K1`/:data:`BM25_B`.
     """
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
     if len(set(query_terms)) != len(query_terms):
         raise ValueError(f"duplicate query terms: {query_terms}")
 
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(F.col("text"))
     per_doc = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(toks).cast("long").alias("dl"),
         *[
             _term_freq(toks, t).alias(f"tf_{i}")
@@ -99,10 +96,10 @@ def bm25_topk(
         idf = ((F.col("n_docs") - df_).cast("double") + F.lit(0.5)) / (
             df_.cast("double") + F.lit(0.5)
         )
-        denom = tf + F.lit(k1) * (
-            F.lit(1.0 - b) + F.lit(b) * (F.col("dl").cast("double") / avgdl)
+        denom = tf + F.lit(BM25_K1) * (
+            F.lit(1.0 - BM25_B) + F.lit(BM25_B) * (F.col("dl").cast("double") / avgdl)
         )
-        terms.append(idf * (tf * F.lit(k1 + 1.0)) / denom)
+        terms.append(idf * (tf * F.lit(BM25_K1 + 1.0)) / denom)
     score = terms[0]
     for w in terms[1:]:  # left fold == the oracle's ((w0 + w1) + w2) ...
         score = score + w
@@ -115,27 +112,20 @@ def bm25_topk(
     return (
         scored.where(matched)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("dl"),
             *[F.col(f"tf_{i}").alias(f"tf_{i}") for i in range(len(query_terms))],
             score.alias("score"),
         )
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
+        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(k)
     )
 
 
-def bm25_oracle_sql(
-    query_terms: list[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> str:
-    """The DuckDB mirror of :func:`bm25_topk`, generated from the SAME
-    parameters so literals and association order match token for token."""
+def bm25_oracle_sql(query_terms: list[str], k: int = 10) -> str:
+    """The DuckDB mirror of :func:`bm25_topk` over the ``documents``
+    table, generated from the SAME constants so literals and association
+    order match token for token."""
     tf_exprs = ",\n        ".join(
         "len(list_filter(toks, x -> x = '%s')) AS tf_%d" % (t.replace("'", "''"), i)
         for i, t in enumerate(query_terms)
@@ -145,10 +135,10 @@ def bm25_oracle_sql(
         for i in range(len(query_terms))
     )
     k1_lit, one_minus_b, b_lit, k1p1 = (
-        repr(k1),
-        repr(1.0 - b),
-        repr(b),
-        repr(k1 + 1.0),
+        repr(BM25_K1),
+        repr(1.0 - BM25_B),
+        repr(BM25_B),
+        repr(BM25_K1 + 1.0),
     )
     w_exprs = [
         f"(((CAST(n_docs - df_{i} AS DOUBLE) + 0.5) / (CAST(df_{i} AS DOUBLE) + 0.5))"
@@ -164,24 +154,24 @@ def bm25_oracle_sql(
     tf_cols = ", ".join(f"tf_{i}" for i in range(len(query_terms)))
     return f"""
 WITH per_doc AS (
-    SELECT {id_col},
+    SELECT doc_id,
         CAST(len(toks) AS BIGINT) AS dl,
         {tf_exprs}
     FROM (
-        SELECT {id_col},
-            list_filter(string_split(lower({text_col}), ' '), x -> x <> '') AS toks
-        FROM {table}
+        SELECT doc_id,
+            list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+        FROM documents
     )
 ), stats AS (
     SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS BIGINT) AS total_dl,
         {df_exprs}
     FROM per_doc
 )
-SELECT {id_col}, dl, {tf_cols},
+SELECT doc_id, dl, {tf_cols},
     {score} AS score
 FROM per_doc CROSS JOIN stats
 WHERE {matched}
-ORDER BY score DESC, {id_col} ASC
+ORDER BY score DESC, doc_id ASC
 LIMIT {k}
 """
 
@@ -199,14 +189,7 @@ def term_bucket(term: str, n_buckets: int) -> int:
     return int(hashlib.md5(term.encode("utf-8")).hexdigest()[:4], 16) % n_buckets
 
 
-def write_inverted_index(
-    docs: DataFrame,
-    path: str,
-    n_buckets: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    mode: str = "overwrite",
-) -> None:
+def write_inverted_index(docs: DataFrame, path: str, n_buckets: int = 64) -> None:
     """Materialize a term-sharded inverted index: posting rows
     (term, id, tf, dl) written **partitioned by a term-hash bucket**, so a
     query touches only the shards its terms live in — Spark partition
@@ -219,17 +202,19 @@ def write_inverted_index(
     aggregate combines map-side, so the shuffle carries collapsed postings,
     not raw tokens. The bucket repartition keys on 2^~6 values and writes
     one file per shard directory; keep n_buckets ≤ ~1024 at 100 TB and let
-    max_records_per_file split the hot shards."""
+    max_records_per_file split the hot shards.
+
+    ``docs``: (``doc_id``, ``text``); an existing ``path`` is overwritten."""
     if n_buckets < 1 or n_buckets > 65536:
         raise ValueError(f"n_buckets must be in [1, 65536]: {n_buckets}")
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(F.col("text"))
     posting = (
         docs.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.size(toks).cast("long").alias("dl"),
             F.explode(toks).alias("term"),
         )
-        .groupBy("term", id_col, "dl")  # dl is functionally dependent on id
+        .groupBy("term", "doc_id", "dl")  # dl is functionally dependent on id
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
         .withColumn(
             "bucket",
@@ -242,7 +227,7 @@ def write_inverted_index(
     )
     (
         posting.repartition(F.col("bucket"))
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(path)
     )
@@ -253,10 +238,9 @@ def search_conjunctive(
     path: str,
     terms: list[str],
     n_buckets: int = 64,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """AND-of-terms retrieval against a :func:`write_inverted_index` table:
-    returns (id, total_tf, dl) for documents containing EVERY query term.
+    returns (doc_id, total_tf, dl) for documents containing EVERY query term.
     The scan filters ``bucket IN (...)`` — a partition-column predicate
     that prunes untouched shard directories (asserted by numFiles metric in
     tests) — plus a pushed ``term IN (...)`` row filter; the surviving
@@ -273,25 +257,20 @@ def search_conjunctive(
         .where(F.col("term").isin(terms))
     )
     return (
-        idx.groupBy(id_col)
+        idx.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("_nt"),  # (term, id) unique in the index
             F.sum("tf").cast("long").alias("total_tf"),
             F.max("dl").cast("long").alias("dl"),
         )
         .where(F.col("_nt") == len(terms))
-        .select(id_col, "total_tf", "dl")
+        .select("doc_id", "total_tf", "dl")
     )
 
 
-def conjunctive_oracle_sql(
-    terms: list[str],
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> str:
+def conjunctive_oracle_sql(terms: list[str]) -> str:
     """DuckDB mirror of :func:`search_conjunctive` — computed DIRECTLY from
-    the corpus (no index), so a green row proves the persisted index and
+    the ``documents`` table (no index), so a green row proves the persisted index and
     its pruned scan reproduce the ground-truth boolean semantics."""
     terms = sorted(set(terms))
     tf_exprs = ",\n        ".join(
@@ -303,14 +282,14 @@ def conjunctive_oracle_sql(
     allp = " AND ".join(f"tf_{i} > 0" for i in range(len(terms)))
     return f"""
 WITH toks AS (
-    SELECT {id_col},
-        list_filter(string_split(lower({text_col}), ' '), x -> x <> '') AS toks
-    FROM {table}
+    SELECT doc_id,
+        list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+    FROM documents
 ), tf AS (
-    SELECT {id_col}, CAST(len(toks) AS BIGINT) AS dl,
+    SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl,
         {tf_exprs}
     FROM toks
 )
-SELECT {id_col}, CAST({total} AS BIGINT) AS total_tf, dl
+SELECT doc_id, CAST({total} AS BIGINT) AS total_tf, dl
 FROM tf WHERE {allp}
 """

@@ -46,23 +46,19 @@ def _topk(cand: DataFrame, id_col: str, sim: Column, k: int) -> DataFrame:
     )
 
 
-def cosine_topk(
-    emb: DataFrame,
-    query_vec_id: int,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk(emb: DataFrame, query_vec_id: int, k: int = 10) -> DataFrame:
     """Brute-force cosine top-k against the embedding of ``query_vec_id``.
 
     The query row is broadcast-cross-joined (1 row → zero shuffle of the
     corpus side). Returns (id, sim); the contract query keeps the id set
-    only (float similarity is engine-specific in the last ulp)."""
-    q = emb.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("_qv")
+    only (float similarity is engine-specific in the last ulp).
+
+    ``emb``: (``vec_id``, ``embedding``)."""
+    q = emb.filter(F.col("vec_id") == query_vec_id).select(
+        F.col("embedding").alias("_qv")
     )
-    cand = emb.filter(F.col(id_col) != query_vec_id).crossJoin(F.broadcast(q))
-    return _topk(cand, id_col, cosine(F.col(vec_col), F.col("_qv")), k)
+    cand = emb.filter(F.col("vec_id") != query_vec_id).crossJoin(F.broadcast(q))
+    return _topk(cand, "vec_id", cosine(F.col("embedding"), F.col("_qv")), k)
 
 
 def _hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
@@ -136,23 +132,22 @@ def write_ivf_index(
     emb: DataFrame,
     path: str,
     n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 42,
-    mode: str = "overwrite",
 ) -> list[list[float]]:
     """Materialize an IVF index: the corpus partitioned by its k-means
     cell (`ivf_build`), one directory per cell, centers persisted as a
     JSON sidecar (`_ivf_centers.json` — driver-side metadata, KBs). A
     query then prunes to nprobe directories at the scan, the same
-    partition-pruning contract as ``write_lsh_index``. Returns centers."""
+    partition-pruning contract as ``write_lsh_index``. Returns centers.
+
+    ``emb``: (``vec_id``, ``embedding``); an existing ``path`` is overwritten."""
     import json
     import os
 
-    assigned, centers = ivf_build(emb, n_cells, id_col, vec_col, seed)
+    assigned, centers = ivf_build(emb, n_cells, "vec_id", "embedding", seed)
     (
         assigned.repartition(F.col("cell"))
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(path)
     )
@@ -167,42 +162,38 @@ def topk_from_ivf_index(
     query_vec: list[float],
     k: int = 10,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN top-k against a ``write_ivf_index`` table: :func:`ivf_topk`
     over the written cells with the centers from the JSON sidecar. On the
     written table ``cell IN (...)`` is a partition-column predicate, so
     the scan reads ONLY the nprobe nearest cell directories (file-list
-    pruning, asserted via the scan's numFiles metric in tests)."""
+    pruning, asserted via the scan's numFiles metric in tests).
+
+    The index holds (``vec_id``, ``embedding``) rows."""
     import json
     import os
 
     with open(os.path.join(path, "_ivf_centers.json")) as f:
         centers = json.load(f)
     return ivf_topk(
-        spark.read.parquet(path), centers, query_vec, k, nprobe, id_col, vec_col
+        spark.read.parquet(path), centers, query_vec, k, nprobe, "vec_id", "embedding"
     )
 
 
-def _infer_dim(emb: DataFrame, vec_col: str) -> int:
+def _infer_dim(emb: DataFrame) -> int:
     """Read the vector dimension from the data (one 1-row job). Hardcoding
     a wrong dim would make zip_with pad with NULLs → NULL buckets → silent
     empty results."""
-    row = emb.select(F.size(vec_col).alias("d")).first()
+    row = emb.select(F.size("embedding").alias("d")).first()
     if row is None or row["d"] is None or row["d"] <= 0:
-        raise ValueError(f"cannot infer embedding dimension from column {vec_col!r}")
+        raise ValueError("cannot infer embedding dimension from column 'embedding'")
     return int(row["d"])
 
 
 def embedding_neardup_pairs(
     emb: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     bits: int | None = 8,
-    dim: int | None = None,
-    blocks: int = 8,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (dedup mode): candidate pairs
     via matching LSH hyperplane buckets, then exact cosine ≥ threshold. At
@@ -210,15 +201,17 @@ def embedding_neardup_pairs(
 
     ``bits=None`` → *exact* mode. Exact cosine-threshold join is inherently
     O(n²) compute, but the plan need not be a cartesian product: rows are
-    assigned to ``blocks`` hash blocks and joined through the upper-
+    assigned to 8 hash blocks and joined through the upper-
     triangular (block_i ≤ block_j) grid — an equi-join whose B(B+1)/2
     cells each hold ~2n/B rows, so task memory and skew stay bounded and
     AQE can split cells further. Use the LSH modes (``bits=…`` here, or
     ``neardup_lsh_multiprobe`` for guaranteed-radius candidates) when n²
-    compute itself is the problem."""
-    base = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    compute itself is the problem.
+
+    ``emb``: (``vec_id``, ``embedding``)."""
+    base = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
     if bits:
-        planes = _hyperplanes(dim or _infer_dim(emb, vec_col), bits)
+        planes = _hyperplanes(_infer_dim(emb), bits)
         base = base.withColumn("_b", lsh_bucket_col(F.col("v"), planes))
         a = base.alias("a")
         b = base.alias("b")
@@ -231,16 +224,16 @@ def embedding_neardup_pairs(
     else:
         spark = emb.sparkSession
         grid = spark.createDataFrame(
-            [(i, j) for i in range(blocks) for j in range(i, blocks)],
+            [(i, j) for i in range(8) for j in range(i, 8)],
             "bi int, bj int",
         )
         left = base.select(
             F.col("id").alias("ida"), F.col("v").alias("va"),
-            F.pmod(F.hash("id"), F.lit(blocks)).cast("int").alias("bi"),
+            F.pmod(F.hash("id"), F.lit(8)).cast("int").alias("bi"),
         )
         right = base.select(
             F.col("id").alias("idb"), F.col("v").alias("vb"),
-            F.pmod(F.hash("id"), F.lit(blocks)).cast("int").alias("bj"),
+            F.pmod(F.hash("id"), F.lit(8)).cast("int").alias("bj"),
         )
         cells = left.join(F.broadcast(grid), "bi").join(right, "bj")
         # off-diagonal cells see each unordered pair once (keep it, then
@@ -260,9 +253,6 @@ def neardup_lsh_multiprobe(
     emb: DataFrame,
     threshold: float = 0.9,
     bits: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs via multi-probe hyperplane LSH — the 100 TB path.
 
@@ -287,11 +277,13 @@ def neardup_lsh_multiprobe(
     diff != 0 (emit iff k < k^diff) and all bits+1 keys when diff == 0
     (emit iff k == sig) — so there is no distinct exchange at all. The
     shuffle still carries (id, sig) only, ~16 bytes/row; vectors are
-    re-attached per surviving pair (the round-1 measured 12× win)."""
-    planes = _hyperplanes(dim or _infer_dim(emb, vec_col), bits)
-    base = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).withColumn(
-        "_sig", lsh_bucket_col(F.col("v"), planes)
-    )
+    re-attached per surviving pair (the round-1 measured 12× win).
+
+    ``emb``: (``vec_id``, ``embedding``)."""
+    planes = _hyperplanes(_infer_dim(emb), bits)
+    base = emb.select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("v")
+    ).withColumn("_sig", lsh_bucket_col(F.col("v"), planes))
     probes = F.array(
         F.col("_sig"),
         *[F.col("_sig").bitwiseXOR(F.lit(1 << i).cast("long")) for i in range(bits)],
@@ -346,19 +338,17 @@ def write_lsh_index(
     path: str,
     bits: int = 16,
     prefix_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Materialize an LSH-bucketed ANN index: the corpus with its
     ``bits``-bit hyperplane signature, written **partitioned by the top
     ``prefix_bits`` of the signature** — so a query prunes to the probed
     partitions at the SCAN (Spark partition pruning on the directory
     column), never touching the rest of the corpus. 2^prefix_bits
-    directories; keep prefix_bits ≤ ~12 so the file count stays sane."""
-    planes = _hyperplanes(dim or _infer_dim(emb, vec_col), bits)
-    sig = lsh_bucket_col(F.col(vec_col), planes)
+    directories; keep prefix_bits ≤ ~12 so the file count stays sane.
+
+    ``emb``: (``vec_id``, ``embedding``); an existing ``path`` is overwritten."""
+    planes = _hyperplanes(_infer_dim(emb), bits)
+    sig = lsh_bucket_col(F.col("embedding"), planes)
     (
         emb.withColumn("_sig", sig)
         .withColumn(
@@ -366,7 +356,7 @@ def write_lsh_index(
         )
         # one file per bucket dir: the shuffle has 2^prefix_bits keys
         .repartition(F.col("bucket"))
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(path)
     )
@@ -395,8 +385,6 @@ def topk_from_lsh_index(
     bits: int = 16,
     prefix_bits: int = 8,
     probe_hamming: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN top-k against a ``write_lsh_index`` table. The query's signature
     prefix expands driver-side into every prefix within
@@ -407,7 +395,9 @@ def topk_from_lsh_index(
     of signatures within hamming ≤ probe_hamming overall differs in ≤
     probe_hamming prefix bits, so candidate recall matches the unindexed
     ``cosine_topk_lsh`` at the same radius. Candidates are re-ranked with
-    the full-signature hamming filter, then exact cosine."""
+    the full-signature hamming filter, then exact cosine.
+
+    The index holds (``vec_id``, ``embedding``) rows."""
     planes = _hyperplanes(len(query_vec), bits)
     import numpy as np
 
@@ -423,7 +413,7 @@ def topk_from_lsh_index(
         F.bit_count(F.col("_sig").bitwiseXOR(F.lit(qsig).cast("long")))
         <= probe_hamming
     )
-    return _topk(cand, id_col, cosine(F.col(vec_col), qcol), k)
+    return _topk(cand, "vec_id", cosine(F.col("embedding"), qcol), k)
 
 
 def cosine_topk_lsh(
@@ -431,26 +421,25 @@ def cosine_topk_lsh(
     query_vec_id: int,
     k: int = 10,
     bits: int = 8,
-    dim: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     probe_hamming: int = 1,
 ) -> DataFrame:
     """LSH-bucketed ANN: score only vectors whose hyperplane signature is
     within ``probe_hamming`` bits of the query's (multi-probe). At scale
     the bucket column is precomputed and the table partitioned by it, so a
-    query prunes to a handful of partitions instead of a full scan."""
-    planes = _hyperplanes(dim or _infer_dim(emb, vec_col), bits)
-    with_bucket = emb.withColumn("_bucket", lsh_bucket_col(F.col(vec_col), planes))
-    q = with_bucket.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("_qv"), F.col("_bucket").alias("_qbucket")
+    query prunes to a handful of partitions instead of a full scan.
+
+    ``emb``: (``vec_id``, ``embedding``)."""
+    planes = _hyperplanes(_infer_dim(emb), bits)
+    with_bucket = emb.withColumn("_bucket", lsh_bucket_col(F.col("embedding"), planes))
+    q = with_bucket.filter(F.col("vec_id") == query_vec_id).select(
+        F.col("embedding").alias("_qv"), F.col("_bucket").alias("_qbucket")
     )
     cand = (
-        with_bucket.filter(F.col(id_col) != query_vec_id)
+        with_bucket.filter(F.col("vec_id") != query_vec_id)
         .crossJoin(F.broadcast(q))
         .filter(
             F.bit_count(F.col("_bucket").bitwiseXOR(F.col("_qbucket")))
             <= probe_hamming
         )
     )
-    return _topk(cand, id_col, cosine(F.col(vec_col), F.col("_qv")), k)
+    return _topk(cand, "vec_id", cosine(F.col("embedding"), F.col("_qv")), k)

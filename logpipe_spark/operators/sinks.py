@@ -64,15 +64,14 @@ def repartition_salted(
     num_partitions: int,
     key: str = "conv_id",
     salt_buckets: int = 8,
-    salt_on: str = "turn_idx",
 ) -> DataFrame:
-    """Shuffle by (key, hash(salt_on) % salt_buckets) so a hot key spreads
+    """Shuffle by (key, hash(turn_idx) % salt_buckets) so a hot key spreads
     over ``salt_buckets`` partitions instead of one straggler task.
 
     Verification-time ordering is unaffected: the (conv_id, turn_idx)
     invariant is asserted with an ORDER BY, never by partition layout
     (SURVEY.md §7.3 hard part (b))."""
-    salt = F.pmod(F.hash(F.col(salt_on)), F.lit(salt_buckets))
+    salt = F.pmod(F.hash(F.col("turn_idx")), F.lit(salt_buckets))
     return df.repartition(num_partitions, F.col(key), salt)
 
 

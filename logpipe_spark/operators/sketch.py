@@ -40,6 +40,12 @@ from pyspark.sql import functions as F
 
 from logpipe_spark.operators.dedup import base_hash60
 
+#: Count-Min rows and counters per row, and HLL register-index bits: the
+#: sketch defaults, and the only shapes the SQL mirrors generate
+CM_DEPTH = 4
+CM_WIDTH = 1024
+HLL_P = 8
+
 #: rank cap: the hash contributes 60 - p bits; with p=8 we use the top 52
 #: bits, so ranks run 1..52 with 53 meaning "all examined bits zero".
 _RANK_BITS = 52
@@ -78,7 +84,7 @@ def _lc_table(m: int) -> list[float]:
 
 
 def cm_sketch(
-    df: DataFrame, col: str, depth: int = 4, width: int = 1024
+    df: DataFrame, col: str, depth: int = CM_DEPTH, width: int = CM_WIDTH
 ) -> DataFrame:
     """Count-Min sketch of a column: (i, pos, c) counter table, ≤ d·w
     rows. Row i's hash is the shared md5 base hash under salt ``cm{i}:``
@@ -112,7 +118,7 @@ def cm_sketch(
 
 
 def cm_query(
-    sketch: DataFrame, values: list[str], depth: int = 4, width: int = 1024
+    sketch: DataFrame, values: list[str], depth: int = CM_DEPTH, width: int = CM_WIDTH
 ) -> DataFrame:
     """Point-estimate counts for ``values`` from a Count-Min sketch:
     est(v) = min over rows i of counter[i][h_i(v)] (the classic
@@ -150,15 +156,11 @@ def cm_query(
     )
 
 
-def cm_oracle_sql(
-    table: str,
-    col: str,
-    values: list[str],
-    depth: int = 4,
-    width: int = 1024,
-) -> str:
-    """DuckDB mirror of ``cm_query(cm_sketch(table.col), values)`` —
-    same md5 salt spec, same integer counters."""
+def cm_oracle_sql(table: str, col: str, values: list[str]) -> str:
+    """DuckDB mirror of ``cm_query(cm_sketch(table.col), values)`` at the
+    default shape (:data:`CM_DEPTH` × :data:`CM_WIDTH`) — same md5 salt
+    spec, same integer counters."""
+    depth, width = CM_DEPTH, CM_WIDTH
     probe_rows = ", ".join(
         "('%s')" % v.replace("'", "''") for v in values
     )
@@ -184,13 +186,12 @@ GROUP BY value
 """
 
 
-def hll_oracle_sql(
-    table: str, col: str, p: int = 8
-) -> str:
+def hll_oracle_sql(table: str, col: str) -> str:
     """DuckDB mirror of ``col``'s row of :func:`hll_distinct_multi`
-    (without the ``col_name`` column), same spec constants."""
-    m = 1 << p
-    rank_bits = 60 - p
+    (without the ``col_name`` column), same spec constants (``p`` =
+    :data:`HLL_P`)."""
+    m = 1 << HLL_P
+    rank_bits = 60 - HLL_P
     b = _RANK_BITS + 1
     bitlen = " + ".join(
         f"CASE WHEN v >= {1 << k} THEN 1 ELSE 0 END" for k in range(rank_bits)
@@ -236,7 +237,7 @@ FROM folded
 
 
 def hll_registers_multi(
-    df: DataFrame, cols: list[str], p: int = 8
+    df: DataFrame, cols: list[str], p: int = HLL_P
 ) -> DataFrame:
     """The mergeable sketch: (col_name, j, m_j) register rows, ≤ 2^p per
     column, for SEVERAL columns from ONE scan. Each row explodes to
@@ -271,7 +272,7 @@ def hll_registers_multi(
     )
 
 
-def hll_estimate_by(registers: DataFrame, p: int = 8) -> DataFrame:
+def hll_estimate_by(registers: DataFrame, p: int = HLL_P) -> DataFrame:
     """Fold each column's registers into one row: (col_name, m, v_used,
     denom_scaled, estimate). ``denom_scaled`` = Σ 2^{B-M_j} over all m
     registers (empty ⇒ M_j = 0 ⇒ 2^B), B = 61 - p; exact BIGINT.
@@ -310,8 +311,7 @@ def hll_estimate_by(registers: DataFrame, p: int = 8) -> DataFrame:
     )
 
 
-def hll_distinct_multi(
-    df: DataFrame, cols: list[str], p: int = 8
-) -> DataFrame:
-    """Cardinality estimates for several columns in ONE corpus pass."""
-    return hll_estimate_by(hll_registers_multi(df, cols, p), p)
+def hll_distinct_multi(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Cardinality estimates for several columns in ONE corpus pass, with
+    ``p`` = :data:`HLL_P`."""
+    return hll_estimate_by(hll_registers_multi(df, cols, HLL_P), HLL_P)

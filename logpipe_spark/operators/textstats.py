@@ -51,9 +51,10 @@ def punct_ratio(text: Column) -> Column:
     return non_word / F.greatest(F.length(text), F.lit(1))
 
 
-def stopword_hits(text: Column, lang: str = "en") -> Column:
+def stopword_hits(text: Column) -> Column:
+    """Tokens that are English marker stopwords (``LANG_MARKERS["en"]``)."""
     toks = F.filter(F.split(F.lower(text), " "), lambda x: x != F.lit(""))
-    markers = LANG_MARKERS[lang]
+    markers = LANG_MARKERS["en"]
     return F.size(F.filter(toks, lambda t: t.isin(markers)))
 
 
@@ -88,32 +89,35 @@ def lang_id(text: Column) -> Column:
     return expr
 
 
-def rolling_fingerprint(text: Column, window: int = 16) -> Column:
+def rolling_fingerprint(text: Column) -> Column:
     """Document fingerprint: md5 over the text's char-32-gram skeleton —
     cheap shift-resistant hash (winnowing-lite). Deterministic, JVM-only.
-    The tail window start is clamped to 1 explicitly (positive-start
+    The 16-char head and tail windows are hashed with the length and the
+    full-text md5; the tail window start is clamped to 1 explicitly (positive-start
     substring semantics are engine-identical; negative starts are not —
     a 9-15 char text diverges between Spark and DuckDB otherwise)."""
-    tail_start = F.greatest(F.length(text) - F.lit(window - 1), F.lit(1))
+    tail_start = F.greatest(F.length(text) - F.lit(15), F.lit(1))
     return F.md5(
         F.concat_ws(
             "|",
-            F.substring(text, 1, window),
-            F.substring(text, tail_start, F.lit(window)),
+            F.substring(text, 1, 16),
+            F.substring(text, tail_start, F.lit(16)),
             F.length(text).cast("string"),
             F.md5(text),
         )
     )
 
 
-def top_terms(docs: DataFrame, k: int = 20, text_col: str = "text") -> DataFrame:
+def top_terms(docs: DataFrame, k: int = 20) -> DataFrame:
     """Corpus top-k vocabulary terms (lowercased whitespace tokens,
     duplicates counted). Plan: explode → partial+final hash agg → TopK
     (TakeOrderedAndProject — never a global sort of the vocabulary).
-    Deterministic tie-break by term."""
+    Deterministic tie-break by term.
+
+    ``docs``: (``text``)."""
     toks = docs.select(
         F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), " "), lambda x: x != F.lit(""))
+            F.filter(F.split(F.lower(F.col("text")), " "), lambda x: x != F.lit(""))
         ).alias("term")
     )
     return (
@@ -124,19 +128,23 @@ def top_terms(docs: DataFrame, k: int = 20, text_col: str = "text") -> DataFrame
     )
 
 
-def token_stats(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
-    """Per-doc char/token counts (oracle-checked)."""
-    t = F.col(text_col)
+def token_stats(docs: DataFrame) -> DataFrame:
+    """Per-doc char/token counts (oracle-checked).
+
+    ``docs``: (``doc_id``, ``text``)."""
+    t = F.col("text")
     return docs.select(
         F.length(t).cast("long").alias("len_chars"),
         token_count(t).alias("n_tokens"),
-        F.col(key_col),
+        F.col("doc_id"),
     )
 
 
-def lang_quality_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-language corpus stats (oracle-checked, exact integer outputs)."""
-    t = F.col(text_col)
+def lang_quality_stats(docs: DataFrame) -> DataFrame:
+    """Per-language corpus stats (oracle-checked, exact integer outputs).
+
+    ``docs``: (``text``)."""
+    t = F.col("text")
     return docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").alias("total_chars"),
@@ -145,9 +153,7 @@ def lang_quality_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def repetition_stats(
-    docs: DataFrame, n: int = 2, text_col: str = "text", key_col: str = "doc_id"
-) -> DataFrame:
+def repetition_stats(docs: DataFrame, n: int = 2) -> DataFrame:
     """Gopher-style within-document repetition signals: per doc, the total
     and distinct word ``n``-gram counts plus the count of the single most
     frequent n-gram — the inputs to the published "fraction of duplicate
@@ -168,8 +174,10 @@ def repetition_stats(
 
     Integer outputs only (value-hash safe); callers derive the Gopher
     fractions as ``1 - n_distinct/n_grams`` and ``top_count/n_grams``.
-    Docs with fewer than ``n`` tokens report zeros."""
-    grams = _ngrams(F.col(text_col), n)
+    Docs with fewer than ``n`` tokens report zeros.
+
+    ``docs``: (``doc_id``, ``text``)."""
+    grams = _ngrams(F.col("text"), n)
     top = F.aggregate(
         F.array_sort(grams),
         F.struct(
@@ -188,7 +196,7 @@ def repetition_stats(
         lambda acc: acc["best"],
     )
     return docs.select(
-        F.col(key_col),
+        F.col("doc_id"),
         F.size(grams).cast("long").alias("n_grams"),
         F.size(F.array_distinct(grams)).cast("long").alias("n_distinct"),
         top.alias("top_count"),
@@ -203,12 +211,7 @@ def repetition_stats(
 MAX_UNIGRAM_VOCAB = 8192
 
 
-def unigram_logprob(
-    docs: DataFrame,
-    vocab_size: int = 1024,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-) -> DataFrame:
+def unigram_logprob(docs: DataFrame, vocab_size: int = 1024) -> DataFrame:
     """Corpus-trained unigram language-model quality score — the cheap,
     shuffle-light stand-in for the KenLM perplexity filter of CCNet /
     RedPajama: train unigram counts on the corpus itself, then score each
@@ -237,7 +240,9 @@ def unigram_logprob(
     expression — map-only, zero Exchange, whole-stage codegen — so
     ``vocab_size`` is capped at ``MAX_UNIGRAM_VOCAB``. The driver collect
     is ``vocab_size`` rows, the same bounded-collect rule as
-    ``mix_sample``'s group counts."""
+    ``mix_sample``'s group counts.
+
+    ``docs``: (``doc_id``, ``text``)."""
     import math
 
     if vocab_size > MAX_UNIGRAM_VOCAB:
@@ -246,7 +251,7 @@ def unigram_logprob(
             f"MAX_UNIGRAM_VOCAB={MAX_UNIGRAM_VOCAB}; a vocab that large "
             "needs a real tokenizer pipeline, not a quality-score LM"
         )
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(F.col("text"))
     tok_counts = (
         docs.select(F.explode(toks).alias("tok"))
         .groupBy("tok")
@@ -273,7 +278,7 @@ def unigram_logprob(
     arr = F.col("_toks")
     n_tok = F.size(arr)
     return (
-        docs.select(F.col(key_col).alias("doc_id"), toks.alias("_toks"))
+        docs.select(F.col("doc_id"), toks.alias("_toks"))
         .select(
             "doc_id",
             n_tok.cast("long").alias("n_tokens"),
@@ -297,14 +302,7 @@ def unigram_logprob(
 MAX_DSIR_BUCKETS = 4096
 
 
-def dsir_scores(
-    docs: DataFrame,
-    target: DataFrame,
-    buckets: int = 1024,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    salt: str = "dsir",
-) -> DataFrame:
+def dsir_scores(docs: DataFrame, target: DataFrame, buckets: int = 1024) -> DataFrame:
     """DSIR-style importance score (Xie et al., "Data Selection for
     Language Models via Importance Resampling"): score every document by
     the log-likelihood ratio of its hashed n-gram features under a
@@ -330,7 +328,10 @@ def dsir_scores(
     side is typically tiny anyway), one bounded collect, then a map-only
     scoring pass with zero Exchange — the same two-pass broadcast-model
     shape as ``unigram_logprob``, robust to any corpus size because the
-    broadcast is B-bounded."""
+    broadcast is B-bounded.
+
+    ``docs``: (``doc_id``, ``text``); ``target``: (``text``); the bucket
+    hash salt is ``"dsir"``."""
     import math
 
     from logpipe_spark.operators.dedup import base_hash60
@@ -344,11 +345,11 @@ def dsir_scores(
     def grams(text: Column) -> Column:
         return _with_tokens(text, lambda t: F.concat(t, _grams_of(t, 2)))
 
-    bucket = lambda g: base_hash60(F.concat(F.lit(salt + ":"), g)) % buckets
+    bucket = lambda g: base_hash60(F.concat(F.lit("dsir:"), g)) % buckets
 
     def bucket_counts(df: DataFrame) -> dict[int, int]:
         rows = (
-            df.select(F.explode(grams(F.col(text_col))).alias("g"))
+            df.select(F.explode(grams(F.col("text"))).alias("g"))
             .select(bucket(F.col("g")).alias("b"))
             .groupBy("b")
             .agg(F.count(F.lit(1)).alias("c"))
@@ -376,19 +377,15 @@ def dsir_scores(
         lambda acc, g: acc
         + F.coalesce(F.try_element_at(lnr_map, bucket(g)), F.lit(default)),
     )
-    gs = grams(F.col(text_col))
+    gs = grams(F.col("text"))
     return docs.select(
-        F.col(key_col),
+        F.col("doc_id"),
         F.size(gs).cast("long").alias("n_grams"),
         F.round(score(gs), 4).alias("dsir_score"),
     )
 
 
-def distribution_shift(
-    p_docs: DataFrame,
-    q_docs: DataFrame,
-    text_col: str = "text",
-) -> DataFrame:
+def distribution_shift(p_docs: DataFrame, q_docs: DataFrame) -> DataFrame:
     """Unigram distribution divergence between two corpora — the drift
     monitor a training pipeline runs between corpus versions, between
     train and held-out splits, or between a source and its filtered
@@ -408,12 +405,14 @@ def distribution_shift(
     100 TB shape: both corpora explode to tokens and meet in ONE
     token-keyed hash aggregation (the only fact-sized shuffle); the
     divergence itself is two passes over the vocab-sized count table
-    plus a 1-row broadcast of the totals. Nothing is collected."""
+    plus a 1-row broadcast of the totals. Nothing is collected.
+
+    ``p_docs`` and ``q_docs``: (``text``)."""
     def _toks(df: DataFrame, flag: int) -> DataFrame:
         return df.select(
             F.explode(
                 F.filter(
-                    F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+                    F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))),
                             r"[^a-z0-9]+"),
                     lambda t: t != F.lit(""),
                 )
@@ -452,12 +451,7 @@ def distribution_shift(
     )
 
 
-def collocations(
-    docs: DataFrame,
-    top_k: int = 50,
-    min_count: int = 5,
-    text_col: str = "text",
-) -> DataFrame:
+def collocations(docs: DataFrame, top_k: int = 50, min_count: int = 5) -> DataFrame:
     """Corpus collocation mining: adjacent-bigram PMI — which word pairs
     co-occur far more than chance (named entities, terms of art,
     boilerplate phrases). The corpus-analysis companion to
@@ -476,9 +470,11 @@ def collocations(
     fact-sized shuffle; adjacent pairs only — never within-doc
     all-pairs), unigram counts derived from the SAME bigram table
     (sum over left/right slots — no second corpus pass), joined at
-    vocab size, top-k via TakeOrderedAndProject."""
+    vocab size, top-k via TakeOrderedAndProject.
+
+    ``docs``: (``text``)."""
     toks = F.filter(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+        F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))),
                 r"[^a-z0-9]+"),
         lambda t: t != F.lit(""),
     )

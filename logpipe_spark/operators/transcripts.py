@@ -29,39 +29,24 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def assemble_documents(
-    df: DataFrame,
-    group_col: str = "conv_id",
-    order_col: str = "turn_idx",
-    text_col: str = "text",
-    sep: str = "\n",
-    out_col: str = "doc",
-) -> DataFrame:
-    """One document per conversation: turns joined by ``sep`` in
-    ``order_col`` order, plus the turn count. Returns
-    (group_col, out_col, n_turns)."""
+def assemble_documents(df: DataFrame) -> DataFrame:
+    """One document per conversation: turns joined by ``\\n`` in
+    ``turn_idx`` order, plus the turn count. ``df``: (``conv_id``,
+    ``turn_idx``, ``text``); returns (conv_id, doc, n_turns)."""
     sorted_turns = F.array_sort(
-        F.collect_list(F.struct(F.col(order_col), F.col(text_col)))
+        F.collect_list(F.struct(F.col("turn_idx"), F.col("text")))
     )
-    return df.groupBy(group_col).agg(
-        F.concat_ws(sep, sorted_turns.getField(text_col)).alias(out_col),
+    return df.groupBy("conv_id").agg(
+        F.concat_ws("\n", sorted_turns.getField("text")).alias("doc"),
         F.count(F.lit(1)).alias("n_turns"),
     )
 
 
-def turn_spans(
-    df: DataFrame,
-    group_col: str = "conv_id",
-    order_col: str = "turn_idx",
-    text_col: str = "text",
-    role_col: str = "role",
-    sep: str = "\n",
-    unit: str = "chars",
-) -> DataFrame:
+def turn_spans(df: DataFrame, sep: str = "\n", unit: str = "chars") -> DataFrame:
     """Span of every turn inside its assembled document (same ``sep``
     convention as ``assemble_documents``): 0-based half-open
     [start, end). The loss-mask ingredient — a chat-SFT pipeline trains
-    on the spans whose ``role_col`` is the assistant and masks the rest.
+    on the spans whose ``role`` is the assistant and masks the rest.
 
     ``unit="chars"`` (default): character offsets,
     ``doc[start:end] == text``. ``unit="tokens"``: whitespace-token
@@ -72,9 +57,11 @@ def turn_spans(
     non-empty whitespace tokens, so empty turns own an empty span.
 
     Exact integers only (lengths/counts and a prefix sum), so any
-    engine reproduces it bit-for-bit."""
+    engine reproduces it bit-for-bit.
+
+    ``df``: (``conv_id``, ``turn_idx``, ``role``, ``text``)."""
     if unit == "chars":
-        ln = F.length(F.col(text_col)).cast("long")
+        ln = F.length(F.col("text")).cast("long")
         gap = len(sep)
     elif unit == "tokens":
         if sep.strip() != "":
@@ -83,7 +70,7 @@ def turn_spans(
             )
         ln = F.size(
             F.filter(
-                F.split(F.col(text_col), r"[ \t\n\r]+"),
+                F.split(F.col("text"), r"[ \t\n\r]+"),
                 lambda x: x != F.lit(""),
             )
         ).cast("long")
@@ -91,15 +78,15 @@ def turn_spans(
     else:
         raise ValueError(f"unit must be 'chars' or 'tokens', got {unit!r}")
     w = (
-        Window.partitionBy(group_col)
-        .orderBy(order_col)
+        Window.partitionBy("conv_id")
+        .orderBy("turn_idx")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     start = F.coalesce(F.sum(ln + gap).over(w), F.lit(0)).cast("long")
     return df.select(
-        F.col(group_col),
-        F.col(order_col),
-        F.col(role_col),
+        F.col("conv_id"),
+        F.col("turn_idx"),
+        F.col("role"),
         start.alias("start"),
         (start + ln).alias("end"),
     )

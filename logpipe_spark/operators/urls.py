@@ -71,22 +71,22 @@ def registered_domain(
     )
 
 
-def url_features(
-    df: DataFrame, url_col: str = "url", psl_extra: tuple[str, ...] = ()
-) -> DataFrame:
+def url_features(df: DataFrame) -> DataFrame:
     """Adds ``host``, ``domain`` (registrable), ``path_depth`` (number of
     non-empty path segments), ``n_params`` (query parameters), and
     ``is_https`` — the feature set URL-quality heuristics key on.
     Map-only; every expression is a shared-subexpression of one regex
-    chain that whole-stage codegen fuses into a single pass."""
-    url = F.col(url_col)
+    chain that whole-stage codegen fuses into a single pass.
+
+    ``df``: (``url``, ...)."""
+    url = F.col("url")
     host = _host(url)
     path = F.regexp_extract(url, _PATH_RE, 1)
     query = F.regexp_extract(url, _QUERY_RE, 1)
     return df.select(
         "*",
         host.alias("host"),
-        registered_domain(host, psl_extra).alias("domain"),
+        registered_domain(host, ()).alias("domain"),
         F.size(
             F.filter(F.split(path, "/"), lambda s: s != F.lit(""))
         ).alias("path_depth"),
@@ -97,38 +97,34 @@ def url_features(
     )
 
 
-def url_blocklist_filter(
-    df: DataFrame,
-    blocked: DataFrame,
-    url_col: str = "url",
-    domain_col: str = "domain",
-    max_labels: int = 5,
-) -> DataFrame:
+def url_blocklist_filter(df: DataFrame, blocked: DataFrame) -> DataFrame:
     """Drop rows whose URL host equals, or is a subdomain of, any entry
-    in ``blocked[domain_col]`` — C4/RefinedWeb-style domain blocklist
+    in ``blocked.domain`` — C4/RefinedWeb-style domain blocklist
     filtering with suffix semantics (blocking ``tracker.net`` also blocks
     ``ads.tracker.net``).
 
     Plan: one broadcast hash ANTI join per suffix DEPTH — the 2-label
-    suffix, the 3-label suffix, … up to ``max_labels`` — each on string
+    suffix, the 3-label suffix, … up to 5 labels — each on string
     EQUALITY against the same broadcast blocklist. Every join is
     map-side (broadcast), so the corpus is never shuffled, never
-    exploded, and never re-broadcast; a row survives iff none of its ≤
-    ``max_labels`` trailing-label suffixes (1-label through the full
+    exploded, and never re-broadcast; a row survives iff none of its ≤ 5
+    trailing-label suffixes (1-label through the full
     host) is blocked, which is exactly the chained anti-join
     composition. Cost: ~5 hash probes per row against
     an in-memory table — the same order as the single grep gate the
-    reference applies per record (`logpipe-output-es.c:543-560`)."""
+    reference applies per record (`logpipe-output-es.c:543-560`).
+
+    ``df``: (``url``, ...); ``blocked``: (``domain``)."""
     bl = F.broadcast(
         blocked.select(
-            F.lower(F.col(domain_col)).alias("_blocked_domain")
+            F.lower(F.col("domain")).alias("_blocked_domain")
         ).distinct()
     )
-    host = _host(F.col(url_col))
+    host = _host(F.col("url"))
     parts = F.split(host, r"\.")
     n = F.size(parts)
     out = df
-    for k in range(1, max_labels + 1):
+    for k in range(1, 6):
         # the k-label suffix, NULL when the host is shorter than k labels
         # (a NULL join key never matches → the row survives this probe)
         suffix_k = F.when(
@@ -189,19 +185,19 @@ def canonical_url(url: Column) -> Column:
     return F.concat(scheme, F.lit("://"), host, portpart, path, querypart)
 
 
-def url_dedup(
-    df: DataFrame, url_col: str = "url", key_col: str = "doc_id"
-) -> DataFrame:
+def url_dedup(df: DataFrame) -> DataFrame:
     """URL-keyed dedup groups over canonical URLs: one row per canonical
     form with the group size and the kept (lowest-key) member. The
     cheapest dedup a crawl pipeline runs — before any text is parsed —
     and at 100 TB the shape is optimal: canonicalization is map-only,
     then ONE hash shuffle on the canonical string with map-side partial
-    aggregation; no text column ever moves."""
+    aggregation; no text column ever moves.
+
+    ``df``: (``doc_id``, ``url``, ...)."""
     return (
         df.select(
-            canonical_url(F.col(url_col)).alias("url_canon"),
-            F.col(key_col).cast("long").alias("_k"),
+            canonical_url(F.col("url")).alias("url_canon"),
+            F.col("doc_id").cast("long").alias("_k"),
         )
         .groupBy("url_canon")
         .agg(

@@ -43,17 +43,13 @@ def write_partitioned_by_key(
 def write_text_lines(
     df: DataFrame,
     path: str,
-    text_col: str = "text",
     partition_cols: list[str] | None = None,
-    mode: str = "overwrite",
-    max_records_per_file: int | None = None,
-    compression: str | None = None,
 ) -> None:
     """Byte-faithful line sink — the reference's CORE contract: every
     collected line is forwarded verbatim into the destination file
     (`logpipe-output-file.c:208-286` appends the block bytes unchanged).
-    Writes the raw ``text_col`` as newline-delimited text, one directory
-    per partition value (e.g. sink), optional size rotation and gzip/zstd.
+    Writes the raw ``text`` column as newline-delimited text, one
+    directory per partition value (e.g. sink), overwriting ``path``.
 
     Byte-faithfulness caveat, stated rather than hidden: the text source/
     sink round-trips LINES — a payload containing '\\n' would split on
@@ -63,27 +59,21 @@ def write_text_lines(
     as the parquet sinks (SURVEY §7.3)."""
     out = df.select(
         *[F.col(c) for c in (partition_cols or [])],
-        F.col(text_col).alias("value"),
+        F.col("text").alias("value"),
     )
-    w = out.write.mode(mode)
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", max_records_per_file)
-    if compression:
-        w = w.option("compression", compression)
+    w = out.write.mode("overwrite")
     if partition_cols:
         w = w.partitionBy(*partition_cols)
     w.text(path)
 
 
-def write_date_partitioned(
-    df: DataFrame, path: str, ts_col: str = "ts", fmt: str = "yyyyMMdd",
-    mode: str = "append",
-) -> None:
-    """HDFS day-dir layout: partition column = date_format(ts). Midnight
+def write_date_partitioned(df: DataFrame, path: str, mode: str = "append") -> None:
+    """HDFS day-dir layout: partition column ``day`` =
+    date_format(``ts``, 'yyyyMMdd'). Midnight
     rollover (`logpipe-output-hdfs.c:270-296`) is free — it's just a new
     partition value."""
     (
-        df.withColumn("day", F.date_format(F.col(ts_col), fmt))
+        df.withColumn("day", F.date_format(F.col("ts"), "yyyyMMdd"))
         .write.mode(mode)
         .partitionBy("day")
         .parquet(path)
@@ -189,13 +179,7 @@ def render_es_bulk(
     )
 
 
-def es_bulk_post(
-    batches: DataFrame,
-    url: str,
-    payload_col: str = "payload",
-    timeout_sec: float = 10.0,
-    max_retries: int = 2,
-) -> None:
+def es_bulk_post(batches: DataFrame, url: str, max_retries: int = 2) -> None:
     """Transport half of the ES output: POST each rendered ``/_bulk``
     payload (from ``render_es_bulk``) to ``url`` — EXECUTOR-side
     (`foreachPartition`), one HTTP connection context per partition, so
@@ -204,13 +188,15 @@ def es_bulk_post(
     reconnect. Delivery is at-least-once (a task that dies mid-partition
     replays its batches — same contract as the reference's re-send).
     Per-payload retry with backoff handles transient refusals before
-    escalating to task failure."""
+    escalating to task failure; each POST times out after 10 s.
+
+    ``batches``: (``payload``)."""
     def _post_partition(rows):
         import time as _time
         import urllib.request
 
         for r in rows:
-            data = r[payload_col].encode()
+            data = r["payload"].encode()
             last = None
             for attempt in range(max_retries + 1):
                 try:
@@ -220,7 +206,7 @@ def es_bulk_post(
                         headers={"Content-Type": "application/x-ndjson"},
                         method="POST",
                     )
-                    urllib.request.urlopen(req, timeout=timeout_sec).read()
+                    urllib.request.urlopen(req, timeout=10.0).read()
                     last = None
                     break
                 except Exception as exc:  # noqa: BLE001 — escalate below
@@ -229,13 +215,12 @@ def es_bulk_post(
             if last is not None:
                 raise last  # task retry takes over
 
-    batches.select(payload_col).foreachPartition(_post_partition)
+    batches.select("payload").foreachPartition(_post_partition)
 
 
 def tcp_sink_send(
     df: DataFrame,
     peers: list[tuple[str, int]],
-    text_col: str = "text",
     connect_timeout: float = 5.0,
 ) -> None:
     """Transport half of output-tcp: line-framed send with ROUND-ROBIN
@@ -248,7 +233,9 @@ def tcp_sink_send(
 
     The partition's lines are materialized before sending so a failover
     can replay them (the reference equally buffers the block it resends);
-    partitions therefore bound the replay unit, same as its 100 KB block."""
+    partitions therefore bound the replay unit, same as its 100 KB block.
+
+    ``df``: (``text``)."""
     if not peers:
         # validate driver-side: an empty rotation would otherwise surface
         # as a ZeroDivisionError inside every executor task (ADVICE r3)
@@ -259,7 +246,7 @@ def tcp_sink_send(
 
         from pyspark import TaskContext
 
-        lines = [r[text_col] for r in rows]
+        lines = [r["text"] for r in rows]
         if not lines:
             return
         payload = ("\n".join(lines) + "\n").encode()
@@ -283,7 +270,7 @@ def tcp_sink_send(
                 last = exc
         raise last
 
-    df.select(text_col).foreachPartition(_send)
+    df.select("text").foreachPartition(_send)
 
 
 def kafka_render(df: DataFrame, key_col: str | None = None,
@@ -301,15 +288,14 @@ def kafka_render(df: DataFrame, key_col: str | None = None,
     )
 
 
-def kafka_sink_writer(df: DataFrame, bootstrap_servers: str, topic: str,
-                      key_col: str | None = None, value_col: str = "value"):
+def kafka_sink_writer(df: DataFrame, bootstrap_servers: str, topic: str):
     """Kafka producer sink builder (built-in connector; needs a broker +
     the spark-sql-kafka package at runtime — neither exists in this
-    sandbox, so .save() raising is itself seam-tested). Unassigned
-    partition like the reference (`logpipe-output-kafka.c:259`) unless a
-    key column is given."""
+    sandbox, so .save() raising is itself seam-tested). Writes ``df.value``
+    with no key: partition unassigned, like the reference
+    (`logpipe-output-kafka.c:259`)."""
     return (
-        kafka_render(df, key_col, value_col).write.format("kafka")
+        kafka_render(df).write.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("topic", topic)
     )

@@ -124,13 +124,11 @@ def translate_logpipe_conf(
     text: str,
     source_dir: str | None = None,
     out_dir: str | None = None,
-    rules: list[dict] | None = None,
 ) -> TranslatedConf:
     """Translate one conf. ``source_dir``/``out_dir`` override the paths
-    embedded in the conf (they point at the reference's hosts); ``rules``
-    overrides the default route-everything rule (the reference has no
-    routing — every event reaches every output, so the faithful default is
-    a single catch-all rule per file-ish output)."""
+    embedded in the conf (they point at the reference's hosts). The route
+    is one catch-all rule per file-ish output: the reference has no
+    routing, and every event reaches every output."""
     cfg = parse_logpipe_conf(text)
     out = TranslatedConf()
     src = source_dir
@@ -280,7 +278,7 @@ def translate_logpipe_conf(
         out.spec = PipelineSpec.from_json(json.dumps({
             "source_dir": src,
             "out_dir": out_dir or "/tmp/logpipe_conf_out",
-            "rules": rules or [{
+            "rules": [{
                 "rule_id": 1, "match_col": "text", "pattern": "*",
                 "sink": sink_name or "sink",
             }],

@@ -71,9 +71,6 @@ def run_corpus_funnel(
     spark: SparkSession,
     docs: DataFrame,
     eval_docs: DataFrame | None = None,
-    alpha: float = 0.5,
-    chunk_size: int = 128,
-    pack_budget: int = 256,
     html_col: str | None = None,
     url_blocklist: DataFrame | None = None,
     classifier_threshold: float | None = None,
@@ -82,8 +79,9 @@ def run_corpus_funnel(
 ) -> dict:
     """[URL blocklist →] [HTML extract →] clean text → quality gate →
     [classifier gate →] exact dedup → near-dup keep-best →
-    decontaminate → PII scrub → line dedup → temperature mix → chunk →
-    pack → shuffle order.
+    decontaminate → PII scrub → line dedup → temperature mix (α = 0.5
+    over ``lang``) → 128-token chunks → packs of ≤ 256 tokens → shuffle
+    order.
     Returns {stage: count} (forcing each stage — this is the
     audit/benchmark entry; a production run would fuse stages it does
     not need counts for).
@@ -196,19 +194,19 @@ def run_corpus_funnel(
     funnel["pii_line_dedup"] = lined.count()
 
     mixed = lined.join(
-        temperature_mix(lined, alpha=alpha, group_col="lang").select("doc_id"),
+        temperature_mix(lined, alpha=0.5, group_col="lang").select("doc_id"),
         "doc_id",
     )
     mixed = mixed.localCheckpoint()
     funnel["temperature_mix"] = mixed.count()
 
-    chunks = chunk_documents(mixed, chunk_size=chunk_size)
+    chunks = chunk_documents(mixed, chunk_size=128)
     packed = sequence_pack(
         chunks.select(
             (F.col("doc_id") * 1000 + F.col("chunk_idx")).alias("doc_id"),
             F.col("chunk_text").alias("text"),
         ),
-        budget=pack_budget,
+        budget=256,
     )
     funnel["chunks"] = chunks.count()
     funnel["packed_bins"] = packed.select("pack_id").distinct().count()

@@ -41,7 +41,6 @@ def write_bucketed(
     bucket_cols: list[str],
     n_buckets: int,
     sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> DataFrame:
     """Write ``df`` as an external parquet table bucketed by
     ``bucket_cols`` into ``n_buckets``, registered in the session catalog
@@ -53,7 +52,7 @@ def write_bucketed(
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     writer = (
         df.repartition(n_buckets, *bucket_cols)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .format("parquet")
         .option("path", path)
         .bucketBy(n_buckets, *bucket_cols)
@@ -69,9 +68,8 @@ def colocated_join(
     left_name: str,
     right_name: str,
     on: list[str],
-    how: str = "inner",
 ) -> DataFrame:
-    """Join two same-bucketing catalog tables on their bucket key. With
+    """Inner-join two same-bucketing catalog tables on their bucket key. With
     matching bucket specs this plans as a bucket-local SortMergeJoin —
     assert_no_exchange() in tests proves the zero-shuffle claim."""
-    return spark.table(left_name).join(spark.table(right_name), on, how)
+    return spark.table(left_name).join(spark.table(right_name), on)

@@ -87,18 +87,17 @@ def text_lines_source(
     spark: SparkSession,
     src_dir: str,
     include: list[str] | None = None,
-    exclude: list[str] | None = None,
 ) -> DataFrame:
     """Raw text-log scan — the reference's primary input is TAILING TEXT
     FILES (`logpipe-input-file.c` line framing); this is the batch scan of
-    the same: newline-framed lines as (filename, text). Include/exclude
-    globs prune the file LIST before the scan (same walk semantics as the
+    the same: newline-framed lines as (filename, text). Include globs
+    prune the file LIST before the scan (same walk semantics as the
     parquet path). The filename rides the hidden ``_metadata`` column —
     no extra IO; per-file line numbers are intentionally NOT fabricated
     here (a distributed scan has no cheap in-file order — the reference's
     offset bookkeeping maps to the snapshot ledger, not row numbers)."""
-    if include or exclude:
-        paths = select_input_files(src_dir, include, exclude)
+    if include:
+        paths = select_input_files(src_dir, include)
         if not paths:
             raise ValueError(f"all files under {src_dir} filtered out")
         reader = spark.read.text(paths)
@@ -123,32 +122,28 @@ def snapshot_source(
     return spark.read.option("basePath", src_dir).parquet(*paths)
 
 
-def snapshot_stream(spark: SparkSession, src_dir: str, schema: T.StructType,
-                    max_files_per_trigger: int = 8) -> DataFrame:
+def snapshot_stream(
+    spark: SparkSession, src_dir: str, schema: T.StructType
+) -> DataFrame:
     """File-source stream: new snapshot files are discovered per trigger
-    (the inotify-create/modify analogue; offsets live in the checkpoint)."""
+    (the inotify-create/modify analogue; offsets live in the checkpoint),
+    at most 8 files per micro-batch."""
     return (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 8)
         .parquet(src_dir)
     )
 
 
-def kafka_source(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "earliest",
-    streaming: bool = True,
-) -> DataFrame:
-    """Kafka scan/stream (built-in connector). No broker in this sandbox —
-    constructing the reader validates options; .load() requires the
-    spark-sql-kafka package + a live broker."""
-    reader = (spark.readStream if streaming else spark.read).format("kafka")
+def kafka_source(spark: SparkSession, bootstrap_servers: str, topic: str) -> DataFrame:
+    """Kafka stream from the earliest offsets (built-in connector). No
+    broker in this sandbox — constructing the reader validates options;
+    .load() requires the spark-sql-kafka package + a live broker."""
     return (
-        reader.option("kafka.bootstrap.servers", bootstrap_servers)
+        spark.readStream.format("kafka")
+        .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
+        .option("startingOffsets", "earliest")
         .load()
     )
 

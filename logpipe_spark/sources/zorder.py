@@ -59,7 +59,6 @@ def zorder_write(
     a_col: str,
     b_col: str,
     num_files: int = 16,
-    z_col: str = "_z",
 ) -> None:
     """Write ``df`` as parquet clustered on the Morton curve of
     (``a_col``, ``b_col``): one range shuffle on the z-key (sampled
@@ -69,10 +68,10 @@ def zorder_write(
     footer statistics (`tests/test_zorder.py` measures the skip rate
     against a single-column sort)."""
     (
-        df.withColumn(z_col, morton_key(F.col(a_col), F.col(b_col)))
-        .repartitionByRange(num_files, z_col)
-        .sortWithinPartitions(z_col)
-        .drop(z_col)
+        df.withColumn("_z", morton_key(F.col(a_col), F.col(b_col)))
+        .repartitionByRange(num_files, "_z")
+        .sortWithinPartitions("_z")
+        .drop("_z")
         .write.mode("overwrite")
         .parquet(path)
     )

@@ -19,12 +19,11 @@ def stream_exact_dedup(
     stream_df: DataFrame,
     ts_col: str = "ts",
     watermark: str = "30 minutes",
-    text_col: str = "text",
     key_cols: list[str] | None = None,
 ) -> DataFrame:
     """Drop replayed rows within the watermark window.
 
-    Dedup key = explicit ``key_cols`` or md5(text) (content identity, the
+    Dedup key = explicit ``key_cols`` or md5(``text``) (content identity, the
     same key the batch exact-dedup uses). Uses
     ``dropDuplicatesWithinWatermark``: unlike plain dropDuplicates on a
     stream, state for a key is EVICTED once the watermark passes it, so
@@ -35,7 +34,7 @@ def stream_exact_dedup(
     snapshot ledger)."""
     keyed = stream_df.withWatermark(ts_col, watermark)
     if key_cols is None:
-        keyed = keyed.withColumn("_dedup_key", F.md5(F.col(text_col)))
+        keyed = keyed.withColumn("_dedup_key", F.md5(F.col("text")))
         key_cols = ["_dedup_key"]
     return keyed.dropDuplicatesWithinWatermark(key_cols).drop("_dedup_key")
 
@@ -43,10 +42,7 @@ def stream_exact_dedup(
 def stream_incremental_dedup(
     stream_df: DataFrame,
     index: DataFrame,
-    ts_col: str = "ts",
     watermark: str = "30 minutes",
-    text_col: str = "text",
-    fp_col: str = "fingerprint",
 ) -> DataFrame:
     """Streaming half of :func:`~logpipe_spark.operators.dedup.
     incremental_dedup`: admit only documents whose content fingerprint is
@@ -54,7 +50,7 @@ def stream_incremental_dedup(
     runs and (b) not already seen in-stream within the watermark.
 
     Two-tier state, mirroring the batch operator's two checks: the prior
-    corpus lives in ``index`` (one fingerprint column — the exact shape
+    corpus lives in ``index`` (one ``fingerprint`` column — the exact shape
     ``fingerprint_index`` writes), joined stream-static left_anti, which
     Spark re-plans per micro-batch (a small index broadcasts; a huge one
     becomes a shuffled join of the BATCH against it — either way the
@@ -65,14 +61,16 @@ def stream_incremental_dedup(
     :func:`stream_exact_dedup`: the periodic batch incremental_dedup
     pass is the backstop, and its fingerprints are bit-identical
     (shared ``bow_fingerprint``), so admitting batches grown here into
-    the persisted index is exact."""
+    the persisted index is exact.
+
+    ``stream_df``: (``ts``, ``text``, ...)."""
     from logpipe_spark.operators.dedup import bow_fingerprint
 
-    fp = stream_df.withColumn("_fp", bow_fingerprint(F.col(text_col)))
-    seen = index.select(F.col(fp_col).alias("_fp")).distinct()
+    fp = stream_df.withColumn("_fp", bow_fingerprint(F.col("text")))
+    seen = index.select(F.col("fingerprint").alias("_fp")).distinct()
     fresh = fp.join(seen, "_fp", "left_anti")
     return (
-        fresh.withWatermark(ts_col, watermark)
+        fresh.withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["_fp"])
-        .withColumnRenamed("_fp", fp_col)
+        .withColumnRenamed("_fp", "fingerprint")
     )

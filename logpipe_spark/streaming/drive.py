@@ -70,31 +70,34 @@ def stage_stream_source(
     return d
 
 
-def run_available_now(
-    result_stream: DataFrame,
-    output_mode: str = "append",
-    timeout_s: float = 600,
-) -> str:
-    """Run ``result_stream`` to a parquet sink with AvailableNow and
-    return the sink path. A files-per-trigger cadence is a source option,
-    set at read time (:func:`read_stream_table`).
+def _await_drain(query, timeout_s: float) -> None:
+    """Wait up to ``timeout_s`` for an AvailableNow ``query`` to finish.
 
-    A query still running after ``timeout_s`` is stopped and
-    ``TimeoutError`` raised: its sink holds only part of the input, and
-    a returned path would let a caller read it while the stream writes."""
+    A query still running then is stopped and ``TimeoutError`` raised: its
+    sink holds only part of the input, and a normal return would let a
+    caller read it as complete. Spark rejects a wait of 0 s, so a
+    ``timeout_s`` of 0 or less counts as already expired."""
+    if not (timeout_s > 0 and query.awaitTermination(timeout_s)):
+        query.stop()
+        raise TimeoutError(f"stream did not drain within {timeout_s} s")
+
+
+def run_available_now(result_stream: DataFrame, timeout_s: float = 600) -> str:
+    """Run ``result_stream`` to a parquet sink in append mode with
+    AvailableNow and return the sink path. A files-per-trigger cadence is
+    a source option, set at read time (:func:`read_stream_table`). A drain
+    that outlives ``timeout_s`` raises ``TimeoutError`` (:func:`_await_drain`)."""
     out = tempfile.mkdtemp(prefix="lps_stream_out_") + "/sink"
     ckpt = tempfile.mkdtemp(prefix="lps_stream_ckpt_") + "/" + uuid.uuid4().hex
     q = (
         result_stream.writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
-        .outputMode(output_mode)
+        .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"stream did not drain within {timeout_s} s")
+    _await_drain(q, timeout_s)
     return out
 
 

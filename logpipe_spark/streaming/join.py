@@ -28,15 +28,12 @@ def stream_interval_join(
     left: DataFrame,
     right: DataFrame,
     on: list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     within_minutes: int = 10,
     watermark_minutes: int = 30,
     how: str = "inner",
-    right_suffix: str = "_r",
 ) -> DataFrame:
     """Join ``right`` rows to ``left`` rows sharing the ``on`` keys whose
-    event time falls in ``[left_ts, left_ts + within_minutes]`` — the
+    event time ``ts`` falls in ``[left.ts, left.ts + within_minutes]`` — the
     "response arrives after the request, within a bounded interval"
     correlation.
 
@@ -44,7 +41,7 @@ def stream_interval_join(
     stream-stream joins; harmless in batch). The equi-keys keep the join
     a hash join co-partitioned on ``on`` — the interval is a post-probe
     range predicate, NOT the join key, so there is no range-explosion.
-    Non-key right columns are suffixed with ``right_suffix`` to keep the
+    Non-key right columns are suffixed with ``_r`` to keep the
     output schema collision-free.
 
     ``how``: ``inner`` or ``left_outer`` (outer emission happens only
@@ -55,12 +52,12 @@ def stream_interval_join(
     if not on:
         raise ValueError("stream-stream joins need at least one equi-key")
 
-    lw = left.withWatermark(left_ts, f"{watermark_minutes} minutes")
+    lw = left.withWatermark("ts", f"{watermark_minutes} minutes")
     renamed = right
     for c in right.columns:
         if c not in on:
-            renamed = renamed.withColumnRenamed(c, c + right_suffix)
-    rts = right_ts + right_suffix if right_ts not in on else right_ts
+            renamed = renamed.withColumnRenamed(c, c + "_r")
+    rts = "ts_r" if "ts" not in on else "ts"
     rw = renamed.withWatermark(rts, f"{watermark_minutes} minutes")
 
     cond = None
@@ -69,8 +66,8 @@ def stream_interval_join(
         cond = eq if cond is None else cond & eq
     cond = (
         cond
-        & (rw[rts] >= lw[left_ts])
-        & (rw[rts] <= lw[left_ts] + F.expr(f"INTERVAL {within_minutes} MINUTES"))
+        & (rw[rts] >= lw["ts"])
+        & (rw[rts] <= lw["ts"] + F.expr(f"INTERVAL {within_minutes} MINUTES"))
     )
     joined = lw.join(rw, cond, how)
     # drop the duplicated right-side key columns (equal by construction;

@@ -90,7 +90,7 @@ ASSEMBLE_OUTPUT = T.StructType(
 )
 
 
-def _make_assembler(gap_ms: int, sep: str):
+def _make_assembler(gap_ms: int):
     def _assemble(key, pdfs, state: GroupState):
         if state.hasTimedOut:
             idxs, texts, _ = state.get
@@ -99,7 +99,7 @@ def _make_assembler(gap_ms: int, sep: str):
             yield pd.DataFrame(
                 {
                     "conv_id": [key[0]],
-                    "doc": [sep.join(texts[i] for i in order)],
+                    "doc": ["\n".join(texts[i] for i in order)],
                     "n_turns": [len(idxs)],
                 }
             )
@@ -125,7 +125,6 @@ def assemble_conversations_stream(
     stream_df: DataFrame,
     gap: str = "10 minutes",
     watermark_delay: str = "1 minute",
-    sep: str = "\n",
 ) -> DataFrame:
     """Streaming row-per-turn → document-per-conversation assembly — the
     streaming form of ``operators.transcripts.assemble_documents``: turns
@@ -149,7 +148,7 @@ def assemble_conversations_stream(
         stream_df.withWatermark("ts", watermark_delay)
         .groupBy("conv_id")
         .applyInPandasWithState(
-            _make_assembler(gap_ms, sep),
+            _make_assembler(gap_ms),
             outputStructType=ASSEMBLE_OUTPUT,
             stateStructType=ASSEMBLE_STATE,
             outputMode="append",

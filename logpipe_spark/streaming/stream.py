@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 from logpipe_spark.operators.sinks import local_path
 from logpipe_spark.pipeline import build_stage_chain, write_batch
 from logpipe_spark.sources.readers import snapshot_stream
+from logpipe_spark.streaming.drive import _await_drain
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -69,8 +70,9 @@ def run_stream(
     usleep_atou64) — used when ``available_now`` is False; parse config
     strings like "100ms" with functions.units.parse_duration_us.
 
-    Returns {"batches": n} after the query drains (available_now) or
-    times out."""
+    Returns {"batches": n} after the query drains (available_now; a drain
+    that outlives ``timeout_sec`` stops the query and raises
+    ``TimeoutError``) or, in tail mode, when ``timeout_sec`` ends it."""
     out_dir = local_path(out_dir)
     seen = {"batches": 0}
 
@@ -93,6 +95,9 @@ def run_stream(
         ms = max(trigger_interval_us // 1000, 1)
         writer = writer.trigger(processingTime=f"{ms} milliseconds")
     query = writer.start()
+    if available_now:
+        _await_drain(query, timeout_sec)
+        return seen
     query.awaitTermination(timeout_sec)
     if query.isActive:
         query.stop()

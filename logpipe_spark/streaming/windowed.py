@@ -21,8 +21,6 @@ def windowed_turn_counts(
     stream_df: DataFrame,
     window_minutes: int = 10,
     watermark_minutes: int = 30,
-    ts_col: str = "ts",
-    key_col: str = "role",
 ) -> DataFrame:
     """Tumbling event-time window counts with a late-data watermark.
 
@@ -31,12 +29,15 @@ def windowed_turn_counts(
     the documented trade of bounded state for bounded lateness. Works on a
     streaming OR batch DataFrame (batch mode ignores the watermark, which
     is exactly Spark's unified-semantics contract: the batch result equals
-    the stream result when no data is late)."""
+    the stream result when no data is late).
+
+    ``stream_df``: (``ts``, ``role``, ``text``, ...); counts per
+    (window, ``role``)."""
     return (
-        stream_df.withWatermark(ts_col, f"{watermark_minutes} minutes")
+        stream_df.withWatermark("ts", f"{watermark_minutes} minutes")
         .groupBy(
-            F.window(F.col(ts_col), f"{window_minutes} minutes").alias("win"),
-            F.col(key_col),
+            F.window(F.col("ts"), f"{window_minutes} minutes").alias("win"),
+            F.col("role"),
         )
         .agg(
             F.count(F.lit(1)).alias("n_turns"),
@@ -45,7 +46,7 @@ def windowed_turn_counts(
         .select(
             F.col("win.start").alias("win_start"),
             F.col("win.end").alias("win_end"),
-            key_col,
+            "role",
             "n_turns",
             "chars",
         )
@@ -63,9 +64,11 @@ def run_windowed_stream(
     """Drain ``src_dir`` through the watermarked windowed aggregation in
     append mode (a row is emitted exactly once, when its window passes the
     watermark — the micro-batch analogue of "window is final"). Returns
-    the number of finalized window rows written."""
+    the number of finalized window rows written; a drain that outlives
+    ``timeout_sec`` stops the query and raises ``TimeoutError``."""
     import os
 
+    from logpipe_spark.streaming.drive import _await_drain
     from logpipe_spark.streaming.stream import TRANSCRIPT_SCHEMA
 
     stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(src_dir)
@@ -76,9 +79,7 @@ def run_windowed_stream(
         .trigger(availableNow=True)
         .start(os.path.join(out_dir, "data"))
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
+    _await_drain(q, timeout_sec)
     data = os.path.join(out_dir, "data")
     return spark.read.parquet(data).count() if os.path.isdir(data) else 0
 
@@ -87,7 +88,6 @@ def session_window_stats(
     stream_df: DataFrame,
     gap_minutes: int = 30,
     watermark_minutes: int = 60,
-    ts_col: str = "ts",
     key_col: str = "conv_id",
 ) -> DataFrame:
     """Event-time SESSION windows — dynamic-length windows that extend as
@@ -104,11 +104,13 @@ def session_window_stats(
 
     Scale: state is one open session per active key (merged as events
     extend it) — |active keys| × one row, evicted at close; the merge is
-    Spark-native session consolidation, no custom state code."""
+    Spark-native session consolidation, no custom state code.
+
+    ``stream_df``: (``ts``, ``text``, ``key_col``, ...)."""
     return (
-        stream_df.withWatermark(ts_col, f"{watermark_minutes} minutes")
+        stream_df.withWatermark("ts", f"{watermark_minutes} minutes")
         .groupBy(
-            F.session_window(F.col(ts_col), f"{gap_minutes} minutes").alias(
+            F.session_window(F.col("ts"), f"{gap_minutes} minutes").alias(
                 "sw"
             ),
             F.col(key_col),

@@ -563,7 +563,7 @@ def test_dedup_lines_removes_boilerplate_keeps_blanks(spark):
 
 
 def _py_ngrams(text, n):
-    """Python reference for _pos_spans: lowercase, split on single spaces,
+    """Python reference for _ngrams: lowercase, split on single spaces,
     drop empty tokens, then every run of n consecutive tokens."""
     if text is None:
         return []
@@ -585,14 +585,14 @@ NGRAM_TEXTS = [
 
 @pytest.mark.parametrize("n", [1, 3])
 def test_shingles_and_pos_spans_match_python_reference(spark, n):
-    from logpipe_spark.operators.dedup import _pos_spans, _shingles
+    from logpipe_spark.operators.dedup import _ngrams, _shingles
 
     df = spark.createDataFrame(
         pd.DataFrame({"i": range(len(NGRAM_TEXTS)), "text": NGRAM_TEXTS})
     )
     got = df.select(
         "i",
-        _pos_spans(F.col("text"), n).alias("spans"),
+        _ngrams(F.col("text"), n).alias("spans"),
         _shingles(F.col("text"), n).alias("shingles"),
     ).collect()
     for r in got:
@@ -604,9 +604,9 @@ def test_shingles_and_pos_spans_match_python_reference(spark, n):
 def test_ngram_expression_splits_each_document_once():
     """The token array is bound once per row; a lambda that re-named the
     split expression would print it once per use."""
-    from logpipe_spark.operators.dedup import _pos_spans, _shingles
+    from logpipe_spark.operators.dedup import _ngrams, _shingles
 
-    for build in (_pos_spans, _shingles):
+    for build in (_ngrams, _shingles):
         assert str(build(F.col("text"), 3)).count("split(") == 1
 
 

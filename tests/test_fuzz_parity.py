@@ -1,5 +1,5 @@
 """Seeded fuzz parity: adversarial text through every implementation of the
-same semantics — Spark builtin vs pandas UDF vs pure-Python oracle — and
+same semantics — Spark builtin vs pure-Python oracle — and
 random glob patterns through the compiled rlike vs the Python matcher.
 
 One Spark job per property (hypothesis's per-example loop doesn't fit a JVM
@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from logpipe_spark.globs import glob_to_regex, is_match
-from logpipe_spark.operators.parse import PARSE_COLS, extract_builtin, extract_pandas
+from logpipe_spark.operators.parse import PARSE_COLS, extract_builtin
 from logpipe_spark.operators.route import route
 from logpipe_spark.oracle import parse_text, route_row
 
@@ -70,13 +70,11 @@ def _norm(pdf):
 def test_parse_three_way_parity(fuzz_df):
     pdf, df = fuzz_df
     builtin = _norm(extract_builtin(df).toPandas())
-    pandas_ = _norm(extract_pandas(df).toPandas())
     oracle = pd.DataFrame([parse_text(t) for t in pdf["text"]])
     oracle.insert(0, "id", pdf["id"].values)
     oracle = _norm(oracle)
     for col in PARSE_COLS:
         assert builtin[col].tolist() == oracle[col].tolist(), f"builtin vs oracle: {col}"
-        assert pandas_[col].tolist() == oracle[col].tolist(), f"pandas vs oracle: {col}"
 
 
 def _random_rules(seed=11, n=12):

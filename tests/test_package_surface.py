@@ -1,4 +1,5 @@
-"""Every public name the package defines is reached by a caller.
+"""Every public name the package defines is reached by a caller, and every
+defaulted parameter of a public function is set by one.
 
 A public name is a top-level ``def`` or ``class`` in ``logpipe_spark/``
 whose name does not start with ``_``. It is reached when a root refers to
@@ -17,11 +18,19 @@ it, or when the body of a reached name does (transitively). The roots are:
 Tests are not roots: a name only a test calls is a fixture or a reference
 mirror, and belongs in ``tests/``, or it is dead. Names match by bare
 identifier, so a name shared by two modules counts as reached in both.
-The check parses files only and starts no Spark."""
+
+A defaulted parameter of a public top-level ``def`` is set when some call
+of that name, in any ``.py`` file of the repo (tests included), passes it
+by keyword, by position, or through a ``*``/``**`` splat. A default that
+no call overrides is a constant, and the function should say so in its
+body. Calls match by bare name, as above.
+
+Both checks share one parse of each file and start no Spark."""
 
 from __future__ import annotations
 
 import ast
+import functools
 import glob
 import os
 import re
@@ -44,6 +53,7 @@ def _python_files(top: str, skip: tuple[str, ...] = ()):
         )
 
 
+@functools.cache
 def _parse(path: str) -> ast.Module:
     with open(path, encoding="utf-8") as fh:
         return ast.parse(fh.read(), filename=path)
@@ -120,4 +130,51 @@ def test_every_public_name_is_reached_by_a_caller():
         "public names no caller outside tests/ reaches — give each a "
         "caller, move it into a tests/ helper module, name it in its "
         "COVERAGE.md row, or delete it:\n" + "\n".join(unreached)
+    )
+
+
+def _defaulted(node: ast.FunctionDef) -> list[tuple[ast.arg, int | None]]:
+    """(parameter, positional index or None if keyword-only) per default."""
+    a = node.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    return [(arg, i) for i, arg in enumerate(pos) if i >= first] + [
+        (k, None) for k, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+    ]
+
+
+def _sets(call: ast.Call, arg: ast.arg, index: int | None) -> bool:
+    if any(k.arg is None or k.arg == arg.arg for k in call.keywords):
+        return True
+    return index is not None and (
+        len(call.args) > index or any(isinstance(a, ast.Starred) for a in call.args)
+    )
+
+
+def unset_parameters() -> list[str]:
+    calls: dict[str, list[ast.Call]] = {}
+    for path in _python_files(ROOT):
+        for n in ast.walk(_parse(path)):
+            if isinstance(n, ast.Call):
+                f = n.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name:
+                    calls.setdefault(name, []).append(n)
+    return [
+        f"{os.path.relpath(path, ROOT)}: {name}({arg.arg})"
+        for name, sites in _definitions().items()
+        if not name.startswith("_")
+        for path, node in sites
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        for arg, index in _defaulted(node)
+        if not any(_sets(c, arg, index) for c in calls.get(name, ()))
+    ]
+
+
+def test_every_defaulted_parameter_is_set_by_a_caller():
+    unset = unset_parameters()
+    assert not unset, (
+        f"{len(unset)} defaulted parameters no call in the repo sets — make "
+        "each a literal or module constant in the function body:\n"
+        + "\n".join(unset)
     )

@@ -1,11 +1,10 @@
-"""Parse-stage parity: builtin (JVM) path == pandas-UDF path == oracle."""
+"""Parse-stage parity: the builtin (JVM) path == the Python oracle."""
 
 import pandas as pd
 
 from logpipe_spark.operators.parse import (
     PARSE_COLS,
     extract_builtin,
-    extract_pandas,
     make_grok_udf,
 )
 from logpipe_spark.oracle import parse_text
@@ -33,20 +32,6 @@ def test_builtin_matches_oracle(spark, transcripts_df, transcripts_pdf):
     exp.insert(1, "turn_idx", transcripts_pdf["turn_idx"].values)
     exp = _normalize(exp)
     pd.testing.assert_frame_equal(got, exp, check_dtype=False)
-
-
-def test_pandas_udf_matches_builtin(spark, transcripts_df):
-    a = _normalize(
-        extract_builtin(transcripts_df)
-        .select("conv_id", "turn_idx", *PARSE_COLS)
-        .toPandas()
-    )
-    b = _normalize(
-        extract_pandas(transcripts_df)
-        .select("conv_id", "turn_idx", *PARSE_COLS)
-        .toPandas()
-    )
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
 
 def test_text_never_rewritten(spark, transcripts_df, transcripts_pdf):

@@ -46,9 +46,7 @@ def test_quota_prefilter_is_bit_identical_to_plain_window(skewed, monkeypatch):
 
 def test_quota_prefilter_caps_window_input_on_dominant_group(skewed, monkeypatch):
     monkeypatch.setattr(corpus, "DEFAULT_WINDOW_CAP", 256)
-    sliver, _ = _quota_prefiltered(
-        skewed, "lang", quota=50, key_col="doc_id", salt="quota"
-    )
+    sliver, _ = _quota_prefiltered(skewed, "lang", quota=50)
     by_group = {
         r["lang"]: r["n"]
         for r in sliver.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()

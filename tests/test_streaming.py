@@ -669,3 +669,29 @@ def test_run_available_now_timeout_stops_query_and_raises(spark, tmp_path):
     with pytest.raises(TimeoutError):
         run_available_now(stream, timeout_s=0.001)
     assert spark.streams.active == []
+
+
+def test_run_stream_drain_timeout_stops_query_and_raises(
+    spark, dim_df, rules, transcripts_pdf, tmp_path
+):
+    """An AvailableNow drain cut short raises instead of returning the
+    batch count of a partly written sink."""
+    src = str(tmp_path / "src")
+    write_snapshots(transcripts_pdf, src, n_snapshots=2)
+    with pytest.raises(TimeoutError):
+        run_stream(spark, src, str(tmp_path / "out"), dim_df, rules, timeout_sec=0)
+    assert spark.streams.active == []
+
+
+def test_run_windowed_stream_timeout_stops_query_and_raises(
+    spark, transcripts_pdf, tmp_path
+):
+    """A windowed drain cut short raises instead of returning the row count
+    of a partly written sink."""
+    from logpipe_spark.streaming.windowed import run_windowed_stream
+
+    src = str(tmp_path / "src")
+    write_snapshots(transcripts_pdf, src, n_snapshots=2)
+    with pytest.raises(TimeoutError):
+        run_windowed_stream(spark, src, str(tmp_path / "out"), timeout_sec=0)
+    assert spark.streams.active == []
