@@ -1107,9 +1107,10 @@ def q_clean_text(spark, sf_dir):
     (operators/corpus.py:clean_text). The planted suffix puts every
     branch in play: a decomposed e+U+0301 and A+U+030A (composed by
     NFC), a BEL control (deleted), tab/CRLF runs and double spaces
-    (collapsed), trailing whitespace (trimmed). Spark normalizes via an
-    Arrow-batched pandas UDF over unicodedata; DuckDB via nfc_normalize
-    (utf8proc) — NFC is Unicode-stable, so they agree byte-for-byte."""
+    (collapsed), trailing whitespace (trimmed). Spark normalizes in the
+    JVM through ICU4J's Normalizer.compose (``reflect``, NULL-guarded);
+    DuckDB via nfc_normalize (utf8proc) — NFC is Unicode-stable, so they
+    agree byte-for-byte."""
     from logpipe_spark.operators.corpus import clean_text
 
     docs = _t(spark, sf_dir, "documents")

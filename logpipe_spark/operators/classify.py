@@ -83,8 +83,9 @@ def classifier_score(
     buckets: int = DEFAULT_BUCKETS,
     threshold: float = 0.0,
 ) -> DataFrame:
-    """Score every document with the hashed linear model and emit
-    ``(key, n_grams, score, keep)`` where ``keep = score > threshold``.
+    """Score every document with the hashed linear model: ``df``'s columns
+    plus ``(n_grams, score, keep)`` where ``keep = score > threshold``, so
+    a gate is a filter on the scored frame, not a join back to ``df``.
     Map-only in both modes: the plan has no Exchange, no explode — one
     fused expression (JVM mode) or one Arrow-batched pandas UDF whose
     closure broadcasts the weight vector (production mode).
@@ -105,7 +106,7 @@ def classifier_score(
         )
         score = F.when(n > 0, total / n).otherwise(F.lit(0.0))
         scored = df.select(
-            F.col("doc_id"),
+            "*",
             n.alias("n_grams"),
             score.alias("score"),
         )
@@ -150,9 +151,9 @@ def classifier_score(
                 s_out[i] = acc / len(grams) if grams else 0.0
             return pd.DataFrame({"n_grams": n_out, "score": s_out})
 
-        scored = df.select(
-            F.col("doc_id"), _score(F.col("text")).alias("_s")
-        ).select("doc_id", "_s.n_grams", "_s.score")
+        scored = df.withColumn("_s", _score(F.col("text"))).select(
+            "*", "_s.n_grams", "_s.score"
+        ).drop("_s")
 
     return scored.select(
         "*", (F.col("score") > F.lit(threshold)).alias("keep")

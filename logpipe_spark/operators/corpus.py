@@ -12,8 +12,6 @@ shards — the custom-stateful escape hatch, with a recursive-CTE SQL mirror.
 
 from __future__ import annotations
 
-import unicodedata
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -594,23 +592,26 @@ def clean_text(docs: DataFrame) -> DataFrame:
     in every composed recipe (plans/corpus_funnel.py), and a collapse
     that welded documents to one line would silently disable it.
 
-    Steps 2-6 are JVM ``regexp_replace`` codegen. Step 1 is the one
-    genuinely non-SQL primitive — an Arrow-batched pandas UDF over
-    ``unicodedata.normalize`` (the documented slow-path escape hatch;
-    there is no JVM-side normalizer exposed to Spark SQL). Map-only,
-    zero shuffles, embarrassingly parallel at 100 TB; the pandas batch
-    is string-in/string-out with no state. The DuckDB oracle mirrors
-    step 1 with ``nfc_normalize`` (utf8proc) — NFC is a Unicode-stable
-    algorithm, so the two implementations agree byte-for-byte.
+    Steps 2-6 are JVM ``regexp_replace`` codegen. Step 1 is ICU4J's
+    ``Normalizer.compose`` called through ``reflect`` — ICU4J ships in
+    Spark's own jars (it backs collations), so normalization runs in the
+    JVM task with no Python worker. ``compose(null)`` throws, hence the
+    NULL guard: a NULL ``text`` stays NULL. Map-only, zero shuffles,
+    embarrassingly parallel at 100 TB. The DuckDB oracle mirrors step 1
+    with ``nfc_normalize`` (utf8proc) — NFC is a Unicode-stable
+    algorithm, so the two implementations agree byte-for-byte on every
+    code point both Unicode versions assign.
 
     ``docs``: (``text``); adds ``text_clean``."""
-    nfc = F.pandas_udf(
-        lambda s: s.map(
-            lambda t: None if t is None else unicodedata.normalize("NFC", t)
+    text = F.col("text")
+    nfc = F.when(
+        text.isNotNull(),
+        F.reflect(
+            F.lit("com.ibm.icu.text.Normalizer"), F.lit("compose"), text,
+            F.lit(False),
         ),
-        T.StringType(),
     )
-    t = F.regexp_replace(nfc(F.col("text")), _CTRL_RE, "")
+    t = F.regexp_replace(nfc, _CTRL_RE, "")
     t = F.regexp_replace(t, r"\r\n?", "\n")
     t = F.regexp_replace(t, _HWS_RE, " ")
     t = F.regexp_replace(t, r" ?\n ?", "\n")

@@ -12,19 +12,22 @@ collect is the near-dup stage's pair graph, and only up to
 ``dedup._DRIVER_CC_EDGES`` edges: a graph that small is labeled there
 (``connected_components_star``), a larger one by the star rounds.
 
-Stage boundaries are ``localCheckpoint``-materialized: the funnel
-forces a count per stage, and without materialization stage k would
-re-execute stages 1..k (the iterative components pass alone would rerun
-half a dozen times). At 100 TB the same role is played by writing each
-stage to storage — which a real run does anyway; they are its restart
-points.
+Stage boundaries are ``localCheckpoint``-materialized: without
+materialization stage k would re-execute stages 1..k (the iterative
+components pass alone would rerun half a dozen times). A stage's count
+rides its checkpoint job as an ``observe(count(1))`` on the stage's
+frame, the way logpipe keeps its per-file line and offset counts in the
+forwarding pass (``trace_line``/``trace_offset``) and never re-reads to
+count: no stage pays a second job to count rows it has just written. At
+100 TB the same role is played by writing each stage to storage — which
+a real run does anyway; they are its restart points.
 """
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from logpipe_spark.operators.corpus import (
@@ -47,17 +50,25 @@ from logpipe_spark.operators.dedup import (
 
 
 class _TimedFunnel(dict):
-    """Funnel-count dict that also records per-stage wall seconds: every
-    stage ends with ``funnel[stage] = df.count()``, so the time between
-    consecutive assignments IS that stage's materialization cost (the
-    localCheckpoint + count that forces it). Written into the optional
-    ``stage_seconds`` dict so bench.py can attribute the composed
-    pipeline's cost stage by stage (r5 verdict ask #7)."""
+    """Funnel-count dict that takes each stage's count from the job that
+    materializes the stage, and records per-stage wall seconds.
+
+    ``checkpoint(stage, df)`` attaches ``observe(count(1))`` to the stage's
+    frame and ``localCheckpoint``s it: the count rides the checkpoint job,
+    as logpipe keeps its per-file line counts in the forwarding pass
+    instead of re-reading to count. ``counted(stage, df)`` only attaches
+    the observation; its count is filled, in key order, by the next
+    ``checkpoint`` or ``count`` (``input`` rides the first materializing
+    job, ``chunks`` the ``packed_bins`` job). So the time between
+    consecutive assignments IS the materialization cost of the stages
+    filled. Written into the optional ``stage_seconds`` dict so callers can
+    attribute the composed pipeline's cost stage by stage."""
 
     def __init__(self, stage_seconds: dict | None = None):
         super().__init__()
         self._secs = stage_seconds
         self._t = time.perf_counter()
+        self._pending: list[tuple[str, Observation]] = []
 
     def __setitem__(self, key, value):
         now = time.perf_counter()
@@ -65,6 +76,26 @@ class _TimedFunnel(dict):
             self._secs[key] = round(now - self._t, 4)
         self._t = now
         super().__setitem__(key, value)
+
+    def counted(self, stage: str, df: DataFrame) -> DataFrame:
+        obs = Observation(stage)
+        self._pending.append((stage, obs))
+        return df.observe(obs, F.count(F.lit(1)).alias("n"))
+
+    def _settle(self) -> None:
+        for stage, obs in self._pending:
+            self[stage] = obs.get["n"]
+        self._pending.clear()
+
+    def checkpoint(self, stage: str, df: DataFrame) -> DataFrame:
+        df = self.counted(stage, df).localCheckpoint()
+        self._settle()
+        return df
+
+    def count(self, stage: str, df: DataFrame) -> None:
+        n = df.count()
+        self._settle()
+        self[stage] = n
 
 
 def run_corpus_funnel(
@@ -101,68 +132,66 @@ def run_corpus_funnel(
 
     ``stage_seconds``: optional out-dict — receives {stage: wall_sec}
     for every funnel entry (the cost of materializing that stage)."""
-    funnel: dict = _TimedFunnel(stage_seconds)
-    funnel["input"] = docs.count()
+    funnel = _TimedFunnel(stage_seconds)
+    docs = funnel.counted("input", docs)
 
     if url_blocklist is not None:
         from logpipe_spark.operators.urls import url_blocklist_filter
 
-        docs = url_blocklist_filter(docs, url_blocklist).localCheckpoint()
-        funnel["url_blocklist"] = docs.count()
+        docs = funnel.checkpoint(
+            "url_blocklist", url_blocklist_filter(docs, url_blocklist)
+        )
 
     if html_col is not None:
         from logpipe_spark.operators.html import extract_text
 
-        docs = (
-            extract_text(docs.drop("text"), html_col=html_col)
-            .drop(html_col, "text_chars")
-            .localCheckpoint()
+        docs = funnel.checkpoint(
+            "html_extract",
+            extract_text(docs.drop("text"), html_col=html_col).drop(
+                html_col, "text_chars"
+            ),
         )
-        funnel["html_extract"] = docs.count()
 
     # normalization BEFORE any text-keyed stage: the quality heuristics,
     # dedup fingerprints, and shingles downstream must see one canonical
     # byte form, or composed-vs-decomposed variants of the same document
     # defeat exact dedup entirely. Map-only — the count never changes, the
     # stage is in the funnel because every recipe documents it.
-    docs = (
-        clean_text(docs)
-        .drop("text")
-        .withColumnRenamed("text_clean", "text")
-        .localCheckpoint()
+    docs = funnel.checkpoint(
+        "clean_text",
+        clean_text(docs).drop("text").withColumnRenamed("text_clean", "text"),
     )
-    funnel["clean_text"] = docs.count()
 
-    gated = (
+    # NULL-keyed docs leave at this gate: every stage after it is keyed
+    # on doc_id
+    gated = funnel.checkpoint(
+        "quality_gate",
         corpus_filter(docs)
-        .filter(F.col("keep"))
-        .select("doc_id")
-        .join(docs, "doc_id")
+        .filter(F.col("keep") & F.col("doc_id").isNotNull())
+        .select(*docs.columns),
     )
-    gated = gated.localCheckpoint()
-    funnel["quality_gate"] = gated.count()
 
     if classifier_threshold is not None:
         from logpipe_spark.operators.classify import classifier_score
 
-        good = classifier_score(
-            gated, threshold=classifier_threshold
-        ).filter(F.col("keep")).select("doc_id")
-        gated = gated.join(good, "doc_id").localCheckpoint()
-        funnel["classifier_gate"] = gated.count()
+        gated = funnel.checkpoint(
+            "classifier_gate",
+            classifier_score(gated, threshold=classifier_threshold)
+            .filter(F.col("keep"))
+            .select(*gated.columns),
+        )
 
-    exact = exact_dedup(gated).localCheckpoint()
-    funnel["exact_dedup"] = exact.count()
+    exact = funnel.checkpoint("exact_dedup", exact_dedup(gated))
 
     pairs = ngram_jaccard_pairs(exact, n=3, threshold=0.8).select("doc_a", "doc_b")
     keep = neardup_keep_best(
         exact.select("doc_id", F.length("text").cast("long").alias("n_chars")),
         pairs,
     )
-    deduped = exact.join(
-        keep.filter("keep").select("doc_id"), "doc_id"
-    ).localCheckpoint()
-    funnel["neardup_keep_best"] = deduped.count()
+    deduped = funnel.checkpoint(
+        "neardup_keep_best",
+        exact.join(keep.filter("keep").select("doc_id"), "doc_id"),
+    )
 
     if eval_docs is not None:
         if decontam_mode == "excise":
@@ -180,27 +209,24 @@ def run_corpus_funnel(
             deduped = deduped.join(
                 flags.filter(~F.col("contaminated")).select("doc_id"), "doc_id"
             )
-        deduped = deduped.localCheckpoint()
-        funnel["decontaminate"] = deduped.count()
+        deduped = funnel.checkpoint("decontaminate", deduped)
 
     scrubbed = pii_redact(deduped).drop("text").withColumnRenamed(
         "text_redacted", "text"
     )
     lined = dedup_lines(scrubbed, min_docs=5).filter(F.col("clean_text") != "")
-    lined = lined.join(scrubbed.drop("text"), "doc_id").withColumnRenamed(
-        "clean_text", "text"
+    lined = funnel.checkpoint(
+        "pii_line_dedup",
+        lined.join(scrubbed.drop("text"), "doc_id").withColumnRenamed(
+            "clean_text", "text"
+        ),
     )
-    lined = lined.localCheckpoint()
-    funnel["pii_line_dedup"] = lined.count()
 
-    mixed = lined.join(
-        temperature_mix(lined, alpha=0.5, group_col="lang").select("doc_id"),
-        "doc_id",
+    mixed = funnel.checkpoint(
+        "temperature_mix", temperature_mix(lined, alpha=0.5, group_col="lang")
     )
-    mixed = mixed.localCheckpoint()
-    funnel["temperature_mix"] = mixed.count()
 
-    chunks = chunk_documents(mixed, chunk_size=128)
+    chunks = funnel.counted("chunks", chunk_documents(mixed, chunk_size=128))
     packed = sequence_pack(
         chunks.select(
             (F.col("doc_id") * 1000 + F.col("chunk_idx")).alias("doc_id"),
@@ -208,9 +234,7 @@ def run_corpus_funnel(
         ),
         budget=256,
     )
-    funnel["chunks"] = chunks.count()
-    funnel["packed_bins"] = packed.select("pack_id").distinct().count()
+    funnel.count("packed_bins", packed.select("pack_id").distinct())
 
-    ordered = shuffle_corpus(mixed, num_shards=8, seed="epoch0")
-    funnel["shuffled"] = ordered.count()
+    funnel.count("shuffled", shuffle_corpus(mixed, num_shards=8, seed="epoch0"))
     return funnel

@@ -21,6 +21,7 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass, field, fields
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from logpipe_spark.functions.units import parse_duration_us, parse_size_bytes
@@ -76,7 +77,13 @@ class PipelineSpec:
 
     def _dim(self, spark: SparkSession) -> DataFrame:
         if self.dim_rows:
-            return spark.createDataFrame(self.dim_rows)
+            # the session's own Row inference fixes the types (and rejects
+            # an all-NULL column as it always has); pandas carries the rows
+            # through Arrow, so the broadcast build side is a local
+            # relation and scanning it starts no Python worker
+            schema = spark._inferSchemaFromList(self.dim_rows)
+            rows = pd.DataFrame(self.dim_rows, columns=schema.fieldNames())
+            return spark.createDataFrame(rows, schema=schema)
         from logpipe_spark.fixtures import gen_tool_role_dim
 
         return spark.createDataFrame(gen_tool_role_dim())

@@ -19,6 +19,7 @@ import os
 import subprocess
 from typing import Iterable
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -245,6 +246,9 @@ def exec_source(
             T.StructField("text", T.StringType()),
         ]
     )
-    return spark.createDataFrame(
-        [(name, i + 1, ln) for i, ln in enumerate(lines)], schema=schema
+    # pandas through Arrow: the frame is a local relation, so scanning it
+    # starts no Python worker (a list-built frame is a PythonRDD)
+    rows = pd.DataFrame(
+        {"filename": name, "line_no": range(1, len(lines) + 1), "text": lines}
     )
+    return spark.createDataFrame(rows, schema=schema)

@@ -98,9 +98,14 @@ def run_stream(
     if available_now:
         _await_drain(query, timeout_sec)
         return seen
-    query.awaitTermination(timeout_sec)
-    if query.isActive:
-        query.stop()
+    # Spark rejects a wait of 0 s: a timeout of 0 or less has already
+    # expired, as in _await_drain. The query stops however the wait ends.
+    try:
+        if timeout_sec > 0:
+            query.awaitTermination(timeout_sec)
+    finally:
+        if query.isActive:
+            query.stop()
     return seen
 
 

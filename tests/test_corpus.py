@@ -9,6 +9,7 @@ from pyspark.sql import types as T
 from logpipe_spark.operators import dedup
 from logpipe_spark.operators.corpus import corpus_filter, hash_split, sequence_pack
 from logpipe_spark.operators.dedup import connected_components_star
+from testkit import count_jobs
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -296,15 +297,12 @@ def test_connected_components_driver_labels_skip_python_workers(spark):
     list would have) and launches no job. The whole labeling of the hand
     graph takes a few jobs; the star rounds take dozens."""
     edges = spark.createDataFrame(_HAND_GRAPH)
-    sc = spark.sparkContext
-    group = "cc_driver_path_jobs"
-    sc.setJobGroup(group, group)
-    try:
+
+    def label():
         out = connected_components_star(edges)
-        got = {r["node"]: r["component"] for r in out.collect()}
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        return out, {r["node"]: r["component"] for r in out.collect()}
+
+    (out, got), n_jobs = count_jobs(spark, label)
     assert got == _union_find_min_labels(
         zip(_HAND_GRAPH["doc_a"].tolist(), _HAND_GRAPH["doc_b"].tolist()))
     assert "PythonRDD" not in out._jdf.queryExecution().toRdd().toDebugString()
@@ -1053,13 +1051,103 @@ def test_corpus_funnel_excise_mode_keeps_more(spark):
     assert excise["shuffled"] > 0
 
 
+#: sf0.001 funnel counts in drop mode (eval set: doc_id % 97 == 0); the
+#: counts every funnel plan must keep
+_SF0001_FUNNEL = {
+    "input": 500, "clean_text": 500, "quality_gate": 452, "exact_dedup": 452,
+    "neardup_keep_best": 430, "decontaminate": 424, "pii_line_dedup": 424,
+    "temperature_mix": 357, "chunks": 357, "packed_bins": 98, "shuffled": 357,
+}
+
+
+def test_corpus_funnel_counts_pinned_and_ride_checkpoint_jobs(spark):
+    """Each stage's count comes from the job that materializes the stage,
+    so the funnel runs no job just to count — and the counts stay those
+    of a count per stage: in drop mode, in excise mode, and with a
+    NULL-keyed doc that passes the quality gate, which leaves the funnel
+    at that gate (every keyed stage after it joins on doc_id)."""
+    from logpipe_spark.plans.corpus_funnel import run_corpus_funnel
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    ev = docs.filter(F.col("doc_id") % 97 == 0)
+    drop, n_jobs = count_jobs(
+        spark, lambda: run_corpus_funnel(spark, docs.repartition(8), eval_docs=ev)
+    )
+    assert drop == _SF0001_FUNNEL
+    assert list(drop) == list(_SF0001_FUNNEL)
+    assert n_jobs <= 46, n_jobs  # 71 with a count() per stage
+
+    excise = run_corpus_funnel(
+        spark, docs.repartition(8), eval_docs=ev, decontam_mode="excise"
+    )
+    assert excise == {**_SF0001_FUNNEL, "decontaminate": 425, "pii_line_dedup": 425}
+
+    kept = corpus_filter(docs).filter("keep").orderBy("doc_id").limit(1)
+    unkeyed = kept.select(*docs.columns).withColumn(
+        "doc_id", F.lit(None).cast("long")
+    ).withColumn("text", F.concat("text", F.lit(" unkeyed")))
+    with_null = run_corpus_funnel(
+        spark, docs.unionByName(unkeyed).repartition(8), eval_docs=ev
+    )
+    assert with_null == {**_SF0001_FUNNEL, "input": 501, "clean_text": 501}
+
+
 def test_clean_text_plan_is_map_only(spark):
-    """Normalization is per-row → the plan must contain no Exchange."""
+    """Normalization is per-row → the plan must contain no Exchange, and
+    NFC runs in the JVM → no Arrow UDF node hands rows to Python."""
     from logpipe_spark.operators.corpus import clean_text
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     plan = clean_text(docs)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+    assert "ArrowEvalPython" not in plan
+
+
+def _nfc_pool() -> list[str]:
+    """Letters and combining marks from the ranges where NFC composes:
+    Latin, combining diacritics, Greek extended, Hangul jamo and
+    syllables — only code points Python's Unicode database assigns."""
+    import unicodedata
+
+    ranges = [(0x41, 0x24F), (0x300, 0x36F), (0x370, 0x3FF),
+              (0x1E00, 0x1FFF), (0x1100, 0x11FF), (0xAC00, 0xAC40),
+              (0xD790, 0xD7A3)]
+    return [
+        chr(c) for lo, hi in ranges for c in range(lo, hi + 1)
+        if unicodedata.category(chr(c))[0] in "LM"
+    ]
+
+
+def test_clean_text_nfc_matches_python_property(spark):
+    """For text of letters, combining marks and Hangul only (nothing the
+    whitespace and control steps touch), ``clean_text`` is exactly NFC:
+    the JVM's ICU4J normalizer agrees with ``unicodedata`` on every code
+    point Python's Unicode version assigns (ICU4J may know newer ones,
+    which the strategy never draws)."""
+    import unicodedata
+
+    from hypothesis import given, settings, strategies as st
+
+    from logpipe_spark.operators.corpus import clean_text
+
+    char = st.one_of(
+        st.sampled_from(_nfc_pool()),
+        st.characters(categories=("L", "M"), codec="utf-8"),
+    )
+
+    @settings(max_examples=25, deadline=None)
+    @given(st.lists(st.text(alphabet=char, max_size=12), min_size=1, max_size=8))
+    def check(texts):
+        docs = spark.createDataFrame(
+            pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
+            "doc_id long, text string",
+        )
+        got = {r["doc_id"]: r["text_clean"] for r in clean_text(docs).collect()}
+        assert got == {
+            i: unicodedata.normalize("NFC", t) for i, t in enumerate(texts)
+        }
+
+    check()
 
 
 def test_remove_eval_spans_eval_side_broadcasts(spark):

@@ -13,6 +13,7 @@ from logpipe_spark.pipeline import (
     read_sinks,
     run_pipeline,
 )
+from testkit import count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -335,20 +336,13 @@ def test_job_count_does_not_grow_with_snapshots(
     """All pending snapshots share one read, one stage chain and one write,
     so 8 snapshots launch exactly as many Spark jobs as 4: the schema
     merge, the dim broadcast and the write (no shuffle precedes it)."""
-    sc = spark.sparkContext
     jobs = {}
     for n in (4, 8):
         src, out = str(tmp_path / f"src{n}"), str(tmp_path / f"out{n}")
         write_snapshots(transcripts_pdf, src, n_snapshots=n)
-        group = f"job_count_{n}"
-        sc.setJobGroup(group, group)
-        try:
-            run_pipeline(
-                spark, src, out, dim_df, rules, salt_partitions=8,
-            )
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+        _, jobs[n] = count_jobs(spark, lambda: run_pipeline(
+            spark, src, out, dim_df, rules, salt_partitions=8,
+        ))
     assert jobs[4] == jobs[8] <= 4, jobs
 
 

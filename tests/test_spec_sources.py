@@ -55,6 +55,40 @@ def test_exec_source(spark):
     assert [r["text"] for r in rows] == ["l1", "l2", "l3"]
     assert rows[0]["filename"] == "cmd1"
     assert rows[2]["line_no"] == 3
+    # built from pandas through Arrow: scanning it starts no Python worker
+    assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+    assert df.schema.simpleString() == (
+        "struct<filename:string,line_no:bigint,text:string>"
+    )
+
+
+def test_spec_dim_types_match_row_inference_without_python_workers(spark):
+    """The spec's ``dim`` rows get the column types the session's Row
+    inference gives them (a NULL in a column included), but the frame is a
+    local relation: scanning the broadcast build side starts no Python
+    worker. A column that is NULL in every row is rejected as before."""
+    from pyspark.errors import PySparkValueError
+
+    rows = [
+        {"tool": "grep", "role": "tool", "sink_hint": "s_grep", "priority": 3,
+         "weight": 0.5, "active": True},
+        {"tool": "ls", "role": "user", "sink_hint": None, "priority": None,
+         "weight": None, "active": None},
+    ]
+    spec = PipelineSpec(source_dir="x", out_dir="y", rules=[], dim_rows=rows)
+    dim = spec._dim(spark)
+    want = spark.createDataFrame(rows)
+    assert dim.schema == want.schema
+    assert dim.orderBy("tool").collect() == want.orderBy("tool").collect()
+    assert "PythonRDD" not in dim._jdf.queryExecution().toRdd().toDebugString()
+
+    null_col = [{"tool": "grep", "x": None}, {"tool": "ls", "x": None}]
+    with pytest.raises(PySparkValueError, match="CANNOT_DETERMINE_TYPE"):
+        spark.createDataFrame(null_col)
+    with pytest.raises(PySparkValueError, match="CANNOT_DETERMINE_TYPE"):
+        PipelineSpec(
+            source_dir="x", out_dir="y", rules=[], dim_rows=null_col
+        )._dim(spark)
 
 
 def test_unit_parsing():

@@ -695,3 +695,19 @@ def test_run_windowed_stream_timeout_stops_query_and_raises(
     with pytest.raises(TimeoutError):
         run_windowed_stream(spark, src, str(tmp_path / "out"), timeout_sec=0)
     assert spark.streams.active == []
+
+
+def test_run_stream_tail_mode_zero_timeout_stops_query(
+    spark, dim_df, rules, transcripts_pdf, tmp_path
+):
+    """Tail mode with a timeout of 0 s has already expired: it returns
+    with the query stopped instead of raising from ``awaitTermination(0)``
+    (which Spark rejects) and leaving the query running."""
+    src = str(tmp_path / "src")
+    write_snapshots(transcripts_pdf, src, n_snapshots=2)
+    res = run_stream(
+        spark, src, str(tmp_path / "out"), dim_df, rules,
+        available_now=False, timeout_sec=0,
+    )
+    assert res["batches"] >= 0
+    assert spark.streams.active == []

@@ -1,12 +1,13 @@
 """Test fixtures and reference mirrors that no package caller needs: a
 synthetic media table, a header-only PNG prefix, a plain-Python BPE
-encoder, the numpy mirror of the classifier's pseudo weights, and a
-no-shuffle plan assertion. They import the package; the package never
+encoder, the numpy mirror of the classifier's pseudo weights, a
+no-shuffle plan assertion and a Spark job counter. They import the package; the package never
 imports them."""
 
 from __future__ import annotations
 
 import hashlib
+import uuid
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -97,3 +98,16 @@ def assert_no_exchange(df: DataFrame) -> str:
     if "Exchange" in plan:
         raise AssertionError(f"plan contains a shuffle:\n{plan}")
     return plan
+
+
+def count_jobs(spark, fn):
+    """Call ``fn()`` under a fresh Spark job group and return (its result,
+    the number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    group = f"count_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
