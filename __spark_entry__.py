@@ -512,7 +512,7 @@ def q_remove_dup_spans(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    return remove_dup_spans(docs, n=8, min_docs=2)
+    return remove_dup_spans(docs, n=8, min_docs=2).select("doc_id", "clean_text", "n_kept")
 
 
 def q_shuffle_corpus(spark, sf_dir):
@@ -646,7 +646,7 @@ def q_neardup_keep_best(spark, sf_dir):
     spread = docs.repartition(spark.sparkContext.defaultParallelism)
     pairs = ngram_jaccard_pairs(spread, n=3, threshold=0.8).select("doc_a", "doc_b")
     base = docs.select("doc_id", F.length("text").cast("long").alias("n_chars"))
-    return neardup_keep_best(base, pairs, quality_col="n_chars")
+    return neardup_keep_best(base, pairs).select("doc_id", "component", "keep")
 
 
 def q_incremental_dedup(spark, sf_dir):
@@ -1099,7 +1099,7 @@ def q_remove_eval_spans(spark, sf_dir):
     corpus = docs.filter(F.col("doc_id") % 7 != 0).repartition(
         spark.sparkContext.defaultParallelism
     )
-    return remove_eval_spans(corpus, ev, n=8)
+    return remove_eval_spans(corpus, ev, n=8).select("doc_id", "clean_text", "n_kept")
 
 
 def q_clean_text(spark, sf_dir):
@@ -1813,8 +1813,11 @@ def q_dedup_lines(spark, sf_dir):
                 F.lit("\nEND"),
             ).alias("text")
         )
+        .withColumnRenamed("bucket", "doc_id")
     )
-    return dedup_lines(synth, min_docs=2, key_col="bucket")
+    return dedup_lines(synth, min_docs=2).select(
+        "doc_id", "clean_text", "n_lines", "n_kept"
+    )
 
 
 def q_hash_split(spark, sf_dir):
@@ -2454,27 +2457,30 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
       asof_join, range_join, percentiles, grep_filter, tokenize_fields,
       template_project, template_missing_fields, orderby_limit, key_cut,
       translate_charset).
-    - positions 23-27: the five r5-green queries whose IMPLEMENTATION
-      changed and therefore must re-verify: fuzzy_join (best_match
+    - positions 23-30: the queries whose IMPLEMENTATION changed and
+      therefore must re-verify: fuzzy_join (best_match
       tiebreak rewritten negation-free), bloom_semi_join (large-filter
       broadcast-bitarray fallback), and the three callers of
       connected_components_star — cluster_split, dedup_components and
       neardup_keep_best — whose plans changed again: a pair graph of at
       most dedup._DRIVER_CC_EDGES edges (every sf fixture's) is now
       labeled by a driver union-find and returned as an Arrow-built local
-      relation instead of running the star rounds.
-    - positions 28-30: the three NEW streaming-mode queries the r5
+      relation instead of running the star rounds. 28-30: decontaminate,
+      dedup_lines, remove_dup_spans — doc-keyed operators now return their
+      input rows plus result columns (remove_eval_spans is at 6).
+    - positions 31-33: the three NEW streaming-mode queries the r5
       verdict asked for (streaming_assemble, streaming_dedup,
       streaming_interval_join) — each drives the real Structured
       Streaming operator with Trigger.AvailableNow over the staged
       static table (streaming/drive.py) and each has a full value
       oracle (the batch twin), not a rows-only check.
-    - positions 31-50: the oldest r4-green entries, re-entering oldest
-      first (parse_extract … lead_lag).
+    - positions 34-50: the oldest r4-green entries, re-entering oldest
+      first (parse_extract … dedup_simhash_pairs).
 
-    Positions 51+: first the eight r4-green entries that did not fit
-    (hash_split … date_rollup — they lead r7's window), then the 15
-    r4-green priority-3 tail, then ALL 45 entries green in
+    Positions 51+: first the eleven r4-green entries that did not fit
+    (tpch_q3, tpch_q5, lead_lag, then hash_split … date_rollup — they
+    lead the next window), then the 14 r4-green priority-3 tail, then
+    the 43 entries green in
     CORRECTNESS_r05 with implementations unchanged since (freshest
     verdicts, verified ≤1 round ago — safe at the back).
     """
@@ -2509,11 +2515,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bloom_semi_join": q_bloom_semi_join,
         "dedup_components": q_dedup_components,
         "neardup_keep_best": q_neardup_keep_best,
-        # -- 28-30: NEW streaming-mode queries (r5 verdict ask #4) --
+        "decontaminate": q_decontaminate,
+        "dedup_lines": q_dedup_lines,
+        "remove_dup_spans": q_remove_dup_spans,
+        # -- 31-33: NEW streaming-mode queries (r5 verdict ask #4) --
         "streaming_assemble": q_streaming_assemble,
         "streaming_dedup": q_streaming_dedup,
         "streaming_interval_join": q_streaming_interval_join,
-        # -- 31-50: oldest r4-green, oldest first --
+        # -- 34-50: oldest r4-green, oldest first --
         "parse_extract": q_parse_extract,
         "route_fanout": q_route_fanout,
         "route_dropped": q_route_dropped,
@@ -2531,11 +2540,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_minhash": q_dedup_minhash,
         "dedup_simhash": q_dedup_simhash,
         "dedup_simhash_pairs": q_dedup_simhash_pairs,
+        # ---- window boundary (driver verifies the 50 above) ----
+        # -- 51-61: r4-green overflow, leading the next window --
         "tpch_q3": q_tpch_q3,
         "tpch_q5": q_tpch_q5,
         "lead_lag": q_lead_lag,
-        # ---- window boundary (driver verifies the 50 above) ----
-        # -- 51-58: r4-green overflow, leading r7's window --
         "hash_split": q_hash_split,
         "corpus_filter": q_corpus_filter,
         "ann_cosine_topk": q_ann_cosine_topk,
@@ -2544,7 +2553,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pack_unpack": q_pack_unpack,
         "set_ops": q_set_ops,
         "date_rollup": q_date_rollup,
-        # -- 59-73: r4-green priority-3 tail --
+        # -- 62-75: r4-green priority-3 tail --
         "fields_strictly": q_fields_strictly,
         "pivot": q_pivot,
         "json_extract": q_json_extract,
@@ -2555,12 +2564,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cube": q_cube,
         "doc_fingerprint": q_doc_fingerprint,
         "bpe_tokens": q_bpe_tokens,
-        "decontaminate": q_decontaminate,
         "repetition_stats": q_repetition_stats,
         "pii_redact": q_pii_redact,
         "chunk_documents": q_chunk_documents,
         "langid_quality": q_langid_quality,
-        # -- 74+: green in CORRECTNESS_r05, implementations unchanged --
+        # -- 76+: green in CORRECTNESS_r05, implementations unchanged --
         "mad_outliers": q_mad_outliers,
         "collocations": q_collocations,
         "distribution_shift": q_distribution_shift,
@@ -2581,7 +2589,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hll_distinct": q_hll_distinct,
         "temperature_mix": q_temperature_mix,
         "unigram_logprob": q_unigram_logprob,
-        "dedup_lines": q_dedup_lines,
         "quota_sample": q_quota_sample,
         "mix_sample": q_mix_sample,
         "bucketed_join": q_bucketed_join,
@@ -2605,7 +2612,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multimodal_features": q_multimodal_features,
         "bpe_merge_tokens": q_bpe_merge_tokens,
         "dup_spans": q_dup_spans,
-        "remove_dup_spans": q_remove_dup_spans,
     }
 
 

@@ -64,11 +64,13 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     print(f"after exact dedup   {deduped.count()}")
 
     eval_docs = deduped.filter(F.col("doc_id") % 7 == 0)
-    flags = decontaminate(deduped, eval_docs.filter(F.col("doc_id") % 14 != 0),
-                          n=8, min_overlap=3)
-    kept = deduped.join(
-        flags.filter(~F.col("contaminated")).select("doc_id"), "doc_id"
-    ).localCheckpoint()
+    kept = (
+        decontaminate(deduped, eval_docs.filter(F.col("doc_id") % 14 != 0),
+                      n=8, min_overlap=3)
+        .filter(~F.col("contaminated"))
+        .select(*deduped.columns)
+        .localCheckpoint()
+    )
     print(f"after decontam      {kept.count()}")
 
     packed = sequence_pack(kept, budget=512)

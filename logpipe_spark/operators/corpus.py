@@ -192,32 +192,40 @@ def decontaminate(
     Scale design — the asymmetry IS the plan: the benchmark side is tiny
     (millions of shingles) against a 100 TB corpus, so the eval shingle
     set is deduped and BROADCAST; the corpus is never shuffled by shingle.
-    One pass: explode corpus shingles (``explode_outer`` so shingle-less
-    docs survive with zeros), broadcast-hash mark matches, then a single
-    ``groupBy(doc_id)`` with map-side partial aggregation. No self-join,
-    no shuffle keyed on text.
+    One pass: explode shingles (``explode_outer`` so shingle-less docs
+    survive with zeros), broadcast-hash mark matches, one ``groupBy(doc_id)``
+    with map-side partial aggregation, left-joined back onto the rows. No
+    self-join, no shuffle keyed on text.
 
-    Returns one row per corpus doc: ``n_shingles`` (distinct), ``n_overlap``
-    (distinct shingles shared with the eval set), and ``contaminated``.
-    Docs also present in ``eval_docs`` (matched by ``doc_id``) are excluded
-    from the output — they are the benchmark, not candidates.
+    Returns the input columns plus ``n_shingles`` (distinct), ``n_overlap``
+    (distinct shingles shared with the eval set) and ``contaminated``. Docs
+    also present in ``eval_docs`` (matched by ``doc_id``) are excluded —
+    they are the benchmark, not candidates. Rows that share a ``doc_id``,
+    NULL included, share counts pooled over all of them.
 
-    ``docs`` and ``eval_docs``: (``doc_id``, ``text``)."""
-    corpus = docs.select(
-        F.col("doc_id"),
-        F.explode_outer(_shingles(F.col("text"), n)).alias("span"),
-    )
+    ``docs`` and ``eval_docs``: (``doc_id``, ``text``, ...)."""
+    corpus = docs.join(F.broadcast(eval_docs.select("doc_id")), "doc_id", "left_anti")
+    # struct equality is NULL-safe, and a join key equal to the grouping key
+    # keeps the join's size estimate at its left side (eqNullSafe's is a product)
+    key = F.struct("doc_id")
     ev = _eval_shingles(eval_docs, n).withColumn("_hit", F.lit(1))
-    ev_keys = eval_docs.select(F.col("doc_id"))
-    return (
-        corpus.join(F.broadcast(ev), "span", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("span").alias("n_shingles"),
-            F.count("_hit").alias("n_overlap"),
+    counts = (
+        corpus.select(
+            key.alias("_key"),
+            F.explode_outer(_shingles(F.col("text"), n)).alias("span"),
         )
-        .join(F.broadcast(ev_keys), "doc_id", "left_anti")
-        .withColumn("contaminated", F.col("n_overlap") >= min_overlap)
+        .join(F.broadcast(ev), "span", "left")
+        .groupBy("_key")
+        .agg(F.count("span").alias("n_shingles"), F.count("_hit").alias("n_overlap"))
+    )
+    # every row finds its counts; the coalesce keeps a caller's filter on them
+    # from turning the left join into an inner one
+    n_overlap = F.coalesce("n_overlap", F.lit(0))
+    return corpus.join(counts, key == F.col("_key"), "left").select(
+        *docs.columns,
+        F.coalesce("n_shingles", F.lit(0)).alias("n_shingles"),
+        n_overlap.alias("n_overlap"),
+        (n_overlap >= min_overlap).alias("contaminated"),
     )
 
 
@@ -241,8 +249,8 @@ def remove_eval_spans(docs: DataFrame, eval_docs: DataFrame, n: int = 8) -> Data
     keep the rest (the FineWeb-style rewrite, same surgery as
     ``dedup.remove_dup_spans`` but with the eval set as the span source).
 
-    Returns (doc_id, clean_text, n_kept); ``clean_text`` is the
-    tokenizer-normalized reconstruction, same convention as
+    Returns the input columns plus (clean_text, n_kept); ``clean_text``
+    is the tokenizer-normalized reconstruction, same convention as
     ``remove_dup_spans``.
 
     Scale design — strictly CHEAPER than remove_dup_spans: the span
@@ -254,7 +262,7 @@ def remove_eval_spans(docs: DataFrame, eval_docs: DataFrame, n: int = 8) -> Data
     positions and the id-keyed reassembly groupBy — both O(token
     positions of CONTAMINATED docs), not of the corpus.
 
-    ``docs``: (``doc_id``, ``text``); ``eval_docs``: (``text``)."""
+    ``docs``: (``doc_id``, ``text``, ...); ``eval_docs``: (``text``)."""
     ev = F.broadcast(_eval_shingles(eval_docs, n))
     return _drop_covered(docs, n, lambda _spans: ev)
 
@@ -918,7 +926,7 @@ def cluster_split(
     split hash salt is ``"split"``."""
     from logpipe_spark.operators.dedup import connected_components_star
 
-    comp = connected_components_star(pairs, a_col="doc_a", b_col="doc_b")
+    comp = connected_components_star(pairs)
     # split_group is a STRING: coalescing the component with the raw key
     # must work for any key type (string doc ids would fail a cast to
     # long under ANSI, or silently null it without), and the split hash

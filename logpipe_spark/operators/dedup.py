@@ -34,6 +34,7 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -617,8 +618,6 @@ def _is_star_forest(e: DataFrame) -> bool:
 
 def connected_components_star(
     edges: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
     max_iter: int = 40,
     return_rounds: bool = False,
 ):
@@ -632,13 +631,10 @@ def connected_components_star(
     measures and fetches (T = ``_DRIVER_CC_EDGES``):
 
     - At most T edges: a union-find on the driver labels them (0 rounds).
-      The labels go back into the JVM as a pandas frame, so Arrow
-      carries them (``spark.sql.execution.arrow.pyspark.enabled``, which
-      ``get_spark`` sets) and the result is a local relation: no Python
-      worker runs when it is scanned, however often a caller joins it.
-      A frame built from a Python list would scan through a
-      ``PythonRDD`` instead, and every scan would start Python-worker
-      tasks.
+      The labels go back into the JVM as an Arrow table, so the result
+      is a local relation even with no edges: no Python worker runs when
+      it is scanned. A frame built from a Python list (or an empty
+      pandas frame) would scan through a ``PythonRDD``.
     - More than T edges: large-star/small-star alternation (Kiveris
       et al., SoCC'14) on the executors, below.
 
@@ -670,11 +666,13 @@ def connected_components_star(
     for non-numeric ids — ADVICE r5.) The driver path keeps the same rule:
     the label frame's schema is the input id type, and Python's ``<`` on
     the collected ids orders integers, decimals, dates and strings as
-    Spark does (UTF-8 byte order is code-point order)."""
+    Spark does (UTF-8 byte order is code-point order).
+
+    ``edges``: (``doc_a``, ``doc_b``)."""
     e = (
         edges.select(
-            F.col(a_col).alias("u"),
-            F.col(b_col).alias("v"),
+            F.col("doc_a").alias("u"),
+            F.col("doc_b").alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .select(
@@ -688,7 +686,7 @@ def connected_components_star(
         nodes, comps = _min_labels(small)
         dt = e.schema["u"].dataType
         out = edges.sparkSession.createDataFrame(
-            pd.DataFrame({"node": nodes, "component": comps}),
+            pa.Table.from_pydict({"node": nodes, "component": comps}),
             T.StructType(
                 [T.StructField("node", dt), T.StructField("component", dt)]
             ),
@@ -742,13 +740,14 @@ def _eval_shingles(eval_docs: DataFrame, n: int) -> DataFrame:
 
 
 def _rejoin(
-    base: DataFrame, kept: DataFrame, pos: str, piece: str, sep: str, *extra: Column
+    base: DataFrame, kept: DataFrame, pos: str, piece: str, sep: str
 ) -> DataFrame:
     """Ordered reassembly of the surviving ``(doc, pos, piece)`` rows:
     groupBy(doc) (id-keyed) sorts each doc's pieces by position and joins
-    them with ``sep``. One row per ``base`` row, keyed by its ``doc_id``:
-    (doc_id, clean_text, *extra, n_kept) — a doc with nothing left keeps
-    its row with ``''`` and 0."""
+    them with ``sep``. Returns the rows of ``base`` (the operator's whole
+    input, keyed by ``doc_id``) with ``clean_text`` and ``n_kept`` added
+    — a doc with nothing left keeps its row with ``''`` and 0 — so a
+    caller filters the result instead of joining it back to its rows."""
     rebuilt = kept.groupBy(F.col("doc").alias("doc_id")).agg(
         F.concat_ws(
             sep,
@@ -760,9 +759,8 @@ def _rejoin(
         F.count(F.lit(1)).alias("n_kept"),
     )
     return base.join(rebuilt, "doc_id", "left").select(
-        "doc_id",
+        *base.columns,
         F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-        *extra,
         F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
     )
 
@@ -773,10 +771,11 @@ def _drop_covered(
     """Span surgery: drop every token position covered by an ``n``-gram
     in the one-column ``span`` table ``drop_set(spans)`` — which may be
     derived from the docs' own positional ``(doc, pos, span)`` rows or
-    ignore them — and rejoin survivors in order. Returns (doc_id,
-    clean_text, n_kept), one row per input doc; ``clean_text`` is the
-    tokenizer-normalized reconstruction (lowercased, separator runs
-    collapsed), NOT a substring of the raw text.
+    ignore them — and rejoin survivors in order. Returns the input
+    columns plus (clean_text, n_kept), one row per input row;
+    ``clean_text`` is the tokenizer-normalized reconstruction
+    (lowercased, separator runs collapsed), NOT a substring of the raw
+    text.
 
     Linear in token positions: matched spans explode to their ≤ n covered
     positions and distinct on (doc, position), the token positions
@@ -800,9 +799,7 @@ def _drop_covered(
         F.posexplode(_tokens(F.col("text"))).alias("tpos0", "tok"),
     ).select("doc", (F.col("tpos0") + 1).alias("tpos"), "tok")
     return _rejoin(
-        docs.select("doc_id"),
-        toks.join(covered, ["doc", "tpos"], "left_anti"),
-        "tpos", "tok", " ",
+        docs, toks.join(covered, ["doc", "tpos"], "left_anti"), "tpos", "tok", " "
     )
 
 
@@ -857,25 +854,22 @@ def remove_dup_spans(docs: DataFrame, n: int = 8, min_docs: int = 2) -> DataFram
     when ANY token n-gram covering it also occurs in ≥ ``min_docs`` distinct
     documents; surviving tokens are rejoined in original order.
 
-    Returns (doc_id, clean_text, n_kept), the ``_drop_covered`` surgery
-    with the ``_frequent`` span set as its drop set; callers wanting
-    raw-text surgery should map kept positions back themselves.
+    Returns the input columns plus (clean_text, n_kept), the
+    ``_drop_covered`` surgery with the ``_frequent`` span set as its drop
+    set; callers wanting raw-text surgery should map kept positions back
+    themselves.
 
     100 TB shape: strictly linear in token positions, no pairwise term.
     The widest shuffle is the span-keyed document frequency, O(total
     token positions) — same bound as dup_span_stats.
 
-    ``docs``: (``doc_id``, ``text``)."""
+    ``docs``: (``doc_id``, ``text``, ...)."""
     return _drop_covered(
         docs, n, lambda spans: _frequent(spans, "span", min_docs)
     )
 
 
-def dedup_lines(
-    docs: DataFrame,
-    min_docs: int = 2,
-    key_col: str = "doc_id",
-) -> DataFrame:
+def dedup_lines(docs: DataFrame, min_docs: int = 2) -> DataFrame:
     """Line-level exact dedup — the C4 / RefinedWeb boilerplate recipe:
     any line (trimmed, case-preserved) that occurs in ≥ ``min_docs``
     DISTINCT documents is removed from EVERY document; survivors rejoin
@@ -884,11 +878,12 @@ def dedup_lines(
     catch nav bars / cookie banners / license headers wholesale, spans
     catch in-line template fragments.
 
-    Returns (doc_id, clean_text, n_lines, n_kept) — every input doc keeps
-    a row; a fully-boilerplate doc comes back with ``clean_text = ''``
-    so the caller decides whether to drop it (C4 drops; we don't decide
-    here because the row also carries the evidence). NULL text is a doc
-    with no lines: ``n_lines`` 0, ``clean_text`` ``''``.
+    Returns the input columns plus (n_lines, clean_text, n_kept) — every
+    input row is kept; a fully-boilerplate doc comes back with
+    ``clean_text = ''`` so the caller decides whether to drop it (C4
+    drops; we don't decide here because the row also carries the
+    evidence). NULL text is a doc with no lines: ``n_lines`` 0,
+    ``clean_text`` ``''``.
 
     100 TB shape: strictly linear, no pairwise term. (1) split + posexplode
     to (doc, pos, line); blank lines are kept in the doc but never counted
@@ -901,10 +896,13 @@ def dedup_lines(
     the probe side (on by default in this session, engagement tested in
     test_plan_quality).
 
-    ``docs``: (``key_col``, ``text``); lines split on ``\\n``."""
+    ``docs``: (``doc_id``, ``text``, ...); lines split on ``\\n``."""
     text = F.col("text")
+    # size(NULL) is NULL under ANSI and -1 without it; NULL text has no lines
+    n_lines = F.when(text.isNull(), F.lit(0)).otherwise(F.size(F.split(text, "\n")))
+    docs = docs.withColumn("n_lines", n_lines.cast("long"))
     lines = docs.select(
-        F.col(key_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         F.posexplode(F.split(text, "\n")).alias("pos0", "raw"),
     ).select(
         "doc",
@@ -915,53 +913,47 @@ def dedup_lines(
     dup = _frequent(
         lines.filter(F.col("line") != F.lit("")), "line", min_docs
     ).withColumn("_dup", F.lit(1))
-    # size(NULL) is NULL under ANSI and -1 without it; NULL text has no lines
-    n_lines = F.when(text.isNull(), F.lit(0)).otherwise(F.size(F.split(text, "\n")))
     return _rejoin(
-        docs.select(F.col(key_col).alias("doc_id"), n_lines.alias("n_lines")),
+        docs,
         lines.join(dup, "line", "left").filter(F.col("_dup").isNull()),
         "pos", "raw", "\n",
-        F.col("n_lines").cast("long").alias("n_lines"),
     )
 
 
-def neardup_keep_best(
-    docs: DataFrame,
-    pairs: DataFrame,
-    quality_col: str = "n_chars",
-) -> DataFrame:
+def neardup_keep_best(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """End-to-end near-dup canonicalization — the step every production
     dedup recipe (Lee et al. "Deduplicating Training Data", FineWeb,
     Dolma) runs AFTER candidate pairs are found: cluster the pair graph
     with connected components, then keep exactly ONE document per
-    cluster — the best by ``(quality_col DESC NULLS LAST, doc_id ASC)``
-    — instead
-    of ``dedup_keep_list``'s keep-lowest-id rule, which can throw away a
-    long original in favor of a truncated copy.
+    cluster — the best by ``(n_chars DESC NULLS LAST, doc_id ASC)`` —
+    instead of ``dedup_keep_list``'s keep-lowest-id rule, which can throw
+    away a long original in favor of a truncated copy.
 
-    Returns one row per input document: (doc_id, component, keep).
+    Returns the input columns plus (component, keep), one row per input
+    row; rows with a NULL ``doc_id`` have no component and are dropped.
     Documents in no pair are their own singleton component and keep
     themselves; callers filter ``keep`` to materialize the deduped
     corpus, or keep the full annotation for audit.
 
-    Engine-exactness: the winner rule compares ``quality_col`` (an
-    INTEGER quality — chars, tokens, an upstream score scaled to int)
-    and the key, so there is no float drift anywhere; clustering is
-    min-id labeling, already oracle-checked (``dedup_components``).
+    Engine-exactness: the winner rule compares ``n_chars`` (an INTEGER
+    quality — chars, tokens, an upstream score scaled to int) and the
+    key, both cast to long, so there is no float drift anywhere;
+    clustering is min-id labeling, already oracle-checked
+    (``dedup_components``).
 
     100 TB shape: components via large-star/small-star (id-only
     shuffles, O(log^2 n) alternations — ``connected_components_star``);
     a pair graph of at most ``_DRIVER_CC_EDGES`` edges is instead labeled
     on the driver and comes back as an Arrow-built local relation, so the
-    two joins below scan it without a job or a Python worker; the winner
-    election is ONE map-combinable groupBy(component) of
+    label join below scans it without a job or a Python worker; the
+    winner election is ONE map-combinable groupBy(component) of
     (component, quality, id) triples — no window, no per-cluster task
     skew (the agg is a MIN, partial-aggregated map-side even if one
     cluster holds millions of docs); final annotate is a component-keyed
     broadcast-or-shuffle join of winners (winner table has one row per
     component, ≪ corpus).
 
-    ``docs``: (``doc_id``, ``quality_col``); ``pairs``: (``doc_a``, ``doc_b``)."""
+    ``docs``: (``doc_id``, ``n_chars``, ...); ``pairs``: (``doc_a``, ``doc_b``)."""
     # this operator's contract IS numeric (quality + keys cast to long),
     # so cast the edge endpoints too — connected_components_star itself
     # is type-preserving and would otherwise label string nodes
@@ -969,36 +961,26 @@ def neardup_keep_best(
         pairs.select(
             F.col("doc_a").cast("long").alias("doc_a"),
             F.col("doc_b").cast("long").alias("doc_b"),
-        ),
-        a_col="doc_a",
-        b_col="doc_b",
+        )
     )
-    base = docs.select(
-        F.col("doc_id").cast("long").alias("_id"),
-        F.col(quality_col).cast("long").alias("_q"),
-    )
+    key = F.col("doc_id").cast("long")
+    quality = F.col("n_chars").cast("long")
     labeled = (
-        base.join(comp, base["_id"] == comp["node"], "left")
-        .select("_id", "_q", F.coalesce("component", "_id").alias("component"))
+        docs.join(comp, key == comp["node"], "left")
+        .drop("node")
+        .withColumn("component", F.coalesce("component", key))
     )
     # MIN over (quality is NULL, -quality, id): a NULL quality ranks after
     # every non-NULL one, as ORDER BY q DESC puts NULLs last
     winners = labeled.groupBy("component").agg(
         F.min(
             F.struct(
-                F.col("_q").isNull().alias("nul"),
-                (-F.col("_q")).alias("nq"),
-                F.col("_id").alias("k"),
+                quality.isNull().alias("nul"), (-quality).alias("nq"), key.alias("k")
             )
         ).alias("w")
     ).select("component", F.col("w.k").alias("_keep_id"))
-    return (
-        labeled.join(winners, "component")
-        .select(
-            F.col("_id").alias("doc_id"),
-            F.col("component").cast("long").alias("component"),
-            (F.col("_id") == F.col("_keep_id")).alias("keep"),
-        )
+    return labeled.join(winners, "component").select(
+        *docs.columns, "component", (key == F.col("_keep_id")).alias("keep")
     )
 
 

@@ -222,10 +222,10 @@ def embedding_neardup_pairs(
             cosine(F.col("a.v"), F.col("b.v")).alias("sim"),
         )
     else:
-        spark = emb.sparkSession
-        grid = spark.createDataFrame(
-            [(i, j) for i in range(8) for j in range(i, 8)],
-            "bi int, bj int",
+        # the (bi ≤ bj) cells, built in the JVM
+        bi = F.col("id").cast("int")
+        grid = emb.sparkSession.range(8).select(
+            bi.alias("bi"), F.explode(F.sequence(bi, F.lit(7))).alias("bj")
         )
         left = base.select(
             F.col("id").alias("ida"), F.col("v").alias("va"),

@@ -35,6 +35,7 @@ same call with a one-element column list.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -123,13 +124,14 @@ def cm_query(
     """Point-estimate counts for ``values`` from a Count-Min sketch:
     est(v) = min over rows i of counter[i][h_i(v)] (the classic
     one-sided overestimate; missing counters read as 0). The probe set
-    is a tiny literal table joined against the ≤ d·w-row sketch —
+    is a tiny Arrow-built table (a local relation, so no Python worker
+    scans it) joined against the ≤ d·w-row sketch —
     nothing scales with the original corpus."""
     if not values:
         raise ValueError("values must be non-empty")
     spark = sketch.sparkSession
     probes = spark.createDataFrame(
-        [(v,) for v in values], "value string"
+        pa.Table.from_pydict({"value": values}), "value string"
     ).select(
         "value",
         F.explode(

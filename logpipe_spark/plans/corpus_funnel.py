@@ -183,43 +183,45 @@ def run_corpus_funnel(
 
     exact = funnel.checkpoint("exact_dedup", exact_dedup(gated))
 
+    # every gate below filters its operator's output, which carries the
+    # input rows; no stage joins a result back on doc_id
     pairs = ngram_jaccard_pairs(exact, n=3, threshold=0.8).select("doc_a", "doc_b")
-    keep = neardup_keep_best(
-        exact.select("doc_id", F.length("text").cast("long").alias("n_chars")),
-        pairs,
-    )
     deduped = funnel.checkpoint(
         "neardup_keep_best",
-        exact.join(keep.filter("keep").select("doc_id"), "doc_id"),
+        neardup_keep_best(
+            exact.withColumn("n_chars", F.length("text").cast("long")), pairs
+        )
+        .filter(F.col("keep"))
+        .select(*exact.columns),
     )
 
     if eval_docs is not None:
         if decontam_mode == "excise":
             # span surgery: cut the contaminated 8-grams, keep the rest
             # of the doc (drop only docs with nothing left)
-            cut = remove_eval_spans(deduped, eval_docs, n=8)
-            deduped = deduped.drop("text").join(
-                cut.filter(F.col("n_kept") > 0).select(
-                    "doc_id", F.col("clean_text").alias("text")
-                ),
-                "doc_id",
+            deduped = (
+                remove_eval_spans(deduped, eval_docs, n=8)
+                .filter(F.col("n_kept") > 0)
+                .drop("text", "n_kept")
+                .withColumnRenamed("clean_text", "text")
             )
         else:
-            flags = decontaminate(deduped, eval_docs, n=8, min_overlap=3)
-            deduped = deduped.join(
-                flags.filter(~F.col("contaminated")).select("doc_id"), "doc_id"
+            deduped = (
+                decontaminate(deduped, eval_docs, n=8, min_overlap=3)
+                .filter(~F.col("contaminated"))
+                .select(*deduped.columns)
             )
         deduped = funnel.checkpoint("decontaminate", deduped)
 
     scrubbed = pii_redact(deduped).drop("text").withColumnRenamed(
         "text_redacted", "text"
     )
-    lined = dedup_lines(scrubbed, min_docs=5).filter(F.col("clean_text") != "")
     lined = funnel.checkpoint(
         "pii_line_dedup",
-        lined.join(scrubbed.drop("text"), "doc_id").withColumnRenamed(
-            "clean_text", "text"
-        ),
+        dedup_lines(scrubbed, min_docs=5)
+        .filter(F.col("clean_text") != "")
+        .drop("text", "n_lines", "n_kept")
+        .withColumnRenamed("clean_text", "text"),
     )
 
     mixed = funnel.checkpoint(

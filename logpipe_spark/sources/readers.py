@@ -19,7 +19,7 @@ import os
 import subprocess
 from typing import Iterable
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -239,16 +239,11 @@ def exec_source(
         nl = raw.rfind(b"\n")
         raw = raw[: nl + 1] if nl >= 0 else raw
     lines = raw.decode("utf-8", "replace").splitlines()
-    schema = T.StructType(
-        [
-            T.StructField("filename", T.StringType()),
-            T.StructField("line_no", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
+    # an Arrow table is a local relation even with no rows, so scanning it
+    # starts no Python worker (a list-built frame, or an empty pandas one,
+    # is a PythonRDD)
+    rows = pa.Table.from_pydict(
+        {"filename": [name] * len(lines), "line_no": range(1, len(lines) + 1),
+         "text": lines}
     )
-    # pandas through Arrow: the frame is a local relation, so scanning it
-    # starts no Python worker (a list-built frame is a PythonRDD)
-    rows = pd.DataFrame(
-        {"filename": name, "line_no": range(1, len(lines) + 1), "text": lines}
-    )
-    return spark.createDataFrame(rows, schema=schema)
+    return spark.createDataFrame(rows, "filename string, line_no long, text string")

@@ -351,13 +351,35 @@ def test_decontaminate_flags_planted_dup_and_excludes_eval(spark):
     })
     docs = spark.createDataFrame(rows)
     ev = docs.filter(F.col("doc_id") == 0)
-    out = {r["doc_id"]: r.asDict()
+    out = {r["doc_id"]: r
            for r in decontaminate(docs, ev, n=8, min_overlap=3).collect()}
     assert set(out) == {1, 2, 3}          # eval doc excluded
     assert out[1]["contaminated"] and out[1]["n_overlap"] >= 3
     assert not out[2]["contaminated"] and out[2]["n_overlap"] == 0
-    assert out[3] == {"doc_id": 3, "n_shingles": 0, "n_overlap": 0,
-                      "contaminated": False}
+    assert (out[3]["n_shingles"], out[3]["n_overlap"],
+            out[3]["contaminated"]) == (0, 0, False)
+
+
+def test_decontaminate_flags_null_keyed_copy(spark):
+    """Rows are counted per ``doc_id`` with NULL as one key: a NULL-keyed
+    copy of eval text comes back contaminated (with every other
+    NULL-keyed row, which shares its pooled counts), never as a clean
+    row that a ``filter(~contaminated)`` would keep."""
+    from logpipe_spark.operators.corpus import decontaminate
+
+    eval_text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    docs = spark.createDataFrame(
+        [(0, eval_text), (None, "copy: " + eval_text),
+         (None, "tiny"), (1, "tiny too")],
+        "doc_id long, text string",
+    )
+    ev = docs.filter(F.col("doc_id") == 0)
+    out = decontaminate(docs, ev, n=8, min_overlap=3).collect()
+    assert sorted(r["text"] for r in out) == sorted(
+        ["copy: " + eval_text, "tiny", "tiny too"])
+    nulls = [r for r in out if r["doc_id"] is None]
+    assert all(r["contaminated"] and r["n_overlap"] >= 3 for r in nulls)
+    assert [r["contaminated"] for r in out if r["doc_id"] == 1] == [False]
 
 
 def test_decontaminate_broadcasts_eval_side(spark, docs):
@@ -1065,7 +1087,7 @@ def test_corpus_funnel_counts_pinned_and_ride_checkpoint_jobs(spark):
     so the funnel runs no job just to count — and the counts stay those
     of a count per stage: in drop mode, in excise mode, and with a
     NULL-keyed doc that passes the quality gate, which leaves the funnel
-    at that gate (every keyed stage after it joins on doc_id)."""
+    at that gate (every stage after it is keyed on doc_id)."""
     from logpipe_spark.plans.corpus_funnel import run_corpus_funnel
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -1075,12 +1097,17 @@ def test_corpus_funnel_counts_pinned_and_ride_checkpoint_jobs(spark):
     )
     assert drop == _SF0001_FUNNEL
     assert list(drop) == list(_SF0001_FUNNEL)
-    assert n_jobs <= 46, n_jobs  # 71 with a count() per stage
+    # 71 with a count() per stage, 46 with the gates joining results back
+    assert n_jobs <= 40, n_jobs
 
-    excise = run_corpus_funnel(
-        spark, docs.repartition(8), eval_docs=ev, decontam_mode="excise"
+    excise, n_jobs = count_jobs(
+        spark,
+        lambda: run_corpus_funnel(
+            spark, docs.repartition(8), eval_docs=ev, decontam_mode="excise"
+        ),
     )
     assert excise == {**_SF0001_FUNNEL, "decontaminate": 425, "pii_line_dedup": 425}
+    assert n_jobs <= 41, n_jobs  # 50 with the gates joining results back
 
     kept = corpus_filter(docs).filter("keep").orderBy("doc_id").limit(1)
     unkeyed = kept.select(*docs.columns).withColumn(

@@ -381,10 +381,26 @@ def test_neardup_keep_best_empty_pairs_and_repartition(spark):
     assert len(out) == 20
 
     pairs = spark.createDataFrame([(0, 10), (10, 15)], ["doc_a", "doc_b"])
-    a = sorted(map(tuple, neardup_keep_best(docs, pairs).collect()))
-    b = sorted(map(tuple,
-                   neardup_keep_best(docs.repartition(13), pairs).collect()))
-    assert a == b
+
+    def labels(d):
+        return sorted((r["doc_id"], r["component"], r["keep"])
+                      for r in neardup_keep_best(d, pairs).collect())
+
+    assert labels(docs) == labels(docs.repartition(13))
+
+
+def test_neardup_keep_best_drops_null_keyed_rows(spark):
+    """A row with a NULL ``doc_id`` has no component, so it is dropped,
+    not returned with ``keep`` unset; every other row comes back once."""
+    from logpipe_spark.operators.dedup import neardup_keep_best
+
+    docs = spark.createDataFrame(
+        [(1, 10), (2, 30), (None, 99)], "doc_id long, n_chars long"
+    )
+    pairs = spark.createDataFrame([(1, 2)], ["doc_a", "doc_b"])
+    got = sorted((r["doc_id"], r["component"], r["keep"])
+                 for r in neardup_keep_best(docs, pairs).collect())
+    assert got == [(1, 1, False), (2, 1, True)]
 
 
 def test_incremental_dedup_statuses_and_chaining(spark):
@@ -557,7 +573,8 @@ def test_dedup_lines_removes_boilerplate_keeps_blanks(spark):
         body = "\n".join(f"body {k} line {j}" for j in range(3))
         rows.append((k, f"BANNER {k % 3}\n\n{body}\nEND"))
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r[0]: r[1] for r in dedup_lines(df, min_docs=2).collect()}
+    out = {r["doc_id"]: r["clean_text"]
+           for r in dedup_lines(df, min_docs=2).collect()}
     assert "BANNER" not in out[0] and "END" not in out[0]
     assert "\n\n" in out[0] or out[0].startswith("\n")
 

@@ -170,3 +170,61 @@ def test_aqe_skew_join_engages_on_planted_skew(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def _cm_probes(spark):
+    from logpipe_spark.operators.sketch import cm_query, cm_sketch
+
+    df = spark.range(50).select(F.col("id").cast("string").alias("s"))
+    return cm_query(cm_sketch(df, "s"), ["1", "2", "absent"])
+
+
+def _exact_block_grid(spark):
+    from logpipe_spark.operators.similarity import embedding_neardup_pairs
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    return embedding_neardup_pairs(emb, threshold=0.95, bits=None)
+
+
+def _exec_source_empty(spark):
+    from logpipe_spark.sources.readers import exec_source
+
+    return exec_source(spark, ["true"], name="empty")
+
+
+def _cc_labels_no_edges(spark):
+    from logpipe_spark.operators.dedup import connected_components_star
+
+    return connected_components_star(
+        spark.createDataFrame([], "doc_a long, doc_b long"))
+
+
+def _leaf_lineages(node) -> str:
+    """RDD lineage of every leaf of a not yet executed physical plan,
+    broadcast build sides included (their RDDs run in a job of their own,
+    so the root RDD's lineage does not show them)."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        return _leaf_lineages(node.executedPlan())
+    kids = node.children()
+    if kids.size() == 0:
+        return node.execute().toDebugString()
+    return "".join(_leaf_lineages(kids.apply(i)) for i in range(kids.size()))
+
+
+@pytest.mark.parametrize(
+    "build",
+    [_cm_probes, _exact_block_grid, _exec_source_empty, _cc_labels_no_edges],
+    ids=["cm_query_probes", "exact_block_grid", "exec_source_empty",
+         "cc_labels_no_edges"],
+)
+def test_driver_built_frames_start_no_python_worker(spark, build):
+    """A frame the driver builds (Count-Min probe values, the 8×8 block
+    grid of the exact cosine join, a command's empty stdout, the labels
+    of a graph with no edges) is a local relation or a JVM range, never
+    a list-built ``PythonRDD``, so scanning it starts no Python-worker
+    task."""
+    qe = build(spark)._jdf.queryExecution()
+    # leaves first: toRdd() runs the broadcast stages, which then stand in
+    # the adaptive plan as leaves of their own
+    assert "PythonRDD" not in _leaf_lineages(qe.executedPlan())
+    assert "PythonRDD" not in qe.toRdd().toDebugString()
